@@ -21,21 +21,10 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD_DIR = os.path.join(HERE, ".build")
-WORKLOADS = ("stream_drain", "batch_head")
+CATALOG = os.path.join(ROOT, "BENCHMARK.json")
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 840
 HEAP = "3g"
-
-# Spark 4.x on JDK 17 needs these outside spark-submit.
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
 
 
 def fail(msg):
@@ -63,24 +52,26 @@ def fingerprint():
     return h.hexdigest()
 
 
-def classpath():
-    """Builds if the sources changed; returns the runtime classpath."""
+def build():
+    """Builds if the sources changed; returns the runtime classpath and the
+    engine's JVM flags."""
     if not (os.path.isfile(os.path.join(ROOT, "build.sbt"))
             and os.path.isdir(os.path.join(ROOT, "src", "main", "scala"))):
         fail("the engine's sources (build.sbt, src/main/scala) are not next to perfbench/")
     stamp_file = os.path.join(BUILD_DIR, "stamp")
-    cp_file = os.path.join(BUILD_DIR, "classpath")
+    out_file = os.path.join(BUILD_DIR, "build.json")
     stamp = fingerprint()
-    if os.path.isfile(cp_file) and os.path.isfile(stamp_file):
+    if os.path.isfile(out_file) and os.path.isfile(stamp_file):
         with open(stamp_file) as fh:
             if fh.read() == stamp:
-                with open(cp_file) as fh2:
-                    return fh2.read()
+                with open(out_file) as fh2:
+                    built = json.load(fh2)
+                return built["classpath"], built["jvm_options"]
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
     env.setdefault("SBT_OPTS", "-Dsbt.offline=true")
     cmd = ["sbt", "--batch", "-Dsbt.log.noformat=true", "-Dsbt.server.autostart=false",
-           "export perfbench/Runtime/fullClasspath"]
+           "export perfbench/Runtime/fullClasspath", "perfbench/printJavaOptions"]
     try:
         res = subprocess.run(cmd, cwd=HERE, env=env, stdout=subprocess.PIPE,
                              stderr=subprocess.STDOUT, text=True, timeout=BUILD_TIMEOUT_S)
@@ -89,32 +80,48 @@ def classpath():
     lines = [l.strip() for l in res.stdout.splitlines() if l.strip()]
     cp = next((l for l in reversed(lines) if not l.startswith("[")
                and all(os.path.exists(p) for p in l.split(os.pathsep))), None)
-    if res.returncode != 0 or cp is None:
+    jvm_options = [l[len("jvm-option "):] for l in lines if l.startswith("jvm-option ")]
+    if res.returncode != 0 or cp is None or not jvm_options:
         sys.stderr.write(res.stdout)
         fail("build failed")
     os.makedirs(BUILD_DIR, exist_ok=True)
-    with open(cp_file, "w") as fh:
-        fh.write(cp)
+    with open(out_file, "w") as fh:
+        json.dump({"classpath": cp, "jvm_options": jvm_options}, fh)
     with open(stamp_file, "w") as fh:
         fh.write(stamp)
-    return cp
+    return cp, jvm_options
+
+
+def result_line(raw, catalog):
+    """The JVM's verdict and values, with every metric of `catalog` and its
+    unit; metrics the run did not measure read 0."""
+    values = raw.pop("values")
+    unknown = sorted(set(values) - {m["name"] for m in catalog})
+    if unknown:
+        fail(f"metrics missing from BENCHMARK.json: {', '.join(unknown)}")
+    raw["metrics"] = {m["name"]: {"value": values.get(m["name"], 0.0), "unit": m["unit"]}
+                      for m in catalog}
+    return raw
 
 
 def main():
+    if not os.path.isfile(CATALOG):
+        fail("BENCHMARK.json is not next to perfbench/")
+    with open(CATALOG) as fh:
+        bench = json.load(fh)
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=[w["name"] for w in bench["workloads"]])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
 
-    cp = classpath()
+    cp, jvm_options = build()
     java = shutil.which("java") or fail("java not found")
     work = os.path.join(HERE, ".work", f"{args.workload}-{os.getpid()}")
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
-    cmd = [java, f"-Xmx{HEAP}", f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}"]
-    for p in ADD_OPENS:
-        cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
+    # the heap flag comes last: the JVM takes the last -Xmx it is given
+    cmd = [java] + jvm_options + [f"-Xmx{HEAP}", f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}"]
     cmd += ["-cp", cp, "graft.perfbench.Main",
             "--workload", args.workload, "--seed", str(args.seed),
             "--seconds", str(args.seconds), "--trace", str(args.trace),
@@ -134,8 +141,8 @@ def main():
         sys.stderr.write(out)
         fail(f"run failed with exit code {proc.returncode}")
     sys.stderr.write("".join(l + "\n" for l in lines[:-1]))
-    result = json.loads(lines[-1])
-    print(json.dumps(result))
+    catalog = bench["per_layer" if args.trace else "end_to_end"]
+    print(json.dumps(result_line(json.loads(lines[-1]), catalog)))
 
 
 if __name__ == "__main__":

@@ -8,13 +8,13 @@ import graft.{SparkEntry, Tables}
   * `SparkEntry.queries(k)(spark, sf)` into a noop write with the cache
   * cleared after the key, as Bench runs them. */
 object Batch {
-  /** The relational core plus a multi-job key from two other operator
-    * modules (see README.md for the choice). */
+  /** The relational core plus a multi-job key from the Similarity module
+    * (see README.md for the choice). */
   val Keys: Seq[String] = Seq(
     "q01_sliding_window_agg", "q02_tumbling_window_agg", "q03_filter_project",
     "q04_keyby_reduce", "q05_range_window_filter", "q06_broadcast_enrich",
     "q07_pct_histogram", "q08_session_window", "q09_shuffle_join_agg",
-    "q69_knn_classify", "q163_novelty")
+    "q69_knn_classify")
 
   /** Timed passes per run, at the least: the faster of two is steady
     * where a single pass is not. */
@@ -100,84 +100,99 @@ object Batch {
     // the first execution of every key checks its result and takes the
     // JIT and page-cache warm-up; the timed passes run warm
     Log.step("batch: set up")
-    val checked = Keys.map(k => check(spark, ctx, k))
+    val checked = Keys.map { k =>
+      val ok = check(spark, ctx, k)
+      Log.step(s"batch: checked $k")
+      ok
+    }
     Log.step("batch: results checked")
-    val t0 = System.nanoTime()
-    val passes = scala.collection.mutable.ArrayBuffer.empty[Pass]
-    while (passes.size < MinPasses || (System.nanoTime() - t0) / 1e9 < ctx.seconds)
-      passes += pass(spark, ctx, records, _ => None)
+    val tracer = if (ctx.trace) Some(new Tracer(spark, s"batch_head-${ctx.seed}")) else None
+    // job groups tie a traced pass's jobs to their key
+    val (passes, traced) = Timed.alternate(MinPasses, ctx.seconds, tracer) { i =>
+      pass(spark, ctx, records, k => i.map(n => s"p$n/$k"))
+    }
     Log.step(s"batch: ${passes.size} timed passes")
     val heapMb = Jvm.retainedHeapMb()
     // per key the fastest of its timed runs, as Bench reads them: a
     // one-off stall on a shared host then costs nothing
     val keyWalls = passes.flatMap(_.keys).groupMapReduce(_.key)(_.wallS)(math.min)
-    val keyMs = Keys.map(keyWalls(_) * 1e3)
+    // every key is submitted at pass start and served in registry order:
+    // its emit latency runs from pass start to the end of its noop write
+    val emitMs = Keys.map(keyWalls).scanLeft(0.0)(_ + _).tail.map(_ * 1e3)
     val e2e = Map(
       "setup_s" -> setupS,
       "retained_heap_mb" -> heapMb,
       "events_per_s" -> passes.map(_.records).sum / passes.map(_.wallS).sum,
-      "emit_latency_p50_ms" -> Stats.percentile(keyMs, 50),
-      "emit_latency_p90_ms" -> Stats.percentile(keyMs, 90),
+      "emit_latency_p50_ms" -> Stats.percentile(emitMs, 50),
+      "emit_latency_p90_ms" -> Stats.percentile(emitMs, 90),
       "pass_s" -> passes.map(_.wallS).min,
       "key_geomean_s" -> Stats.geomean(Keys.map(keyWalls)))
-    var attempted = Keys.size + passes.map(_.keys.size).sum
-    var failed = checked.count(!_) + passes.map(_.keys.count(!_.ok)).sum
+    var attempted = Keys.size + (passes ++ traced).map(_.keys.size).sum
+    var failed = checked.count(!_) + (passes ++ traced).map(_.keys.count(!_.ok)).sum
 
-    val layers = if (!ctx.trace) Map.empty[String, Double] else {
-      val tracer = new Tracer(spark, s"batch_head-${ctx.seed}")
-      val gc0 = Jvm.gcMs
-      val traced = pass(spark, ctx, records, k => Some(s"key:$k"))
+    val layers = tracer.fold(Map.empty[String, Double]) { tracer =>
+      tracer.attach()
       val aFrom = System.currentTimeMillis()
       val a0 = System.nanoTime()
-      spark.sparkContext.setJobGroup(s"key:$AdmissionKey:build", AdmissionKey)
+      spark.sparkContext.setJobGroup(s"$AdmissionKey:build", AdmissionKey)
       val admOk = try check(spark, ctx, AdmissionKey) finally spark.sparkContext.clearJobGroup()
       val admS = (System.nanoTime() - a0) / 1e9
       val aTo = System.currentTimeMillis()
-      val gcMs = Jvm.gcMs - gc0
       tracer.detach()
-      attempted += traced.keys.size + 1
-      failed += traced.keys.count(!_.ok) + (if (admOk) 0 else 1)
+      val recon = Recon("key walls", traced.map(_.keys.map(_.wallS).sum), traced.map(_.wallS),
+        passes.map(_.wallS))
+      Log.step(recon.summary)
+      attempted += 2
+      failed += (if (admOk) 0 else 1) + (if (recon.ok) 0 else 1)
 
       val spans = tracer.spans
-      val run = spans.add(0, "run", "batch_head", traced.startMs, aTo)
-      val phase = spans.add(run, "phase", "traced", traced.startMs, traced.endMs)
+      val run = spans.add(0, "run", "batch_head", passes.head.startMs, aTo)
+      // the untraced passes ran in between; they have a layer of their own
+      passes.zipWithIndex.foreach { case (p, i) =>
+        spans.add(run, "untraced", s"untraced pass $i", p.startMs, p.endMs)
+      }
+      val itemOf = traced.zipWithIndex.flatMap { case (p, i) =>
+        val phase = spans.add(run, "phase", s"traced pass $i", p.startMs, p.endMs)
+        p.keys.map(kr => s"p$i/${kr.key}" -> spans.add(phase, "item", kr.key, kr.startMs, kr.endMs))
+      }.toMap
       val admPhase = spans.add(run, "phase", "admission", aFrom, aTo)
       val admItem = spans.add(admPhase, "item", AdmissionKey, aFrom, aTo)
-      val itemOf = traced.keys.map(kr =>
-        kr.key -> spans.add(phase, "item", kr.key, kr.startMs, kr.endMs)).toMap
       // the admission stream runs its triggers under its own job group
-      tracer.attachJobs(traced.startMs, aTo, run) { j =>
-        if (j.startMs >= aFrom) Some(admItem)
-        else itemOf.get(j.group.stripPrefix("key:").takeWhile(_ != ':'))
+      tracer.attachJobs(traced.head.startMs, aTo, run) { j =>
+        if (j.startMs >= aFrom) Some(admItem) else itemOf.get(j.group.takeWhile(_ != ':'))
       }
       Out.writeSpans(ctx, "batch_head", spans.json)
 
-      val jobs = tracer.jobs.jobs(traced.startMs, traced.endMs)
-      val stages = tracer.jobs.stages(traced.startMs, traced.endMs)
-      val plans = tracer.plans.actions(traced.startMs, traced.endMs)
+      // per traced pass, then the mean over passes
+      val perPass = traced.map { p =>
+        val jobs = tracer.jobs.jobs(p.startMs, p.endMs)
+        val stages = tracer.jobs.stages(p.startMs, p.endMs)
+        val plans = tracer.plans.actions(p.startMs, p.endMs)
+        tracer.jobs.taskLayer(p.startMs, p.endMs, ctx.cpus) ++ Map(
+          "plan.analysis_ms" -> plans.map(_.analysisMs).sum.toDouble,
+          "plan.optimization_ms" -> plans.map(_.optimizationMs).sum.toDouble,
+          "plan.planning_ms" -> plans.map(_.planningMs).sum.toDouble,
+          "op.build_ms" -> p.keys.map(_.buildS).sum * 1e3,
+          "op.exec_ms" -> p.keys.map(_.execS).sum * 1e3,
+          "op.build_jobs" -> jobs.count(_.group.endsWith(":build")).toDouble,
+          "sched.jobs_per_key" -> jobs.size.toDouble / Keys.size,
+          "sched.stages" -> stages.size.toDouble,
+          "sched.tasks" -> stages.map(_.tasks).sum.toDouble,
+          "sched.driver_ms" -> tracer.jobs.driverMs(p.startMs, p.endMs))
+      }
       val admTriggers = progress.all.filter(t => t.startMs >= aFrom && t.startMs <= aTo)
       val admJobs = tracer.jobs.jobs(aFrom, aTo).count(_.batchId.isDefined)
       val addBatch = admTriggers.map(_.durations.getOrElse("addBatch", 0L).toDouble)
-      tracer.jobs.taskLayer(traced.startMs, traced.endMs, ctx.cpus) ++ tracer.spanLayer ++
+      StreamLayers.mean(perPass) ++ tracer.spanLayer ++
         Keys.map(k => s"key.${k}_s" -> keyWalls(k)).toMap ++ Map(
-        "plan.analysis_ms" -> plans.map(_.analysisMs).sum.toDouble,
-        "plan.optimization_ms" -> plans.map(_.optimizationMs).sum.toDouble,
-        "plan.planning_ms" -> plans.map(_.planningMs).sum.toDouble,
-        "op.build_ms" -> traced.keys.map(_.buildS).sum * 1e3,
-        "op.exec_ms" -> traced.keys.map(_.execS).sum * 1e3,
-        "op.build_jobs" -> jobs.count(_.group.endsWith(":build")).toDouble,
-        "sched.jobs_per_key" -> jobs.size.toDouble / Keys.size,
-        "sched.stages" -> stages.size.toDouble,
-        "sched.tasks" -> stages.map(_.tasks).sum.toDouble,
-        "sched.driver_ms" -> tracer.jobs.driverMs(traced.startMs, traced.endMs),
         "fb.jobs_per_trigger" -> admJobs.toDouble / admTriggers.size.max(1),
         "fb.batch_p50_ms" -> (if (addBatch.isEmpty) 0.0 else Stats.percentile(addBatch, 50)),
         "fb.driver_ms" -> tracer.jobs.driverMs(aFrom, aTo),
         "fb.run_s" -> admS,
-        "jvm.gc_ms" -> gcMs,
-        "recon.key_sum_over_pass" -> traced.keys.map(_.wallS).sum / traced.wallS,
-        "emit.samples" -> traced.keys.size.toDouble,
-        "trace.overhead_ms" -> (traced.wallS - e2e("pass_s")) * 1e3)
+        "jvm.gc_ms" -> tracer.gcMs,
+        "recon.key_sum_over_pass" -> recon.ratio,
+        "emit.samples" -> Keys.size.toDouble,
+        "trace.overhead_ms" -> recon.overheadMs)
     }
     Outcome(e2e, layers, attempted, failed)
   }

@@ -120,3 +120,48 @@ object Check {
     (wrong ++ missing).map(_._1).toSet
   }
 }
+
+/** Reconciles a traced layer's total with the untraced run. The gap
+  * between the median traced total and the median untraced wall may be as
+  * large as the tracing overhead (median traced wall minus median untraced
+  * wall) plus the untraced walls' own range, the run-to-run noise. A
+  * larger gap means the layer's spans miss part of the work, and the run
+  * counts it as failed. All figures in seconds. */
+final case class Recon(layer: String, tracedSums: Seq[Double], tracedWalls: Seq[Double],
+    untracedWalls: Seq[Double]) {
+  private val base = Stats.median(untracedWalls)
+  val overheadMs: Double = (Stats.median(tracedWalls) - base) * 1e3
+  val ratio: Double = Stats.median(tracedSums) / base
+  val gapMs: Double = math.abs(Stats.median(tracedSums) - base) * 1e3
+  val allowedMs: Double = math.abs(overheadMs) + (untracedWalls.max - untracedWalls.min) * 1e3
+  def ok: Boolean = gapMs <= allowedMs
+  def summary: String = f"recon: $layer sum to $ratio%.3f of the untraced wall; gap " +
+    f"$gapMs%.0f ms, allowed $allowedMs%.0f ms${if (ok) "" else " -- FAILED"}"
+}
+
+/** The timed phase of a workload: untraced passes until there are at
+  * least `min` of them and `seconds` have gone by. With a tracer, each
+  * untraced pass is paired with a traced one (`pass` gets its index), the
+  * collectors attached for it alone, and every other pair runs the traced
+  * pass first. Warm-up and host drift then fall on both sides alike, and
+  * the tracing overhead compares like with like. Returns the untraced and
+  * the traced passes. */
+object Timed {
+  def alternate[T](min: Int, seconds: Double, tracer: Option[Tracer])(
+      pass: Option[Int] => T): (Seq[T], Seq[T]) = {
+    val plain = scala.collection.mutable.ArrayBuffer.empty[T]
+    val traced = scala.collection.mutable.ArrayBuffer.empty[T]
+    def tracedPass(t: Tracer): Unit = {
+      t.attach()
+      try traced += pass(Some(traced.size)) finally t.detach()
+    }
+    val t0 = System.nanoTime()
+    while (plain.size < min || (System.nanoTime() - t0) / 1e9 < seconds) {
+      val tracedFirst = plain.size % 2 == 1
+      if (tracedFirst) tracer.foreach(tracedPass)
+      plain += pass(None)
+      if (!tracedFirst) tracer.foreach(tracedPass)
+    }
+    (plain.toList, traced.toList)
+  }
+}

@@ -3,77 +3,44 @@ package graft.perfbench
 import java.io.File
 import java.nio.file.Files
 
-/** Every metric the benchmark reports, with its unit; BENCHMARK.json
-  * lists the same names. */
-object Metrics {
-  val EndToEnd: Seq[(String, String)] = Seq(
-    "setup_s" -> "s", "retained_heap_mb" -> "MB", "events_per_s" -> "1/s",
-    "emit_latency_p50_ms" -> "ms", "emit_latency_p90_ms" -> "ms",
-    "pass_s" -> "s", "key_geomean_s" -> "s")
-
-  val PerLayer: Seq[(String, String)] = Seq(
-    "trigger.count" -> "count", "trigger.nodata_count" -> "count") ++
-    StreamLayers.Phases.map(p => s"trigger.${p}_ms" -> "ms") ++ Seq(
-    "trigger.total_p50_ms" -> "ms", "sched.jobs_per_trigger" -> "count",
-    "sink.collect_ms" -> "ms", "emit.samples" -> "count",
-    "state.commit_ms" -> "ms", "state.rows_total" -> "count",
-    "state.rows_updated" -> "count", "state.rows_removed" -> "count",
-    "state.memory_bytes" -> "bytes", "state.dropped_late_rows" -> "count",
-    "agg.time_ms" -> "ms",
-    "task.cpu_ms" -> "ms", "task.run_ms" -> "ms", "task.gc_ms" -> "ms",
-    "task.slot_util" -> "ratio",
-    "shuffle.write_bytes" -> "bytes", "shuffle.read_bytes" -> "bytes",
-    "shuffle.fetch_wait_ms" -> "ms", "shuffle.spill_bytes" -> "bytes",
-    "shuffle.read_skew" -> "ratio",
-    "plan.analysis_ms" -> "ms", "plan.optimization_ms" -> "ms", "plan.planning_ms" -> "ms",
-    "op.build_ms" -> "ms", "op.build_jobs" -> "count", "op.exec_ms" -> "ms",
-    "sched.jobs_per_key" -> "count", "sched.stages" -> "count", "sched.tasks" -> "count",
-    "sched.driver_ms" -> "ms") ++
-    Batch.Keys.map(k => s"key.${k}_s" -> "s") ++ Seq(
-    "fb.jobs_per_trigger" -> "count", "fb.batch_p50_ms" -> "ms", "fb.driver_ms" -> "ms",
-    "fb.run_s" -> "s",
-    "jvm.gc_ms" -> "ms", "scale.drain_speedup" -> "ratio", "trace.overhead_ms" -> "ms",
-    "recon.trigger_sum_over_wall" -> "ratio", "recon.key_sum_over_pass" -> "ratio") ++
-    Seq("run", "phase", "item", "job", "stage").map(l => s"span.${l}_self_ms" -> "ms") :+
-    ("span.count" -> "count")
-}
-
 object Out {
   def writeSpans(ctx: Ctx, workload: String, json: String): Unit = {
     ctx.out.mkdirs()
     Files.writeString(new File(ctx.out, s"spans-$workload-seed${ctx.seed}.json").toPath, json)
   }
 
-  /** The result line. Layers a workload does not exercise read 0. */
+  /** The result line: the verdict and each measured value by name.
+    * run.py adds the units from BENCHMARK.json and reports every metric
+    * listed there that the run did not measure as 0. */
   def line(o: Outcome, trace: Boolean): String = {
-    val (catalog, values) = if (trace) (Metrics.PerLayer, o.layers) else (Metrics.EndToEnd, o.e2e)
-    val unknown = values.keySet -- catalog.map(_._1)
-    require(unknown.isEmpty, s"metrics missing from the catalog: ${unknown.mkString(", ")}")
-    val ms = catalog.map { case (name, unit) =>
-      val v = values.getOrElse(name, 0.0)
+    val values = (if (trace) o.layers else o.e2e).toSeq.sortBy(_._1).map { case (name, v) =>
       require(!v.isNaN && !v.isInfinite, s"$name is $v")
-      s""""$name": {"value": $v, "unit": "$unit"}"""
+      s""""$name": $v"""
     }
     s"""{"correct": ${o.failed == 0}, "attempted": ${o.attempted}, "failed": ${o.failed}, """ +
-      s""""metrics": {${ms.mkString(", ")}}}"""
+      s""""values": {${values.mkString(", ")}}}"""
   }
 }
 
 /** Entry point: `--workload <name> --seed <n> --seconds <s> --trace <0|1>
   * --data <sf dir> --work <scratch dir> --out <dir>`, or `--record <dir>
-  * --data <sf dir>` to print the digest of every key output that
-  * graft.Verify dumped into <dir>. The result is the last stdout line. */
+  * --data <sf dir> --work <scratch dir>` to print the digest of every key
+  * output that graft.Verify dumped into <dir>. The result is the last
+  * stdout line. Every argument is required; run.py passes them all. */
 object Main {
   def main(args: Array[String]): Unit = {
     val opt = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
+    def arg(k: String): String =
+      opt.getOrElse(k, throw new IllegalArgumentException(s"missing argument --$k"))
     val cpus = Runtime.getRuntime.availableProcessors
-    val work = new File(opt.getOrElse("work", "work"))
-    val ctx = Ctx(cpus, opt.getOrElse("seed", "1").toLong, opt.getOrElse("seconds", "15").toDouble,
-      opt.getOrElse("trace", "0") == "1", work, opt("data"), new File(opt.getOrElse("out", "out")))
     val line = opt.get("record") match {
-      case Some(dir) => record(ctx, dir)
+      case Some(dir) =>
+        val work = new File(arg("work"))
+        record(Ctx(cpus, 0L, 0.0, trace = false, work, arg("data"), work), dir)
       case None =>
-        val outcome = opt("workload") match {
+        val ctx = Ctx(cpus, arg("seed").toLong, arg("seconds").toDouble, arg("trace") == "1",
+          new File(arg("work")), arg("data"), new File(arg("out")))
+        val outcome = arg("workload") match {
           case "stream_drain" => Drain.run(ctx)
           case "batch_head" => Batch.run(ctx)
           case other => throw new IllegalArgumentException(s"unknown workload $other")

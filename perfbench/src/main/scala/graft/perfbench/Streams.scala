@@ -49,9 +49,14 @@ object StreamLayers {
       jobsPerTrigger: Double): Map[String, Double] = {
     val n = triggers.size.max(1).toDouble
     def mean(f: Trigger => Long) = triggers.map(f).sum / n
+    // share of all trigger time spent in one phase
+    def share(f: Trigger => Long) = triggers.map(f).sum.toDouble / triggers.map(_.totalMs).sum.max(1L)
     Phases.map(ph => s"trigger.${ph}_ms" -> mean(_.durations.getOrElse(ph, 0L))).toMap ++ Map(
       "trigger.count" -> triggers.size.toDouble,
       "trigger.nodata_count" -> triggers.count(_.inputRows == 0).toDouble,
+      "trigger.addBatch_share" -> share(_.durations.getOrElse("addBatch", 0L)),
+      "trigger.commit_share" ->
+        share(t => t.durations.getOrElse("walCommit", 0L) + t.durations.getOrElse("commitOffsets", 0L)),
       "trigger.total_p50_ms" ->
         (if (triggers.isEmpty) 0.0 else Stats.percentile(triggers.map(_.totalMs.toDouble), 50)),
       "sched.jobs_per_trigger" -> jobsPerTrigger,
@@ -86,15 +91,19 @@ object StreamLayers {
 /** `stream_drain`: a seeded backlog of equal-size files drained with
   * maxFilesPerTrigger and Trigger.AvailableNow, again and again. */
 object Drain {
-  val Spec: Gen.DrainSpec = Gen.DrainSpec(rows = 48000, files = 12, filesPerTrigger = 2,
+  /** 64,000 rows in 4 files per trigger, so every core scans: three data
+    * triggers and the no-data one that closes the last windows. Measured
+    * on 4 cores (README.md), a data trigger costs about 0.64 s whatever
+    * its size plus about 9.5 us a row, so per-row work is about half of
+    * it; larger triggers would not fit the run budget. */
+  val Spec: Gen.DrainSpec = Gen.DrainSpec(rows = 192000, files = 12, filesPerTrigger = 4,
     keys = 50000, zipfS = 1.1, stepMs = 4, pipeline = Gen.Pipeline(60000, 20000, 2000),
     lateEvery = 500)
 
-  /** Untimed drains first: JIT and codegen keep warming through the
-    * first few. Then at least `MinDrains` timed ones, whose median is
-    * reported. */
-  val WarmDrains = 3
-  val MinDrains = 5
+  /** Untimed drains first take the JIT and codegen warm-up. Then at
+    * least `MinDrains` timed ones, whose median is reported. */
+  val WarmDrains = 2
+  val MinDrains = 3
 
   /** Writes the backlog as one parquet file per backlog file, with
     * ascending modification times so the source reads them in order. */
@@ -152,18 +161,16 @@ object Drain {
     val expected = Flagship.reference(backlog.onTime, Spec.pipeline)
     Log.step("drain: reference built")
 
-    def passes(seconds: Double, tag: String, traced: Boolean): Seq[Pass] = {
-      val t0 = System.nanoTime()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Pass]
-      while (buf.size < MinDrains || (System.nanoTime() - t0) / 1e9 < seconds)
-        buf += drainOnce(spark, dir, new File(ctx.work, s"drain/ckpt-$tag-${buf.size}"),
-          progress, expected, traced)
-      buf.toList
+    var drains = 0
+    def drain(spark: SparkSession, traced: Boolean): Pass = {
+      drains += 1
+      drainOnce(spark, dir, new File(ctx.work, s"drain/ckpt-$drains"), progress, expected, traced)
     }
-
-    val warm = (1 to WarmDrains).map(i => drainOnce(spark, dir,
-      new File(ctx.work, s"drain/ckpt-warm-$i"), progress, expected, traced = false))
-    val timed = passes(ctx.seconds, "timed", traced = false)
+    val warm = (1 to WarmDrains).map(_ => drain(spark, traced = false))
+    val tracer = if (ctx.trace) Some(new Tracer(spark, s"stream_drain-${ctx.seed}")) else None
+    val (timed, traced) = Timed.alternate(MinDrains, ctx.seconds, tracer) { t =>
+      drain(spark, t.isDefined)
+    }
     Log.step(s"drain: timed walls ${timed.map(p => f"${p.wallS}%.2f").mkString(" ")}")
     val heapMb = Jvm.retainedHeapMb()
     val walls = timed.map(_.wallS)
@@ -175,39 +182,46 @@ object Drain {
       "emit_latency_p90_ms" -> Stats.median(timed.map(p => Stats.percentile(p.latenciesMs, 90))),
       "pass_s" -> Stats.median(walls),
       "key_geomean_s" -> Stats.geomean(timed.flatMap(_.triggers).map(_.totalMs.max(1L) / 1e3)))
-    var failed = (warm ++ timed).count(_.bad.nonEmpty)
-    var attempted = warm.size + timed.size
+    var failed = (warm ++ timed ++ traced).count(_.bad.nonEmpty)
+    var attempted = warm.size + timed.size + traced.size
 
-    val layers = if (!ctx.trace) Map.empty[String, Double] else {
-      val tracer = new Tracer(spark, s"stream_drain-${ctx.seed}")
-      val gc0 = Jvm.gcMs
-      val traced = tracer.spans.around(0, "run", "stream_drain") { run =>
-        tracer.spans.around(run, "phase", "traced") { phase =>
-          passes(ctx.seconds, "traced", traced = true).map { p =>
-            StreamLayers.spans(tracer, phase, p.triggers, p.startMs, p.endMs); p }
-        }
+    val layers = tracer.fold(Map.empty[String, Double]) { tracer =>
+      val spans = tracer.spans
+      val run = spans.add(0, "run", "stream_drain", timed.head.startMs, traced.last.endMs)
+      // the untraced drains ran in between; they have a layer of their own
+      timed.zipWithIndex.foreach { case (p, i) =>
+        spans.add(run, "untraced", s"untraced drain $i", p.startMs, p.endMs)
       }
-      val gcMs = Jvm.gcMs - gc0
-      tracer.detach()
-      Out.writeSpans(ctx, "stream_drain", tracer.spans.json)
+      traced.zipWithIndex.foreach { case (p, i) =>
+        val phase = spans.add(run, "phase", s"traced drain $i", p.startMs, p.endMs)
+        StreamLayers.spans(tracer, phase, p.triggers, p.startMs, p.endMs)
+      }
+      Out.writeSpans(ctx, "stream_drain", spans.json)
       val perPass = traced.map { p =>
         val jobs = tracer.jobs.jobs(p.startMs, p.endMs).count(_.batchId.isDefined)
-        StreamLayers.of(p.triggers, p.collectMs, p.aggTimeMs,
-          jobs.toDouble / p.triggers.size.max(1)) ++
-          tracer.jobs.taskLayer(p.startMs, p.endMs, ctx.cpus) ++ Map(
-          "recon.trigger_sum_over_wall" -> p.triggers.map(_.totalMs).sum / (p.wallS * 1e3),
+        val tasks = tracer.jobs.taskLayer(p.startMs, p.endMs, ctx.cpus)
+        val stream = StreamLayers.of(p.triggers, p.collectMs, p.aggTimeMs,
+          jobs.toDouble / p.triggers.size.max(1))
+        val taskMs = tasks("task.run_ms").max(1.0)
+        stream ++ tasks ++ Map(
+          "state.commit_share" -> stream("state.commit_ms") / taskMs,
+          "agg.time_share" -> stream("agg.time_ms") / taskMs,
+          "sched.driver_ms" -> tracer.jobs.driverMs(p.startMs, p.endMs),
           "emit.samples" -> p.latenciesMs.size.toDouble)
       }
+      val recon = Recon("trigger durations", traced.map(_.triggers.map(_.totalMs).sum / 1e3),
+        traced.map(_.wallS), walls)
+      Log.step(recon.summary)
       // the single-thread baseline drains the same backlog on local[1]
       val one = Session.build(ctx, 1)
       one.streams.addListener(progress)
-      val base = drainOnce(one, dir, new File(ctx.work, "drain/ckpt-local1"), progress,
-        expected, traced = false)
-      failed += traced.count(_.bad.nonEmpty) + (if (base.bad.nonEmpty) 1 else 0)
-      attempted += traced.size + 1
+      val base = drain(one, traced = false)
+      failed += (if (base.bad.nonEmpty) 1 else 0) + (if (recon.ok) 0 else 1)
+      attempted += 2
       StreamLayers.mean(perPass) ++ tracer.spanLayer ++ Map(
-        "jvm.gc_ms" -> gcMs,
-        "trace.overhead_ms" -> (Stats.median(traced.map(_.wallS)) - Stats.median(walls)) * 1e3,
+        "jvm.gc_ms" -> tracer.gcMs,
+        "trace.overhead_ms" -> recon.overheadMs,
+        "recon.trigger_sum_over_wall" -> recon.ratio,
         "scale.drain_speedup" -> e2e("events_per_s") / (backlog.rowCount / base.wallS))
     }
     Outcome(e2e, layers, attempted, failed)

@@ -223,18 +223,27 @@ object Spans {
   }
 }
 
-/** The collectors a traced run attaches, and the span tree they feed. */
+/** The collectors a traced run attaches while a traced pass runs, and the
+  * span tree they feed. */
 final class Tracer(spark: org.apache.spark.sql.SparkSession, traceId: String) {
   val jobs = new JobLog
   val plans = new PlanLog
   val spans = new Spans(traceId)
-  spark.sparkContext.addSparkListener(jobs)
-  spark.listenerManager.register(plans)
+  /** JVM GC time while attached. */
+  var gcMs = 0.0
+  private var gc0 = 0.0
+
+  def attach(): Unit = {
+    gc0 = Jvm.gcMs
+    spark.sparkContext.addSparkListener(jobs)
+    spark.listenerManager.register(plans)
+  }
 
   def detach(): Unit = {
     org.apache.spark.perfbench.ListenerBus.drain(spark.sparkContext)
     spark.sparkContext.removeSparkListener(jobs)
     spark.listenerManager.unregister(plans)
+    gcMs += Jvm.gcMs - gc0
   }
 
   /** Adds job and stage spans under the item spans they ran for:

@@ -112,16 +112,15 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Digest.of(a).startsWith("2:"))
   }
 
-  test("BENCHMARK.json names exactly the metrics the harness reports") {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new File("../BENCHMARK.json"))
-    def field(k: String, f: String) = {
-      val it = root.get(k).elements()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().get(f).asText()).toSeq
-    }
-    def metrics(k: String) = field(k, "name").zip(field(k, "unit"))
-    assert(metrics("end_to_end") === Metrics.EndToEnd)
-    assert(metrics("per_layer") === Metrics.PerLayer)
-    assert(field("workloads", "name") === Seq("stream_drain", "batch_head"))
+  test("reconciliation allows the tracing overhead and the untraced noise, no more") {
+    val untraced = Seq(10.0, 10.4, 10.2)
+    // traced walls 0.5 s slower; the layer's spans cover all but 0.1 s
+    val covered = Recon("keys", Seq(10.6, 10.5), Seq(10.7, 10.6), untraced)
+    assert(math.abs(covered.overheadMs - 450.0) < 1e-6)
+    assert(covered.ok)
+    // the spans miss 2 s of every traced wall: beyond overhead plus noise
+    val missed = Recon("keys", Seq(8.7, 8.6), Seq(10.7, 10.6), untraced)
+    assert(math.abs(missed.gapMs - 1550.0) < 1e-6 && math.abs(missed.allowedMs - 850.0) < 1e-6)
+    assert(!missed.ok)
   }
 }
