@@ -23,12 +23,12 @@ import org.apache.spark.sql.expressions.Aggregator
   * sketch pass is O(partitions × k) — constant in corpus size, where an
   * exact groupBy shuffles the full distinct-token table.
   *
-  * The buffer is a MUTABLE map updated in place (the PercentileHistogram
-  * pattern — Spark's typed-Aggregator path holds partial buffers as live
-  * objects and serializes only at partial-output boundaries, so reduce
-  * may mutate): the hit path is one hash probe with zero allocation, and
-  * the full-buffer-miss path decrements in place. That miss path is
-  * O(live counters) per absorbed token but amortized O(1) overall —
+  * The buffer is a MUTABLE map updated in place (Spark's typed-Aggregator
+  * path holds partial buffers as live objects and serializes only at
+  * partial-output boundaries, so reduce may mutate): the hit path is one
+  * hash probe with zero allocation, and the full-buffer-miss path
+  * decrements in place. That miss path is O(live counters) per absorbed
+  * token but amortized O(1) overall —
   * every count unit it removes was added by exactly one earlier arrival,
   * so total eviction work is bounded by the token count at ANY k (the
   * previous immutable-Map buffer re-allocated the whole map there,

@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.functions.udaf
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** SQL surface for the graft function library.
@@ -14,8 +12,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * the standard `SparkSessionExtensions` plumbing.
   *
   * Runtime path: `GraftExtensions.register(spark)` installs the same
-  * functions (plus the histogram UDAF, which goes through the UDF
-  * registry) on an already-running session — needed because a session
+  * functions on an already-running session — needed because a session
   * handed to us by a driver has already been built.
   *
   * SQL functions:
@@ -23,7 +20,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *  - `graft_pct_result(blob, p)` — percentile read over a histogram blob
   *    on the reference's 90-bucket LevelDB scale ([[PercentileResult]])
   *  - `graft_pct_hist(v)` — histogram-percentile aggregate on the same
-  *    scale (via `register` only; aggregates use the UDF registry)
+  *    scale ([[PercentileHistogram]]), on both paths
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -50,6 +47,12 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 2, s"graft_pct_result expects 2 arguments, got ${args.length}")
         PercentileResult(args(0), args(1), GraftFunctions.leveldbScale90.toSeq)
+      }),
+    (FunctionIdentifier("graft_pct_hist"),
+      info("graft_pct_hist", "graft_pct_hist(v) - histogram-percentile aggregate: the reference accumulator blob (LevelDB 90-bucket scale)"),
+      (args: Seq[Expression]) => {
+        require(args.length == 1, s"graft_pct_hist expects 1 argument, got ${args.length}")
+        PercentileHistogram(args(0), GraftFunctions.leveldbScale90.toSeq)
       }),
     (FunctionIdentifier("graft_hyperplane_buckets"),
       info("graft_hyperplane_buckets",
@@ -178,14 +181,9 @@ object GraftExtensions {
         TokenRuleStats(args(0), stop)
       }))
 
-  /** Install on a live session: expressions into the function registry,
-    * the histogram aggregate into the UDF registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
+  /** Install on a live session's function registry. Idempotent. */
+  def register(spark: SparkSession): Unit =
     expressions.foreach { case (ident, inf, builder) =>
       ColumnBridge.registerFunction(spark, ident, inf, builder)
     }
-    spark.udf.register("graft_pct_hist",
-      udaf(new PercentileHistogram(GraftFunctions.leveldbScale90),
-        ExpressionEncoder[Double]()))
-  }
 }

@@ -2,12 +2,13 @@ package graft.functions
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{lit, udaf}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType}
 
@@ -16,10 +17,11 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType
   * `rlink/src/functions/percentile/mod.rs` —
   * state = `(scale.len + 1) * 8` bytes, bucket i's count as a big-endian
   * u64 at offset `i*8`, total count in the trailing slot
-  * (`percentile/mod.rs:1-3,14-25`).
+  * (`percentile/mod.rs:1-3,14-25`). `eval` returns exactly that blob.
   *
-  * `accumulate` buckets a value to the smallest boundary >= value, clamped
-  * to the first/last boundary (`percentile/mod.rs:59-122`).
+  * `update` buckets a value to the smallest boundary >= value, clamped
+  * to the first/last boundary (`percentile/mod.rs:59-122`); the input is
+  * cast to double and NULL inputs are skipped.
   *
   * Deviation from the reference, by design: the reference's `merge`
   * (`percentile/mod.rs:124-128`) adds the two byte arrays **byte-wise
@@ -28,25 +30,50 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType
   * aggregates. Spark's distributed aggregation merges constantly, so we
   * merge the u64 counters arithmetically — identical results wherever the
   * reference is correct, and correct at any scale.
+  *
+  * State layout. In memory the buffer is the dense `Array[Long](n + 1)`,
+  * updated in place. Between operators (partial-aggregate spill, shuffle,
+  * streaming state store) it is serialized SPARSE: one format-tag byte,
+  * then a `(bucket index, count)` varint pair per non-zero bucket in
+  * strictly ascending index order; the total is not stored and is
+  * recomputed on read. A windowed group typically holds a handful of
+  * values, so a few bytes replace the 92-long array. `deserialize` rejects
+  * a wrong tag, an out-of-range or non-ascending index, a zero count and a
+  * truncated varint with an [[IllegalStateException]] — state written in
+  * any other layout fails loudly instead of being misread.
   */
-class PercentileHistogram(scale: Array[Double])
-    extends Aggregator[Double, Array[Long], Array[Byte]] {
+case class PercentileHistogram(
+    child: Expression,
+    scale: Seq[Double],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[Array[Long]]
+    with ImplicitCastInputTypes with UnaryLike[Expression] {
 
-  private val n = scale.length
+  import PercentileHistogram._
+
+  @transient private lazy val bounds: Array[Double] = scale.toArray
+  private def n: Int = bounds.length
+
+  override def prettyName: String = "graft_pct_hist"
+  override def inputTypes = Seq(DoubleType)
+  override def dataType: DataType = BinaryType
+  // never null itself, but PercentileResult inherits nullability from this
+  // column and returns null for an empty histogram
+  override def nullable: Boolean = true
 
   /** Smallest boundary index >= v, clamped to [0, n-1]
     * (reference `position_in_value_array`, `percentile/mod.rs:78-122`).
     *
-    * Edge inputs: NULLs never reach here — Spark's typed Aggregator path
-    * skips null inputs before `reduce`. NaN lands in the LAST bucket
-    * (java.util.Arrays.binarySearch uses Double's total order, where NaN
-    * sorts above every value, so the insertion point clamps to n-1). The
-    * reference's Rust f64 `partial_cmp` has no defined NaN ordering —
-    * its binary search on NaN input is unspecified — so top-bucket
-    * clamping is a deliberate, documented tightening, not a parity break:
-    * on NaN-free data (all gate corpora) the two are bit-identical. */
+    * NaN lands in the LAST bucket (java.util.Arrays.binarySearch uses
+    * Double's total order, where NaN sorts above every value, so the
+    * insertion point clamps to n-1). The reference's Rust f64
+    * `partial_cmp` has no defined NaN ordering — its binary search on NaN
+    * input is unspecified — so top-bucket clamping is a deliberate,
+    * documented tightening, not a parity break: on NaN-free data (all
+    * gate corpora) the two are bit-identical. */
   private def bucket(v: Double): Int = {
-    val i = java.util.Arrays.binarySearch(scale, v)
+    val i = java.util.Arrays.binarySearch(bounds, v)
     if (i >= 0) i
     else {
       val ins = -i - 1
@@ -54,11 +81,14 @@ class PercentileHistogram(scale: Array[Double])
     }
   }
 
-  override def zero: Array[Long] = new Array[Long](n + 1)
+  override def createAggregationBuffer(): Array[Long] = new Array[Long](n + 1)
 
-  override def reduce(b: Array[Long], v: Double): Array[Long] = {
-    b(n) += 1L
-    b(bucket(v)) += 1L
+  override def update(b: Array[Long], input: InternalRow): Array[Long] = {
+    val v = child.eval(input)
+    if (v != null) {
+      b(n) += 1L
+      b(bucket(v.asInstanceOf[Double])) += 1L
+    }
     b
   }
 
@@ -69,15 +99,110 @@ class PercentileHistogram(scale: Array[Double])
   }
 
   /** Big-endian u64 blob, bit-identical to the reference accumulator. */
-  override def finish(b: Array[Long]): Array[Byte] = {
+  override def eval(b: Array[Long]): Any = {
     val buf = ByteBuffer.allocate(b.length * 8).order(ByteOrder.BIG_ENDIAN)
     b.foreach(buf.putLong)
     buf.array()
   }
 
-  override def bufferEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  override def serialize(b: Array[Long]): Array[Byte] = {
+    var size = 1
+    var i = 0
+    while (i < n) {
+      if (b(i) != 0L) size += varintSize(i) + varintSize(b(i))
+      i += 1
+    }
+    val out = new Array[Byte](size)
+    out(0) = FormatTag
+    var pos = 1
+    i = 0
+    while (i < n) {
+      if (b(i) != 0L) pos = putVarint(out, putVarint(out, pos, i), b(i))
+      i += 1
+    }
+    out
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    if (bytes.length == 0 || bytes(0) != FormatTag)
+      corrupt(s"format tag ${bytes.headOption.fold("missing")(t => f"0x$t%02x")}," +
+        f" expected 0x$FormatTag%02x")
+    val b = createAggregationBuffer()
+    val in = new VarintReader(bytes, 1)
+    var prev = -1L
+    var total = 0L
+    while (in.pos < bytes.length) {
+      val idx = in.next()
+      if (idx <= prev || idx >= n)
+        corrupt(s"bucket index $idx after ${if (prev < 0) "none" else prev}" +
+          s" (must ascend within [0, $n))")
+      val c = in.next()
+      if (c <= 0L) corrupt(s"count $c in bucket $idx (must be positive)")
+      b(idx.toInt) = c
+      total += c
+      prev = idx
+    }
+    b(n) = total
+    b
+  }
+
+  override def withNewMutableAggBufferOffset(off: Int): PercentileHistogram =
+    copy(mutableAggBufferOffset = off)
+  override def withNewInputAggBufferOffset(off: Int): PercentileHistogram =
+    copy(inputAggBufferOffset = off)
+  override protected def withNewChildInternal(c: Expression): PercentileHistogram =
+    copy(child = c)
+}
+
+object PercentileHistogram {
+
+  /** First byte of every serialized buffer. Neither 0 nor 1, so an
+    * UnsafeRow-encoded buffer (whose first byte is its null bitset) can
+    * never pass for one. */
+  private val FormatTag: Byte = 0x47
+
+  private def corrupt(what: String): Nothing =
+    throw new IllegalStateException(
+      s"graft_pct_hist: unreadable histogram state ($what). State written " +
+        "by a different histogram layout cannot be restored.")
+
+  private def varintSize(v: Long): Int = {
+    var x = v >>> 7
+    var s = 1
+    while (x != 0L) { x >>>= 7; s += 1 }
+    s
+  }
+
+  /** Unsigned LEB128; returns the position after the last byte written. */
+  private def putVarint(out: Array[Byte], at: Int, v: Long): Int = {
+    var x = v
+    var pos = at
+    while ((x & ~0x7fL) != 0L) {
+      out(pos) = ((x & 0x7f) | 0x80).toByte
+      x >>>= 7
+      pos += 1
+    }
+    out(pos) = x.toByte
+    pos + 1
+  }
+
+  private final class VarintReader(bytes: Array[Byte], var pos: Int) {
+    def next(): Long = {
+      var v = 0L
+      var shift = 0
+      var more = true
+      while (more) {
+        if (pos >= bytes.length) corrupt("truncated varint")
+        if (shift > 63) corrupt("varint longer than 64 bits")
+        val x = bytes(pos)
+        pos += 1
+        v |= (x & 0x7fL) << shift
+        more = x < 0
+        shift += 7
+      }
+      v
+    }
+  }
 }
 
 /** Scalar reader over the histogram blob — reference
@@ -159,9 +284,8 @@ object GraftFunctions {
 
   /** Histogram-percentile aggregate: returns the binary accumulator blob. */
   def pctHist(c: Column, scale: Array[Double]): Column =
-    udaf(new PercentileHistogram(scale),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Double]())
-      .apply(c)
+    ColumnBridge.column(PercentileHistogram(ColumnBridge.expression(c),
+      scale.toSeq).toAggregateExpression())
 
   /** Read percentile `p` (integer water line, e.g. 90 / 99) from a blob. */
   def pctResult(blob: Column, p: Int, scale: Array[Double]): Column =

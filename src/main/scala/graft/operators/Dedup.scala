@@ -230,7 +230,7 @@ object Dedup {
     * (occupancy 32 ≈ 2.1M docs); past it the candidate bound is
     * unmeasured and the provably-exact two-level takes over as the
     * safety valve. */
-  private val SimOccupancy = 32L
+  private[graft] val SimOccupancy = 32L
 
   /** Pigeonhole banding of a (doc_id, simhash) frame.
     *

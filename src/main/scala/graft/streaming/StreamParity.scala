@@ -284,8 +284,9 @@ object StreamParity {
           .coalesce(1)
         // per-batch plan evidence (the foreachBatch body is where q58's
         // joins live; the streaming plan is just the source scan) —
-        // batch 1 is the interesting one: prior state is non-empty
-        if (batchId == 1)
+        // rewritten on every batch from 1 on, where prior state is
+        // non-empty, so the file holds the last processed batch's plan
+        if (batchId >= 1)
           sys.env.get("SPARK_GRAFT_STREAM_PLAN_DIR").foreach { d =>
             java.nio.file.Files.createDirectories(Paths.get(d))
             java.nio.file.Files.writeString(

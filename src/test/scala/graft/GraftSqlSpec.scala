@@ -12,7 +12,8 @@ class GraftSqlSpec extends SparkSpec {
   test("GraftExtensions applies cleanly to a SparkSessionExtensions") {
     new GraftExtensions().apply(new SparkSessionExtensions)
     assert(GraftExtensions.expressions.map(_._1.funcName) ==
-      Seq("graft_dot", "graft_pct_result", "graft_hyperplane_buckets",
+      Seq("graft_dot", "graft_pct_result", "graft_pct_hist",
+        "graft_hyperplane_buckets",
         "graft_sorted_hash_jaccard", "graft_simhash64", "graft_rolling_hash",
         "graft_image_header", "graft_wav_header", "graft_utf8_audit",
         "graft_mp4_mvhd", "graft_flac_streaminfo", "graft_jaro_winkler",
@@ -196,6 +197,18 @@ class GraftSqlSpec extends SparkSpec {
         |FROM events_v GROUP BY event_type ORDER BY event_type""".stripMargin)
     val viaOp = graft.operators.Percentiles.q07PctHistogram(spark, sf)
     assert(viaSql.collect().toSeq == viaOp.collect().toSeq)
+  }
+
+  test("a session built with the spark.sql.extensions conf resolves graft_pct_hist") {
+    org.apache.spark.sql.graftbridge.ExtensionConfSession.withSession(
+        spark, classOf[GraftExtensions].getName) { s =>
+      assert(s ne spark)
+      // {1, 2, 300}: pos = max(1, trunc(3 * 0.1)) = 1, the top value's bucket
+      val p90 = s.sql(
+        """SELECT graft_pct_result(graft_pct_hist(v), 90) AS p90
+          |FROM VALUES (1), (2), (300) AS t(v)""".stripMargin).head().getDouble(0)
+      assert(p90 === 300.0)
+    }
   }
 
   test("graft_dot arity errors surface at analysis") {

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeRow}
 import org.apache.spark.sql.functions._
 
+import graft.functions.PercentileHistogram
 import graft.functions.GraftFunctions._
 
 class PercentileSpec extends SparkSpec {
@@ -89,5 +92,87 @@ class PercentileSpec extends SparkSpec {
     val got = Seq.empty[Double].toDF("v")
       .agg(pct(col("v"), 95, testScale)).head
     assert(got.isNullAt(0))
+  }
+
+  // -------------------------------------------------------------------
+  // Serialized state: sparse varint pairs behind a format tag.
+  // -------------------------------------------------------------------
+  private val agg = PercentileHistogram(Literal(0.0), leveldbScale90.toSeq)
+  private val nb = leveldbScale90.length
+
+  /** A dense buffer from (bucket, count) pairs, total in the last slot. */
+  private def hist(pairs: (Int, Long)*): Array[Long] = {
+    val h = new Array[Long](nb + 1)
+    pairs.foreach { case (i, c) => h(i) += c; h(nb) += c }
+    h
+  }
+
+  test("serialize/deserialize round-trips empty, edge and random histograms") {
+    val edgeCounts = Seq(1L, 127L, 128L, 16383L, 16384L, (1L << 32) + 7L, Long.MaxValue / nb)
+    val rnd = new scala.util.Random(7)
+    val cases: Seq[Array[Long]] =
+      Seq(hist(), hist(0 -> 1L), hist(nb - 1 -> 1L),
+        hist((0 until nb).map(i => i -> (i + 1L)): _*)) ++
+      edgeCounts.flatMap(c => Seq(hist(0 -> c), hist(nb - 1 -> c),
+        hist(0 -> c, 45 -> c, nb - 1 -> c))) ++
+      // random buckets and counts; the largest edge count stays in the
+      // fixed cases above, where summing it cannot overflow the total
+      (1 to 200).map { _ =>
+        hist(Seq.fill(rnd.nextInt(nb + 1))(
+          rnd.nextInt(nb) -> edgeCounts(rnd.nextInt(edgeCounts.size - 1))): _*)
+      }
+    cases.foreach { h =>
+      val bytes = agg.serialize(h)
+      assert(agg.deserialize(bytes).sameElements(h), h.mkString(","))
+      assert(agg.eval(agg.deserialize(bytes)).asInstanceOf[Array[Byte]]
+        .sameElements(agg.eval(h).asInstanceOf[Array[Byte]]))
+    }
+    // sparse: a tag byte, then one byte per small index and count
+    assert(agg.serialize(hist()).length === 1)
+    assert(agg.serialize(hist(3 -> 2L, 70 -> 127L)).length === 5)
+    assert(agg.serialize(hist(3 -> 128L)).length === 4)
+  }
+
+  test("state in the old encoder layout is rejected loudly, not misread") {
+    // the previous typed Aggregator serialized its buffer as the UnsafeRow
+    // of ExpressionEncoder[Array[Long]]
+    val old = ExpressionEncoder[Array[Long]]().createSerializer()(
+      hist(0 -> 2L, 1 -> 1L)).asInstanceOf[UnsafeRow].getBytes
+    val e = intercept[IllegalStateException](agg.deserialize(old))
+    assert(e.getMessage.contains("format tag 0x00"), e.getMessage)
+  }
+
+  test("deserialize rejects bad indices, zero counts and truncated varints") {
+    val tag = agg.serialize(hist())(0)
+    def bad(what: String, bytes: Int*): Unit = {
+      val e = intercept[IllegalStateException](
+        agg.deserialize((tag +: bytes.map(_.toByte)).toArray))
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    bad("must ascend", 5, 1, 3, 1)         // non-ascending
+    bad("must ascend", 5, 1, 5, 1)         // repeated
+    bad("must ascend", nb, 1)              // out of range
+    bad("must be positive", 5, 0)          // zero count
+    bad("truncated", 5)                    // index without a count
+    bad("truncated", 5, 0x80)              // unterminated varint
+    intercept[IllegalStateException](agg.deserialize(Array.empty[Byte]))
+  }
+
+  test("the flagship reduce plans the graft aggregate, no ScalaAggregator") {
+    import graft.streaming.api._
+    val df = StreamExecutionEnvironment(spark)
+      .fromDataFrame(Seq((1583899260000L, "k", 3L)).toDF("timestamp", "name", "value"))
+      .assignTimestampsAndWatermarks("timestamp", Time.seconds(1))
+      .keyBy("name")
+      .window(SlidingEventTimeWindows.of(Time.seconds(60), Time.seconds(20)))
+      .reduce(Agg.Sum("value"), Agg.Max("value"), Agg.Min("value"), Agg.Count(),
+        Agg.Pct("value", leveldbScale90, 90))
+      .df
+    val fns = df.queryExecution.sparkPlan.collect {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
+        a.aggregateExpressions.map(_.aggregateFunction)
+    }.flatten
+    assert(fns.exists(_.isInstanceOf[PercentileHistogram]), fns)
+    assert(!fns.exists(_.nodeName == "ScalaAggregator"), fns)
   }
 }

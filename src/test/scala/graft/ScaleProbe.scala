@@ -258,7 +258,7 @@ object ScaleProbe {
       outK.unpersist()
     }
 
-    // --- q21 past its 1M-doc switch, documents-only blow-up ---
+    // --- q21 at 1M docs, both banding levels, documents-only blow-up ---
     val docs1 = spark.read.parquet(s"$base/documents.parquet")
     val nDocs = docs1.count()
     val needK = (1048576L / nDocs + 2).toInt
@@ -278,12 +278,12 @@ object ScaleProbe {
         .parquet(droot.resolve("documents.parquet").toString)
     }
     println(s"[recall] q21 corpus ${nDocs * needK} docs (K=$needK) at $droot" +
-      s" — two-level switch at ${16L << 16} docs")
-    // The exactness statement at above-switch volume: the two-level
-    // pigeonhole (the branch the big corpus auto-selects) must return
-    // the IDENTICAL pair set as the single-level banding — the shape
-    // every tested SF runs and the oracle verifies — over the same
-    // 1M-doc corpus. (A shifted-union-of-1x expectation does NOT hold
+      s" — two-level switch at ${Dedup.SimOccupancy << 16} docs")
+    // The exactness statement at 1M-doc volume: the two-level pigeonhole
+    // (forced here — this corpus sits below the switch, so it would
+    // auto-select the single-level banding) must return the IDENTICAL
+    // pair set as the single-level banding — the shape every tested SF
+    // runs and the oracle verifies — over the same 1M-doc corpus. (A shifted-union-of-1x expectation does NOT hold
     // here: the blow-up suffixes tokens per shard, which re-draws every
     // simhash, so within-shard pair sets differ from 1x by design.)
     val t0 = System.nanoTime()

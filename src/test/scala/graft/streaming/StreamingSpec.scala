@@ -210,6 +210,55 @@ class StreamingSpec extends SparkSpec {
     assert(streamed === batch)
   }
 
+  // Agg.Pct state survives a restart: the second run (new run id, same
+  // checkpoint) loads the serialized histogram buffers from the state
+  // store's delta files, not from the first run's in-memory maps.
+  test("facade Agg.Pct state survives a query restart on the same checkpoint") {
+    val scale = graft.functions.GraftFunctions.leveldbScale90
+    // squares spread the values over many buckets of the scale
+    val records = Fixtures.genRecords().map(m => m.copy(value = m.value * m.value * 211))
+    def pipeline(ds: DataStream): DataStream = ds
+      .assignTimestampsAndWatermarks("timestamp", Time.seconds(1))
+      .keyBy("name")
+      .window(SlidingEventTimeWindows.of(Time.seconds(60), Time.seconds(20)))
+      .reduce(Agg.Sum("value"), Agg.Max("value"), Agg.Min("value"), Agg.Count(),
+        Agg.Pct("value", scale, 90))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("name") =!= "zzz")
+        .select(col("window.start").cast("long"), col("name"), col("sum(value)"),
+          col("max(value)"), col("min(value)"), col("count"), col("pct(value,90)"))
+        .collect().map(r => (0 until r.length).map(r.get)).toSet
+
+    val batch = rows(pipeline(env.fromDataFrame(
+      records.toDF("timestamp", "name", "value"))).df)
+
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val source = MemoryStream[Fixtures.Model]
+    val dir = java.nio.file.Files.createTempDirectory("pct_restart")
+    val (out, ckpt) = (s"$dir/out", s"$dir/ckpt")
+    def start() = pipeline(env.fromDataFrame(source.toDF()))
+      .addSink(Sinks.parquet(out, ckpt)).toOption.get
+    val (early, late) = records.partition(_.timestamp < Fixtures.BaseTs + 50000L)
+
+    val first = start()
+    try {
+      source.addData(early)
+      first.processAllAvailable()
+    } finally first.stop()
+    // windows were still open when the first run stopped
+    assert(first.lastProgress.stateOperators.head.numRowsTotal > 0)
+
+    val second = start()
+    try {
+      assert(second.runId != first.runId)
+      source.addData(late)
+      source.addData(Fixtures.Model(Fixtures.BaseTs + 7200 * 1000L, "zzz", 0L))
+      second.processAllAvailable()
+    } finally second.stop()
+
+    assert(rows(spark.read.parquet(out)) === batch)
+  }
+
   // -------------------------------------------------------------------
   // CoProcess: general tagged-union stateful correlation.
   // -------------------------------------------------------------------
