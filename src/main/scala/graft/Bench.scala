@@ -306,7 +306,7 @@ object Bench {
     */
   def driverLine(total: Double, queries: Seq[(String, Double)], sf: String,
                  streamRowsPerSec: Double, isNoisy: Boolean = false,
-                 retried: Seq[String] = Nil, slice: Option[String] = None,
+                 retried: Seq[String] = Nil,
                  bandTotalSec: Option[Double] = None,
                  hostDisturbed: Boolean = false): String = {
     val always = Set("q25_stream_parity", "stream_ingest")
@@ -335,8 +335,8 @@ object Bench {
       // "rps" = the stream ingest rows/sec (previously
       // "stream_rows_per_sec", then "stream_rps"; shortened again at the
       // 175-query surface for line-budget headroom — the "stream" queries
-      // key carries the same path's seconds). "cpus" (static 32) rides
-      // the spread line since the same shave.
+      // key carries the same path's seconds). "cpus" (the session's core
+      // count) rides the spread line since the same shave.
       // "noisy":true only when the session-health canary trips (13
       // chars, well inside the budget margin): it tells the board
       // reader to adjudicate this session's times against
@@ -348,15 +348,13 @@ object Bench {
       // the budget by BenchLineSpec): a green board with a retried list
       // means the session was disturbed but the published times are
       // re-measured; absent = no key needed healing.
-      // "slice":"A"|"B" marks a split-half run — its total covers HALF
-      // the surface and must never be compared to a full board.
       // "band_total" (only on a still-red board at the bands' own SF) is
       // the defensible engine number: sum of per-key min(observed,
       // quiet band) — see [[bandTotal]]. "host_disturbed":true means
       // the retry-window sentinels were ALSO hot, i.e. the session
       // never went quiet and even the retried values are suspect —
       // read band_total, not value.
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","nq":${queries.size},"queries":$qs,"sf":"${sf.split('/').last}","rps":$streamRowsPerSec%.0f${slice.map(s => s""","slice":"$s"""").getOrElse("")}${if (retried.nonEmpty) retried.map("\"" + shortKey(_) + "\"").mkString(",\"retried\":[", ",", "]") else ""}${bandTotalSec.map(b => f""","band_total":$b%.1f""").getOrElse("")}${if (hostDisturbed) ",\"host_disturbed\":true" else ""}${if (isNoisy) ",\"noisy\":true" else ""}}"""
+      f"""{"metric":"total","value":$total%.2f,"unit":"sec","nq":${queries.size},"queries":$qs,"sf":"${sf.split('/').last}","rps":$streamRowsPerSec%.0f${if (retried.nonEmpty) retried.map("\"" + shortKey(_) + "\"").mkString(",\"retried\":[", ",", "]") else ""}${bandTotalSec.map(b => f""","band_total":$b%.1f""").getOrElse("")}${if (hostDisturbed) ",\"host_disturbed\":true" else ""}${if (isNoisy) ",\"noisy\":true" else ""}}"""
     require(line.length <= DriverLineBudget,
       s"driver line is ${line.length} chars > budget $DriverLineBudget: " +
         "trim keys/precision or move data to an earlier line, or the " +
@@ -364,23 +362,10 @@ object Bench {
     line
   }
 
-  /** Split-half slice selection (SPARK_GRAFT_BENCH_SLICE=A|B): the two
-    * halves of the sorted batch surface partition it exactly — no key
-    * lost, none doubled — which is what makes sum-of-halves comparable
-    * to the full session in the drift experiment. Any other value runs
-    * the full surface. */
-  def sliceNames(allNames: Seq[String], slice: Option[String]): Seq[String] =
-    slice match {
-      case Some("A") => allNames.take(allNames.size / 2)
-      case Some("B") => allNames.drop(allNames.size / 2)
-      case _         => allNames
-    }
-
   /** Cumulative JVM session counters for the spread line: GC seconds
-    * (all collectors), used heap MB, used metaspace MB. The split-half
-    * experiment (BASELINE.md) reads these to attribute session-level
-    * drift: if one 250-query JVM carries a growing GC/metaspace tax
-    * that two 125-query JVMs don't, it shows here. */
+    * (all collectors), used heap MB, used metaspace MB — the session-
+    * level drift a long single-JVM board could carry (BASELINE.md's
+    * round-12 split-half experiment read them and found none). */
   def jvmCounters(): (Double, Double, Double) = {
     import scala.jdk.CollectionConverters._
     import java.lang.management.ManagementFactory
@@ -406,10 +391,9 @@ object Bench {
     * `shuffle.partitions`-vs-state-store sizing tradeoff — partitions
     * sized to state volume, not core count. */
   def streamPaths(spark: SparkSession, sfDir: String,
-      cpus: String): (Double, Double, Double) = {
+      cpus: Int): (Double, Double, Double) = {
     val nEvents = Tables.events(spark, sfDir).count()
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(8, cpus.toInt).toString)
+    spark.conf.set("spark.sql.shuffle.partitions", math.min(8, cpus).toString)
 
     // Parity path (file-stream source end to end — no driver in the data
     // path; includes the final result sort).
@@ -444,38 +428,29 @@ object Bench {
       q.awaitTermination()
       (System.nanoTime() - t0) / 1e9
     }
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
     (tParity, tIngest, nEvents / tIngest)
+  }
+
+  /** One timed key: build SparkEntry.queries(key) and write it to the
+    * noop sink (nothing is pruned away, unlike a count). Seconds, or -1
+    * when the key fails. Bench, Doctor --retime and the QProbe /
+    * AdmissionSweep tools all time keys through this. */
+  def materialize(spark: SparkSession, sfDir: String, key: String): Double = {
+    val t0 = System.nanoTime()
+    try SparkEntry.queries(key)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $key failed: ${e.getMessage}"); return -1.0
+    }
+    (System.nanoTime() - t0) / 1e9
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_BENCH_SLICE=A|B runs only the first/second half of the
-    // sorted batch surface in this JVM — the split-half drift experiment
-    // (one full session vs two half sessions, same machine). Slice runs
-    // skip the stream paths (they'd double-count across halves) and do
-    // NOT overwrite bench_spread_last.json (that file must always cover
-    // the full surface).
-    val slice = sys.env.get("SPARK_GRAFT_BENCH_SLICE")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def materialize(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val cpus = GraftSession.cores
+    val spark = GraftSession.local(cpus)
+    def materialize(name: String): Double = Bench.materialize(spark, sfDir, name)
 
     // JVM/codegen warmup (not measured)
     materialize("q03_filter_project")
@@ -488,9 +463,8 @@ object Bench {
     // min of 2 runs per query: the second run reuses JIT-compiled code
     // and OS page cache, which is the steady-state a long-lived cluster
     // session sees; min also suppresses one-off GC/scheduler noise.
-    val allNames = SparkEntry.queries.keys
+    val names = SparkEntry.queries.keys
       .filterNot(_ == "q25_stream_batch_parity").toSeq.sorted
-    val names = sliceNames(allNames, slice)
     // If either run fails, report -1: a half-failed query must be visible
     // in the JSON, not silently replaced by its surviving (possibly cold)
     // run's time.
@@ -560,8 +534,7 @@ object Bench {
     val hostDisturbed = retrySentinelTimes.nonEmpty &&
       retryWindowHot(retrySentinelTimes)
 
-    val (tParity, tIngest, streamRowsPerSec) =
-      if (slice.isDefined) (0.0, 0.0, 0.0) else streamPaths(spark, sfDir, cpus)
+    val (tParity, tIngest, streamRowsPerSec) = streamPaths(spark, sfDir, cpus)
 
     // Spread (both raw run times per query) goes on its OWN earlier line:
     // it is diagnostic data for humans/BASELINE.md, not driver-consumed,
@@ -588,11 +561,10 @@ object Bench {
     val retrySentinelJson = retrySentinelTimes.toSeq.sorted
       .map { case (k, t) => "\"" + k + f"\":$t%.3f" }
       .mkString("{", ",", "}")
-    // session-level JVM counters (GC seconds, heap MB, metaspace MB) —
-    // the split-half drift experiment's attribution data
+    // session-level JVM counters (GC seconds, heap MB, metaspace MB)
     val (gcSec, heapMb, metaMb) = jvmCounters()
     val spreadLine =
-      f"""{"metric":"spread","cpus":$cpus,"sf":"${sfDir.split('/').last}"${slice.map(s => s""","slice":"$s"""").getOrElse("")},"noisy":$isNoisy,"host_disturbed":$hostDisturbed,"ratio":$ratio%.3f,"gc_sec":$gcSec%.1f,"heap_mb":$heapMb%.0f,"meta_mb":$metaMb%.0f,"sentinel_trips":${sentinelTrips(healed.toMap).map("\"" + _ + "\"").mkString("[", ",", "]")},"band_trips":${bandTripsObserved.map("\"" + _ + "\"").mkString("[", ",", "]")},"band_trips_healed":${bandTrips.map("\"" + _ + "\"").mkString("[", ",", "]")},"retry":$retryJson,"retry_sentinels":$retrySentinelJson,"stream":{"q25_stream_parity":$tParity%.3f,"stream_ingest":$tIngest%.3f},"spread":$spread}"""
+      f"""{"metric":"spread","cpus":$cpus,"sf":"${sfDir.split('/').last}","noisy":$isNoisy,"host_disturbed":$hostDisturbed,"ratio":$ratio%.3f,"gc_sec":$gcSec%.1f,"heap_mb":$heapMb%.0f,"meta_mb":$metaMb%.0f,"sentinel_trips":${sentinelTrips(healed.toMap).map("\"" + _ + "\"").mkString("[", ",", "]")},"band_trips":${bandTripsObserved.map("\"" + _ + "\"").mkString("[", ",", "]")},"band_trips_healed":${bandTrips.map("\"" + _ + "\"").mkString("[", ",", "]")},"retry":$retryJson,"retry_sentinels":$retrySentinelJson,"stream":{"q25_stream_parity":$tParity%.3f,"stream_ingest":$tIngest%.3f},"spread":$spread}"""
     println(spreadLine)
     // Persist the full spread to a stable repo path every run: the
     // driver captures only the last 2000 stdout chars, so without this
@@ -600,12 +572,9 @@ object Bench {
     // (real regression vs disturbed session) is lost with the session.
     // Overwritten per run; the round driver commits it with the round,
     // so the BOARD's own spread lands in git alongside BENCH_r{N}.json.
-    // Slice runs never overwrite it — the file must cover the FULL
-    // surface (BenchLineSpec asserts exactly that).
-    if (slice.isEmpty)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_spread_last.json"),
-        (spreadLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get("bench_spread_last.json"),
+      (spreadLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
     val total = healed.map(_._2).filter(_ > 0).sum + tParity + tIngest
     // A still-red board at the bands' own SF carries the defensible
@@ -624,7 +593,7 @@ object Bench {
       else None
     println(driverLine(total,
       healed ++ Seq("q25_stream_parity" -> tParity, "stream_ingest" -> tIngest),
-      sfDir, streamRowsPerSec, isNoisy, retried = allRetried, slice = slice,
+      sfDir, streamRowsPerSec, isNoisy, retried = allRetried,
       bandTotalSec = bandTotalSec, hostDisturbed = hostDisturbed))
     spark.stop()
   }

@@ -96,30 +96,14 @@ object Doctor {
 
     if (args.length >= 3 && args(1) == "--retime") {
       val sfDir = args(2)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      def once(name: String): Double = {
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[doctor] $name failed: ${e.getMessage}")
-          return -1.0
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
+      val spark = GraftSession.local()
       println()
       println(s"re-timing ${trips.size} tripped keys (warm min-of-2) at $sfDir:")
       val retimed = trips.map { r =>
-        once(r.key) // warm-up: JIT + page cache, same as Bench's steady state
-        val t1 = once(r.key); val t2 = once(r.key)
+        // warm-up: JIT + page cache, same as Bench's steady state
+        Bench.materialize(spark, sfDir, r.key)
+        val t1 = Bench.materialize(spark, sfDir, r.key)
+        val t2 = Bench.materialize(spark, sfDir, r.key)
         val t = if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2)
         spark.sharedState.cacheManager.clearCache()
         // a failed re-timing exonerates nothing — name it, don't let

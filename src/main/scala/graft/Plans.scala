@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
 /** Plan-evidence dump: writes `.explain("formatted")` output for the named
-  * SparkEntry queries to `<outDir>/<name>.txt`, using the same session
-  * shape as Bench (AQE on, shuffle partitions = cores). Used to produce
-  * the committed `plans/rNN/<query>_{before,after}.txt` artifacts so plan
-  * claims (Exchange count, join strategy, PushedFilters) are checkable
-  * without running Spark.
+  * SparkEntry queries to `<outDir>/<name>.txt`, on the Bench session
+  * shape ([[GraftSession]]). Used to produce the committed
+  * `plans/rNN/<query>_{before,after}.txt` artifacts so plan claims
+  * (Exchange count, join strategy, PushedFilters) are checkable without
+  * running Spark.
   *
   * Usage: runMain graft.Plans <sfDir> <outDir> [q name,names|all]
   */
@@ -21,15 +20,7 @@ object Plans {
       else SparkEntry.queries.keys.toSeq.sorted
     val unknown = names.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // A query that fails to plan must FAIL the tool (ADVICE r13): the
     // committed plans/ evidence must never silently omit an artifact.

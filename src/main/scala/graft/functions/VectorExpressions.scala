@@ -1109,8 +1109,8 @@ object PqAdcScore {
   * nrm -> ...)` — the norm-bound-once q48 construct) walks THREE
   * higher-order-function frames per row, all interpreted with boxed
   * elements. On the q50/q26 build path the normalize pass was ~10x the
-  * cost of the underlying scan (Q50Probe); here it is a two-line loop
-  * inside whole-stage codegen.
+  * cost of the underlying scan (OPTIMIZATION_r13.md §B); here it is a
+  * two-line loop inside whole-stage codegen.
   *
   * Null semantics: zero norm -> NULL (matches the lambda's CASE). A
   * null ELEMENT also yields NULL — the lambda instead produced an

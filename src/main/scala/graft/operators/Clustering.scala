@@ -339,9 +339,9 @@ object Clustering {
   private val SemTargetClusterSize = 64
   // Round cap 4 -> 2 in round 13 (VERDICT r12 #4): with the evenly
   // id-spaced init two Lloyd rounds measure the SAME recall as four
-  // (SemSweep 0.998 sf0.001 / 0.9975 sf0.1, precision 1.0) at ~1.1 s
-  // less board cost; the movement early-exit inside the loop covers
-  // corpora that converge even sooner.
+  // (recall 0.998 sf0.001 / 0.9975 sf0.1, precision 1.0 —
+  // OPTIMIZATION_r13.md §B) at ~1.1 s less board cost; the movement
+  // early-exit inside the loop covers corpora that converge even sooner.
   private val SemSubRounds         = 2
   private val SemAssignDelta       = 0.05
 
@@ -359,19 +359,14 @@ object Clustering {
     /** Drop the two cached frames this build pinned. Without this,
       * repeated q50 calls accumulate cached corpora for the session
       * (cellMulti is otherwise method-local and unreleasable by callers).
-      * q50SemDedup calls it after materializing its result; sweeps/specs
-      * that consume the parts directly call it when done. */
+      * q50SemDedup calls it after materializing its result; specs that
+      * consume the parts directly call it when done. */
     def release(): Unit = { units.unpersist(); cellMulti.unpersist() }
   }
 
   private[graft] def semDedupParts(spark: SparkSession, sfDir: String): SemParts = {
     import graft.functions.GraftFunctions.dot
     import org.apache.spark.sql.expressions.Window
-    // stage trace for the manual Q50Probe only — never set in prod runs
-    val t0 = System.nanoTime()
-    def trace(tag: String): Unit =
-      if (sys.env.contains("GRAFT_Q50_TRACE"))
-        println(f"    [q50 $tag%-16s] ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     // Unit-normalize the planted corpus (emb is already array<double>)
     // in one codegen'd pass — see functions.UnitNormalize.
     val units = Similarity.dupCorpus(spark, sfDir)
@@ -381,7 +376,6 @@ object Clustering {
       .cache()
 
     val n = units.count()
-    trace("units+count")
     val k  = math.max(8, (n / SemTargetClusterSize).toInt) // fine budget
     val kc = math.max(4, math.ceil(math.sqrt(k.toDouble)).toInt)
 
@@ -393,7 +387,6 @@ object Clustering {
       .collect().map(_.getSeq[Double](1).toArray)
     val coarse: Seq[Seq[Double]] =
       Similarity.trainCentroids(sample, kc).map(_.toSeq).toSeq
-    trace("coarse-train")
 
     // Coarse assignment: the only centroid literal in the plan (Kc x dim).
     // Multi-assign within SemAssignDelta of the best cell; the primary
@@ -413,12 +406,12 @@ object Clustering {
     // deliberately NOT checkpointed — a localCheckpoint here replaces the
     // InMemoryRelation (whose stats let Catalyst broadcast the K-row subs
     // side of every training join) with a stats-less LogicalRDD, and the
-    // rounds demote to sort-merge joins (measured 4x slower in Q50Probe).
+    // rounds demote to sort-merge joins (measured 4x slower — see
+    // OPTIMIZATION_r13.md §B).
     // The per-round re-filter over the cache is a narrow scan of
     // state-cardinality rows.
     val primaryRows = cellMulti.filter(col("is_primary"))
       .select(col("vec_id"), col("cell"), col("unit"))
-    trace("primary-def")
 
     // Level 2 init: per cell, ksub = round(cellCount / target) evenly
     // id-spaced members — fully distributed (two window passes), no
@@ -436,7 +429,6 @@ object Clustering {
         col("unit").as("sc"))
       .localCheckpoint(true) // K tiny rows; truncated per round like q46
     val totalSubs = subs.count()
-    trace("subs-init")
 
     // Level 2 training: distributed Lloyd's, each vector scored against
     // ONLY its primary cell's subs (equi-join on cell — co-located, so
@@ -452,7 +444,8 @@ object Clustering {
     // shuffle-order-dependent, so "unchanged" is ulp-tolerant rather than
     // bit-exact). A spurious trigger would need a real centroid move
     // below 1e-12 cosine — far under the 0.05 assignment margin — and the
-    // quality floors (SemSweep recall/precision) guard the output anyway.
+    // quality floors (ClusteringSpec recall/precision) guard the output
+    // anyway.
     var trainRound = 0
     var converged = false
     while (trainRound < SemSubRounds && !converged) {
@@ -482,14 +475,12 @@ object Clustering {
           coalesce(dot(col("nsc"), col("sc")), lit(1.0)).as("mv"))
         .localCheckpoint(true)
       subs = subsFull.select("cell", "sub_id", "sc")
-      trace(s"round$trainRound-done")
       if (trainRound < SemSubRounds) {
         // the final round has nothing left to skip; every earlier round
         // checks — including round 1, for a corpus whose id-spaced init
         // is already the fixpoint
         val minDot = subsFull.agg(min(col("mv"))).head().getDouble(0)
         converged = minDot >= 1.0 - 1e-12
-        trace(s"round$trainRound-move")
       }
     }
 
@@ -760,9 +751,9 @@ object Clustering {
     * way; the cross-order distinct is unchanged) but paid the join
     * machinery on the fan-out: interleaved warm A/B at sf0.1 reads
     * join-shape min 3.72 s vs this shape 2.61 s over 3 rounds, equal
-    * counts every run (EdgeBuildProbe; q195/q197/q199 oracles re-green
-    * after the switch). TOTAL work stays Θ(Σ basket²) with one less
-    * sorted merge, but the MEMORY envelope is not identical: each row
+    * counts every run (OPTIMIZATION_r13.md §H; q195/q197/q199 oracles
+    * re-green after the switch). TOTAL work stays Θ(Σ basket²) with one
+    * less sorted merge, but the MEMORY envelope is not identical: each row
     * now materializes its basket in the aggregation buffer and its
     * basket² pair array in the projection, where the join streamed the
     * fan-out with shuffle spill — fine for order-bounded baskets (TPC-H

@@ -816,15 +816,14 @@ object Dedup {
     * incoming batch plus the inverted-index equi-join. df comes from the
     * index side alone (see prefixRows: any consistent total order is
     * exact), which is precisely the statistic a persistent index can
-    * actually maintain without seeing the future. */
-  /** State partition count of the q58 probing stream (Bench's
-    * state-volume-sized pin): the index's df table is laid out in this
-    * many h-hashed, h-sorted cached partitions so the per-trigger
-    * prefix-order join reuses the cache's partitioning+ordering — the
-    * batch side is the ONLY side exchanged per trigger. */
-  private[graft] val ProbePartitions = 8
-
-  private[graft] final class NearDupIndex(existing: DataFrame) {
+    * actually maintain without seeing the future.
+    *
+    * `partitions` is the probing stream's state partition count: the
+    * index's df table is laid out in that many h-hashed, h-sorted
+    * cached partitions so the per-trigger prefix-order join reuses the
+    * cache's partitioning+ordering — the batch side is the ONLY side
+    * exchanged per trigger. */
+  private[graft] final class NearDupIndex(existing: DataFrame, partitions: Int) {
     val docsEx: DataFrame = shingleDocs(existing).cache()
     // df is joined on h every trigger as the preserved-side of a left
     // join (no broadcast possible): pre-partition AND pre-sort the
@@ -834,7 +833,7 @@ object Dedup {
     // at index build).
     val dfreq: DataFrame = docsEx.select(explode(col("hs")).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .repartition(ProbePartitions, col("h")).sortWithinPartitions("h")
+      .repartition(partitions, col("h")).sortWithinPartitions("h")
       .cache()
     val prefixesEx: DataFrame = prefixRows(docsEx, dfreq).cache()
 

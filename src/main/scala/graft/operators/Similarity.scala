@@ -348,33 +348,30 @@ object Similarity {
   private val Dim = 64
 
   /** Fixed hyperplanes (seeded Gaussian — deterministic across runs). */
-  private def lshPlanes(tables: Int, bits: Int): Array[Array[Double]] = {
+  private lazy val planes: Array[Array[Double]] = {
     val rnd = new scala.util.Random(7)
-    Array.fill(tables * bits)(Array.fill(Dim)(rnd.nextGaussian()))
+    Array.fill(Tables_ * BitsPerTable)(Array.fill(Dim)(rnd.nextGaussian()))
   }
-  private lazy val planes: Array[Array[Double]] = lshPlanes(Tables_, BitsPerTable)
 
   /** Index side: (vec_id, embedding, norm, tbl, bucket) — one bucket per
     * table, all tables in one fused codegen loop (see q26's
     * HyperplaneBuckets note). */
-  private def bucketed(e: DataFrame, planes: Array[Array[Double]],
-      bits: Int): DataFrame =
+  private def bucketed(e: DataFrame): DataFrame =
     e.select(col("vec_id"), col("embedding"), col("norm"), posexplode(
         graft.functions.GraftFunctions.hyperplaneBuckets(
-          col("embedding"), planes.map(_.toSeq).toSeq, bits)))
+          col("embedding"), planes.map(_.toSeq).toSeq, BitsPerTable)))
       .select(col("vec_id"), col("embedding"), col("norm"),
         col("pos").as("tbl"), col("col").as("bucket"))
 
-  /** Query side: same shape as [[bucketed]] but `probes` rows per table —
-    * the flat probe array's position maps back to its table as
-    * pos / probes. */
-  private def probed(e: DataFrame, planes: Array[Array[Double]],
-      bits: Int, probes: Int): DataFrame =
+  /** Query side: same shape as [[bucketed]] but NumProbes rows per table
+    * — the flat probe array's position maps back to its table as
+    * pos / NumProbes. */
+  private def probed(e: DataFrame): DataFrame =
     e.select(col("vec_id"), col("embedding"), col("norm"), posexplode(
         graft.functions.GraftFunctions.hyperplaneBucketProbes(
-          col("embedding"), planes.map(_.toSeq).toSeq, bits, probes)))
+          col("embedding"), planes.map(_.toSeq).toSeq, BitsPerTable, NumProbes)))
       .select(col("vec_id"), col("embedding"), col("norm"),
-        (col("pos") / probes).cast("int").as("tbl"), col("col").as("bucket"))
+        (col("pos") / NumProbes).cast("int").as("tbl"), col("col").as("bucket"))
 
   // ---------------------------------------------------------------------
   // q30 — IVF (inverted-file) ANN: the other classic scale path.
@@ -401,14 +398,14 @@ object Similarity {
   /** nprobe floor — the SMALL-K knob (VERDICT r12 #3). At the sf0.01
     * quality gate (n=500, K=24) the floor is what binds: raising it
     * 6 → 8 bought measured recall@10 0.86 → 0.90 (q30) at a 1.19x
-    * candidate set — isolated from the delta knob by the r13 IvfSweep
-    * rows (pf 0.30 ≡ floor 8 at K=24: delta 0.18 alone 0.90/0.561;
-    * delta 0.22 alone 0.88/0.580). At bench scale (sf0.1, K=45) the
-    * frac-derived nprobe=9 already exceeds the floor, so the board
-    * keys' cost and recall (0.94) are UNCHANGED — and at 100 TB
-    * (K=sqrt(n) in the thousands) the floor is dead weight by design:
-    * probeFrac is the knob that matters, the floor only guards tiny
-    * quantizers. */
+    * candidate set — isolated from the delta knob in the r13 sweep
+    * (OPTIMIZATION_r13.md §E; pf 0.30 ≡ floor 8 at K=24: delta 0.18
+    * alone 0.90/0.561; delta 0.22 alone 0.88/0.580). At bench scale
+    * (sf0.1, K=45) the frac-derived nprobe=9 already exceeds the floor,
+    * so the board keys' cost and recall (0.94) are UNCHANGED — and at
+    * 100 TB (K=sqrt(n) in the thousands) the floor is dead weight by
+    * design: probeFrac is the knob that matters, the floor only guards
+    * tiny quantizers. */
   private val ProbeFloor    = 8
   private val SamplePerCell = 32   // training sample = max(4096, 32K), bounded
 
@@ -417,8 +414,9 @@ object Similarity {
     * (~0.5 GB at dim 128) at 10^9 corpus rows. 256k vectors caps driver
     * memory at ~128 MB (dim 128 doubles) regardless of corpus size; k-means
     * quality needs points-per-centroid, and 256k keeps >= 8 points/cell up
-    * to K = 32k cells (n = 10^9) — the Faiss default regime. IvfSweep's
-    * capped rows confirm the recall floor holds with a BINDING cap. */
+    * to K = 32k cells (n = 10^9) — the Faiss default regime. The r13
+    * sweep's capped rows (OPTIMIZATION_r13.md §E) held the recall floor
+    * with a BINDING cap. */
   private[graft] val TrainSampleCap = 256 * 1024
 
   /** Bounded, capped training-sample size for a K-cell quantizer. */
@@ -430,8 +428,8 @@ object Similarity {
     * spill-tree-style redundancy). Costs ~2.1x index rows; probe count
     * and per-query cell math are unchanged.
     *
-    * (probeFrac, delta) swept via IvfSweep at both SFs (recall@10 /
-    * scored fraction):
+    * (probeFrac, delta) swept at both SFs (recall@10 / scored fraction;
+    * `graft.Quality` measures the shipped point's recall@10):
     *   (0.20, 0.15)  sf0.001: 0.90/0.42   sf0.1: 0.90/0.48  <- production
     *   (0.20, 0.12)  sf0.001: 0.86/0.37   sf0.1: 0.80/0.37
     *   (0.15, 0.10)  sf0.001: 0.86/0.33   sf0.1: 0.68/0.25
@@ -447,7 +445,7 @@ object Similarity {
     * collapses to ~6 * multiAssign / K — shrinking as K = sqrt(n) grows
     * with the corpus. probeFrac is the knob a deployment turns down to
     * match its neighbor distances, exactly like q23's probes. */
-  // 0.18 picked from IvfSweep across all three SFs (0.90/0.86/0.94
+  // 0.18 picked from the r13 sweep across all three SFs (0.90/0.86/0.94
   // recall@10 vs 0.90/0.82/0.90 at 0.15): the mid-SF corpus was the
   // recall low-point and delta is the active knob at small K (nprobe is
   // floored at 6). The capped-sample sweep rows hold the same recall.
@@ -505,11 +503,9 @@ object Similarity {
     cents
   }
 
-  /** IVF candidate set — separated so the config sweep and the
-    * scored-fraction assertion can count candidates without ranking. */
-  private[graft] def ivfCandidates(spark: SparkSession, sfDir: String,
-      probeFrac: Double = ProbeFrac, delta: Double = AssignDelta,
-      sampleCap: Int = TrainSampleCap): DataFrame = {
+  /** IVF candidate set — separated so the scored-fraction assertion
+    * can count candidates without ranking. */
+  private[graft] def ivfCandidates(spark: SparkSession, sfDir: String): DataFrame = {
     // One scan of the corpus serves cell assignment and the probe side
     // (same multi-consumer shape as q23's cache).
     val e = withNorm(Tables.embeddings(spark, sfDir)).cache()
@@ -517,7 +513,7 @@ object Similarity {
     // Size the quantizer to the corpus (see the K-scaling note above).
     val n = e.count()
     val k = math.max(MinCells, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val nprobe = math.max(ProbeFloor, math.ceil(k * probeFrac).toInt)
+    val nprobe = math.max(ProbeFloor, math.ceil(k * ProbeFrac).toInt)
 
     // Index build: train the coarse quantizer on a bounded, absolutely
     // capped sample (driver-side by design — this is index training, not
@@ -525,7 +521,7 @@ object Similarity {
     val sample: Array[Array[Double]] = e
       .select(col("vec_id"), col("embedding"))
       .orderBy(col("vec_id"))
-      .limit(math.min(sampleCap, trainSampleSize(k)))
+      .limit(trainSampleSize(k))
       .collect()
       .map(_.getSeq[Float](1).map(_.toDouble).toArray)
     val cents: Seq[Seq[Double]] = trainCentroids(sample, k).map(_.toSeq).toSeq
@@ -543,7 +539,7 @@ object Similarity {
       .withColumn("sc", scoredCells(col("embedding"), col("norm")))
       .select(col("vec_id"), col("embedding"), col("norm"),
         explode(expr(
-          s"transform(filter(sc, x -> x.s >= array_max(sc).s - $delta), x -> x.c)"))
+          s"transform(filter(sc, x -> x.s >= array_max(sc).s - $AssignDelta), x -> x.c)"))
           .as("cell"))
     // Query side: probe the nprobe best cells.
     val probes = e.filter(col("vec_id") < NumQueries)
@@ -573,17 +569,12 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
       .orderBy("query_id", "rank")
 
-  /** Candidate set for a given LSH config — separated so the config
-    * sweep (and a scored-fraction assertion) can count candidates
-    * without ranking. */
-  private[graft] def lshCandidates(spark: SparkSession, sfDir: String,
-      tables: Int = Tables_, bits: Int = BitsPerTable,
-      probes: Int = NumProbes): DataFrame = {
-    val pl = if (tables == Tables_ && bits == BitsPerTable) planes
-             else lshPlanes(tables, bits)
+  /** LSH candidate set — separated so a scored-fraction assertion can
+    * count candidates without ranking. */
+  private[graft] def lshCandidates(spark: SparkSession, sfDir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, sfDir)).cache()
-    val b = bucketed(e, pl, bits)
-    val qb = probed(e.filter(col("vec_id") < NumQueries), pl, bits, probes)
+    val b = bucketed(e)
+    val qb = probed(e.filter(col("vec_id") < NumQueries))
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("norm").as("qnorm"), col("tbl"), col("bucket"))
     b.join(broadcast(qb), Seq("tbl", "bucket"))

@@ -42,7 +42,7 @@ object StreamParity {
     * min-first-wins folds, watermark-flushed windows over time-ordered
     * files), and ParitySpec pins that invariance explicitly where it is
     * least obvious (q126 at splits 2 vs 8). Wall-clock per query is
-    * dominated by per-trigger job count (the AdmissionSweep result), so
+    * dominated by per-trigger job count (BASELINE_HISTORY.md, q58), so
     * the bench path runs the minimum; specs that want finer replays
     * pass their own split. */
   private[streaming] val ReplayFiles = 2
@@ -172,6 +172,9 @@ object StreamParity {
     * equi-join only; nothing corpus-sized crosses the driver. */
   def q58StreamAdmission(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Dedup
+    // the stream's state partition count also lays out both cached
+    // corpus sides, so each trigger's joins exchange only the batch
+    val stateParts = statePartitions(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
@@ -182,12 +185,12 @@ object StreamParity {
     // side (broadcasting this side would not be corpus-scale-sane)
     val existingH = existing.select(md5(col("text")).as("ch")).distinct()
       .withColumn("hit_corpus", lit(true))
-      .repartition(graft.operators.Dedup.ProbePartitions, col("ch"))
+      .repartition(stateParts, col("ch"))
       .sortWithinPartitions("ch").cache()
     // Build the persistent near-dup index ONCE; every micro-batch only
     // probes it (shingles/df/prefixes of the 4/5 existing corpus are
     // computed and cached here, not recomputed per batch).
-    val index = new Dedup.NearDupIndex(existing)
+    val index = new Dedup.NearDupIndex(existing, stateParts)
 
     // Ingest layout: ReplayFiles id-range files, mod-times ascending in range
     // order, so the file source replays batches in id order.
@@ -224,7 +227,7 @@ object StreamParity {
         // per trigger): every AQE query stage runs as its own Spark job,
         // and this body plans ~20 exchanges/broadcasts over KB-scale
         // frames — the measured q58 floor was ~30 jobs/trigger of pure
-        // scheduling (AdmissionSweep). Static planning emits ONE job per
+        // scheduling (BASELINE_HISTORY.md). Static planning emits ONE job per
         // action here; the joins that must broadcast carry explicit
         // hints (NearDupIndex.probe), so nothing depends on AQE's
         // runtime sizing. Batch volume is micro-batch-scale by
@@ -284,16 +287,11 @@ object StreamParity {
           .coalesce(1)
         // per-batch plan evidence (the foreachBatch body is where q58's
         // joins live; the streaming plan is just the source scan) —
-        // rewritten on every batch from 1 on, where prior state is
-        // non-empty, so the file holds the last processed batch's plan
+        // recorded on every batch from 1 on, where prior state is
+        // non-empty, so it holds the last processed batch's plan
         if (batchId >= 1)
-          sys.env.get("SPARK_GRAFT_STREAM_PLAN_DIR").foreach { d =>
-            java.nio.file.Files.createDirectories(Paths.get(d))
-            java.nio.file.Files.writeString(
-              Paths.get(s"$d/q58_stream_admission.txt"),
-              out.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode))
-          }
+          recordStreamPlan("q58_stream_admission", out.queryExecution
+            .explainString(org.apache.spark.sql.execution.FormattedMode))
         out.write.mode("overwrite").partitionBy("kind").parquet(stamp)
         verdictDirs += s"$stamp/kind=v"
         // Advance the snapshot pointer to this stamp's kind=s subdir and
@@ -1290,18 +1288,22 @@ object StreamParity {
     * and the foreachBatch queries pay per-task scheduling on every
     * per-batch exchange, while the state/batch volume here is KB-scale
     * — partitions are sized to STATE VOLUME, not core count (the r13
-    * AdmissionSweep measurement behind [[withRocksDBProvider]]'s pin,
-    * now shared by the stream queries that keep the default HDFS
-    * provider). Batch queries still run at $SPARK_GRAFT_CPUS
-    * partitions; min(8, prev) keeps a lower-core driver run
-    * (SPARK_GRAFT_CPUS < 8) meaningful. */
+    * measurement behind [[withRocksDBProvider]]'s pin, now shared by
+    * the stream queries that keep the default HDFS provider). Batch
+    * queries still run at $SPARK_GRAFT_CPUS partitions; min(8, prev)
+    * keeps a lower-core driver run (SPARK_GRAFT_CPUS < 8) meaningful. */
   private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
     val pkey = "spark.sql.shuffle.partitions"
     val prevParts = spark.conf.get(pkey)
-    spark.conf.set(pkey, math.min(8, prevParts.toInt).toString)
+    spark.conf.set(pkey, statePartitions(spark).toString)
     try body
     finally spark.conf.set(pkey, prevParts)
   }
+
+  /** The streams' state partition count: min(8, the session's shuffle
+    * partitions) — see [[withStatePartitions]]. */
+  private def statePartitions(spark: SparkSession): Int =
+    math.min(8, spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
   /** Last captured micro-batch plan per query name — the spec surface
     * for stateful-operator-count assertions (a streaming query's
@@ -1322,15 +1324,21 @@ object StreamParity {
       Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
         query.explain(extended = false)
       }
-      lastStreamPlans.put(name, new String(bos.toByteArray, "UTF-8"))
-      sys.env.get("SPARK_GRAFT_STREAM_PLAN_DIR").foreach { d =>
-        Files.createDirectories(Paths.get(d))
-        Files.write(Paths.get(s"$d/$name.txt"), bos.toByteArray)
-        ()
-      }
+      recordStreamPlan(name, new String(bos.toByteArray, "UTF-8"))
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[streamplan] $name failed: ${e.getMessage}")
     }
+
+  /** The recording half of [[dumpStreamPlan]], for plans captured some
+    * other way (q58's per-batch foreachBatch plan). */
+  private def recordStreamPlan(name: String, plan: String): Unit = {
+    lastStreamPlans.put(name, plan)
+    sys.env.get("SPARK_GRAFT_STREAM_PLAN_DIR").foreach { d =>
+      Files.createDirectories(Paths.get(d))
+      Files.writeString(Paths.get(s"$d/$name.txt"), plan)
+      ()
+    }
+  }
 
   /** One side of the q82/q83 join as a live file stream. Three files
     * per trigger (the 5 time-ordered files replay in 2 micro-batches
@@ -1696,21 +1704,16 @@ object StreamParity {
       .orderBy("user_id")
   }
 
-  /** Per-batch observed quality metrics captured by q106's listener,
-    * exposed for the spec: query name -> folded counters. */
-  private[graft] val observedFold =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
-
   /** q106 — the q105 data-quality gate over a CONTINUOUSLY INGESTING
     * stream, computed by the `observe` node riding the stream: per-
     * micro-batch counter deltas surfaced on each progress event
     * (Spark's engine-native metrics side channel — the analog of the
     * reference's operator metric registry published per task,
-    * `rlink/src/metrics/metric.rs:74-108`), folded across batches by a
-    * [[org.apache.spark.sql.streaming.StreamingQueryListener]]. The
-    * fold IS the result: observe's sums/counts are exact and additive
-    * across micro-batches, so the per-rule totals equal batch q105 /
-    * its DuckDB SQL row for row (ParitySpec asserts exactly that).
+    * `rlink/src/metrics/metric.rs:74-108`), folded across the query's
+    * `recentProgress` once the stream has stopped. The fold IS the
+    * result: observe's sums/counts are exact and additive across
+    * micro-batches, so the per-rule totals equal batch q105 / its
+    * DuckDB SQL row for row (ParitySpec asserts exactly that).
     *
     * The pre-r14 shape ALSO ran a complete-mode streaming aggregation
     * (explode over |rules| per row -> stateful groupBy, re-emitting the
@@ -1722,81 +1725,57 @@ object StreamParity {
     * row through the observe node.
     *
     * Scale: observe adds per-row predicate evaluation only (no state,
-    * no shuffle); the driver holds |rules| counters. The expected-total
-    * poll bound is a column-pruned one-row count, same class as the
-    * sentinel placement in q25.
+    * no shuffle); the driver holds |rules| counters per trigger, and the
+    * trigger count (one per replay file) must fit the query's
+    * recent-progress buffer. The completeness bound is a column-pruned
+    * one-row count, same class as the sentinel placement in q25.
     */
   def q106StreamObserveQuality(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Observability
     val ev = graft.Tables.events(spark, sfDir)
     val schema = ev.schema
-    val nExpected = ev.count() // poll bound: all rows must fold
+    val nExpected = ev.count() // completeness bound: all rows must fold
     val dir = Files.createTempDirectory("q106_events")
     ev.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
+    // one trigger per file: every trigger's progress must still be in
+    // recentProgress when the fold reads it
+    val nFiles = listDir(dir).count(_.toString.endsWith(".parquet"))
+    val keep = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates").toInt
+    require(nFiles <= keep,
+      s"q106 replays $nFiles triggers but recentProgress keeps only $keep")
 
     val aggs = Observability.rules.map { case (name, pred) =>
       sum(when(pred, 1L).otherwise(0L)).as(name)
     } :+ count(lit(1)).as("n_rows")
-    val stream = spark.readStream.schema(schema)
+    // noop sink: the stream's only job is to run every row through the
+    // observe node — no state store, no shuffle, no sink buffer.
+    val query = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir.toString)
       .observe("graft_quality_stream", aggs.head, aggs.tail: _*)
-
-    val table = s"q106_quality_${runId.incrementAndGet()}"
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val m = e.progress.observedMetrics.get("graft_quality_stream")
-        if (m != null) {
-          val delta = m.schema.fieldNames
-            .map(f => f -> m.getAs[Long](f)).toMap
-          observedFold.merge(table, delta,
-            (a, b) => a.map { case (k, v) => k -> (v + b.getOrElse(k, 0L)) })
-        }
-      }
-    }
-    // One live fold per run id family: the spec reads the LATEST run,
-    // so prior runs' counter maps are dead weight in the session-long
-    // ConcurrentHashMap — drop them before this run registers.
-    observedFold.keySet.removeIf(k => k.startsWith("q106_quality_"))
-    spark.streams.addListener(listener)
-    // removeListener runs in finally: a leaked listener would stay on
-    // the SHARED session forever, folding every future q106 run's
-    // progress events into this stale key.
+      .writeStream.outputMode("append").format("noop").start()
     try {
-      // noop sink: the stream's only job is to run every row through
-      // the observe node — no state store, no shuffle, no sink buffer.
-      val query = stream.writeStream.outputMode("append")
-        .format("noop").start()
-      try {
-        query.processAllAvailable()
-        dumpStreamPlan("q106_stream_observe", query)
-      } finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in the fold
-      }
-      // progress events arrive on an async bus: poll until the listener
-      // has folded every processed row (bounded — the events were all
-      // committed before processAllAvailable returned), then REQUIRE
-      // completeness: the fold is the result now, so an incomplete fold
-      // must fail loudly, never return short counts.
-      val deadline = System.currentTimeMillis + 10000
-      while (System.currentTimeMillis < deadline &&
-          observedFold.getOrDefault(table, Map.empty)
-            .getOrElse("n_rows", -1L) != nExpected)
-        Thread.sleep(50)
-      val fold = observedFold.getOrDefault(table, Map.empty)
-      require(fold.getOrElse("n_rows", -1L) == nExpected,
-        s"observe fold incomplete: ${fold.getOrElse("n_rows", -1L)}" +
-          s" of $nExpected rows")
-      import spark.implicits._
-      Observability.rules.map(_._1).map(r => (r, fold(r), nExpected))
-        .toDF("rule", "n_bad", "n_rows")
-        .withColumn("bad_frac",
-          round(col("n_bad").cast("double") / col("n_rows"), 9))
-        .orderBy("rule")
-    } finally spark.streams.removeListener(listener)
+      query.processAllAvailable()
+      dumpStreamPlan("q106_stream_observe", query)
+    } finally {
+      query.stop() // joins the stream thread: recentProgress is final
+      deleteRecursively(dir.toFile)
+    }
+    // The fold is the result, so an incomplete fold must fail loudly,
+    // never return short counts.
+    val fold = query.recentProgress
+      .flatMap(p => Option(p.observedMetrics.get("graft_quality_stream")))
+      .map(m => m.schema.fieldNames.map(f => f -> m.getAs[Long](f)).toMap)
+      .foldLeft(Map.empty[String, Long]) { (a, b) =>
+        b.map { case (k, v) => k -> (v + a.getOrElse(k, 0L)) } }
+    require(fold.getOrElse("n_rows", -1L) == nExpected,
+      s"observe fold incomplete: ${fold.getOrElse("n_rows", -1L)}" +
+        s" of $nExpected rows")
+    import spark.implicits._
+    Observability.rules.map(_._1).map(r => (r, fold(r), nExpected))
+      .toDF("rule", "n_bad", "n_rows")
+      .withColumn("bad_frac",
+        round(col("n_bad").cast("double") / col("n_rows"), 9))
+      .orderBy("rule")
   }
 
   /** q116 — q110's sliding-window exact distinct through ONE stateful

@@ -1,11 +1,7 @@
 package graft
 
-/** Scratch timing for q58's foreachBatch machinery (run manually:
-  * `sbt "Test/runMain graft.AdmissionSweep"`). The per-batch data is
-  * tiny (~25 incoming rows against a 4/5-corpus index probe), so trigger
-  * cost is task-count-dominated: this sweeps the shuffle-partition
-  * setting the per-batch joins inherit, the same state-volume-vs-width
-  * tradeoff Bench documents for the streaming paths.
+/** Stream replay-floor ledger (run manually on a QUIET machine:
+  * `sbt "Test/runMain graft.AdmissionSweep ledger"`).
   */
 object AdmissionSweep {
 
@@ -17,15 +13,14 @@ object AdmissionSweep {
     * count via a StreamingQueryListener, per-trigger cost) and writes
     * `stream_floor_ledger.json`, so a board's streaming delta is
     * mechanically attributable to (trigger count x per-trigger floor)
-    * instead of prose. Run manually on a QUIET machine:
-    * `sbt "Test/runMain graft.AdmissionSweep ledger"`; BenchLineSpec
-    * asserts the committed artifact covers every q*stream* key. */
+    * instead of prose. BenchLineSpec asserts the committed artifact
+    * covers every q*stream* key. */
   def floorLedger(): Unit = {
+    // 8 cores and shuffle partitions: Bench's streaming configuration
+    // (state partitions sized to state volume, not core count — see
+    // Bench.streamPaths)
     val spark = TestSpark.spark
     val sf = "/root/testdata/sf0.1"
-    // mirror Bench's streaming configuration (state partitions sized to
-    // state volume, not core count — see Bench.scala)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val triggers = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.streams.addListener(
       new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -42,16 +37,13 @@ object AdmissionSweep {
     // per-trigger floor economics without the name (Bench.isStreamClass)
     val keys = SparkEntry.queries.keys.filter(Bench.isStreamClass).toSeq.sorted
     // warmup (JIT + codegen, not recorded)
-    SparkEntry.queries(keys.head)(spark, sf)
-      .write.format("noop").mode("overwrite").save()
+    Bench.materialize(spark, sf, keys.head)
     val entries = keys.map { k =>
       spark.sharedState.cacheManager.clearCache()
       Thread.sleep(1000) // drain the listener bus before the baseline read
       val tr0 = triggers.get()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(k)(spark, sf)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val dt = Bench.materialize(spark, sf, k)
+      require(dt >= 0, s"$k failed (see the [bench] line above)")
       Thread.sleep(1000) // progress events post asynchronously
       val tr = triggers.get() - tr0
       println(f"$k%-32s $tr%2d triggers  $dt%6.2f s")
@@ -69,30 +61,7 @@ object AdmissionSweep {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("ledger")) { floorLedger(); return }
-    val spark = TestSpark.spark
-    val sf = "/root/testdata/sf0.1"
-    // Count Spark jobs per run: the sweep's original finding was that the
-    // per-trigger JOB count (not task width) is the local cost floor, so
-    // report it directly — the union-write rewrite is done iff this drops.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      })
-    for (parts <- Seq("16", "8", "4"); rep <- 1 to 2) {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      val j0 = jobs.get()
-      val t0 = System.nanoTime()
-      val n = graft.streaming.StreamParity.q58StreamAdmission(spark, sf).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val nj = jobs.get() - j0
-      println(f"partitions=$parts%3s run$rep  $dt%6.2f s  ($n verdicts, $nj jobs)")
-      spark.sharedState.cacheManager.clearCache()
-    }
-    spark.stop()
+    require(args.headOption.contains("ledger"), "usage: AdmissionSweep ledger")
+    floorLedger()
   }
 }

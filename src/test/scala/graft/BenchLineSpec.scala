@@ -28,12 +28,10 @@ class BenchLineSpec extends AnyFunSuite {
       .take(Bench.BenchRetryMax)
       .padTo(Bench.BenchRetryMax, "q999_pad")
     // worst case carries every optional annotation at once: a noisy,
-    // host-disturbed, max-retried board with a band_total (slice too,
-    // impossible together with stream keys in practice but cheap to
-    // prove the budget against)
+    // host-disturbed, max-retried board with a band_total
     val line = Bench.driverLine(9999.99, fullSurface,
       "/root/testdata/sf0.1", 999999.0, isNoisy = true,
-      retried = worstRetried, slice = Some("A"),
+      retried = worstRetried,
       bandTotalSec = Some(9999.9), hostDisturbed = true)
     assert(line.length <= Bench.DriverLineBudget)
     assert(line.contains("\"retried\":["))
@@ -292,7 +290,7 @@ class BenchLineSpec extends AnyFunSuite {
     val line = Bench.driverLine(9999.99, grown,
       "/root/testdata/sf0.1", 999999.0, isNoisy = true,
       retried = Seq.fill(Bench.BenchRetryMax)("q999_pad"),
-      slice = Some("A"), bandTotalSec = Some(9999.9), hostDisturbed = true)
+      bandTotalSec = Some(9999.9), hostDisturbed = true)
     assert(line.length <= Bench.DriverLineBudget)
   }
 
@@ -468,18 +466,6 @@ class BenchLineSpec extends AnyFunSuite {
     }
   }
 
-  test("split-half slices partition the surface exactly") {
-    val all = SparkEntry.queries.keys
-      .filterNot(_ == "q25_stream_batch_parity").toSeq.sorted
-    val a = Bench.sliceNames(all, Some("A"))
-    val b = Bench.sliceNames(all, Some("B"))
-    assert(a ++ b == all, "A then B is the whole sorted surface")
-    assert((a.toSet & b.toSet).isEmpty, "no key runs in both halves")
-    assert(math.abs(a.size - b.size) <= 1)
-    assert(Bench.sliceNames(all, None) == all)
-    assert(Bench.sliceNames(all, Some("bogus")) == all)
-  }
-
   test("heal never resurrects a failure and never raises a time") {
     val results = Seq("a" -> 5.0, "b" -> -1.0, "c" -> 2.0)
     val healed = Bench.heal(results,
@@ -569,7 +555,7 @@ class BenchLineSpec extends AnyFunSuite {
       Seq.fill(Bench.StreamRetryMax)("q998_pad")
     val line = Bench.driverLine(9999.99, grown,
       "/root/testdata/sf0.1", 999999.0, isNoisy = true,
-      retried = retried, slice = Some("A"), bandTotalSec = Some(9999.9),
+      retried = retried, bandTotalSec = Some(9999.9),
       hostDisturbed = true)
     assert(line.length <= Bench.DriverLineBudget)
   }

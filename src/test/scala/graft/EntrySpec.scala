@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract smoke: entry() must return rows on a session the driver
   * hands us (no custom confs assumed — Tables.events sets what it needs at
   * runtime). */
@@ -23,6 +25,21 @@ class EntrySpec extends SparkSpec {
     assert(m.group(2).toInt == SparkEntry.queries.size,
       s"COVERAGE.md claims ${m.group(2)} total; registry has " +
         s"${SparkEntry.queries.size}")
+  }
+
+  test("GraftSession is the only SparkSession builder in src/") {
+    // every main and the suite share one session shape; the graftbridge
+    // helper is exempt (it needs a Spark-private context conf)
+    val builder = raw"SparkSession\s*\.\s*builder\b".r
+    val allowed = Set("GraftSession.scala", "ExtensionConfSession.scala")
+    val offenders = Seq("src/main", "src/test").flatMap { root =>
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try files.iterator().asScala.toList finally files.close()
+    }.filter(p => p.toString.endsWith(".scala") &&
+        !allowed(p.getFileName.toString))
+      .filter(p => builder.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+    assert(offenders.isEmpty,
+      s"build sessions through GraftSession.local, not in: ${offenders.mkString(", ")}")
   }
 
   test("every query name has either an oracle or a documented omission") {

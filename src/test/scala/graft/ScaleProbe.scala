@@ -168,17 +168,7 @@ object ScaleProbe {
     * per-query min-of-2 wall time plus total shuffle-write bytes (the
     * quantity the codec actually changes). */
   private def codecMode(codec: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-codec-$codec")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec", codec)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(extra = Map("spark.io.compression.codec" -> codec))
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {

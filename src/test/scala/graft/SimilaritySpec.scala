@@ -75,9 +75,10 @@ class SimilaritySpec extends SparkSpec {
       "candidates stay a strict subset") {
     // The larger SF is where the corpus-derived K (max(24, sqrt(n)))
     // actually departs from MinCells: n=2000 -> K=45, nprobe=9. Floors
-    // from the IvfSweep frontier (0.94 recall / 0.58 fraction measured
-    // at delta=0.18; deterministic sample + seeded k-means, so these are
-    // regression margins, not flake allowances).
+    // from the r13 IVF sweep frontier (0.94 recall / 0.58 fraction at
+    // delta=0.18, OPTIMIZATION_r13.md §E and Similarity.AssignDelta;
+    // deterministic sample + seeded k-means, so these are regression
+    // margins, not flake allowances).
     val big = "/root/testdata/sf0.1"
     val exact = Similarity.q22AnnBruteForce(spark, big)
       .select("query_id", "neighbor_id").collect()

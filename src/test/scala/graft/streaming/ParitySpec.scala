@@ -14,6 +14,30 @@ class ParitySpec extends SparkSpec {
     rec(p.toFile)
   }
 
+  /** (input columns, arguments) of every exchange a formatted plan runs
+    * itself. Formatted-plan ids are post-order, so a cache's nested
+    * build plan holds the ids between its InMemoryRelation and the root
+    * printed on the next line; those exchanges ran once, at cache build,
+    * and are skipped. */
+  private def triggerExchanges(plan: String): Seq[(Set[String], String)] = {
+    val tree = plan.linesIterator.dropWhile(!_.startsWith("== Physical Plan"))
+      .drop(1).takeWhile(_.trim.nonEmpty).toSeq
+    val id = raw"\((\d+)\)".r
+    def idOf(line: String) = id.findFirstMatchIn(line).map(_.group(1).toInt)
+    val nested = tree.zip(tree.drop(1)).collect {
+      case (rel, root) if rel.contains("InMemoryRelation (") => (idOf(rel), idOf(root))
+    }.collect { case (Some(lo), Some(hi)) => (lo, hi) }
+    tree.flatMap(l => raw"Exchange \((\d+)\)".r.findFirstMatchIn(l))
+      .map(_.group(1).toInt).distinct
+      .filterNot(x => nested.exists { case (lo, hi) => lo < x && x <= hi })
+      .map { x =>
+        val m = (raw"\($x\) \w*Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]" +
+          raw"\nArguments: ([^\n]*)").r.findFirstMatchIn(plan)
+          .getOrElse(fail(s"no details for exchange ($x)"))
+        (m.group(1).split(", ").map(_.takeWhile(_ != '#')).toSet, m.group(2))
+      }
+  }
+
   test("q25 file-stream parity equals batch q01") {
     val streamed = StreamParity.q25StreamBatchParity(spark, sf).collect().toSeq
     val batch = graft.operators.Relational.q01SlidingWindowAgg(spark, sf)
@@ -196,6 +220,38 @@ class ParitySpec extends SparkSpec {
       "micro-batch replay + seen-state must reproduce the single-shot gate")
     // the gate must actually exercise more than one batch (4 range files)
     assert(streamed.map(_.getLong(0)).distinct.size == batch.size)
+  }
+
+  test("q58 below 8 cores: per-batch joins run at the stream's partition count") {
+    // The stream runs at min(8, session) state partitions; the cached
+    // corpus hash set and df table are laid out at that same count, so
+    // each trigger's joins hash only the batch side, into as many
+    // partitions as the stream has. Auto-broadcast is off so the corpus
+    // sides join by sort-merge, as at corpus scale (the batch sides keep
+    // their explicit broadcast hints).
+    val confs = Map("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = confs.keys.map(k => k -> spark.conf.get(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      StreamParity.lastStreamPlans.remove("q58_stream_admission")
+      val streamed = StreamParity.q58StreamAdmission(spark, sf).collect().toSeq
+      val batch = graft.operators.Dedup.q52IncrementalDedup(spark, sf)
+        .collect().toSeq
+      assert(streamed.nonEmpty)
+      assert(streamed === batch)
+      val plan = StreamParity.lastStreamPlans.get("q58_stream_admission")
+      assert(plan != null, "per-batch plan recorded")
+      val exchanges = triggerExchanges(plan)
+      assert(exchanges.nonEmpty, "the batch side is exchanged")
+      val corpusSides = Seq(Set("ch", "hit_corpus"), Set("h", "df"))
+      assert(!exchanges.exists(e => corpusSides.contains(e._1)),
+        s"a cached corpus side is re-exchanged per trigger:\n$plan")
+      val joinParts = exchanges.flatMap { case (_, args) =>
+        raw"hashpartitioning\(.*, (\d+)\), ENSURE_REQUIREMENTS".r
+          .findFirstMatchIn(args).map(_.group(1).toInt) }.toSet
+      assert(joinParts == Set(4), s"per-batch join partition counts: $joinParts")
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("q66 streaming heavy hitters equals batch q61 (sketches folded across micro-batches)") {
