@@ -380,8 +380,9 @@ object Bench {
   }
 
   /** The two streaming measurements (q25 parity path + flagship ingest),
-    * returning (parity sec, ingest sec, ingest rows/s). Streaming paths
-    * cap state partitions at 8: stateful queries pay a per-partition
+    * returning (parity sec, ingest sec, ingest rows/s). Both run at the
+    * streams' state partition count (`Replay.withStatePartitions`,
+    * min(8, session)): stateful queries pay a per-partition
     * state-store commit every micro-batch; at this state volume (~30k
     * window-state groups) the sweep measured 3.4/3.8/4.4/6.0 s ingest at
     * 4/8/16/32 partitions (HDFS-backed store; RocksDB 4x worse here —
@@ -390,46 +391,40 @@ object Bench {
     * the map side. On a real cluster this is the
     * `shuffle.partitions`-vs-state-store sizing tradeoff — partitions
     * sized to state volume, not core count. */
-  def streamPaths(spark: SparkSession, sfDir: String,
-      cpus: Int): (Double, Double, Double) = {
+  def streamPaths(spark: SparkSession, sfDir: String): (Double, Double, Double) = {
+    import graft.streaming.Replay
     val nEvents = Tables.events(spark, sfDir).count()
-    spark.conf.set("spark.sql.shuffle.partitions", math.min(8, cpus).toString)
+    Replay.withStatePartitions(spark) {
+      // Parity path (file-stream source end to end — no driver in the
+      // data path; includes the final result sort).
+      val tParity = {
+        val t0 = System.nanoTime()
+        graft.streaming.StreamParity.q25StreamBatchParity(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
 
-    // Parity path (file-stream source end to end — no driver in the data
-    // path; includes the final result sort).
-    val tParity = {
-      val t0 = System.nanoTime()
-      graft.streaming.StreamParity.q25StreamBatchParity(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      // Flagship streaming ingest: file source -> watermark -> sliding
+      // window agg -> noop, no driver in the data path. Measures the real
+      // Structured Streaming pipeline throughput.
+      val tIngest = Replay.run(spark, "bench_events") { r =>
+        import org.apache.spark.sql.functions._
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        val table = s"$sfDir/events.parquet"
+        val agg = Tables.normalizeTs(
+            r.linked(table, spark.read.parquet(table).schema))
+          .withWatermark("ts", "1 second")
+          .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("event_type"))
+          .agg(sum("value").as("sum_value"), max("value").as("max_value"),
+            min("value").as("min_value"), count(lit(1)).as("cnt"))
+        val t0 = System.nanoTime()
+        val q = agg.writeStream.outputMode("append").format("noop")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        (System.nanoTime() - t0) / 1e9
+      }
+      (tParity, tIngest, nEvents / tIngest)
     }
-
-    // Flagship streaming ingest: file source -> watermark -> sliding
-    // window agg -> noop, no driver in the data path. Measures the real
-    // Structured Streaming pipeline throughput.
-    val tIngest = {
-      import org.apache.spark.sql.functions._
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the file stream source requires a directory: symlink the table in
-      val dir = java.nio.file.Files.createTempDirectory("bench_events")
-      java.nio.file.Files.createSymbolicLink(
-        dir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-      val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-      val agg = Tables.normalizeTs(
-          spark.readStream.schema(schema).parquet(dir.toString))
-        .withWatermark("ts", "1 second")
-        .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("event_type"))
-        .agg(sum("value").as("sum_value"), max("value").as("max_value"),
-          min("value").as("min_value"), count(lit(1)).as("cnt"))
-      val t0 = System.nanoTime()
-      val q = agg.writeStream.outputMode("append").format("noop")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      (System.nanoTime() - t0) / 1e9
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
-    (tParity, tIngest, nEvents / tIngest)
   }
 
   /** One timed key: build SparkEntry.queries(key) and write it to the
@@ -534,7 +529,7 @@ object Bench {
     val hostDisturbed = retrySentinelTimes.nonEmpty &&
       retryWindowHot(retrySentinelTimes)
 
-    val (tParity, tIngest, streamRowsPerSec) = streamPaths(spark, sfDir, cpus)
+    val (tParity, tIngest, streamRowsPerSec) = streamPaths(spark, sfDir)
 
     // Spread (both raw run times per query) goes on its OWN earlier line:
     // it is diagnostic data for humans/BASELINE.md, not driver-consumed,

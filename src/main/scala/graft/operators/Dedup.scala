@@ -820,17 +820,20 @@ object Dedup {
     *
     * `partitions` is the probing stream's state partition count: the
     * index's df table is laid out in that many h-hashed, h-sorted
-    * cached partitions so the per-trigger prefix-order join reuses the
-    * cache's partitioning+ordering — the batch side is the ONLY side
+    * cached partitions so that, once df outgrows the broadcast
+    * threshold, the per-trigger prefix-order join reuses the cache's
+    * partitioning+ordering — the batch side is then the ONLY side
     * exchanged per trigger. */
   private[graft] final class NearDupIndex(existing: DataFrame, partitions: Int) {
     val docsEx: DataFrame = shingleDocs(existing).cache()
-    // df is joined on h every trigger as the preserved-side of a left
-    // join (no broadcast possible): pre-partition AND pre-sort the
-    // cached layout on the join key so the per-trigger sort-merge reads
-    // it exchange-free and sort-free (guide §2.4 — two operations keyed
-    // the same way share one exchange; here the exchange is paid once
-    // at index build).
+    // df is joined on h every trigger as the build side of a left join,
+    // so with AQE off the static planner broadcasts it afresh every
+    // trigger whenever it fits spark.sql.autoBroadcastJoinThreshold.
+    // Above the threshold the join runs sort-merge, and this layout
+    // applies: pre-partitioned AND pre-sorted on the join key, the
+    // cached side is read exchange-free and sort-free (guide §2.4 — two
+    // operations keyed the same way share one exchange; here the
+    // exchange is paid once at index build).
     val dfreq: DataFrame = docsEx.select(explode(col("hs")).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
       .repartition(partitions, col("h")).sortWithinPartitions("h")

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructType}
+
+import Replay.{ByRange, Pinned, ReplayFiles, RocksDB, RoundRobin, SessionPartitions}
 
 /** Streaming/batch parity: the flagship sliding-window aggregation run
   * through the REAL Structured Streaming engine (file source, watermark,
@@ -20,32 +19,11 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   * are the max timestamp (a column-pruned one-row aggregate, needed to
   * place the sentinel) and the final windowed result.
   *
-  * End-of-stream flush: the reference emits `MAX_WATERMARK` on stream
-  * termination so all open windows close
-  * (`rlink/src/runtime/worker/runnable/watermark_assigner_runnable.rs:125-128`).
-  * Spark's append mode has no termination flush, so we replay the same
-  * trick: a one-row sentinel FILE, 1 hour past the last real event, sits
-  * alongside the real table in the streamed directory. After the batch
-  * containing it commits, the watermark passes every real window end and
-  * the engine's no-data micro-batch emits all remaining windows
-  * (`processAllAvailable` blocks until that quiesces). Sentinel-keyed
-  * rows are filtered from the result.
+  * Every stream key replays through [[Replay]]: file layout, the
+  * end-of-stream sentinel file that stands in for the reference's
+  * `MAX_WATERMARK` flush, and the run/record/clean-up cycle.
   */
 object StreamParity {
-
-  private val runId = new AtomicInteger(0)
-
-  /** Data files per replay (one micro-batch each, plus the sentinel
-    * trigger where a query uses one). Two batches is the MINIMUM that
-    * still proves cross-batch state carry — every state fold here is
-    * replay-split invariant by construction (complete-mode tables,
-    * min-first-wins folds, watermark-flushed windows over time-ordered
-    * files), and ParitySpec pins that invariance explicitly where it is
-    * least obvious (q126 at splits 2 vs 8). Wall-clock per query is
-    * dominated by per-trigger job count (BASELINE_HISTORY.md, q58), so
-    * the bench path runs the minimum; specs that want finer replays
-    * pass their own split. */
-  private[streaming] val ReplayFiles = 2
 
   /** Max ts + 1 hour, as a value of the RAW ts column's type — the
     * sentinel row must stay schema-identical to the streamed table, and
@@ -69,51 +47,24 @@ object StreamParity {
     // real table are schema-identical for the file source.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
+    val sentinel = Map("ts" -> sentinelTsPlus1h(raw),
+      "event_type" -> "zzz_sentinel", "value" -> 0.0)
 
-    // Stream directory: symlink the real table + write the sentinel file.
-    val dir = Files.createTempDirectory("q25_parity")
-    Files.createSymbolicLink(
-      dir.resolve("events.parquet"), Paths.get(s"$sfDir/events.parquet"))
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"         => sentinelTs // +1 hour past the last real event
-        case "event_type" => "zzz_sentinel"
-        case "value"      => 0.0
-        case _            => null
-      }
-    }
-    val sentinelDir = Files.createTempDirectory("q25_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, dir.resolve("zz_sentinel.parquet")))
-
-    val agg = graft.Tables.normalizeTs(
-        spark.readStream.schema(schema).parquet(dir.toString))
-      .select(col("ts"), col("event_type"), col("value"))
-      .withWatermark("ts", "1 second")
-      .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("event_type"))
-      .agg(
-        sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"),
-        max(col("value")).as("max_value"),
-        min(col("value")).as("min_value"),
-        count(lit(1)).as("cnt"))
-
-    val table = s"q25_parity_${runId.incrementAndGet()}"
-    val query = agg.writeStream.outputMode("append")
-      .format("memory").queryName(table).start()
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // output lives in the memory sink
-      deleteRecursively(sentinelDir.toFile)
+    val out = Replay.run(spark, "q25_stream_batch_parity") { r =>
+      val agg = graft.Tables.normalizeTs(
+          r.linked(s"$sfDir/events.parquet", raw.schema, sentinel))
+        .select(col("ts"), col("event_type"), col("value"))
+        .withWatermark("ts", "1 second")
+        .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("event_type"))
+        .agg(
+          sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"),
+          max(col("value")).as("max_value"),
+          min(col("value")).as("min_value"),
+          count(lit(1)).as("cnt"))
+      r.memory(agg, "append", SessionPartitions)
     }
 
-    drainMemorySink(spark, table)
-      .filter(col("event_type") =!= "zzz_sentinel")
+    out.filter(col("event_type") =!= "zzz_sentinel")
       .select(
         col("window.start").cast("long").as("window_start"),
         col("event_type"), col("sum_value"), col("max_value"),
@@ -174,15 +125,18 @@ object StreamParity {
     import graft.operators.Dedup
     // the stream's state partition count also lays out both cached
     // corpus sides, so each trigger's joins exchange only the batch
-    val stateParts = statePartitions(spark)
+    val stateParts = Replay.statePartitions(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
     val existing = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0).cache()
     // corpus hash set, laid out like the index's df table: ch-hashed,
-    // ch-sorted cached partitions at the stream's state partition count,
-    // so the per-trigger exact-layer join sorts/shuffles ONLY the batch
-    // side (broadcasting this side would not be corpus-scale-sane)
+    // ch-sorted cached partitions at the stream's state partition count.
+    // It is the build side of the per-trigger left join, so with AQE off
+    // the static planner broadcasts it afresh every trigger whenever it
+    // fits spark.sql.autoBroadcastJoinThreshold; only above the threshold
+    // does the join run sort-merge over this layout, exchanging ONLY the
+    // batch side.
     val existingH = existing.select(md5(col("text")).as("ch")).distinct()
       .withColumn("hit_corpus", lit(true))
       .repartition(stateParts, col("ch"))
@@ -192,134 +146,116 @@ object StreamParity {
     // computed and cached here, not recomputed per batch).
     val index = new Dedup.NearDupIndex(existing, stateParts)
 
-    // Ingest layout: ReplayFiles id-range files, mod-times ascending in range
-    // order, so the file source replays batches in id order.
-    val dir = Files.createTempDirectory("q58_incoming")
-    incoming.repartitionByRange(ReplayFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
+    try Replay.run(spark, "q58_stream_admission") { r =>
+      val ioRoot = r.tempDir("io")
+      val seenSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("ch",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("first_id",
+          org.apache.spark.sql.types.LongType)))
+      // Snapshot pointer + idempotence guard + stamp GC live in the shared
+      // StampedLedger (the snapshot pointer tracks the kind=s SUBDIR of
+      // each stamp — the kind=v verdict dirs are tracked separately and
+      // read back after the stream stops).
+      val ledger = new StampedLedger(ioRoot)
+      val verdictDirs = scala.collection.mutable.ArrayBuffer.empty[String]
 
-    val ioRoot = Files.createTempDirectory("q58_io").toString
-    val seenSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("ch",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("first_id",
-        org.apache.spark.sql.types.LongType)))
-    // Snapshot pointer + idempotence guard + stamp GC live in the shared
-    // StampedLedger (the snapshot pointer tracks the kind=s SUBDIR of
-    // each stamp — the kind=v verdict dirs are tracked separately and
-    // read back after the stream stops).
-    val ledger = new StampedLedger(ioRoot)
-    val verdictDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-    val query = withStatePartitions(spark) { spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ledger.guard(batchId) {
-        val s = batch.sparkSession
-        // AQE off for the per-batch jobs (cloned-session conf, set once
-        // per trigger): every AQE query stage runs as its own Spark job,
-        // and this body plans ~20 exchanges/broadcasts over KB-scale
-        // frames — the measured q58 floor was ~30 jobs/trigger of pure
-        // scheduling (BASELINE_HISTORY.md). Static planning emits ONE job per
-        // action here; the joins that must broadcast carry explicit
-        // hints (NearDupIndex.probe), so nothing depends on AQE's
-        // runtime sizing. Batch volume is micro-batch-scale by
-        // construction, exactly the case static planning handles.
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        val b = batch.cache()
-        val hashed = b.select(col("doc_id"), md5(col("text")).as("ch"))
-        // The ONLY aggregation this batch runs is over its own rows.
-        val batchMins = hashed.groupBy(col("ch"))
-          .agg(min(col("doc_id")).as("bmin"))
-        val prev = ledger.previous(s, seenSchema)
-          .select(col("ch"), col("first_id").as("pmin"))
-        val firstIds = batchMins.join(prev, Seq("ch"), "left")
-          .select(col("ch"),
-            least(col("bmin"), coalesce(col("pmin"), col("bmin")))
-              .as("first_id"))
-        // explicit build-side hints: with AQE off, the batch-derived
-        // frames have no stats and would otherwise plan sort-merge
-        val exactFlags = hashed
-          .join(existingH, Seq("ch"), "left")
-          .join(broadcast(firstIds), "ch")
-          .select(col("doc_id"),
-            coalesce(col("hit_corpus"), lit(false)).as("exact_corpus"),
-            (col("doc_id") > col("first_id")).as("exact_batch"))
-        val near = index.probe(b)
-          .withColumn("near_corpus", lit(true))
-        val verdicts = exactFlags.join(broadcast(near), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("exact_corpus"), "exact_corpus")
-              .when(col("exact_batch"), "exact_batch")
-              .when(coalesce(col("near_corpus"), lit(false)), "near_dup_corpus")
-              .otherwise("admitted").as("verdict"))
-        // Incremental state update: fold the batch minima into the
-        // snapshot (full outer on ch — USING-join coalesces the key),
-        // rewritten compacted. One sequential pass over the snapshot;
-        // the tiny batch side broadcasts.
-        val nextRows = prev.join(batchMins, Seq("ch"), "full")
-          .select(col("ch"),
-            least(coalesce(col("pmin"), col("bmin")),
-              coalesce(col("bmin"), col("pmin"))).as("first_id"))
-        // ONE output job per trigger: verdicts and the rewritten snapshot
-        // union into a single kind-partitioned write (the per-trigger job
-        // count — not task width — is the measured cost floor of this
-        // operator locally; two separate writes paid two job+commit
-        // rounds for two tiny frames). coalesce(1): one file per kind —
-        // these frames are batch/seen-sized, and default-parallelism
-        // writes cost 8+ tasks/files per micro-batch for ~25 rows.
-        val stamp = ledger.stampFor(batchId)
-        val out = verdicts
-          .select(lit("v").as("kind"), col("doc_id"), col("verdict"),
-            lit(null).cast("string").as("ch"),
-            lit(null).cast("long").as("first_id"))
-          .unionByName(nextRows
-            .select(lit("s").as("kind"), lit(null).cast("long").as("doc_id"),
-              lit(null).cast("string").as("verdict"),
-              col("ch"), col("first_id")))
-          .coalesce(1)
-        // per-batch plan evidence (the foreachBatch body is where q58's
-        // joins live; the streaming plan is just the source scan) —
-        // recorded on every batch from 1 on, where prior state is
-        // non-empty, so it holds the last processed batch's plan
-        if (batchId >= 1)
-          recordStreamPlan("q58_stream_admission", out.queryExecution
-            .explainString(org.apache.spark.sql.execution.FormattedMode))
-        out.write.mode("overwrite").partitionBy("kind").parquet(stamp)
-        verdictDirs += s"$stamp/kind=v"
-        // Advance the snapshot pointer to this stamp's kind=s subdir and
-        // GC the superseded one. An all-empty batch over empty prior
-        // state writes no kind=s subdir (dynamic partitioning emits
-        // nothing for zero rows) — advanceTo leaves the pointer alone,
-        // which is safe: when the new dir is missing, prev state was
-        // necessarily empty too (the full join preserves every prior
-        // row), so retaining it is a no-op defensive choice, not a
-        // state fork.
-        ledger.advanceTo(s"$stamp/kind=s")
-        b.unpersist()
-        ()
-        }
-        ()
-      }
-      .start()
-    } // withStatePartitions: the stream's cloned session snapshots the
-      // pinned conf at start; the outer session is restored here
-    // Cleanup runs in finally: a foreachBatch failure must not leak the
-    // corpus-sized replay/io trees on disk or the index's cached frames
-    // in the session (they'd otherwise pin memory until session end).
-    try {
-      query.processAllAvailable()
+      // Ingest layout: ReplayFiles id-range files, so the file source
+      // replays batches in id order.
+      r.await(r.files(incoming, ByRange("doc_id"))
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.guard(batchId) {
+          val s = batch.sparkSession
+          // AQE off for the per-batch jobs (cloned-session conf, set once
+          // per trigger): every AQE query stage runs as its own Spark job,
+          // and this body plans ~20 exchanges/broadcasts over KB-scale
+          // frames — the measured q58 floor was ~30 jobs/trigger of pure
+          // scheduling (BASELINE_HISTORY.md). Static planning emits ONE job per
+          // action here; the joins that must broadcast carry explicit
+          // hints (NearDupIndex.probe), so nothing depends on AQE's
+          // runtime sizing. Batch volume is micro-batch-scale by
+          // construction, exactly the case static planning handles.
+          s.conf.set("spark.sql.adaptive.enabled", "false")
+          val b = batch.cache()
+          val hashed = b.select(col("doc_id"), md5(col("text")).as("ch"))
+          // The ONLY aggregation this batch runs is over its own rows.
+          val batchMins = hashed.groupBy(col("ch"))
+            .agg(min(col("doc_id")).as("bmin"))
+          val prev = ledger.previous(s, seenSchema)
+            .select(col("ch"), col("first_id").as("pmin"))
+          val firstIds = batchMins.join(prev, Seq("ch"), "left")
+            .select(col("ch"),
+              least(col("bmin"), coalesce(col("pmin"), col("bmin")))
+                .as("first_id"))
+          // explicit build-side hints: with AQE off, the batch-derived
+          // frames have no stats and would otherwise plan sort-merge
+          val exactFlags = hashed
+            .join(existingH, Seq("ch"), "left")
+            .join(broadcast(firstIds), "ch")
+            .select(col("doc_id"),
+              coalesce(col("hit_corpus"), lit(false)).as("exact_corpus"),
+              (col("doc_id") > col("first_id")).as("exact_batch"))
+          val near = index.probe(b)
+            .withColumn("near_corpus", lit(true))
+          val verdicts = exactFlags.join(broadcast(near), Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              when(col("exact_corpus"), "exact_corpus")
+                .when(col("exact_batch"), "exact_batch")
+                .when(coalesce(col("near_corpus"), lit(false)), "near_dup_corpus")
+                .otherwise("admitted").as("verdict"))
+          // Incremental state update: fold the batch minima into the
+          // snapshot (full outer on ch — USING-join coalesces the key),
+          // rewritten compacted. One sequential pass over the snapshot;
+          // the tiny batch side broadcasts.
+          val nextRows = prev.join(batchMins, Seq("ch"), "full")
+            .select(col("ch"),
+              least(coalesce(col("pmin"), col("bmin")),
+                coalesce(col("bmin"), col("pmin"))).as("first_id"))
+          // ONE output job per trigger: verdicts and the rewritten snapshot
+          // union into a single kind-partitioned write (the per-trigger job
+          // count — not task width — is the measured cost floor of this
+          // operator locally; two separate writes paid two job+commit
+          // rounds for two tiny frames). coalesce(1): one file per kind —
+          // these frames are batch/seen-sized, and default-parallelism
+          // writes cost 8+ tasks/files per micro-batch for ~25 rows.
+          val stamp = ledger.stampFor(batchId)
+          val out = verdicts
+            .select(lit("v").as("kind"), col("doc_id"), col("verdict"),
+              lit(null).cast("string").as("ch"),
+              lit(null).cast("long").as("first_id"))
+            .unionByName(nextRows
+              .select(lit("s").as("kind"), lit(null).cast("long").as("doc_id"),
+                lit(null).cast("string").as("verdict"),
+                col("ch"), col("first_id")))
+            .coalesce(1)
+          // per-batch plan evidence (the foreachBatch body is where q58's
+          // joins live; the streaming plan is just the source scan) —
+          // recorded on every batch from 1 on, where prior state is
+          // non-empty, so it holds the last processed batch's plan
+          if (batchId >= 1)
+            lastStreamPlans.put("q58_stream_admission", out.queryExecution
+              .explainString(org.apache.spark.sql.execution.FormattedMode))
+          out.write.mode("overwrite").partitionBy("kind").parquet(stamp)
+          verdictDirs += s"$stamp/kind=v"
+          // Advance the snapshot pointer to this stamp's kind=s subdir and
+          // GC the superseded one. An all-empty batch over empty prior
+          // state writes no kind=s subdir (dynamic partitioning emits
+          // nothing for zero rows) — advanceTo leaves the pointer alone,
+          // which is safe: when the new dir is missing, prev state was
+          // necessarily empty too (the full join preserves every prior
+          // row), so retaining it is a no-op defensive choice, not a
+          // state fork.
+          ledger.advanceTo(s"$stamp/kind=s")
+          b.unpersist()
+          ()
+          }
+          ()
+        })
 
       // A batch with no admissible rows writes no kind=v subdir — read
-      // only the ones that exist (never the case with this 4-file
-      // layout, but an empty trailing trigger must not fail the read).
+      // only the ones that exist (never the case with this layout, but an
+      // empty trailing trigger must not fail the read).
       val existingDirs = verdictDirs.filter(d => new java.io.File(d).isDirectory)
       // materialize eagerly so the verdict/incoming temp trees can go
       spark.read.parquet(existingDirs.toSeq: _*)
@@ -327,14 +263,12 @@ object StreamParity {
         .orderBy("doc_id")
         .localCheckpoint(true)
     } finally {
-      query.stop()
       // The persistent index's caches belong to the stream's lifetime,
-      // not the session's — release them now that the stream has stopped.
+      // not the session's — release them even when a batch failed (they
+      // would otherwise pin memory until session end).
       index.close()
       existingH.unpersist()
       existing.unpersist()
-      deleteRecursively(dir.toFile)
-      deleteRecursively(new java.io.File(ioRoot))
     }
   }
 
@@ -363,64 +297,27 @@ object StreamParity {
   def q71StreamSessions(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
-
-    // ReplayFiles contiguous time-range files, replayed oldest-first.
-    val dir = Files.createTempDirectory("q71_sessions")
-    raw.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
-
     // Sentinel: one event 1 h past the last real one, for a user id that
     // cannot occur (-1) — closes all open sessions once its batch commits.
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"      => sentinelTs
-        case "user_id" => -1L
-        case "value"   => 0.0
-        case _         => null
-      }
-    }
-    val sentinelDir = Files.createTempDirectory("q71_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    val sentinelTarget = dir.resolve("zz_sentinel.parquet")
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, sentinelTarget))
-    require(sentinelTarget.toFile.setLastModified(t0 + parts.length * 10000L))
+    val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
+      "value" -> 0.0)
 
-    val agg = graft.Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-      .select(col("ts"), col("user_id"), col("value"))
-      .withWatermark("ts", "1 second")
-      .groupBy(session_window(col("ts"), "300 seconds"), col("user_id"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"))
-
-    val table = s"q71_sessions_${runId.incrementAndGet()}"
     // session-window state on the RocksDB provider: the merging-window
     // state shape (variable-width sessions, state rewritten on merge)
     // joins the windowed-dedup (q116), transformWithState (q126+), and
     // stream-stream-join (q82/q83) shapes on the scale backend.
-    withRocksDBProvider(spark) {
-      val query = agg.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in the memory sink
-        deleteRecursively(sentinelDir.toFile)
-      }
+    val out = Replay.run(spark, "q71_stream_sessions") { r =>
+      val agg = graft.Tables.normalizeTs(
+          r.files(raw, ByRange("ts"), sentinel = sentinel))
+        .select(col("ts"), col("user_id"), col("value"))
+        .withWatermark("ts", "1 second")
+        .groupBy(session_window(col("ts"), "300 seconds"), col("user_id"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"))
+      r.memory(agg, "append", RocksDB)
     }
 
-    drainMemorySink(spark, table)
-      .filter(col("user_id") =!= -1L)
+    out.filter(col("user_id") =!= -1L)
       .select(
         col("session_window.start").cast("long").as("session_start"),
         col("user_id"), col("cnt"), col("sum_value"))
@@ -444,26 +341,13 @@ object StreamParity {
     * downstream idempotent sink keyed on text_hash. */
   def q49StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val schema = docs.schema
-    val dir = Files.createTempDirectory("q49_docs")
-    docs.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
-
-    val agg = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .groupBy(md5(col("text")).as("text_hash"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      .select(col("keep_id"), col("n_copies"))
-
-    val table = s"q49_dedup_${runId.incrementAndGet()}"
-    val query = withStatePartitions(spark) { agg.writeStream.outputMode("complete")
-      .format("memory").queryName(table).start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // output lives in the memory sink
-    }
-
-    drainMemorySink(spark, table).orderBy("keep_id")
+    Replay.run(spark, "q49_stream_dedup") { r =>
+      val agg = r.files(docs, RoundRobin)
+        .groupBy(md5(col("text")).as("text_hash"))
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
+        .select(col("keep_id"), col("n_copies"))
+      r.memory(agg, "complete", Pinned)
+    }.orderBy("keep_id")
   }
 
   /** q231 — streaming vector-index ingest: the ANN family's LIVE path.
@@ -485,6 +369,7 @@ object StreamParity {
     * overwrite dirs (exactly-once under at-least-once retries). Driver
     * state: the K-row codebook only. */
   def q231StreamIvfIngest(spark: SparkSession, sfDir: String): DataFrame = {
+    import graft.functions.GraftFunctions.{centroidScores, dot}
     val K = 8
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -492,44 +377,33 @@ object StreamParity {
     // TrainSampleCap discipline)
     val cents: Seq[Seq[Double]] = e.orderBy("vec_id").limit(K).collect()
       .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
+    // built outside the per-trigger closure: the column carries the
+    // codebook broadcast, so the query makes one broadcast, not one per
+    // trigger
+    val scores = centroidScores(col("embedding"), col("norm"), cents)
 
-    val dir = Files.createTempDirectory("q231_vecs")
-    e.repartitionByRange(ReplayFiles, col("vec_id"))
-      .sortWithinPartitions("vec_id")
-      .write.mode("overwrite").parquet(dir.toString)
-    val outRoot = Files.createTempDirectory("q231_idx").toString
-
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.functions.GraftFunctions.{centroidScores, dot}
-        batch
-          .withColumn("norm",
-            sqrt(dot(col("embedding"), col("embedding"))))
-          .withColumn("sc",
-            centroidScores(col("embedding"), col("norm"), cents))
-          // argmax with the LOWEST cell winning ties: struct compare is
-          // (s, nc) lexicographic, so negating the index flips the tie
-          .withColumn("pick",
-            expr("array_max(transform(sc, x -> struct(x.s AS s, -x.c AS nc)))"))
-          .select(col("vec_id"),
-            (-col("pick.nc")).cast("long").as("cell"),
-            col("pick.s").as("score"))
-          .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
+    Replay.run(spark, "q231_stream_ivf_ingest") { r =>
+      val outRoot = r.tempDir("idx")
+      r.await(r.files(e, ByRange("vec_id"))
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch
+            .withColumn("norm",
+              sqrt(dot(col("embedding"), col("embedding"))))
+            .withColumn("sc", scores)
+            // argmax with the LOWEST cell winning ties: struct compare is
+            // (s, nc) lexicographic, so negating the index flips the tie
+            .withColumn("pick",
+              expr("array_max(transform(sc, x -> struct(x.s AS s, -x.c AS nc)))"))
+            .select(col("vec_id"),
+              (-col("pick.nc")).cast("long").as("cell"),
+              col("pick.s").as("score"))
+            .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
+          ()
+        })
+      spark.read.parquet(s"$outRoot/b*").orderBy("vec_id")
+        .localCheckpoint(true)
     }
-
-    val out = spark.read.parquet(s"$outRoot/b*").orderBy("vec_id")
-      .localCheckpoint(true)
-    deleteRecursively(new java.io.File(outRoot))
-    out
   }
 
   /** DuckDB argmax over the IDENTICAL double arithmetic: score =
@@ -615,46 +489,31 @@ object StreamParity {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"),
         length(encode(col("text"), "utf-8")).cast("long").as("nb"))
-    val dir = Files.createTempDirectory("q233_docs")
-    docs.repartitionByRange(ReplayFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(dir.toString)
-
-    val outRoot = Files.createTempDirectory("q233_ledger").toString
-    val ledger = new StampedLedger(outRoot)
-
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ledger.fold(batchId) { stamp =>
-          val s = batch.sparkSession
-          val batchLedger = mediaAdmissionLedger(batch)
-          val folded = ledger.previousPath match {
-            case Some(p) => s.read.parquet(p).unionByName(batchLedger)
-              .groupBy(col("sample_rate"))
-              .agg(sum(col("n_docs")).as("n_docs"),
-                sum(col("n_admitted")).as("n_admitted"),
-                sum(col("adm_pcm_bytes")).as("adm_pcm_bytes"),
-                sum(col("adm_px")).as("adm_px"))
-            case None => batchLedger
+    Replay.run(spark, "q233_stream_media_admission") { r =>
+      val ledger = new StampedLedger(r.tempDir("ledger"))
+      r.await(r.files(docs, ByRange("doc_id"))
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.fold(batchId) { stamp =>
+            val s = batch.sparkSession
+            val batchLedger = mediaAdmissionLedger(batch)
+            val folded = ledger.previousPath match {
+              case Some(p) => s.read.parquet(p).unionByName(batchLedger)
+                .groupBy(col("sample_rate"))
+                .agg(sum(col("n_docs")).as("n_docs"),
+                  sum(col("n_admitted")).as("n_admitted"),
+                  sum(col("adm_pcm_bytes")).as("adm_pcm_bytes"),
+                  sum(col("adm_px")).as("adm_px"))
+              case None => batchLedger
+            }
+            folded.write.mode("overwrite").parquet(stamp)
           }
-          folded.write.mode("overwrite").parquet(stamp)
-        }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
+          ()
+        })
+      ledger.previousPath.map(p => spark.read.parquet(p))
+        .getOrElse(sys.error("q233: no ledger written"))
+        .orderBy("sample_rate").localCheckpoint(true)
     }
-    val out = ledger.previousPath.map(p => spark.read.parquet(p))
-      .getOrElse(sys.error("q233: no ledger written"))
-      .orderBy("sample_rate").localCheckpoint(true)
-    ledger.close()
-    deleteRecursively(new java.io.File(outRoot)) // the (now empty) root
-    out
   }
 
   /** Batch one-shot equivalent of q233's folded ledger (ParitySpec pins
@@ -712,79 +571,58 @@ object StreamParity {
     import graft.operators.Dedup.BlockB
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("q227_docs")
-    docs.repartitionByRange(ReplayFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-
-    val idxRoot = Files.createTempDirectory("q227_idx").toString
-    val outRoot = Files.createTempDirectory("q227_out").toString
-    val ledger = new StampedLedger(idxRoot)
     val idxSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("bh",
         org.apache.spark.sql.types.BinaryType)))
 
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ledger.guard(batchId) {
-          val s = batch.sparkSession
-          val blocks = batch
-            .select(col("doc_id"), split(trim(col("text")), " +").as("toks"))
-            .select(col("doc_id"), posexplode(expr(
-              s"""transform(sequence(0, cast(ceil(size(toks) / $BlockB.0) as int) - 1),
-                 |  b -> array_join(slice(toks, b * $BlockB + 1, $BlockB), ' '))"""
-                .stripMargin)).as(Seq("bidx", "block")))
-            .withColumn("bh", unhex(md5(col("block"))))
-            .persist() // feeds admission, per-doc counts, and index growth
-          try {
-            val idx = ledger.previous(s, idxSchema)
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("bh")).orderBy(col("doc_id"), col("bidx"))
-            val kept = blocks
-              .withColumn("rk", row_number().over(w))
-              .filter(col("rk") === 1)
-              .join(idx, Seq("bh"), "left_anti")
-              .groupBy(col("doc_id"))
-              .agg(count(lit(1)).as("n_kept"),
-                md5(array_join(transform(
-                  array_sort(collect_list(struct(col("bidx"), col("block")))),
-                  b => b.getField("block")), " ")).as("kept_fp"))
-            blocks.groupBy(col("doc_id"))
-              .agg(count(lit(1)).as("n_blocks"))
-              .join(kept, Seq("doc_id"), "left")
-              .select(col("doc_id"), col("n_blocks"),
-                coalesce(col("n_kept"), lit(0L)).as("n_kept"), col("kept_fp"))
-              .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
-            // Index grows by THIS batch's distinct hashes (hash-only).
-            val stamp = ledger.stampFor(batchId)
-            idx.union(blocks.select(col("bh")).distinct()).distinct()
-              .write.mode("overwrite").parquet(stamp)
-            ledger.advanceTo(stamp)
-            ()
-          } finally { blocks.unpersist(); () }
-        }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
+    Replay.run(spark, "q227_stream_block_admission") { r =>
+      val ledger = new StampedLedger(r.tempDir("idx"))
+      val outRoot = r.tempDir("out")
+      r.await(r.files(docs, ByRange("doc_id"))
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.guard(batchId) {
+            val s = batch.sparkSession
+            val blocks = batch
+              .select(col("doc_id"), split(trim(col("text")), " +").as("toks"))
+              .select(col("doc_id"), posexplode(expr(
+                s"""transform(sequence(0, cast(ceil(size(toks) / $BlockB.0) as int) - 1),
+                   |  b -> array_join(slice(toks, b * $BlockB + 1, $BlockB), ' '))"""
+                  .stripMargin)).as(Seq("bidx", "block")))
+              .withColumn("bh", unhex(md5(col("block"))))
+              .persist() // feeds admission, per-doc counts, and index growth
+            try {
+              val idx = ledger.previous(s, idxSchema)
+              val w = org.apache.spark.sql.expressions.Window
+                .partitionBy(col("bh")).orderBy(col("doc_id"), col("bidx"))
+              val kept = blocks
+                .withColumn("rk", row_number().over(w))
+                .filter(col("rk") === 1)
+                .join(idx, Seq("bh"), "left_anti")
+                .groupBy(col("doc_id"))
+                .agg(count(lit(1)).as("n_kept"),
+                  md5(array_join(transform(
+                    array_sort(collect_list(struct(col("bidx"), col("block")))),
+                    b => b.getField("block")), " ")).as("kept_fp"))
+              blocks.groupBy(col("doc_id"))
+                .agg(count(lit(1)).as("n_blocks"))
+                .join(kept, Seq("doc_id"), "left")
+                .select(col("doc_id"), col("n_blocks"),
+                  coalesce(col("n_kept"), lit(0L)).as("n_kept"), col("kept_fp"))
+                .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
+              // Index grows by THIS batch's distinct hashes (hash-only).
+              val stamp = ledger.stampFor(batchId)
+              idx.union(blocks.select(col("bh")).distinct()).distinct()
+                .write.mode("overwrite").parquet(stamp)
+              ledger.advanceTo(stamp)
+              ()
+            } finally { blocks.unpersist(); () }
+          }
+          ()
+        })
+      spark.read.parquet(s"$outRoot/b*").orderBy("doc_id")
+        .localCheckpoint(true)
     }
-
-    val out = spark.read.parquet(s"$outRoot/b*").orderBy("doc_id")
-      .localCheckpoint(true)
-    deleteRecursively(new java.io.File(outRoot))
-    ledger.close()
-    deleteRecursively(new java.io.File(idxRoot)) // the (now empty) root
-    out
   }
 
   /** q66 — heavy hitters over a CONTINUOUSLY INGESTING corpus: q61's
@@ -818,10 +656,6 @@ object StreamParity {
     import graft.operators.TextAnalysis.HhK
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val schema = docs.schema
-    val dir = Files.createTempDirectory("q66_docs")
-    docs.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
-
     val mgSketch = udaf(new graft.functions.MisraGriesSketch(HhK),
       ExpressionEncoder[String]())
     val merger = new graft.functions.MisraGries(HhK)
@@ -834,28 +668,24 @@ object StreamParity {
     // The shared ledger's guard makes the fold idempotent (guard-only
     // use: the MG sketch lives on the driver, no parquet state).
     val ledger = new StampedLedger()
-    val toks = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
-    val query = withStatePartitions(spark) { toks.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ledger.guard(batchId) {
-          val row = batch.agg(mgSketch(col("tok")).as("sketch"),
-            count(lit(1)).as("n")).head()
-          val batchSketch = scala.collection.mutable.HashMap(
-            row.getMap[String, Long](0).toSeq: _*)
-          // state mutates LAST (StampedLedger.guard's contract): if
-          // merge threw after nTokens had advanced, the engine's retry
-          // of this un-marked batch would double-count the token total
-          merger.merge(running, batchSketch)
-          nTokens += row.getLong(1)
-        }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // sketch lives on the driver
+    Replay.run(spark, "q66_stream_heavy_hitters") { r =>
+      r.await(r.files(docs, RoundRobin)
+        .select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
+        .writeStream.outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.guard(batchId) {
+            val row = batch.agg(mgSketch(col("tok")).as("sketch"),
+              count(lit(1)).as("n")).head()
+            val batchSketch = scala.collection.mutable.HashMap(
+              row.getMap[String, Long](0).toSeq: _*)
+            // state mutates LAST (StampedLedger.guard's contract): if
+            // merge threw after nTokens had advanced, the engine's retry
+            // of this un-marked batch would double-count the token total
+            merger.merge(running, batchSketch)
+            nTokens += row.getLong(1)
+          }
+          ()
+        })
     }
 
     // exact verification of the k-bounded candidate set (q61's gate)
@@ -887,35 +717,27 @@ object StreamParity {
   def q212StreamAmsF2(spark: SparkSession, sfDir: String): DataFrame = {
     val keys = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select(col("l_partkey"))
-    val dir = Files.createTempDirectory("q212_ams")
-    keys.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
-
     val z = Array.fill(32)(0L)
     // idempotent fold under foreachBatch's at-least-once contract
     // (shared guard-only ledger — driver-side Z accumulator)
     val ledger = new StampedLedger()
-    val stream = spark.readStream.schema(keys.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-    val query = withStatePartitions(spark) { stream.writeStream.outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        ledger.guard(batchId) {
-        batch.groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
-          .select(explode(expr("sequence(1, 32)")).as("j"), col("l_partkey"),
-            col("f"))
-          .select(col("j"), expr(
-            "CASE WHEN CAST(conv(substring(md5(concat(CAST(j AS STRING)," +
-              " ':', CAST(l_partkey AS STRING))), 1, 8), 16, 10) AS BIGINT)" +
-              " % 2 = 0 THEN f ELSE -f END").as("sf"))
-          .groupBy(col("j")).agg(sum(col("sf")).as("zb"))
-          .collect()
-          .foreach(r => z(r.getInt(0) - 1) += r.getLong(1))
-        }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // sketch lives on the driver
+    Replay.run(spark, "q212_stream_ams") { r =>
+      r.await(r.files(keys, RoundRobin).writeStream.outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.guard(batchId) {
+          batch.groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
+            .select(explode(expr("sequence(1, 32)")).as("j"), col("l_partkey"),
+              col("f"))
+            .select(col("j"), expr(
+              "CASE WHEN CAST(conv(substring(md5(concat(CAST(j AS STRING)," +
+                " ':', CAST(l_partkey AS STRING))), 1, 8), 16, 10) AS BIGINT)" +
+                " % 2 = 0 THEN f ELSE -f END").as("sf"))
+            .groupBy(col("j")).agg(sum(col("sf")).as("zb"))
+            .collect()
+            .foreach(row => z(row.getInt(0) - 1) += row.getLong(1))
+          }
+          ()
+        })
     }
 
     // q210's exact side + the identical integer median-of-means
@@ -948,34 +770,26 @@ object StreamParity {
   def q218StreamSample(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("n_chars"))
-    val dir = Files.createTempDirectory("q218_sample")
-    docs.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
-
     val K = 100
     var running = Vector.empty[(Long, Long, Double)] // (doc_id, w, es_key)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
     // idempotent fold under foreachBatch's at-least-once contract
     // (shared guard-only ledger — driver-side top-K accumulator)
     val ledger = new StampedLedger()
-    val query = withStatePartitions(spark) { stream.writeStream.outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        ledger.guard(batchId) {
-        val top = batch.where("n_chars > 0").selectExpr(
-            "doc_id", "n_chars AS w",
-            "ROUND(ln((CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 12), 16, 10) AS DOUBLE) + 1.0D)" +
-              " / 281474976710657.0D) / n_chars, 9) AS es_key")
-          .orderBy(col("es_key").desc, col("doc_id")).limit(K)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        running = (running ++ top)
-          .sortBy { case (id, _, k) => (-k, id) }.take(K)
-        }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // sample lives on the driver
+    Replay.run(spark, "q218_stream_sample") { r =>
+      r.await(r.files(docs, RoundRobin).writeStream.outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.guard(batchId) {
+          val top = batch.where("n_chars > 0").selectExpr(
+              "doc_id", "n_chars AS w",
+              "ROUND(ln((CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 12), 16, 10) AS DOUBLE) + 1.0D)" +
+                " / 281474976710657.0D) / n_chars, 9) AS es_key")
+            .orderBy(col("es_key").desc, col("doc_id")).limit(K)
+            .collect().map(row => (row.getLong(0), row.getLong(1), row.getDouble(2)))
+          running = (running ++ top)
+            .sortBy { case (id, _, k) => (-k, id) }.take(K)
+          }
+          ()
+        })
     }
     import spark.implicits._
     running.toDF("doc_id", "w", "es_key").orderBy(col("es_key").desc,
@@ -998,9 +812,6 @@ object StreamParity {
   def q221StreamKmv(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("q221_kmv")
-    docs.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
-
     val K = 256
     val uExpr = "(CAST(conv(substring(md5(g), 1, 12), 16, 10) AS DOUBLE)" +
       " + 1.0D) / 281474976710657.0D"
@@ -1022,23 +833,18 @@ object StreamParity {
     // idempotent fold under foreachBatch's at-least-once contract
     // (shared guard-only ledger — driver-side KMV accumulator)
     val ledger = new StampedLedger()
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-    val query = withStatePartitions(spark) { stream.writeStream.outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        ledger.guard(batchId) {
-          val top = shingles(batch).selectExpr("g", s"$uExpr AS u")
-            .orderBy(col("u"), col("g")).limit(K)
-            .collect().map(r => r.getString(0) -> r.getDouble(1))
-          running = (running ++ top).toSeq
-            .sortBy { case (g, u) => (u, g) }.take(K).toMap
-        }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // sketch lives on the driver
+    Replay.run(spark, "q221_stream_kmv") { r =>
+      r.await(r.files(docs, RoundRobin).writeStream.outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.guard(batchId) {
+            val top = shingles(batch).selectExpr("g", s"$uExpr AS u")
+              .orderBy(col("u"), col("g")).limit(K)
+              .collect().map(row => row.getString(0) -> row.getDouble(1))
+            running = (running ++ top).toSeq
+              .sortBy { case (g, u) => (u, g) }.take(K).toMap
+          }
+          ()
+        })
     }
 
     val us = running.values.toSeq.sorted
@@ -1078,22 +884,6 @@ object StreamParity {
     // break when it runs FIRST in a fresh session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = Files.createTempDirectory("q81_events")
-    raw.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
-
-    val snapRoot = Files.createTempDirectory("q81_snap").toString
-    // Shared fold discipline — this copy had drifted: it lacked the
-    // batchId idempotence guard, and the counts-add fold is NOT
-    // idempotent under foreachBatch's at-least-once retries (a retried
-    // trigger would double-count its batch into the already-advanced
-    // snapshot). The ledger's guard closes that hole.
-    val ledger = new StampedLedger(snapRoot)
     val snapSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("ws",
         org.apache.spark.sql.types.LongType),
@@ -1102,67 +892,68 @@ object StreamParity {
       org.apache.spark.sql.types.StructField("cnt",
         org.apache.spark.sql.types.LongType)))
 
-    val query = withStatePartitions(spark) { graft.Tables.normalizeTs(spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ledger.fold(batchId) { stamp =>
-          val s = batch.sparkSession
-          // The ONLY aggregation is over the batch's own rows.
-          val bAgg = batch.select(
-              (floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("ws"),
-              col("event_type").as("et"))
-            .groupBy(col("ws"), col("et")).agg(count(lit(1)).as("cnt"))
-          val prev = ledger.previous(s, snapSchema)
-          // Mergeable fold: counts add. Full outer on the grid key, both
-          // sides grid-sized.
-          val next = prev.select(col("ws"), col("et"), col("cnt").as("pc"))
-            .join(bAgg.select(col("ws"), col("et"), col("cnt").as("bc")),
-              Seq("ws", "et"), "full")
-            .select(col("ws"), col("et"),
-              (coalesce(col("pc"), lit(0L)) + coalesce(col("bc"), lit(0L)))
-                .as("cnt"))
-          next.write.mode("overwrite").parquet(stamp)
-        }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start() }
-    try query.awaitTermination()
-    finally query.stop()
+    Replay.run(spark, "q81_stream_anomaly") { r =>
+      // Shared fold discipline — this copy had drifted: it lacked the
+      // batchId idempotence guard, and the counts-add fold is NOT
+      // idempotent under foreachBatch's at-least-once retries (a retried
+      // trigger would double-count its batch into the already-advanced
+      // snapshot). The ledger's guard closes that hole.
+      val ledger = new StampedLedger(r.tempDir("snap"))
+      r.await(graft.Tables.normalizeTs(r.files(raw, ByRange("ts")))
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.fold(batchId) { stamp =>
+            val s = batch.sparkSession
+            // The ONLY aggregation is over the batch's own rows.
+            val bAgg = batch.select(
+                (floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("ws"),
+                col("event_type").as("et"))
+              .groupBy(col("ws"), col("et")).agg(count(lit(1)).as("cnt"))
+            val prev = ledger.previous(s, snapSchema)
+            // Mergeable fold: counts add. Full outer on the grid key, both
+            // sides grid-sized.
+            val next = prev.select(col("ws"), col("et"), col("cnt").as("pc"))
+              .join(bAgg.select(col("ws"), col("et"), col("cnt").as("bc")),
+                Seq("ws", "et"), "full")
+              .select(col("ws"), col("et"),
+                (coalesce(col("pc"), lit(0L)) + coalesce(col("bc"), lit(0L)))
+                  .as("cnt"))
+            next.write.mode("overwrite").parquet(stamp)
+          }
+          ()
+        })
 
-    // Dense grid + z from the final grid-sized snapshot (q75's shape,
-    // then q78's exact double sequence — same expression tokens).
-    val agg = spark.read.parquet(ledger.previousPath.get).cache()
-    val bounds = agg.agg(min(col("ws")).as("lo"), max(col("ws")).as("hi"))
-    val types = agg.select(col("et").as("event_type")).distinct()
-    val grid = bounds
-      .select(explode(sequence(col("lo"), col("hi"), lit(3600L))).as("window_start"))
-      .crossJoin(broadcast(types))
-    val cells = grid.join(broadcast(agg),
-        grid("window_start") === agg("ws") && grid("event_type") === agg("et"),
-        "left")
-      .select(col("window_start"), col("event_type"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
-    val out = cells
-      .withColumn("s1", sum(col("cnt")).over(w))
-      .withColumn("s2", sum(col("cnt") * col("cnt")).over(w))
-      .withColumn("n", count(lit(1)).over(w))
-      .withColumn("mean", col("s1").cast("double") / col("n"))
-      .withColumn("sd", sqrt(
-        (col("s2").cast("double") - col("s1").cast("double")
-          * col("s1").cast("double") / col("n")) / (col("n") - 1)))
-      .withColumn("z", (col("cnt").cast("double") - col("mean")) / col("sd"))
-      .filter(abs(col("z")) >= Relational.ZThresh)
-      .select(col("window_start"), col("event_type"), col("cnt"),
-        col("mean"), col("z"))
-      .orderBy("window_start", "event_type")
-      .localCheckpoint(true) // sever lineage to the temp snapshot parquet
-    agg.unpersist()
-    deleteRecursively(dir.toFile)
-    deleteRecursively(new java.io.File(snapRoot))
-    out
+      // Dense grid + z from the final grid-sized snapshot (q75's shape,
+      // then q78's exact double sequence — same expression tokens).
+      val agg = spark.read.parquet(ledger.previousPath.get).cache()
+      val bounds = agg.agg(min(col("ws")).as("lo"), max(col("ws")).as("hi"))
+      val types = agg.select(col("et").as("event_type")).distinct()
+      val grid = bounds
+        .select(explode(sequence(col("lo"), col("hi"), lit(3600L))).as("window_start"))
+        .crossJoin(broadcast(types))
+      val cells = grid.join(broadcast(agg),
+          grid("window_start") === agg("ws") && grid("event_type") === agg("et"),
+          "left")
+        .select(col("window_start"), col("event_type"),
+          coalesce(col("cnt"), lit(0L)).as("cnt"))
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
+      val out = cells
+        .withColumn("s1", sum(col("cnt")).over(w))
+        .withColumn("s2", sum(col("cnt") * col("cnt")).over(w))
+        .withColumn("n", count(lit(1)).over(w))
+        .withColumn("mean", col("s1").cast("double") / col("n"))
+        .withColumn("sd", sqrt(
+          (col("s2").cast("double") - col("s1").cast("double")
+            * col("s1").cast("double") / col("n")) / (col("n") - 1)))
+        .withColumn("z", (col("cnt").cast("double") - col("mean")) / col("sd"))
+        .filter(abs(col("z")) >= Relational.ZThresh)
+        .select(col("window_start"), col("event_type"), col("cnt"),
+          col("mean"), col("z"))
+        .orderBy("window_start", "event_type")
+        .localCheckpoint(true) // sever lineage to the temp snapshot parquet
+      agg.unpersist()
+      out
+    }
   }
 
   /** q82 — stream-stream interval join: click→purchase attribution
@@ -1209,136 +1000,32 @@ object StreamParity {
       val raw = spark.read.parquet(s"$sfDir/events.parquet")
       val sentinelTs = sentinelTsPlus1h(raw)
       def sideDir(etype: String): String = {
-        val d = Files.createTempDirectory(s"q8x_$etype")
+        val d = java.nio.file.Files.createTempDirectory(s"q8x_$etype")
         // Deliberately NOT ReplayFiles: 4 data files + sentinel at
         // maxFilesPerTrigger=3 already replay in 2 triggers/side (the
         // same per-trigger minimum), while keeping the finer time-range
         // layout the dual-source watermark-alignment story exercises.
-        raw.filter(col("event_type") === etype)
-          .repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
-          .write.mode("overwrite").parquet(d.toString)
-        val t0 = System.currentTimeMillis() - 3600L * 1000
-        val parts = new java.io.File(d.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        parts.zipWithIndex.foreach { case (f, i) =>
-          require(f.setLastModified(t0 + i * 10000L)) }
-        val sentinelVals = raw.schema.fields.map { f =>
-          f.name match {
-            case "ts"         => sentinelTs
-            case "user_id"    => -1L
-            case "event_type" => etype
-            case "value"      => 0.0
-            case _            => null
-          }
-        }
-        val tmp = Files.createTempDirectory(s"q8x_${etype}_sent")
-        spark.createDataFrame(
-            java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)),
-            raw.schema)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val dst = Paths.get(d.toString).resolve("zz_sentinel.parquet")
-        listDir(tmp).filter(_.toString.endsWith(".parquet"))
-          .foreach(p => Files.copy(p, dst))
-        deleteRecursively(tmp.toFile)
-        require(dst.toFile.setLastModified(t0 + parts.length * 10000L))
+        Replay.layout(raw.filter(col("event_type") === etype), d,
+          ByRange("ts"), 4, sentinel = Map("ts" -> sentinelTs,
+            "user_id" -> -1L, "event_type" -> etype, "value" -> 0.0))
         d.toString
       }
       val p = sideDir("purchase")
       val c = sideDir("click")
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        deleteRecursively(new java.io.File(p))
-        deleteRecursively(new java.io.File(c))
+        Replay.deleteTree(java.nio.file.Paths.get(p))
+        Replay.deleteTree(java.nio.file.Paths.get(c))
       }))
       (p, c)
     })
 
-  /** Run `body` with the RocksDB state-store provider — the 100 TB
-    * state backend (state lives off-heap/on-disk per executor instead
-    * of on the JVM heap) — restoring the previous provider after.
-    * q116 proved the provider on windowed-dedup state and replayTyped
-    * runs every transformWithState query on it; q82/q83 extended it to
-    * stream-stream JOIN state, and round 10 flipped q71 (session
-    * windows), q94 (flatMapGroupsWithState), and q123 (dedup-within-
-    * watermark) — every stateful shape in the suite now exercises the
-    * scale backend.
-    *
-    * Also pins the state partition count to 8 for the query: a
-    * stream-stream join opens FOUR state stores per partition per
-    * trigger, so at the bench session's 16-32 shuffle partitions the
-    * per-trigger RocksDB instance churn (128+ opens/commits per
-    * trigger) dominated the queries' cost — the same
-    * partitions-sized-to-state-volume-not-core-count tradeoff Bench
-    * documents for the parity/ingest paths (measured here: 6.2 -> 4.6 s
-    * warm per query at sf0.1 going 16 -> 8). */
-  private def withRocksDBProvider[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStatePartitions(spark)(body)
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
-  /** Pin `shuffle.partitions` to min(8, session) for a stream's
-    * lifetime (start through stop) and restore it after: stateful
-    * queries pay a per-partition state-store commit every micro-batch
-    * and the foreachBatch queries pay per-task scheduling on every
-    * per-batch exchange, while the state/batch volume here is KB-scale
-    * — partitions are sized to STATE VOLUME, not core count (the r13
-    * measurement behind [[withRocksDBProvider]]'s pin, now shared by
-    * the stream queries that keep the default HDFS provider). Batch
-    * queries still run at $SPARK_GRAFT_CPUS partitions; min(8, prev)
-    * keeps a lower-core driver run (SPARK_GRAFT_CPUS < 8) meaningful. */
-  private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val pkey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(pkey)
-    spark.conf.set(pkey, statePartitions(spark).toString)
-    try body
-    finally spark.conf.set(pkey, prevParts)
-  }
-
-  /** The streams' state partition count: min(8, the session's shuffle
-    * partitions) — see [[withStatePartitions]]. */
-  private def statePartitions(spark: SparkSession): Int =
-    math.min(8, spark.conf.get("spark.sql.shuffle.partitions").toInt)
-
   /** Last captured micro-batch plan per query name — the spec surface
     * for stateful-operator-count assertions (a streaming query's
-    * DECLARED DataFrame is the drained sink, i.e. a trivial plan). */
+    * DECLARED DataFrame is the drained sink, i.e. a trivial plan).
+    * [[Replay]] records every replayed key's plan here; `graft.Plans`
+    * writes them out. */
   private[graft] val lastStreamPlans =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Plan evidence for streaming queries: capture the query's last
-    * executed micro-batch plan (the plan that shows the stateful-
-    * operator count) into [[lastStreamPlans]], and, when
-    * SPARK_GRAFT_STREAM_PLAN_DIR is set, also write it to
-    * `<dir>/<name>.txt` for the committed plans/ artifacts.
-    * Exception-safe: evidence capture must never fail the query. */
-  private[streaming] def dumpStreamPlan(name: String,
-      query: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-        query.explain(extended = false)
-      }
-      recordStreamPlan(name, new String(bos.toByteArray, "UTF-8"))
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[streamplan] $name failed: ${e.getMessage}")
-    }
-
-  /** The recording half of [[dumpStreamPlan]], for plans captured some
-    * other way (q58's per-batch foreachBatch plan). */
-  private def recordStreamPlan(name: String, plan: String): Unit = {
-    lastStreamPlans.put(name, plan)
-    sys.env.get("SPARK_GRAFT_STREAM_PLAN_DIR").foreach { d =>
-      Files.createDirectories(Paths.get(d))
-      Files.writeString(Paths.get(s"$d/$name.txt"), plan)
-      ()
-    }
-  }
 
   /** One side of the q82/q83 join as a live file stream. Three files
     * per trigger (the 5 time-ordered files replay in 2 micro-batches
@@ -1351,8 +1038,7 @@ object StreamParity {
     * two queries at 15% of the whole board). */
   private def q8xSide(spark: SparkSession, schema: StructType,
       dir: String, prefix: String): DataFrame =
-    graft.Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "3").parquet(dir))
+    graft.Tables.normalizeTs(Replay.stream(spark, schema, dir, perTrigger = 3))
       .select(col("event_id").as(s"${prefix}_id"),
         col("ts").as(s"${prefix}_ts"), col("user_id").as(s"${prefix}_user"))
       .withWatermark(s"${prefix}_ts", "1 second")
@@ -1367,15 +1053,7 @@ object StreamParity {
           col("c_ts") >= col("p_ts") - expr("INTERVAL 86400 SECONDS") &&
           col("c_ts") <= col("p_ts"))
 
-    val table = s"q82_attrib_${runId.incrementAndGet()}"
-    withRocksDBProvider(spark) {
-      val query = joined.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally query.stop()
-    }
-
-    drainMemorySink(spark, table)
+    Replay.run(spark, "q82_stream_interval_join")(_.memory(joined, "append", RocksDB))
       .filter(col("p_user") =!= -1L) // shared-harness sentinel pair
       .select(col("p_id").as("purchase_id"), col("c_id").as("click_id"),
         col("p_user").as("user_id"),
@@ -1429,15 +1107,7 @@ object StreamParity {
           col("c_ts") <= col("p_ts"),
         "leftOuter")
 
-    val table = s"q83_attrib_${runId.incrementAndGet()}"
-    withRocksDBProvider(spark) {
-      val query = joined.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally query.stop()
-    }
-
-    drainMemorySink(spark, table)
+    Replay.run(spark, "q83_stream_left_join")(_.memory(joined, "append", RocksDB))
       .filter(col("p_user") =!= -1L) // drop nothing real; guard only
       .select(col("p_id").as("purchase_id"),
         col("c_id").as("click_id"), // null when unattributed
@@ -1499,57 +1169,37 @@ object StreamParity {
         lit(1).as("version"),
         (pmod(col("o_orderkey"), lit(11)) === 0).as("deleted"))
 
-    // Feed layout: base as trigger 0, changes as trigger 1.
-    val dir = Files.createTempDirectory("q80_feed")
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    Seq(base, updates).zipWithIndex.foreach { case (df, i) =>
-      val tmp = Files.createTempDirectory(s"q80_part$i")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      listDir(tmp).filter(_.toString.endsWith(".parquet")).foreach { p =>
-        val dst = dir.resolve(f"f$i%02d.parquet")
-        Files.copy(p, dst)
-        require(dst.toFile.setLastModified(t0 + i * 10000L))
-      }
-      deleteRecursively(tmp.toFile) // staging copy, already in the feed
+    Replay.run(spark, "q80_stream_cdc_merge") { r =>
+      // Shared fold discipline (this copy had also drifted guard-less;
+      // the version-desc keep-first merge happens to be re-fold-idempotent,
+      // but the guard costs nothing and keeps every site uniform).
+      val ledger = new StampedLedger(r.tempDir("snap"))
+      // Feed layout: one file per version, base (0) as trigger 0 and the
+      // changes (1) as trigger 1.
+      r.await(r.files(base.unionByName(updates), ByRange("version"))
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.fold(batchId) { stamp =>
+            val s = batch.sparkSession
+            val prev = ledger.previous(s, base.schema)
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("o_orderkey")).orderBy(col("version").desc)
+            val next = prev.unionByName(batch)
+              .withColumn("rn", row_number().over(w))
+              .filter(col("rn") === 1).drop("rn")
+            next.write.mode("overwrite").parquet(stamp)
+          }
+          ()
+        })
+
+      val merged = spark.read.parquet(ledger.previousPath.get)
+        .filter(!col("deleted"))
+      merged.groupBy(col("o_orderstatus"))
+        .agg(count(lit(1)).as("n_orders"),
+          dsum(col("o_totalprice")).as("total_price"))
+        .orderBy("o_orderstatus")
+        .localCheckpoint(true) // sever lineage to the temp snapshot parquet
     }
-
-    val snapRoot = Files.createTempDirectory("q80_snap").toString
-    // Shared fold discipline (this copy had also drifted guard-less;
-    // the version-desc keep-first merge happens to be re-fold-idempotent,
-    // but the guard costs nothing and keeps every site uniform).
-    val ledger = new StampedLedger(snapRoot)
-
-    val query = withStatePartitions(spark) { spark.readStream.schema(base.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ledger.fold(batchId) { stamp =>
-          val s = batch.sparkSession
-          val prev = ledger.previous(s, base.schema)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("o_orderkey")).orderBy(col("version").desc)
-          val next = prev.unionByName(batch)
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1).drop("rn")
-          next.write.mode("overwrite").parquet(stamp)
-        }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start() }
-    try query.awaitTermination()
-    finally query.stop()
-
-    val merged = spark.read.parquet(ledger.previousPath.get)
-      .filter(!col("deleted"))
-    val out = merged.groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        dsum(col("o_totalprice")).as("total_price"))
-      .orderBy("o_orderstatus")
-      .localCheckpoint(true) // sever lineage to the temp snapshot parquet
-    deleteRecursively(dir.toFile)
-    deleteRecursively(new java.io.File(snapRoot))
-    out
   }
 
   /** Per-event input to the q94 funnel state machine. `ts` carries the
@@ -1602,105 +1252,66 @@ object StreamParity {
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
-
-    val dir = Files.createTempDirectory("q94_funnel")
-    raw.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
-
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"         => sentinelTs
-        case "user_id"    => -1L
-        case "event_id"   => -1L
-        case "event_type" => "zzz_sentinel"
-        case "value"      => 0.0
-        case _            => null
-      }
-    }
-    val sentinelDir = Files.createTempDirectory("q94_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    val sentinelTarget = dir.resolve("zz_sentinel.parquet")
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, sentinelTarget))
-    require(sentinelTarget.toFile.setLastModified(t0 + parts.length * 10000L))
+    val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
+      "event_id" -> -1L, "event_type" -> "zzz_sentinel", "value" -> 0.0)
 
     val windowUs = 24L * 3600 * 1000000
 
-    val ev = graft.Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-      .withWatermark("ts", "1 second")
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type").as("etype"))
-      .as[FunnelEv]
-
-    val out = ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[FunnelEv], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            // end of stream for this user: emit the final row once
-            val s = state.get
-            state.remove()
-            if (s.nClicks > 0)
-              Iterator.single(FunnelOut(uid, s.nClicks, s.nConv,
-                if (s.nConv > 0) Some(s.sumGap) else None))
-            else Iterator.empty
-          } else {
-            var s = state.getOption.getOrElse(
-              FunnelState(Nil, 0L, 0L, 0L, Long.MinValue))
-            // within-trigger order; cross-trigger order comes from the
-            // time-range replay (same (ts, event_id) order as the oracle)
-            rows.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-              e.etype match {
-                case "click" =>
-                  s = s.copy(pending = e.ts_us :: s.pending,
-                    nClicks = s.nClicks + 1)
-                case "purchase" =>
-                  // first purchase after each pending click resolves it
-                  val conv = s.pending.filter(c => e.ts_us - c <= windowUs)
-                  s = s.copy(pending = Nil,
-                    nConv = s.nConv + conv.length,
-                    sumGap = s.sumGap + conv.map(e.ts_us - _).sum)
-                case _ => ()
-              }
-              if (e.ts_us > s.maxTsUs) s = s.copy(maxTsUs = e.ts_us)
-              // evict clicks that can no longer convert within 24 h
-              s = s.copy(pending =
-                s.pending.filter(c => s.maxTsUs - c <= windowUs))
-            }
-            state.update(s)
-            // fire once the watermark passes this user's newest event
-            state.setTimeoutTimestamp(s.maxTsUs / 1000 + 1)
-            Iterator.empty
-          }
-      }
-
-    val table = s"q94_funnel_${runId.incrementAndGet()}"
     // flatMapGroupsWithState user-defined state (case-class encoder +
     // event-time timeouts) on the RocksDB provider — the arbitrary-state
     // shape joins the other stateful shapes on the scale backend.
-    withRocksDBProvider(spark) {
-      val query = out.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in the memory sink
-        deleteRecursively(sentinelDir.toFile)
-      }
-    }
+    Replay.run(spark, "q94_stream_funnel") { r =>
+      val ev = graft.Tables.normalizeTs(
+          r.files(raw, ByRange("ts"), sentinel = sentinel))
+        .withWatermark("ts", "1 second")
+        .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("event_type").as("etype"))
+        .as[FunnelEv]
 
-    drainMemorySink(spark, table)
-      .filter(col("user_id") =!= -1L)
+      val out = ev.groupByKey(_.user_id)
+        .flatMapGroupsWithState[FunnelState, FunnelOut](
+          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+          (uid: Long, rows: Iterator[FunnelEv], state: GroupState[FunnelState]) =>
+            if (state.hasTimedOut) {
+              // end of stream for this user: emit the final row once
+              val s = state.get
+              state.remove()
+              if (s.nClicks > 0)
+                Iterator.single(FunnelOut(uid, s.nClicks, s.nConv,
+                  if (s.nConv > 0) Some(s.sumGap) else None))
+              else Iterator.empty
+            } else {
+              var s = state.getOption.getOrElse(
+                FunnelState(Nil, 0L, 0L, 0L, Long.MinValue))
+              // within-trigger order; cross-trigger order comes from the
+              // time-range replay (same (ts, event_id) order as the oracle)
+              rows.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
+                e.etype match {
+                  case "click" =>
+                    s = s.copy(pending = e.ts_us :: s.pending,
+                      nClicks = s.nClicks + 1)
+                  case "purchase" =>
+                    // first purchase after each pending click resolves it
+                    val conv = s.pending.filter(c => e.ts_us - c <= windowUs)
+                    s = s.copy(pending = Nil,
+                      nConv = s.nConv + conv.length,
+                      sumGap = s.sumGap + conv.map(e.ts_us - _).sum)
+                  case _ => ()
+                }
+                if (e.ts_us > s.maxTsUs) s = s.copy(maxTsUs = e.ts_us)
+                // evict clicks that can no longer convert within 24 h
+                s = s.copy(pending =
+                  s.pending.filter(c => s.maxTsUs - c <= windowUs))
+              }
+              state.update(s)
+              // fire once the watermark passes this user's newest event
+              state.setTimeoutTimestamp(s.maxTsUs / 1000 + 1)
+              Iterator.empty
+            }
+        }
+
+      r.memory(out, "append", RocksDB)
+    }.filter(col("user_id") =!= -1L)
       .orderBy("user_id")
   }
 
@@ -1733,32 +1344,24 @@ object StreamParity {
   def q106StreamObserveQuality(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Observability
     val ev = graft.Tables.events(spark, sfDir)
-    val schema = ev.schema
     val nExpected = ev.count() // completeness bound: all rows must fold
-    val dir = Files.createTempDirectory("q106_events")
-    ev.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
     // one trigger per file: every trigger's progress must still be in
     // recentProgress when the fold reads it
-    val nFiles = listDir(dir).count(_.toString.endsWith(".parquet"))
     val keep = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates").toInt
-    require(nFiles <= keep,
-      s"q106 replays $nFiles triggers but recentProgress keeps only $keep")
+    require(ReplayFiles <= keep,
+      s"q106 replays $ReplayFiles triggers but recentProgress keeps only $keep")
 
     val aggs = Observability.rules.map { case (name, pred) =>
       sum(when(pred, 1L).otherwise(0L)).as(name)
     } :+ count(lit(1)).as("n_rows")
     // noop sink: the stream's only job is to run every row through the
-    // observe node — no state store, no shuffle, no sink buffer.
-    val query = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .observe("graft_quality_stream", aggs.head, aggs.tail: _*)
-      .writeStream.outputMode("append").format("noop").start()
-    try {
-      query.processAllAvailable()
-      dumpStreamPlan("q106_stream_observe", query)
-    } finally {
-      query.stop() // joins the stream thread: recentProgress is final
-      deleteRecursively(dir.toFile)
+    // observe node — no state store, no shuffle, no sink buffer. The
+    // returned query is stopped (its stream thread joined), so
+    // recentProgress is final.
+    val query = Replay.run(spark, "q106_stream_observe") { r =>
+      r.await(r.files(ev, RoundRobin)
+        .observe("graft_quality_stream", aggs.head, aggs.tail: _*)
+        .writeStream.outputMode("append").format("noop"), SessionPartitions)
     }
     // The fold is the result, so an incomplete fold must fail loudly,
     // never return short counts.
@@ -1799,35 +1402,10 @@ object StreamParity {
   def q116StreamSlidingDistinct(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
     val realMaxSec = graft.Tables.events(spark, sfDir)
       .agg(max(unix_timestamp(col("ts")))).head().getLong(0)
-
-    val dir = Files.createTempDirectory("q116_distinct")
-    Files.createSymbolicLink(
-      dir.resolve("events.parquet"), Paths.get(s"$sfDir/events.parquet"))
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"      => sentinelTs
-        case "user_id" => -1L
-        case "value"   => 0.0
-        case _         => null
-      }
-    }
-    val sentinelDir = Files.createTempDirectory("q116_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, dir.resolve("zz_sentinel.parquet")))
-
-    val pairs = graft.Tables.normalizeTs(
-        spark.readStream.schema(schema).parquet(dir.toString))
-      .select(col("ts"), col("user_id"))
-      .withWatermark("ts", "1 second")
-      .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
+    val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
+      "value" -> 0.0)
 
     // Per-batch finish: count each closing window's flushed pairs with a
     // BATCH aggregation (see the operator doc above for why this is
@@ -1837,8 +1415,14 @@ object StreamParity {
     // memory sink used to buffer.
     val batches =
       new java.util.concurrent.ConcurrentHashMap[Long, Array[Row]]()
-    withStatePartitions(spark) {
-      val query = pairs.writeStream.outputMode("append")
+    Replay.run(spark, "q116_stream_distinct") { r =>
+      val pairs = graft.Tables.normalizeTs(
+          r.linked(s"$sfDir/events.parquet", raw.schema, sentinel))
+        .select(col("ts"), col("user_id"))
+        .withWatermark("ts", "1 second")
+        .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("user_id"))
+        .agg(count(lit(1)).as("n"))
+      r.await(pairs.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val rows = batch.groupBy(col("window"))
             .agg(count(lit(1)).as("n_users"), sum(col("n")).as("n_events"))
@@ -1847,16 +1431,7 @@ object StreamParity {
             .collect()
           batches.put(batchId, rows)
           ()
-        }
-        .start()
-      try {
-        query.processAllAvailable()
-        dumpStreamPlan("q116_stream_distinct", query)
-      } finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in `batches`
-        deleteRecursively(sentinelDir.toFile)
-      }
+        })
     }
 
     import scala.jdk.CollectionConverters._
@@ -1898,43 +1473,21 @@ object StreamParity {
     */
   def q123StreamDedupWatermark(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.Tables.events(spark, sfDir).select(col("ts"), col("user_id"))
-    // Ingest layout: ReplayFiles ts-range files, mtimes ascending in range
-    // order, so maxFilesPerTrigger=1 replays the stream in time order
-    // (same dance as q58) — the dedup state is exercised ACROSS batches.
-    val dir = Files.createTempDirectory("q123_dedup")
-    ev.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-
-    val schema = spark.read.parquet(dir.toString).schema
-    val deduped = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .withColumn("minute_start",
-        (unix_micros(col("ts")) / 60000000L).cast("long") * 60)
-      .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("user_id", "minute_start")
-      .select(col("user_id"), col("minute_start"))
-
-    val table = s"q123_dedup_${runId.incrementAndGet()}"
     // watermark-bounded dedup state on the RocksDB provider — with the
     // q71/q94 flips every stateful shape in the suite (windowed agg,
     // session windows, dedup-within-watermark, fMGWS, transformWithState,
     // stream-stream joins) runs on the scale backend somewhere.
-    withRocksDBProvider(spark) {
-      val query = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in the memory sink
-      }
-    }
-
-    drainMemorySink(spark, table).orderBy("user_id", "minute_start")
+    Replay.run(spark, "q123_stream_dedup_wm") { r =>
+      // ts-range files replayed in time order: the dedup state is
+      // exercised ACROSS batches
+      val deduped = r.files(ev, ByRange("ts"))
+        .withColumn("minute_start",
+          (unix_micros(col("ts")) / 60000000L).cast("long") * 60)
+        .withWatermark("ts", "2 hours")
+        .dropDuplicatesWithinWatermark("user_id", "minute_start")
+        .select(col("user_id"), col("minute_start"))
+      r.memory(deduped, "append", RocksDB)
+    }.orderBy("user_id", "minute_start")
   }
 
   val q123Sql: String =
@@ -1994,70 +1547,20 @@ object StreamParity {
     *
     * Held to the batch analytic-window oracle: two running windows over
     * (user_id ORDER BY ts, event_id) must match the streamed fold
-    * row-for-row across the 4-batch ts-range replay.
+    * row-for-row across the ReplayFiles-batch ts-range replay (the
+    * split-invariance spec also replays it as 8 batches).
     */
 
-  /** Shared replay harness for the transformWithState operators
-    * (q126/q130/q137/q140): lays `ev` out as nFiles ts_us-range files
-    * replayed oldest-first (one per trigger), swaps in the RocksDB
-    * provider the typed-state API requires, runs `build`'s streaming
-    * Dataset to a memory sink, and cleans up — the input copy is
-    * deleted and the provider restored whether the query succeeds or
-    * not (the memory sink holds the committed rows, so the files are
-    * not needed after processAllAvailable returns). */
-  private[streaming] def replayTyped(spark: SparkSession, ev: DataFrame,
-      prefix: String, nFiles: Int = ReplayFiles)
-      (build: DataFrame => org.apache.spark.sql.Dataset[_]): DataFrame = {
-    val dir = Files.createTempDirectory(prefix)
-    ev.repartitionByRange(nFiles, col("ts_us")).sortWithinPartitions("ts_us")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-
-    try withRocksDBProvider(spark) {
-      val schema = spark.read.parquet(dir.toString).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      val table = s"${prefix}_${runId.incrementAndGet()}"
-      val query = build(stream).writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally query.stop()
-      drainMemorySink(spark, table)
-    } finally deleteRecursively(dir.toFile)
-  }
-
-  /** Drain a finished memory-sink table into a session-GC-able frame
-    * and DROP the temp view: a memory sink otherwise pins its full
-    * result set in the driver catalog for the session's lifetime — one
-    * corpus-sized runId-suffixed table per invocation in the long-lived
-    * bench JVM. localCheckpoint(eager) copies the rows into block
-    * storage that the ContextCleaner frees once the frame is GC'd; the
-    * view (and the sink buffer it references) is dropped immediately. */
-  private def drainMemorySink(spark: SparkSession, table: String): DataFrame = {
-    val out = spark.table(table).localCheckpoint(true)
-    spark.catalog.dropTempView(table)
-    out
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
-
-  /** java.nio Files.list holds a directory fd until the stream is
-    * CLOSED (not until GC): the long-lived bench/spec JVM reuses these
-    * harness paths repeatedly, so unclosed streams leak fds. Always
-    * list through this eagerly-materializing, closing wrapper. */
-  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val s = Files.list(dir)
-    try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator())
-      .asScala.toList
-    finally s.close()
-  }
+  /** The replay shared by the transformWithState operators
+    * (q126/q130/q137/q140): `ev` as nFiles ts_us-range files replayed
+    * oldest-first (one per trigger), on the RocksDB provider the
+    * typed-state API requires, through the memory sink. */
+  private def replayTyped(spark: SparkSession, ev: DataFrame, name: String,
+      nFiles: Int = ReplayFiles)
+      (build: DataFrame => org.apache.spark.sql.Dataset[_]): DataFrame =
+    Replay.run(spark, name) { r =>
+      r.memory(build(r.files(ev, ByRange("ts_us"), nFiles)), "append", RocksDB)
+    }
 
   def q126TransformWithState(spark: SparkSession, sfDir: String): DataFrame =
     q126WithSplit(spark, sfDir, ReplayFiles)
@@ -2073,7 +1576,7 @@ object StreamParity {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
-    replayTyped(spark, ev, "q126_tws", nFiles) { stream =>
+    replayTyped(spark, ev, "q126_transform_state", nFiles) { stream =>
       stream.as[SeqEv]
         .groupByKey(_.user_id)
         .transformWithState(new RunningSeqProcessor,
@@ -2141,7 +1644,7 @@ object StreamParity {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
-    replayTyped(spark, ev, "q130_hist") { stream =>
+    replayTyped(spark, ev, "q130_stream_history") { stream =>
       stream.as[HistEv]
         .groupByKey(_.user_id)
         .transformWithState(new RecentHistoryProcessor,
@@ -2205,7 +1708,7 @@ object StreamParity {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"))
-    replayTyped(spark, ev, "q137_quota") { stream =>
+    replayTyped(spark, ev, "q137_stream_quota") { stream =>
       stream.as[QuotaEv]
         .groupByKey(_.user_id)
         .transformWithState(new DailyQuotaProcessor,
@@ -2263,7 +1766,7 @@ object StreamParity {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
-    replayTyped(spark, ev, "q140_typeseq") { stream =>
+    replayTyped(spark, ev, "q140_stream_type_seq") { stream =>
       stream.as[TypeSeqEv]
         .groupByKey(_.user_id)
         .transformWithState(new TypeSeqProcessor,
@@ -2353,59 +1856,21 @@ object StreamParity {
     import spark.implicits._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
+    val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
+      "value" -> 0.0)
 
-    val dir = Files.createTempDirectory("q141_sessions")
-    raw.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"      => sentinelTs
-        case "user_id" => -1L
-        case "value"   => 0.0
-        case _         => null
-      }
-    }
-    val sentinelDir = Files.createTempDirectory("q141_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    val sentinelTarget = dir.resolve("zz_sentinel.parquet")
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, sentinelTarget))
-    require(sentinelTarget.toFile.setLastModified(t0 + parts.length * 10000L))
-
-    // One provider-swap implementation (withRocksDBProvider) — the
-    // inline copy this replaced also forfeited the helper's
-    // shuffle-partition pinning, the dominant per-trigger RocksDB
-    // open/commit cost (measured 6.2 -> 4.6 s in the helper's doc).
-    try withRocksDBProvider(spark) {
-      val out = graft.Tables.normalizeTs(spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString))
+    Replay.run(spark, "q141_stream_timer_sessions") { r =>
+      val out = graft.Tables.normalizeTs(
+          r.files(raw, ByRange("ts"), sentinel = sentinel))
         .withWatermark("ts", "1 second")
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
         .as[TimerEv]
         .groupByKey(_.user_id)
         .transformWithState(new TimerSessionProcessor,
           TimeMode.EventTime(), OutputMode.Append())
-      val table = s"q141_sessions_${runId.incrementAndGet()}"
-      val query = out.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally query.stop()
-      drainMemorySink(spark, table)
-        .filter(col("user_id") =!= -1L)
-        .orderBy("user_id", "start_us")
-    } finally {
-      deleteRecursively(dir.toFile) // corpus-sized replay copies
-      deleteRecursively(sentinelDir.toFile)
-    }
+      r.memory(out, "append", RocksDB)
+    }.filter(col("user_id") =!= -1L)
+      .orderBy("user_id", "start_us")
   }
 
   /** q148 — dead-letter routing rule: suspicious telemetry values. */
@@ -2431,56 +1896,37 @@ object StreamParity {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("value"),
         unix_micros(col("ts")).as("ts_us"))
-    val dir = Files.createTempDirectory("q148_in")
-    ev.repartitionByRange(ReplayFiles, col("ts_us")).sortWithinPartitions("ts_us")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-    val mainDir = Files.createTempDirectory("q148_main")
-    val dlqDir  = Files.createTempDirectory("q148_dlq")
+    Replay.run(spark, "q148_stream_dlq") { r =>
+      val mainDir = r.tempDir("main")
+      val dlqDir  = r.tempDir("dlq")
+      r.await(r.files(ev, ByRange("ts_us"))
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val b = batch.persist() // ONE source scan feeds both routes
+          // coalesce the rule under NULL: a NULL value must route to main
+          // (the oracle's CASE does), never vanish from both sinks
+          val dlq = coalesce(expr(DlqRule), lit(false))
+          // batchId-stamped OVERWRITE subdirs, not append: foreachBatch is
+          // at-least-once, and a retried trigger appending a second copy
+          // of its rows would break the sink's exactly-once contract (the
+          // q58 discipline this harness's scaladoc cites).
+          try {
+            b.filter(!dlq).select(col("event_id"), col("user_id"))
+              .write.mode("overwrite").parquet(s"$mainDir/b$batchId")
+            b.filter(dlq).select(col("event_id"), col("user_id"))
+              .write.mode("overwrite").parquet(s"$dlqDir/b$batchId")
+          } finally { b.unpersist(); () }
+        })
 
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val b = batch.persist() // ONE source scan feeds both routes
-        // coalesce the rule under NULL: a NULL value must route to main
-        // (the oracle's CASE does), never vanish from both sinks
-        val dlq = coalesce(expr(DlqRule), lit(false))
-        // batchId-stamped OVERWRITE subdirs, not append: foreachBatch is
-        // at-least-once, and a retried trigger appending a second copy
-        // of its rows would break the sink's exactly-once contract (the
-        // q58 discipline this harness's scaladoc cites).
-        try {
-          b.filter(!dlq).select(col("event_id"), col("user_id"))
-            .write.mode("overwrite").parquet(s"$mainDir/b$batchId")
-          b.filter(dlq).select(col("event_id"), col("user_id"))
-            .write.mode("overwrite").parquet(s"$dlqDir/b$batchId")
-        } finally { b.unpersist(); () }
-      }
-      .start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // corpus-sized input copy
+      // Materialize eagerly (localCheckpoint severs the lineage to the sink
+      // parquet) so BOTH temp sinks can be deleted before returning.
+      spark.read.parquet(s"$mainDir/b*")
+        .withColumn("sink", lit("main"))
+        .unionByName(
+          spark.read.parquet(s"$dlqDir/b*").withColumn("sink", lit("dlq")))
+        .orderBy("event_id")
+        .localCheckpoint(true)
     }
-
-    // Materialize eagerly (localCheckpoint severs the lineage to the sink
-    // parquet) so BOTH temp sinks can be deleted before returning — the
-    // lazily-read form leaked two corpus-derived directories per run.
-    val out = spark.read.parquet(s"$mainDir/b*")
-      .withColumn("sink", lit("main"))
-      .unionByName(
-        spark.read.parquet(s"$dlqDir/b*").withColumn("sink", lit("dlq")))
-      .orderBy("event_id")
-      .localCheckpoint(true)
-    deleteRecursively(mainDir.toFile)
-    deleteRecursively(dlqDir.toFile)
-    out
   }
 
   val q148Sql: String =
@@ -2533,57 +1979,39 @@ object StreamParity {
     // legacy conf before the raw read (nanos-generation safety; see q81)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = Files.createTempDirectory("q245_events")
-    raw.repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-
-    val outRoot = Files.createTempDirectory("q245_ledger").toString
-    val ledger = new StampedLedger(outRoot)
-    val query = withStatePartitions(spark) { graft.Tables.normalizeTs(
-        spark.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-      .selectExpr("user_id", "unix_micros(ts) AS us", "event_type")
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ledger.fold(batchId) { stamp =>
-          val s = batch.sparkSession
-          val batchLedger = batch.groupBy(col("user_id"))
-            .agg(min(col("us")).as("first_us"),
-              min(when(col("event_type") === "purchase", col("us")))
-                .as("conv_us"),
-              max(col("us")).as("last_us"))
-          val folded = ledger.previousPath match {
-            case Some(p) => s.read.parquet(p).unionByName(batchLedger)
-              .groupBy(col("user_id"))
-              .agg(min(col("first_us")).as("first_us"),
-                min(col("conv_us")).as("conv_us"),
-                max(col("last_us")).as("last_us"))
-            case None => batchLedger
+    Replay.run(spark, "q245_stream_km") { r =>
+      val ledger = new StampedLedger(r.tempDir("ledger"))
+      r.await(graft.Tables.normalizeTs(r.files(raw, ByRange("ts"), 4))
+        .selectExpr("user_id", "unix_micros(ts) AS us", "event_type")
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.fold(batchId) { stamp =>
+            val s = batch.sparkSession
+            val batchLedger = batch.groupBy(col("user_id"))
+              .agg(min(col("us")).as("first_us"),
+                min(when(col("event_type") === "purchase", col("us")))
+                  .as("conv_us"),
+                max(col("us")).as("last_us"))
+            val folded = ledger.previousPath match {
+              case Some(p) => s.read.parquet(p).unionByName(batchLedger)
+                .groupBy(col("user_id"))
+                .agg(min(col("first_us")).as("first_us"),
+                  min(col("conv_us")).as("conv_us"),
+                  max(col("last_us")).as("last_us"))
+              case None => batchLedger
+            }
+            folded.write.mode("overwrite").parquet(stamp)
           }
-          folded.write.mode("overwrite").parquet(stamp)
-        }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
+          ()
+        })
+      val perUser = ledger.previousPath.map(p => spark.read.parquet(p))
+        .getOrElse(sys.error("q245: no ledger written"))
+      val horizon = perUser.agg(max(col("last_us")).as("h"))
+      graft.operators.Relational.kmFromPerUser(
+          perUser.select(col("user_id"), col("first_us"), col("conv_us")),
+          horizon)
+        .localCheckpoint(true)
     }
-    val perUser = ledger.previousPath.map(p => spark.read.parquet(p))
-      .getOrElse(sys.error("q245: no ledger written"))
-    val horizon = perUser.agg(max(col("last_us")).as("h"))
-    val out = graft.operators.Relational.kmFromPerUser(
-        perUser.select(col("user_id"), col("first_us"), col("conv_us")),
-        horizon)
-      .localCheckpoint(true)
-    ledger.close()
-    deleteRecursively(new java.io.File(outRoot)) // the (now empty) root
-    out
   }
 
   /** q251 — EXACT global ntile over a CONTINUOUSLY INGESTING corpus:
@@ -2620,85 +2048,66 @@ object StreamParity {
     import graft.operators.Curation.LenBuckets
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("q251_docs")
-    docs.repartitionByRange(ReplayFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-
-    val outRoot = Files.createTempDirectory("q251_counts").toString
-    val ledger = new StampedLedger(outRoot)
     val countSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("tok_cnt",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("cnt",
         org.apache.spark.sql.types.LongType)))
 
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ledger.fold(batchId) { stamp =>
-          val s = batch.sparkSession
-          // the ONLY aggregation is over the batch's own rows; the
-          // tokenization is q88's expression verbatim
-          val bCounts = batch
-            .select(size(split(trim(col("text")), " +")).cast("long")
-              .as("tok_cnt"))
-            .groupBy(col("tok_cnt")).agg(count(lit(1)).as("cnt"))
-          val folded = ledger.previous(s, countSchema)
-            .select(col("tok_cnt"), col("cnt").as("pc"))
-            .join(bCounts.select(col("tok_cnt"), col("cnt").as("bc")),
-              Seq("tok_cnt"), "full")
-            .select(col("tok_cnt"),
-              (coalesce(col("pc"), lit(0L)) + coalesce(col("bc"), lit(0L)))
-                .as("cnt"))
-          folded.write.mode("overwrite").parquet(stamp)
-        }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
-    }
+    Replay.run(spark, "q251_stream_ntile") { r =>
+      val ledger = new StampedLedger(r.tempDir("counts"))
+      r.await(r.files(docs, ByRange("doc_id"))
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ledger.fold(batchId) { stamp =>
+            val s = batch.sparkSession
+            // the ONLY aggregation is over the batch's own rows; the
+            // tokenization is q88's expression verbatim
+            val bCounts = batch
+              .select(size(split(trim(col("text")), " +")).cast("long")
+                .as("tok_cnt"))
+              .groupBy(col("tok_cnt")).agg(count(lit(1)).as("cnt"))
+            val folded = ledger.previous(s, countSchema)
+              .select(col("tok_cnt"), col("cnt").as("pc"))
+              .join(bCounts.select(col("tok_cnt"), col("cnt").as("bc")),
+                Seq("tok_cnt"), "full")
+              .select(col("tok_cnt"),
+                (coalesce(col("pc"), lit(0L)) + coalesce(col("bc"), lit(0L)))
+                  .as("cnt"))
+            folded.write.mode("overwrite").parquet(stamp)
+          }
+          ()
+        })
 
-    // End-of-stream bucketing over the folded key-cardinality table.
-    // The re-aggregation makes the prefix window's child an Aggregate —
-    // the bounded-frame shape the global-window plan gate admits.
-    val counts = ledger.previousPath.map(p => spark.read.parquet(p))
-      .getOrElse(sys.error("q251: no count table written"))
-      .groupBy(col("tok_cnt")).agg(sum(col("cnt")).as("cnt"))
-    val offs = counts.withColumn("off",
-      sum(col("cnt")).over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("tok_cnt"))) - col("cnt"))
-    val total = counts.agg(sum(col("cnt")).as("n"))
-    val out = offs.crossJoin(broadcast(total))
-      .select(col("tok_cnt"), col("cnt"), col("off"), col("n"),
-        explode(expr(s"sequence(1L, ${LenBuckets}L)")).as("bucket"))
-      .withColumn("q", expr(s"n div $LenBuckets"))
-      .withColumn("r", expr(s"n % $LenBuckets"))
-      // bucket b spans ranks (s_b, e_b]; the value spans (off, off+cnt];
-      // both half-open, so the overlap is the plain interval intersection
-      .withColumn("s_b", expr("(bucket - 1) * q + least(bucket - 1, r)"))
-      .withColumn("e_b", expr("bucket * q + least(bucket, r)"))
-      .withColumn("ov", expr(
-        "greatest(0L, least(e_b, off + cnt) - greatest(s_b, off))"))
-      .filter(col("ov") > 0)
-      .groupBy(col("bucket"))
-      .agg(sum(col("ov")).as("n_docs"),
-        min(col("tok_cnt")).as("min_toks"),
-        max(col("tok_cnt")).as("max_toks"),
-        sum(col("tok_cnt") * col("ov")).as("sum_toks"))
-      .orderBy("bucket")
-      .localCheckpoint(true)
-    ledger.close()
-    deleteRecursively(new java.io.File(outRoot)) // the (now empty) root
-    out
+      // End-of-stream bucketing over the folded key-cardinality table.
+      // The re-aggregation makes the prefix window's child an Aggregate —
+      // the bounded-frame shape the global-window plan gate admits.
+      val counts = ledger.previousPath.map(p => spark.read.parquet(p))
+        .getOrElse(sys.error("q251: no count table written"))
+        .groupBy(col("tok_cnt")).agg(sum(col("cnt")).as("cnt"))
+      val offs = counts.withColumn("off",
+        sum(col("cnt")).over(org.apache.spark.sql.expressions.Window
+          .orderBy(col("tok_cnt"))) - col("cnt"))
+      val total = counts.agg(sum(col("cnt")).as("n"))
+      offs.crossJoin(broadcast(total))
+        .select(col("tok_cnt"), col("cnt"), col("off"), col("n"),
+          explode(expr(s"sequence(1L, ${LenBuckets}L)")).as("bucket"))
+        .withColumn("q", expr(s"n div $LenBuckets"))
+        .withColumn("r", expr(s"n % $LenBuckets"))
+        // bucket b spans ranks (s_b, e_b]; the value spans (off, off+cnt];
+        // both half-open, so the overlap is the plain interval intersection
+        .withColumn("s_b", expr("(bucket - 1) * q + least(bucket - 1, r)"))
+        .withColumn("e_b", expr("bucket * q + least(bucket, r)"))
+        .withColumn("ov", expr(
+          "greatest(0L, least(e_b, off + cnt) - greatest(s_b, off))"))
+        .filter(col("ov") > 0)
+        .groupBy(col("bucket"))
+        .agg(sum(col("ov")).as("n_docs"),
+          min(col("tok_cnt")).as("min_toks"),
+          max(col("tok_cnt")).as("max_toks"),
+          sum(col("tok_cnt") * col("ov")).as("sum_toks"))
+        .orderBy("bucket")
+        .localCheckpoint(true)
+    }
   }
 }

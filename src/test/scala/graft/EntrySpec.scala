@@ -27,19 +27,35 @@ class EntrySpec extends SparkSpec {
         s"${SparkEntry.queries.size}")
   }
 
-  test("GraftSession is the only SparkSession builder in src/") {
-    // every main and the suite share one session shape; the graftbridge
-    // helper is exempt (it needs a Spark-private context conf)
-    val builder = raw"SparkSession\s*\.\s*builder\b".r
-    val allowed = Set("GraftSession.scala", "ExtensionConfSession.scala")
-    val offenders = Seq("src/main", "src/test").flatMap { root =>
+  /** The .scala files under `roots`, apart from the `allowed` file names,
+    * whose text matches `pattern`. */
+  private def scalaFilesMatching(roots: Seq[String], allowed: Set[String],
+      pattern: scala.util.matching.Regex): Seq[java.nio.file.Path] =
+    roots.flatMap { root =>
       val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
       try files.iterator().asScala.toList finally files.close()
     }.filter(p => p.toString.endsWith(".scala") &&
         !allowed(p.getFileName.toString))
-      .filter(p => builder.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+      .filter(p => pattern.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+
+  test("GraftSession is the only SparkSession builder in src/") {
+    // every main and the suite share one session shape; the graftbridge
+    // helper is exempt (it needs a Spark-private context conf)
+    val offenders = scalaFilesMatching(Seq("src/main", "src/test"),
+      Set("GraftSession.scala", "ExtensionConfSession.scala"),
+      raw"SparkSession\s*\.\s*builder\b".r)
     assert(offenders.isEmpty,
       s"build sessions through GraftSession.local, not in: ${offenders.mkString(", ")}")
+  }
+
+  test("the replay harness alone sets replay file mtimes and writes sentinel files") {
+    // replay file order (mtimes) and the end-of-stream sentinel file are
+    // Replay.layout's job; `zz_sentinel` is matched as a word, so the
+    // sentinel rows' `zzz_sentinel` event type is not a hit
+    val offenders = scalaFilesMatching(Seq("src/main"), Set("Replay.scala"),
+      raw"setLastModified|\bzz_sentinel\b".r)
+    assert(offenders.isEmpty,
+      s"lay out replays through graft.streaming.Replay, not in: ${offenders.mkString(", ")}")
   }
 
   test("every query name has either an oracle or a documented omission") {
