@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types._
-
 /** Image container-header parse over a raw `binary` column: PNG IHDR and
   * JPEG SOF0/SOFn width x height extraction, fused into whole-stage
   * codegen. This is the first REAL byte-level kernel of the multimodal
@@ -32,27 +27,6 @@ import org.apache.spark.sql.types._
   *    HEIGHT BE16 then WIDTH BE16 — height first, the classic
   *    transposed-dimensions bug this kernel's property spec pins.
   */
-case class ImageHeader(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"image_header expects binary, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ImageHeader.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.ImageHeader.parse($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ImageHeader {
   final val FmtUnknown = 0L
   final val FmtPng     = 1L

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types._
-
 /** Audio/video container probes over raw `binary` columns — the
   * companions to [[ImageHeader]] that complete the multimodal family's
   * REAL byte kernels across all three modalities (q226 image, q229
@@ -27,27 +22,6 @@ import org.apache.spark.sql.types._
   * then v0: ctime(4) mtime(4) timescale(4) duration(4) — v1 widens the
   * times and duration to 8 bytes but NOT timescale.
   */
-case class WavHeader(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"wav_header expects binary, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WavHeader.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.WavHeader.parse($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object WavHeader {
   /** Unparseable sentinel (a real probe never packs all-zero fields:
     * sample_rate >= 1 is enforced below). */
@@ -96,27 +70,6 @@ object WavHeader {
         bits < 1 || bits > 63 || data < 0) Unknown
     else pack(rate, ch, bits, data)
   }
-}
-
-case class Mp4Mvhd(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"mp4_mvhd expects binary, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Mp4Mvhd.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.Mp4Mvhd.parse($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object Mp4Mvhd {
@@ -204,27 +157,6 @@ object Mp4Mvhd {
   * (0x4286), DocType (0x4282 — 'matroska' / 'webm' classified, anything
   * else = other), DocTypeVersion (0x4287).
   */
-case class EbmlHeader(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ebml_header expects binary, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    EbmlHeader.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.EbmlHeader.parse($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object EbmlHeader {
   final val Unknown = 0L
 
@@ -339,27 +271,6 @@ object EbmlHeader {
   * bits), min/max frame size (24+24), then the bit-packed parameter
   * word, then the 16-byte payload MD5.
   */
-case class FlacStreaminfo(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"flac_streaminfo expects binary, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    FlacStreaminfo.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.FlacStreaminfo.parse($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object FlacStreaminfo {
   final val Unknown = 0L
 

@@ -1,14 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Jaro–Winkler similarity (Jaro 1989; Winkler 1990) as a codegen'd
-  * binary expression — the record-linkage string comparator (alias/typo
-  * detection over names and vocabulary) that complements the repo's
+/** Jaro–Winkler similarity (Jaro 1989; Winkler 1990) kernel — the
+  * record-linkage string comparator (alias/typo detection over names
+  * and vocabulary) that complements the repo's
   * edit-distance join (q97 FastSS + capped levenshtein): JW is
   * length-normalized, transposition-aware, and prefix-boosted, the
   * standard choice where a THRESHOLD must mean the same thing for short
@@ -38,32 +34,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * texts is a multi-second expression call by construction, the same
   * contract every JW implementation (DuckDB's included) carries.
   */
-case class JaroWinkler(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"jaro_winkler expects (string, string), got ($l, $r)")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    JaroWinkler.jw(a.asInstanceOf[UTF8String].toString,
-      b.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.JaroWinkler.jw($a.toString(), $b.toString());")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object JaroWinkler {
+
+  /** The SQL-string entry point, for `StaticInvoke`. */
+  def jw(a: UTF8String, b: UTF8String): Double = jw(a.toString, b.toString)
 
   /** One definition of truth for interpreted eval AND codegen. */
   def jw(a: String, b: String): Double = {

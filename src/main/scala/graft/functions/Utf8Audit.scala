@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types._
-
 /** UTF-8 validity / mojibake audit over a raw `binary` column — the text
   * family's ingest kernel, completing the story the container probes
   * (q226/q229/q230) told for media: before any tokenizer touches a
@@ -33,27 +28,6 @@ import org.apache.spark.sql.types._
   * advances are index increments, never attacker-controlled size
   * fields). The property spec pins these semantics.
   */
-case class Utf8Audit(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"utf8_audit expects binary, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Utf8Audit.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.Utf8Audit.parse($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Utf8Audit {
 
   /** valid(31 bits) << 32 | overlong << 24 | surrogate << 16 |

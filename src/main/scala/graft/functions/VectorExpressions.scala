@@ -1,294 +1,40 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen'd dot product of two numeric arrays.
-  *
-  * The ANN/dedup operators (Similarity.scala) originally computed dot
-  * products as `aggregate(zip_with(a, b, (x,y) -> x*y), 0d, (acc,v) ->
-  * acc+v)` — semantically right but it materializes an intermediate array
-  * per row-pair and walks it through two higher-order-function frames. At
-  * brute-force-ANN volume (|vectors| x |queries| pairs) that interpretive
-  * overhead dominates. This expression is the same arithmetic as a single
-  * fused loop inside whole-stage codegen: no intermediate array, no
-  * lambda dispatch.
-  *
-  * Bit-parity contract: accumulation is a sequential left-to-right fold
-  * in double, each element cast to double first — exactly the fold order
-  * of the `aggregate(zip_with(...))` formulation and of DuckDB's
-  * `list_dot_product` on `DOUBLE[]`, so results stay hash-identical to
-  * the oracle.
-  *
-  * Mixed element widths are allowed (embeddings are `array<float>`, LSH
-  * hyperplanes `array<double>`); each side uses its own accessor.
-  */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  private def elemType(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(t @ (FloatType | DoubleType), _) => Some(t)
-    case _ => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemType(left).isDefined && elemType(right).isDefined)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot expects (array<float|double>, array<float|double>), " +
-        s"got (${left.dataType}, ${right.dataType})")
-
-  // Null semantics match the fold it replaced (and list_dot_product):
-  // length mismatch or a null element yields NULL, never a silently
-  // truncated/partial product.
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val lf = elemType(left).get == FloatType
-    val rf = elemType(right).get == FloatType
-    val n = x.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      acc += xv * yv
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    def getter(t: DataType, v: String, i: String): String = t match {
-      case FloatType => s"((double) $v.getFloat($i))"
-      case _         => s"$v.getDouble($i)"
-    }
-    val lt = elemType(left).get
-    val rt = elemType(right).get
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += ${getter(lt, a, i)} * ${getter(rt, b, i)};
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** All random-hyperplane LSH bucket ids of a vector in ONE fused codegen
-  * loop: output[t] = sum over p of (dot(v, plane[t*bits+p]) > 0) << p.
-  *
-  * Why not compose [[DotProduct]] per plane: 18x12 planes as separate
-  * column expressions embed 216 64-element array literals into every
-  * stage that references the projection — the generated Java source
-  * balloons past 200 KB and Janino compilation (per stage, per cold run)
-  * costs seconds of driver time, dwarfing the arithmetic. Here the plane
-  * matrix rides along as one referenced `double[][]` constant object and
-  * the generated code is a three-line nested loop, identical arithmetic,
-  * sign-exact with the per-plane `when(dot > 0, 1 << p)` formulation.
-  *
-  * Null/shape semantics: a null or length-mismatched input vector (or a
-  * null element) yields NULL — the row drops out of candidate
-  * generation, exactly like the dot-based formulation dropped it from
-  * every bucket.
-  */
-case class HyperplaneBuckets(child: Expression, planes: Seq[Seq[Double]],
-    bitsPerTable: Int) extends UnaryExpression {
-
-  require(planes.nonEmpty && planes.length % bitsPerTable == 0,
-    s"planes (${planes.length}) must be a multiple of bitsPerTable ($bitsPerTable)")
-  // bucket ids are ints built by `1 << p`: p >= 31 would hit the sign
-  // bit / wrap mod 32 and silently alias distinct sign patterns — fail
-  // fast instead (callers' geometry laws cap at 30, e.g. DupMaxBits)
-  require(bitsPerTable >= 1 && bitsPerTable <= 30,
-    s"bitsPerTable must be in [1, 30], got $bitsPerTable")
-  private val numTables = planes.length / bitsPerTable
-  private val dim = planes.head.length
-
-  @transient private lazy val planesArr: Array[Array[Double]] =
-    planes.map(_.toArray).toArray
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hyperplane_buckets expects array<float|double>, got $t")
-  }
-
-  private def isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) return null
-    val f = isFloat
-    val out = new Array[Int](numTables)
-    var t = 0
-    while (t < numTables) {
-      var bucket = 0
-      var p = 0
-      while (p < bitsPerTable) {
-        val plane = planesArr(t * bitsPerTable + p)
-        var acc = 0.0
-        var i = 0
-        while (i < dim) {
-          if (v.isNullAt(i)) return null
-          acc += (if (f) v.getFloat(i).toDouble else v.getDouble(i)) * plane(i)
-          i += 1
-        }
-        if (acc > 0.0) bucket |= (1 << p)
-        p += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planesArr, "double[][]")
-    val getter =
-      if (isFloat) (v: String, i: String) => s"((double) $v.getFloat($i))"
-      else (v: String, i: String) => s"$v.getDouble($i)"
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val p = ctx.freshName("p")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val bucket = ctx.freshName("bucket")
-      val plane = ctx.freshName("plane")
-      s"""
-         |if ($v.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $out = new int[$numTables];
-         |  for (int $t = 0; $t < $numTables && !${ev.isNull}; $t++) {
-         |    int $bucket = 0;
-         |    for (int $p = 0; $p < $bitsPerTable; $p++) {
-         |      double[] $plane = $planesRef[$t * $bitsPerTable + $p];
-         |      double $acc = 0.0;
-         |      for (int $i = 0; $i < $dim; $i++) {
-         |        if ($v.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |        $acc += ${getter(v, i)} * $plane[$i];
-         |      }
-         |      if (${ev.isNull}) break;
-         |      if ($acc > 0.0) $bucket |= (1 << $p);
-         |    }
-         |    $out[$t] = $bucket;
-         |  }
-         |  if (!${ev.isNull}) {
-         |    ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Query-directed multiprobe LSH buckets (Qin et al., VLDB 2007, the
-  * standard trick for raising hyperplane-LSH recall without adding
-  * tables): for each table emit the base bucket PLUS `numProbes - 1`
-  * perturbed buckets, flipping the sign bits whose hyperplane dot
-  * products have the smallest |dot| — precisely the bits most likely to
-  * disagree with a true neighbor's signature. Perturbation sets are all
-  * single bits and bit pairs, ranked ascending by |dot| (resp. |dot_i| +
-  * |dot_j|); ties break on generation order, so the probe sequence is a
-  * pure deterministic function of the vector.
+/** Random-hyperplane LSH buckets with query-directed multiprobe (Qin
+  * et al., VLDB 2007, the standard trick for raising hyperplane-LSH
+  * recall without adding tables). Bit p of table t's base bucket is
+  * `dot(v, plane[t*bits+p]) > 0`; each table emits its base bucket PLUS
+  * `numProbes - 1` perturbed buckets, flipping the sign bits whose
+  * hyperplane dot products have the smallest |dot| — precisely the bits
+  * most likely to disagree with a true neighbor's signature.
+  * Perturbation sets are all single bits and bit pairs, ranked ascending
+  * by |dot| (resp. |dot_i| + |dot_j|); ties break on generation order, so
+  * the probe sequence is a pure deterministic function of the vector.
   *
   * Output is a flat array<int> of numTables * numProbes bucket ids —
   * entry t*numProbes + j is probe j of table t; consumers posexplode and
-  * recover the table as pos / numProbes. Used on the QUERY side only:
-  * the index keeps one bucket per table ([[HyperplaneBuckets]] over the
-  * same planes), so index size is unchanged and the candidate join stays
-  * a (tbl, bucket) equi-join — probing multiplies only the tiny query
-  * side by numProbes, never the corpus.
+  * recover the table as pos / numProbes. With `numProbes = 1` it is the
+  * index side (`GraftFunctions.hyperplaneBuckets`: one base bucket per
+  * table); larger values serve the QUERY side only, so index size is
+  * unchanged and the candidate join stays a (tbl, bucket) equi-join —
+  * probing multiplies only the tiny query side, never the corpus.
   *
-  * Eval and codegen share [[HyperplaneBucketProbes.compute]] (the
-  * RollingHash one-definition-of-truth pattern): the generated code is a
-  * single static call with the plane matrix as a referenced object, so
-  * whole-stage codegen stays small no matter how many planes ride along.
+  * Why one kernel over a constant plane matrix, not one [[DotProduct]]
+  * per plane: 18x12 planes as separate column expressions embed 216
+  * 64-element array literals into every stage that references the
+  * projection — the generated Java source balloons past 200 KB and
+  * Janino compilation (per stage, per cold run) costs seconds of driver
+  * time. Here the matrix is one referenced constant and the generated
+  * code is a single static call, sign-exact with the per-plane
+  * `when(dot > 0, 1 << p)` formulation.
   *
-  * Null/shape semantics match [[HyperplaneBuckets]]: null or
-  * length-mismatched vectors (or a null element) yield NULL.
+  * Null/shape semantics: a null or length-mismatched vector (or a null
+  * element) yields NULL — the row drops out of candidate generation,
+  * exactly like the dot-based formulation dropped it from every bucket.
   */
-case class HyperplaneBucketProbes(child: Expression, planes: Seq[Seq[Double]],
-    bitsPerTable: Int, numProbes: Int) extends UnaryExpression {
-
-  require(planes.nonEmpty && planes.length % bitsPerTable == 0,
-    s"planes (${planes.length}) must be a multiple of bitsPerTable ($bitsPerTable)")
-  require(numProbes >= 1 &&
-      numProbes <= 1 + bitsPerTable + bitsPerTable * (bitsPerTable - 1) / 2,
-    s"numProbes ($numProbes) must be in [1, 1 + bits + bits*(bits-1)/2]")
-
-  @transient private lazy val planesArr: Array[Array[Double]] =
-    planes.map(_.toArray).toArray
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hyperplane_bucket_probes expects array<float|double>, got $t")
-  }
-
-  private def isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HyperplaneBucketProbes.compute(input.asInstanceOf[ArrayData], planesArr,
-      bitsPerTable, numProbes, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planesArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      s"""
-         |${ev.value} = graft.functions.HyperplaneBucketProbes.compute(
-         |  $v, $planesRef, $bitsPerTable, $numProbes, $isFloat);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object HyperplaneBucketProbes {
 
   /** One definition of truth for interpreted eval AND codegen (called as
@@ -302,8 +48,10 @@ object HyperplaneBucketProbes {
     val out = new Array[Int](numTables * probes)
     val dots = new Array[Double](bits)
     val nCand = bits + bits * (bits - 1) / 2
-    val masks  = new Array[Int](nCand)
-    val scores = new Array[Double](nCand)
+    // perturbation scratch only for query-side probing; the index side
+    // (one probe) allocates nothing per row beyond its output
+    val masks  = if (probes > 1) new Array[Int](nCand) else null
+    val scores = if (probes > 1) new Array[Double](nCand) else null
     var t = 0
     while (t < numTables) {
       var base = 0
@@ -356,54 +104,69 @@ object HyperplaneBucketProbes {
   }
 }
 
-/** Broadcast-backed carrier for the trained tensors (centroid matrices,
-  * PQ codebooks) that ride inside expressions.
+/** A constant operand of a kernel call (plane matrices, stopword lists,
+  * centroid matrices, PQ codebooks): rides into a `StaticInvoke` as one
+  * `ObjectType` literal, unwrapped by a `value` call.
   *
-  * Why not a plain Seq field (the pre-r14 shape): a case-class Seq field
-  * PRINTS into every plan string — q53's explain was 825 KB of codebook
-  * doubles (VERDICT r13 item #4) — and SERIALIZES into every task
-  * closure, once per task instead of once per executor. The carrier
-  * fixes both: toString is a shape+content digest (plans stay KB-sized)
-  * and the tensor ships as a Spark broadcast (task closures carry the
-  * handle). Codegen was never the problem — the tensor already rode
-  * `addReferenceObj`, outside the Janino source.
-  *
-  * Equality is BY CONTENT DIGEST so canonicalization/semanticEquals
-  * still dedup identical subtrees even across two carriers of the same
-  * trained tensor. The broadcast is cleaned by the ContextCleaner when
-  * the expression tree is GC'd, like any other broadcast. */
-final class BcTensor[T] private (
-    private val bc: org.apache.spark.broadcast.Broadcast[T],
-    val shape: String, val digest: String) extends Serializable {
-  // Java-friendly accessor for generated code; Broadcast caches the
-  // value per executor after the first read.
-  def value: T = bc.value
-  override def toString: String = s"tensor[$shape]#$digest"
+  * Why not a plain Seq literal: a constant PRINTS into every plan string
+  * — q53's explain was 825 KB of codebook doubles when the tensors were
+  * case-class fields — so a carrier renders as `kind[shape]#digest`
+  * instead. Equality is BY CONTENT DIGEST, so canonicalization and
+  * semanticEquals still dedup two builds from equal constants. */
+sealed abstract class KernelConst[T](val shape: String, val digest: String)
+    extends Serializable {
+  def value: T
+  protected def kind: String
+  override def toString: String = s"$kind[$shape]#$digest"
   override def equals(o: Any): Boolean = o match {
-    case t: BcTensor[_] => t.shape == shape && t.digest == digest
-    case _              => false
+    case k: KernelConst[_] => k.getClass == getClass && k.shape == shape &&
+      k.digest == digest
+    case _ => false
   }
   override def hashCode: Int = digest.hashCode
 }
 
-object BcTensor {
-  private def digestOf(flat: Array[Double]): String = {
-    val bb = java.nio.ByteBuffer.allocate(flat.length * 8)
-    flat.foreach(bb.putDouble)
-    java.security.MessageDigest.getInstance("MD5").digest(bb.array())
+object KernelConst {
+  /** First 8 bytes of the MD5 of the value's Java serialization. */
+  private[functions] def digestOf(v: AnyRef): String = {
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(v); out.close()
+    java.security.MessageDigest.getInstance("MD5").digest(bytes.toByteArray)
       .take(8).map("%02x".format(_)).mkString
   }
-  def of2(data: Array[Array[Double]]): BcTensor[Array[Array[Double]]] =
+  private[functions] def shapeOf(v: Any): String = v match {
+    case a: Array[_] if a.nonEmpty && a(0).isInstanceOf[Array[_]] =>
+      s"${a.length}x${shapeOf(a(0))}"
+    case a: Array[_] => a.length.toString
+  }
+}
+
+/** A small constant that ships inside the task closure. */
+final class Const[T <: AnyRef](val value: T)
+    extends KernelConst[T](KernelConst.shapeOf(value), KernelConst.digestOf(value)) {
+  protected def kind: String = "const"
+}
+
+/** A trained tensor (centroid matrix, PQ codebook) that ships as a Spark
+  * broadcast, so task closures carry the handle rather than the doubles.
+  * Each deserialized copy reads the broadcast once. The broadcast lives
+  * until [[destroy]] or until the ContextCleaner collects it. */
+final class BcTensor[T <: AnyRef] private (
+    bc: org.apache.spark.broadcast.Broadcast[T], shape: String, digest: String)
+    extends KernelConst[T](shape, digest) {
+  @transient private lazy val local: T = bc.value
+  def value: T = local
+  protected def kind: String = "tensor"
+  /** Remove the broadcast's blocks now; the tensor is unusable after. */
+  def destroy(): Unit = org.apache.spark.sql.graftbridge.ColumnBridge.destroy(bc)
+}
+
+object BcTensor {
+  def apply[T <: AnyRef: scala.reflect.ClassTag](data: T): BcTensor[T] =
     new BcTensor(
       org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(data),
-      s"${data.length}x${data.headOption.map(_.length).getOrElse(0)}",
-      digestOf(data.flatten))
-  def of3(data: Array[Array[Array[Double]]]): BcTensor[Array[Array[Array[Double]]]] =
-    new BcTensor(
-      org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(data),
-      s"${data.length}x${data.headOption.map(_.length).getOrElse(0)}x" +
-        s"${data.headOption.flatMap(_.headOption).map(_.length).getOrElse(0)}",
-      digestOf(data.flatten.flatten))
+      KernelConst.shapeOf(data), KernelConst.digestOf(data))
 }
 
 /** Cosine of a vector against every centroid of a coarse quantizer, in
@@ -414,9 +177,9 @@ object BcTensor {
   * dot(emb, typedlit(cent)) / norm, i)` columns — each 64-double centroid
   * becomes an array literal in the generated source, and K now scales
   * with the corpus (K ≈ √n), so at any real scale the stage hits the
-  * same Janino blowup [[HyperplaneBuckets]] exists to avoid. Here the
-  * centroid matrix rides along as one referenced `double[][]` and the
-  * generated code is a static call.
+  * same Janino blowup [[HyperplaneBucketProbes]] documents. Here the
+  * centroid matrix rides along as one [[BcTensor]] and the generated
+  * code is a static call.
   *
   * Bit-parity contract with the formulation it replaces: per centroid, a
   * sequential left-to-right double fold (exactly [[DotProduct]]'s order)
@@ -428,56 +191,6 @@ object BcTensor {
   * element, or a null norm) yield NULL — the row drops out of the index
   * and of probing, as it did under the composed formulation.
   */
-case class CentroidScores(vec: Expression, norm: Expression,
-    cents: BcTensor[Array[Array[Double]]]) extends BinaryExpression {
-
-  override def left: Expression = vec
-  override def right: Expression = norm
-
-  @transient private lazy val centsArr: Array[Array[Double]] = cents.value
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("s", DoubleType, nullable = false),
-    StructField("c", IntegerType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = (vec.dataType, norm.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _), DoubleType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (vt, nt) => TypeCheckResult.TypeCheckFailure(
-      s"centroid_scores expects (array<float|double>, double), got ($vt, $nt)")
-  }
-
-  private def isFloat = vec.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(v: Any, n: Any): Any =
-    CentroidScores.compute(v.asInstanceOf[ArrayData],
-      n.asInstanceOf[Double], centsArr, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the broadcast handle is the reference object; the tensor is
-    // unwrapped ONCE per codegen instance (partition), not per row
-    val bcRef = ctx.addReferenceObj("centsBc", cents,
-      "graft.functions.BcTensor")
-    val arr = ctx.addMutableState("double[][]", "cents",
-      v => s"$v = (double[][]) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, (v, n) => {
-      s"""
-         |${ev.value} = graft.functions.CentroidScores.compute(
-         |  $v, $n, $arr, $isFloat);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(vec = newLeft, norm = newRight)
-}
-
 object CentroidScores {
 
   /** One definition of truth for interpreted eval AND codegen. */
@@ -527,42 +240,6 @@ object CentroidScores {
   * not per pair); null array or element yields NULL; two empty arrays
   * yield 0.0.
   */
-case class SortedHashJaccard(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (lt, rt) => TypeCheckResult.TypeCheckFailure(
-        s"sorted_hash_jaccard expects (array<long>, array<long>), got ($lt, $rt)")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val r = SortedHashJaccard.compute(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    if (r == null) null else r.doubleValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |java.lang.Double $boxed =
-         |  graft.functions.SortedHashJaccard.compute($a, $b);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object SortedHashJaccard {
 
   /** One definition of truth for interpreted eval AND codegen. Merge of
@@ -621,36 +298,6 @@ object SortedHashJaccard {
   * but builtin xxhash64 never returns null for non-null input, so this
   * only fires on genuinely null input).
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 expects array<long> of token hashes, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val r = SimHash64.compute(input.asInstanceOf[ArrayData])
-    if (r == null) null else r.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, h => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |java.lang.Long $boxed = graft.functions.SimHash64.compute($h);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.longValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SimHash64 {
 
   /** One definition of truth for interpreted eval AND codegen. Returns
@@ -694,29 +341,11 @@ object SimHash64 {
   * order-of-magnitude faster. Every intermediate fits in a signed 64-bit
   * integer: h < 1e9+7, h*31 + cp < 3.2e10.
   */
-case class RollingHash(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash expects string, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    RollingHash.hash(input.toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RollingHash.hash($c.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RollingHash {
   final val Mod = 1000000007L
+
+  /** The SQL-string entry point, for `StaticInvoke`. */
+  def hash(s: UTF8String): Long = hash(s.toString)
 
   /** Shared by interpreted eval and codegen — one definition of truth. */
   def hash(s: String): Long = {
@@ -749,44 +378,6 @@ object RollingHash {
   * spaces. Null array or element yields NULL (row drops, like every
   * expression here).
   */
-case class TokenRuleStats(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression {
-
-  @transient private lazy val stopArr: Array[UTF8String] =
-    stopwords.map(UTF8String.fromString).toArray
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("sum_wlen", LongType, nullable = false),
-    StructField("n_alpha", IntegerType, nullable = false),
-    StructField("n_stop", IntegerType, nullable = false),
-    StructField("n_distinct_bigrams", IntegerType, nullable = false)))
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_rule_stats expects array<string>, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TokenRuleStats.compute(input.asInstanceOf[ArrayData], stopArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val stopRef = ctx.addReferenceObj("stop", stopArr,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      s"""
-         |${ev.value} = graft.functions.TokenRuleStats.compute($v, $stopRef);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TokenRuleStats {
 
   /** One definition of truth for interpreted eval AND codegen. */
@@ -861,58 +452,13 @@ object TokenRuleStats {
   * a 48-bit code (8 B): the 32x compression that makes exhaustive
   * ADC scans memory-bandwidth-bound instead of FLOP-bound at 100 TB.
   *
-  * The codebook tensor rides along as one referenced `double[][][]` —
+  * The codebook tensor rides along as one [[BcTensor]] —
   * composing this from per-codeword expressions would embed m*K array
   * literals in the generated source (the Janino blowup
-  * [[HyperplaneBuckets]] documents). Ties break to the LOWEST codeword
+  * [[HyperplaneBucketProbes]] documents). Ties break to the LOWEST codeword
   * index; null input, shape mismatch, or a null element yields NULL (the
   * vector drops out of the index, matching every other vector op here).
   */
-case class PqEncode(child: Expression, books: BcTensor[Array[Array[Array[Double]]]],
-    bits: Int) extends UnaryExpression {
-
-  @transient private lazy val booksArr: Array[Array[Array[Double]]] =
-    books.value
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_encode expects array<float|double>, got $t")
-  }
-
-  private def isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val r = PqEncode.compute(input.asInstanceOf[ArrayData], booksArr, bits, isFloat)
-    if (r == null) null else r.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("booksBc", books,
-      "graft.functions.BcTensor")
-    val arr = ctx.addMutableState("double[][][]", "books",
-      v => s"$v = (double[][][]) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, v => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |java.lang.Long $boxed = graft.functions.PqEncode.compute(
-         |  $v, $arr, $bits, $isFloat);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.longValue(); }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object PqEncode {
 
   /** One definition of truth for interpreted eval AND codegen. */
@@ -957,46 +503,6 @@ object PqEncode {
   * asymmetric-distance trick that makes PQ scans cheap. Null/shape
   * semantics match [[PqEncode]].
   */
-case class PqLut(child: Expression, books: BcTensor[Array[Array[Array[Double]]]])
-    extends UnaryExpression {
-
-  @transient private lazy val booksArr: Array[Array[Array[Double]]] =
-    books.value
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_lut expects array<float|double>, got $t")
-  }
-
-  private def isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PqLut.compute(input.asInstanceOf[ArrayData], booksArr, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("booksBc", books,
-      "graft.functions.BcTensor")
-    val arr = ctx.addMutableState("double[][][]", "books",
-      v => s"$v = (double[][][]) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, v => {
-      s"""
-         |${ev.value} = graft.functions.PqLut.compute($v, $arr, $isFloat);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object PqLut {
 
   /** One definition of truth for interpreted eval AND codegen. */
@@ -1037,49 +543,10 @@ object PqLut {
   * the candidate join's hot loop never allocates. Approximates
   * dot(query, vector) with the vector replaced by its per-subspace
   * codeword reconstruction. NULL if the LUT length is not m*K (shape
-  * drift guard); the code itself is total — any 64-bit value decodes.
+  * drift guard) or a LUT entry the code reads is NULL (a null slot holds
+  * no defined double: codegen and interpreted eval read different
+  * values there); the code itself is total — any 64-bit value decodes.
   */
-case class PqAdcScore(code: Expression, lut: Expression, m: Int, bits: Int,
-    k: Int) extends BinaryExpression {
-
-  require(m >= 1 && k >= 1 && k <= (1 << bits) && m * bits <= 64,
-    s"PQ shape invalid: m=$m K=$k bits=$bits")
-
-  override def left: Expression = code
-  override def right: Expression = lut
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (code.dataType, lut.dataType) match {
-      case (LongType, ArrayType(DoubleType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (ct, lt) => TypeCheckResult.TypeCheckFailure(
-        s"pq_adc_score expects (bigint, array<double>), got ($ct, $lt)")
-    }
-
-  override def nullSafeEval(c: Any, l: Any): Any = {
-    val r = PqAdcScore.compute(c.asInstanceOf[Long], l.asInstanceOf[ArrayData],
-      m, bits, k)
-    if (r == null) null else r.doubleValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, l) => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |java.lang.Double $boxed = graft.functions.PqAdcScore.compute(
-         |  $c, $l, $m, $bits, $k);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(code = newLeft, lut = newRight)
-}
-
 object PqAdcScore {
 
   /** One definition of truth for interpreted eval AND codegen. */
@@ -1092,6 +559,7 @@ object PqAdcScore {
     while (s < m) {
       val c = ((code >>> (bits * s)) & mask).toInt
       if (c >= k) return null // unencodable under this codebook — shape drift
+      if (lut.isNullAt(s * k + c)) return null
       acc += lut.getDouble(s * k + c)
       s += 1
     }
@@ -1118,41 +586,6 @@ object PqAdcScore {
   * branch dividing by a null norm); no caller feeds nullable elements,
   * and dropping the row beats emitting a poisoned vector.
   */
-case class UnitNormalize(child: Expression) extends UnaryExpression {
-
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"unit_normalize expects array<float|double>, got $t")
-  }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    UnitNormalize.compute(input.asInstanceOf[ArrayData], elemIsFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val out = ctx.freshName("out")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $out =
-         |  graft.functions.UnitNormalize.compute($a, $elemIsFloat);
-         |if ($out == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $out; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object UnitNormalize {
 
   /** One definition of truth for interpreted eval AND codegen. */
@@ -1193,42 +626,6 @@ object UnitNormalize {
   * nullable elements, and dropping the row beats emitting a poisoned
   * vector.
   */
-case class NeighborMix(child: Expression, eps: Double)
-    extends UnaryExpression {
-
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"neighbor_mix expects array<float|double>, got $t")
-  }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    NeighborMix.compute(input.asInstanceOf[ArrayData], eps, elemIsFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val out = ctx.freshName("out")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $out =
-         |  graft.functions.NeighborMix.compute($a, $eps, $elemIsFloat);
-         |if ($out == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $out; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NeighborMix {
 
   /** One definition of truth for interpreted eval AND codegen. */

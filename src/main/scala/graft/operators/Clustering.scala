@@ -181,6 +181,7 @@ object Clustering {
   private val KmK      = 8
   private val KmRounds = 5
 
+  import graft.functions.BcTensor
   import graft.functions.GraftFunctions.centroidScores
 
   /** Unit-normalized corpus: (vec_id, unit array<double>). The norm is
@@ -233,8 +234,11 @@ object Clustering {
     val objectives = Seq.newBuilder[Double]
     var r = 0
     while (r < rounds) {
+      // the round's centroids ship as one broadcast, destroyed as soon as
+      // the round's collect has returned (the next round ships its own)
+      val tensor = BcTensor(cents)
       val assigned = corpus.withColumn("best",
-          array_max(centroidScores(col("unit"), lit(1.0), cents.map(_.toSeq).toSeq)))
+          array_max(centroidScores(col("unit"), lit(1.0), tensor)))
         .select(col("vec_id"), col("unit"),
           col("best.c").as("cluster"), col("best.s").as("cos"))
       // ONE job per round: the per-(cluster, dim) sums, the per-cluster
@@ -242,12 +246,13 @@ object Clustering {
       // counts/sum(cos) are dim-invariant, so the driver reads them off
       // the pos=0 rows. (Fusing the former separate stats pass halves the
       // round's job count and removes the cache the two passes shared.)
-      val rows = assigned
+      val rows = try assigned
         .select(col("cluster"), col("cos"), posexplode(col("unit")))
         .groupBy(col("cluster"), col("pos"))
         .agg(sum(col("col")).as("s"), count(lit(1)).as("cnt"),
           sum(col("cos")).as("sumcos"))
         .collect()
+      finally tensor.destroy()
       val dim = cents(0).length
       val next = Array.tabulate(k)(c => cents(c).clone())
       val acc = Array.fill(k)(new Array[Double](dim))

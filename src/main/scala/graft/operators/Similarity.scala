@@ -149,7 +149,7 @@ object Similarity {
     * corpora pay more bits/tables — e.g. n = 1e9 → 26 bits, 37 tables,
     * per-vector candidate work still O(occupancy × tables). */
   /** Hard bits ceiling: bucket ids are Java ints built by `1 << p`
-    * ([[graft.functions.HyperplaneBuckets]] requires bits ≤ 30, clear
+    * (`GraftFunctions.hyperplaneBucketProbes` requires bits ≤ 30, clear
     * of both the 32-bit shift wrap and the sign bit). The occupancy law
     * therefore holds exactly up to n = 16·2^30 ≈ 1.7e10 vectors; past
     * that, occupancy grows as n/2^30 — the next lever at that scale is
@@ -219,7 +219,7 @@ object Similarity {
       .withColumn("norm", sqrt(dot(col("emb"), col("emb"))))
 
     // All `tables` bucket ids in ONE fused codegen loop
-    // (HyperplaneBuckets): composing tables*bits per-plane dot
+    // (HyperplaneBucketProbes): composing tables*bits per-plane dot
     // expressions instead would embed that many 64-double literals into
     // the generated Java of every stage that references this projection
     // — seconds of Janino compile time per cold run for identical
@@ -296,7 +296,7 @@ object Similarity {
   // check; recall vs q22 covered by TrainingDataSpec).
   //
   // Index side: one bucket per table per vector (sign bits of seeded
-  // Gaussian hyperplane dots, one fused HyperplaneBuckets projection).
+  // Gaussian hyperplane dots, one fused hyperplaneBuckets projection).
   // Query side: each query probes its base bucket PLUS NumProbes-1
   // perturbed buckets per table — flipping the bits with the smallest
   // |dot|, i.e. exactly the bits most likely to disagree with a true
@@ -355,7 +355,7 @@ object Similarity {
 
   /** Index side: (vec_id, embedding, norm, tbl, bucket) — one bucket per
     * table, all tables in one fused codegen loop (see q26's
-    * HyperplaneBuckets note). */
+    * hyperplaneBuckets note). */
   private def bucketed(e: DataFrame): DataFrame =
     e.select(col("vec_id"), col("embedding"), col("norm"), posexplode(
         graft.functions.GraftFunctions.hyperplaneBuckets(
@@ -529,7 +529,7 @@ object Similarity {
     // Cell scores normalized by the vector norm (cosine to each centroid)
     // so the multi-assignment width is norm-invariant. One fused codegen
     // call — K scales with the corpus, so composing K typedlit dot
-    // columns would hit the Janino blowup HyperplaneBuckets documents.
+    // columns would hit the Janino blowup HyperplaneBucketProbes documents.
     def scoredCells(embCol: Column, normCol: Column): Column =
       graft.functions.GraftFunctions.centroidScores(embCol, normCol, cents)
 

@@ -89,6 +89,12 @@ private[graft] object Replay {
     /** A scratch dir deleted with the run (foreachBatch outputs, ledgers). */
     def tempDir(tag: String): String = newDir(tag).toString
 
+    /** The batch dirs a foreachBatch wrote under `root` (a [[tempDir]]),
+      * read back by name: a `b*` glob read first probes the literal glob
+      * path for a sink log and logs a FileNotFoundException each time. */
+    def batches(root: String): DataFrame =
+      spark.read.parquet(listDir(Paths.get(root)).map(_.toString).sorted: _*)
+
     /** `df` laid out as `n` replay files (see [[layout]]), streamed one
       * file per micro-batch. */
     def files(df: DataFrame, order: Order, n: Int = ReplayFiles,

@@ -401,7 +401,7 @@ object StreamParity {
             .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
           ()
         })
-      spark.read.parquet(s"$outRoot/b*").orderBy("vec_id")
+      r.batches(outRoot).orderBy("vec_id")
         .localCheckpoint(true)
     }
   }
@@ -620,7 +620,7 @@ object StreamParity {
           }
           ()
         })
-      spark.read.parquet(s"$outRoot/b*").orderBy("doc_id")
+      r.batches(outRoot).orderBy("doc_id")
         .localCheckpoint(true)
     }
   }
@@ -1920,10 +1920,10 @@ object StreamParity {
 
       // Materialize eagerly (localCheckpoint severs the lineage to the sink
       // parquet) so BOTH temp sinks can be deleted before returning.
-      spark.read.parquet(s"$mainDir/b*")
+      r.batches(mainDir)
         .withColumn("sink", lit("main"))
         .unionByName(
-          spark.read.parquet(s"$dlqDir/b*").withColumn("sink", lit("dlq")))
+          r.batches(dlqDir).withColumn("sink", lit("dlq")))
         .orderBy("event_id")
         .localCheckpoint(true)
     }

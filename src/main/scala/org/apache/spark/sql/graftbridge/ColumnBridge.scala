@@ -4,9 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Bridge to the `private[sql]` Column <-> Expression converters that
-  * Spark 4 moved behind the classic/connect split. Lives under
-  * `org.apache.spark.sql` purely for access; contains no Spark code.
+/** Bridge to Spark-private hooks: the `private[sql]` Column <->
+  * Expression converters that Spark 4 moved behind the classic/connect
+  * split, the live function registry, and blocking broadcast removal.
+  * Lives under `org.apache.spark.sql` purely for access; contains no
+  * Spark code.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -21,4 +23,9 @@ object ColumnBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** Destroy a broadcast and wait until its blocks are removed (the
+    * public `destroy()` only starts the removal). */
+  def destroy(bc: org.apache.spark.broadcast.Broadcast[_]): Unit =
+    bc.destroy(blocking = true)
 }

@@ -139,6 +139,23 @@ class ClusteringSpec extends SparkSpec {
     // training must actually move the centroids off their init
     assert(objectives.last > objectives.head)
   }
+  test("q47 k-means: Lloyd rounds leave no centroid broadcast behind") {
+    import org.apache.spark.sql.graftbridge.BroadcastBlocks
+    // each round ships its centroid matrix as a broadcast; a leak would
+    // leave one per round alive after training
+    def centroidBroadcasts(): Set[Long] = BroadcastBlocks.live {
+      case _: Array[Array[Double]] => true
+      case _ => false
+    }
+    val unit = Tables.embeddings(spark, sf).select(col("vec_id"),
+        graft.functions.GraftFunctions.unitNormalize(col("embedding")).as("unit"))
+      .filter(col("unit").isNotNull)
+    val before = centroidBroadcasts()
+    val (_, objectives) = Clustering.kmeansTrainOn(unit, 4, 6)
+    assert(objectives.length == 6)
+    assert((centroidBroadcasts() -- before).isEmpty)
+  }
+
   test("q86 cluster-canonical: one representative per component, the longest doc") {
     val comp = Clustering.q46DedupComponents(spark, sf)
       .select(col("doc_id"), col("component"))

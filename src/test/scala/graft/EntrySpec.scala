@@ -58,6 +58,17 @@ class EntrySpec extends SparkSpec {
       s"lay out replays through graft.streaming.Replay, not in: ${offenders.mkString(", ")}")
   }
 
+  test("only DotProduct and the percentile expressions hand-write eval and codegen") {
+    // every other graft function is a kernel on a Scala object, called
+    // through Spark's StaticInvoke (GraftFunctions)
+    val offenders = scalaFilesMatching(Seq("src/main/scala/graft/functions"),
+      Set("DotProduct.scala", "PercentileHistogram.scala"),
+      raw"\b(doGenCode|nullSafeEval)\b".r)
+    assert(offenders.isEmpty,
+      s"call a kernel through GraftFunctions instead of hand-writing eval/codegen in: " +
+        offenders.mkString(", "))
+  }
+
   test("every query name has either an oracle or a documented omission") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     // the only rows-only checks: approximate/hash-family ops and

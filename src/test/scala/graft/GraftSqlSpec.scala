@@ -47,7 +47,8 @@ class GraftSqlSpec extends SparkSpec {
     assert(df.collect().map(_.getLong(0)).toSeq ==
       blobs.map(graft.functions.Utf8Audit.parse))
     val plan = df.queryExecution.executedPlan.toString
-    assert("""\*\(\d+\) Project \[utf8audit""".r.findFirstIn(plan).isDefined,
+    assert("""\*\(\d+\) Project \[static_invoke\(graft\.functions\.Utf8Audit\.parse""".r
+      .findFirstIn(plan).isDefined,
       plan)
   }
 

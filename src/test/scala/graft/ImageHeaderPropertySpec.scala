@@ -144,9 +144,10 @@ class ImageHeaderPropertySpec extends SparkSpec {
     // codegen spans — an `as[Long]` view would have its own, unexecuted
     // QueryExecution)
     val plan = df.queryExecution.executedPlan.toString
-    // "*(n) Project [imageheader(...)" — the starred prefix is the
-    // WholeStageCodegen marker in simpleString form
-    assert("""\*\(\d+\) Project \[imageheader""".r.findFirstIn(plan).isDefined,
+    // "*(n) Project [static_invoke(...ImageHeader.parse(...)" — the
+    // starred prefix is the WholeStageCodegen marker in simpleString form
+    assert("""\*\(\d+\) Project \[static_invoke\(graft\.functions\.ImageHeader\.parse""".r
+      .findFirstIn(plan).isDefined,
       plan)
   }
 }

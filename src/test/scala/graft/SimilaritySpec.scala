@@ -156,7 +156,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // concrete far-extrapolation point quoted in the Scaladoc
     assert(Similarity.dupGeometry(1000000000L) === ((37, 26)))
-    // int bucket-id ceiling: bits cap at 30 (HyperplaneBuckets requires
+    // int bucket-id ceiling: bits cap at 30 (hyperplaneBuckets requires
     // <= 30 — `1 << p` would wrap/sign past that), tables keep the miss
     // solve at the capped width
     assert(Similarity.dupGeometry(1L << 40) === ((43, 30)))
