@@ -83,6 +83,24 @@ object GraftFunctions {
   def pct(c: Column, p: Int, scale: Array[Double]): Column =
     pctResult(pctHist(c, scale), p, scale)
 
+  /** Exact `SUM(CAST(c AS DECIMAL(25,6)))` on a fixed-point long buffer
+    * (see [[FixedPointSum]]): the same `DECIMAL(35,6)` value, NULL for a
+    * group with no non-null input, with no BigDecimal on the per-row
+    * path. Fails past about 1.5e20 instead of wrapping. */
+  def exactSum(c: Column): Column =
+    ColumnBridge.column(FixedPointSum(expr(c), emitState = false).toAggregateExpression())
+
+  /** [[exactSum]]'s partial state, a `struct<hi, lo>` of longs (NULL for
+    * no input), for a second aggregation level to merge with
+    * [[exactSumOfStates]]. */
+  def exactSumState(c: Column): Column =
+    ColumnBridge.column(FixedPointSum(expr(c), emitState = true).toAggregateExpression())
+
+  /** The exact sum of [[exactSumState]] states: equal to [[exactSum]] of
+    * the rows behind them. */
+  def exactSumOfStates(state: Column): Column =
+    ColumnBridge.column(FixedPointSumMerge(expr(state)).toAggregateExpression())
+
   /** Codegen'd sequential-fold dot product of two numeric array columns
     * (see [[DotProduct]]); bit-identical to the `aggregate(zip_with(...))`
     * formulation and DuckDB's `list_dot_product`. */
@@ -128,7 +146,7 @@ object GraftFunctions {
   def centroidScores(v: Column, norm: Column, cents: Seq[Seq[Double]]): Column = {
     require(cents.nonEmpty, "need at least one centroid")
     require(cents.forall(_.length == cents.head.length), "ragged centroids")
-    centroidScores(v, norm, BcTensor(cents.map(_.toArray).toArray))
+    centroidScores(v, norm, BcTensor(cents.map(_.toArray).toArray, "centroidScores"))
   }
 
   /** [[centroidScores]] over a tensor the caller owns (and may destroy
@@ -225,10 +243,10 @@ object GraftFunctions {
   }
 
   /** The codebook tensor as an operand, shipped as a [[BcTensor]]. */
-  private def pqBooks(books: Seq[Seq[Seq[Double]]]): Expression = {
+  private def pqBooks(books: Seq[Seq[Seq[Double]]], builder: String): Expression = {
     require(books.nonEmpty && books.forall(b => b.length == books.head.length
       && b.forall(_.length == books.head.head.length)), "ragged codebook tensor")
-    operand(BcTensor(books.map(_.map(_.toArray).toArray).toArray))
+    operand(BcTensor(books.map(_.map(_.toArray).toArray).toArray, builder))
   }
 
   private def validPqShape(m: Int, k: Int, bits: Int): Unit =
@@ -240,7 +258,7 @@ object GraftFunctions {
     * The codebook tensor rides as a [[BcTensor]] broadcast. */
   def pqEncode(v: Column, books: Seq[Seq[Seq[Double]]], bits: Int): Column = {
     validPqShape(books.length, books.headOption.fold(0)(_.length), bits)
-    val b = pqBooks(books)
+    val b = pqBooks(books, "pqEncode")
     vectorKernel(PqEncode, LongType, v, Seq(b, Literal(bits)),
       Seq(b.dataType, IntegerType))
   }
@@ -249,7 +267,7 @@ object GraftFunctions {
     * codebooks (see [[PqLut]]): the query-side companion of
     * [[pqEncode]]. */
   def pqLut(q: Column, books: Seq[Seq[Seq[Double]]]): Column = {
-    val b = pqBooks(books)
+    val b = pqBooks(books, "pqLut")
     vectorKernel(PqLut, ArrayType(DoubleType, containsNull = false), q,
       Seq(b), Seq(b.dataType))
   }

@@ -163,10 +163,18 @@ final class BcTensor[T <: AnyRef] private (
 }
 
 object BcTensor {
-  def apply[T <: AnyRef: scala.reflect.ClassTag](data: T): BcTensor[T] =
-    new BcTensor(
-      org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(data),
+  /** Broadcast `data` on the active (else default) session; `builder`
+    * names the column builder that asked, for the error raised when
+    * there is no session. */
+  def apply[T <: AnyRef: scala.reflect.ClassTag](data: T, builder: String): BcTensor[T] = {
+    import org.apache.spark.sql.SparkSession
+    val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .getOrElse(throw new IllegalStateException(s"$builder broadcasts its " +
+        "tensor when the column is built, and no Spark session is active or " +
+        "default: build the column inside a session"))
+    new BcTensor(spark.sparkContext.broadcast(data),
       KernelConst.shapeOf(data), KernelConst.digestOf(data))
+  }
 }
 
 /** Cosine of a vector against every centroid of a coarse quantizer, in

@@ -236,7 +236,7 @@ object Clustering {
     while (r < rounds) {
       // the round's centroids ship as one broadcast, destroyed as soon as
       // the round's collect has returned (the next round ships its own)
-      val tensor = BcTensor(cents)
+      val tensor = BcTensor(cents, "kmeansTrainOn")
       val assigned = corpus.withColumn("best",
           array_max(centroidScores(col("unit"), lit(1.0), tensor)))
         .select(col("vec_id"), col("unit"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.functions.GraftFunctions.{exactSum, exactSumOfStates, exactSumState}
 
 /** Batch relational + event-time-window operators.
   *
@@ -37,10 +38,11 @@ import graft.Tables
   */
 object Relational {
 
-  /** Order-insensitive exact sum of a double column: sum in Decimal, cast
-    * back. Deterministic under any partitioning — safe for distributed
-    * re-aggregation AND exactly reproducible in the DuckDB oracle. */
-  def dsum(c: Column): Column = sum(c.cast(DecimalType(25, 6))).cast("double")
+  /** Order-insensitive exact sum of a double column: the exact
+    * `DECIMAL(25,6)` sum ([[exactSum]]), cast back. Deterministic under any
+    * partitioning — safe for distributed re-aggregation AND exactly
+    * reproducible in the DuckDB oracle. */
+  def dsum(c: Column): Column = exactSum(c).cast("double")
 
   /** Exact average with deterministic double division. */
   def davg(c: Column): Column = (dsum(c) / count(c)).cast("double")
@@ -58,15 +60,17 @@ object Relational {
   // partial aggregate), per-row aggregation work drops 3x and the
   // shuffle carries pane-level keys (1/3 of the window-level partials) —
   // the difference between shuffling |input|-proportional expansion and
-  // |panes|-proportional aggregates at 100 TB. Exactness: the decimal
-  // sums re-aggregate associatively (dsum), max/min/count compose —
-  // output is bit-identical to the direct formulation and the oracle.
+  // |panes|-proportional aggregates at 100 TB. Exactness: each pane
+  // carries its exact DECIMAL(25,6) sum as a fixed-point state that the
+  // windows merge exactly (exactSumState -> exactSumOfStates), and
+  // max/min/count compose — output is bit-identical to the direct
+  // formulation and the oracle.
   // ---------------------------------------------------------------------
   def q01SlidingWindowAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val panes = Tables.events(spark, sfDir)
       .groupBy(window(col("ts"), "20 seconds"), col("event_type"))
       .agg(
-        sum(col("value").cast(DecimalType(25, 6))).as("psum"),
+        exactSumState(col("value")).as("psum"),
         max(col("value")).as("pmax"),
         min(col("value")).as("pmin"),
         count(lit(1)).as("pcnt"))
@@ -79,7 +83,7 @@ object Relational {
       .groupBy((col("pane_start") - col("i") * 20L).as("window_start"),
         col("event_type"))
       .agg(
-        sum(col("psum")).cast("double").as("sum_value"),
+        exactSumOfStates(col("psum")).cast("double").as("sum_value"),
         max(col("pmax")).as("max_value"),
         min(col("pmin")).as("min_value"),
         sum(col("pcnt")).as("cnt"))
@@ -1120,7 +1124,7 @@ object Relational {
       sum(col("x")).cast("double").as("sx"),
       sum((col("x") * col("x")).cast(DecimalType(38, 0)))
         .cast("double").as("sxx"),
-      sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sy"),
+      dsum(col("value")).as("sy"),
       sum((col("value") * col("value")).cast(DecimalType(30, 9)))
         .cast("double").as("syy"),
       sum((col("x").cast("double") * col("value")).cast(DecimalType(32, 6)))
@@ -1414,7 +1418,7 @@ object Relational {
   def q118ParetoShare(spark: SparkSession, sfDir: String): DataFrame = {
     val rev = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"))
-      .agg(sum(col("o_totalprice").cast(DecimalType(25, 6))).as("revenue"))
+      .agg(exactSum(col("o_totalprice")).as("revenue"))
     val byRev = org.apache.spark.sql.expressions.Window
       .orderBy(col("revenue").desc, col("o_custkey").asc)
     val cum = org.apache.spark.sql.expressions.Window
@@ -1670,8 +1674,9 @@ object Relational {
   // statistics at read time — the algebraic-aggregate discipline every
   // incremental view engine (Materialize, Delta MV, Druid rollup) runs on.
   //
-  // Exactness: the double `value` is cast to DECIMAL(25,6) BEFORE any
-  // sum, so base-sum + delta-sum == full-sum bit-for-bit regardless of
+  // Exactness: base and delta carry the exact DECIMAL(25,6) sum of
+  // `value` as fixed-point states (exactSumState), so merging them
+  // (exactSumOfStates) gives the full sum bit-for-bit regardless of
   // partitioning or merge order (the repo-wide decimal discipline). The
   // final avg is one decimal->double division, identical IEEE in both
   // engines.
@@ -1686,20 +1691,19 @@ object Relational {
   // ---------------------------------------------------------------------
   def q131IncrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts"),
-        col("value").cast("decimal(25,6)").as("v"))
+      .select(col("user_id"), col("ts"), col("value").as("v"))
     val cutoff = ev.agg((max(col("ts")) - expr("INTERVAL 1 DAY")).as("cut"))
     val tagged = ev.crossJoin(broadcast(cutoff))
     def part(df: DataFrame): DataFrame = df
       .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
+      .agg(count(lit(1)).as("n"), exactSumState(col("v")).as("sv"),
         max(col("ts")).as("mts"))
     val base  = part(tagged.filter(col("ts") <  col("cut")))
     val delta = part(tagged.filter(col("ts") >= col("cut")))
     base.unionByName(delta)
       .groupBy(col("user_id"))
       .agg(sum(col("n")).as("n_events"),
-        sum(col("sv")).as("sv"),
+        exactSumOfStates(col("sv")).as("sv"),
         max(col("mts")).as("last_ts"))
       .select(col("user_id"), col("n_events"),
         col("sv").cast("double").as("sum_value"),
@@ -2173,9 +2177,9 @@ object Relational {
   def q153InterpResample(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(expr("unix_micros(ts) div 3600000000").as("hr"),
-        col("event_type"), col("value").cast("decimal(25,6)").as("v"))
+        col("event_type"), col("value").as("v"))
     val known = ev.groupBy(col("event_type"), col("hr"))
-      .agg((sum(col("v")).cast("double") / count(lit(1))).as("obs"))
+      .agg((dsum(col("v")) / count(lit(1))).as("obs"))
       .cache() // span, type set, and the grid join all derive from it —
                // one corpus scan total (q75's discipline)
     val span = known.agg(min(col("hr")).as("h0"), max(col("hr")).as("h1"))

@@ -965,7 +965,10 @@ object Similarity {
     val a = e.filter(col("vec_id") % KnnAnchorMod === 0)
       .select(col("vec_id").as("anchor_id"), col("label").as("true_label"),
         col("embedding").as("ae"), col("norm").as("anorm"))
-    val votes = e.join(broadcast(a), col("vec_id") =!= col("anchor_id"))
+    // the corpus side is one parquet row group, so one scan task: spread
+    // it over the session's shuffle partitions before the pair scoring
+    val streamed = e.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val votes = streamed.join(broadcast(a), col("vec_id") =!= col("anchor_id"))
       .select(col("anchor_id"), col("true_label"),
         col("label").as("nlabel"), col("vec_id").as("nid"),
         (dot(col("ae"), col("embedding")) / (col("anorm") * col("norm"))).as("cosine"))

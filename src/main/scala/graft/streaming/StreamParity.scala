@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.spark.sql.types.StructType
 
+import graft.operators.Relational.dsum
 import Replay.{ByRange, Pinned, ReplayFiles, RocksDB, RoundRobin, SessionPartitions}
 
 /** Streaming/batch parity: the flagship sliding-window aggregation run
@@ -57,7 +58,7 @@ object StreamParity {
         .withWatermark("ts", "1 second")
         .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("event_type"))
         .agg(
-          sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"),
+          dsum(col("value")).as("sum_value"),
           max(col("value")).as("max_value"),
           min(col("value")).as("min_value"),
           count(lit(1)).as("cnt"))
@@ -313,7 +314,7 @@ object StreamParity {
         .withWatermark("ts", "1 second")
         .groupBy(session_window(col("ts"), "300 seconds"), col("user_id"))
         .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"))
+          dsum(col("value")).as("sum_value"))
       r.memory(agg, "append", RocksDB)
     }
 
@@ -1156,7 +1157,6 @@ object StreamParity {
     * MERGE / keyed state store exactly as q58 documents. Snapshot
     * versions are GC'd batch-to-batch (O(base) temp, not O(batches)). */
   def q80StreamCdcMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Relational.dsum
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
     val base = orders
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),

@@ -69,6 +69,16 @@ class EntrySpec extends SparkSpec {
         offenders.mkString(", "))
   }
 
+  test("only the fixed-point sum's file names the decimal(25,6) sum type") {
+    // every DECIMAL(25,6) sum goes through graft.functions.FixedPointSum;
+    // the oracle SQL strings spell the type in upper case and are exempt
+    val offenders = scalaFilesMatching(Seq("src/main"), Set("FixedPointSum.scala"),
+      raw"DecimalType\(\s*25\s*,\s*6\s*\)|decimal\(\s*25\s*,\s*6\s*\)".r)
+    assert(offenders.isEmpty,
+      s"sum through GraftFunctions.exactSum or Relational.dsum instead of in: " +
+        offenders.mkString(", "))
+  }
+
   test("every query name has either an oracle or a documented omission") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     // the only rows-only checks: approximate/hash-family ops and

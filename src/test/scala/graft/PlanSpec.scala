@@ -861,4 +861,62 @@ class PlanSpec extends SparkSpec {
       .count(_.contains("Exchange hashpartitioning"))
     assert(hashEx == 1, s"expected exactly one hash exchange, saw $hashEx")
   }
+
+  test("decimal-sum keys plan no object or sort aggregate, every " +
+      "HashAggregate in codegen, and no wide decimal buffer") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+    Seq("q01_sliding_window_agg", "q02_tumbling_window_agg", "q04_keyby_reduce",
+        "q05_range_window_filter", "q06_broadcast_enrich", "q08_session_window",
+        "q09_shuffle_join_agg").foreach { key =>
+      val df = SparkEntry.queries(key)(spark, sf)
+      df.collect()
+      val all = PlanSpec.nodes(df.queryExecution.executedPlan)
+      val aggs = all.collect { case a: BaseAggregateExec => a }
+      val inCodegen = all.collect { case w: WholeStageCodegenExec =>
+        w.child.collect { case h: HashAggregateExec => h } }.flatten
+      assert(aggs.nonEmpty, key)
+      // q08's session merge (MergingSessions) is the one other kind
+      aggs.foreach { a =>
+        assert(!a.isInstanceOf[ObjectHashAggregateExec] && !a.isInstanceOf[SortAggregateExec],
+          s"$key: ${a.nodeName}")
+        if (a.isInstanceOf[HashAggregateExec])
+          assert(inCodegen.exists(_ eq a), s"$key: ${a.simpleString(200)} runs outside codegen")
+        val wide = a.aggregateExpressions.flatMap(_.aggregateFunction.aggBufferAttributes)
+          .filter(_.dataType match {
+            case d: org.apache.spark.sql.types.DecimalType => d.precision > 18
+            case _ => false
+          })
+        assert(wide.isEmpty, s"$key: wide decimal buffer ${wide.mkString(", ")}")
+      }
+    }
+  }
+
+  test("q69: the pair-scoring join streams a round-robin exchange at the " +
+      "session's shuffle partitions") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val df = Similarity.q69KnnClassify(spark, sf)
+    df.collect()
+    val joins = PlanSpec.nodes(df.queryExecution.executedPlan)
+      .collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(joins.size == 1)
+    val j = joins.head
+    val streamed = j.buildSide match {
+      case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.left
+      case _ => j.right
+    }
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val exchanges = PlanSpec.nodes(streamed).collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.exists(_.outputPartitioning == RoundRobinPartitioning(n)),
+      s"streamed side:\n$streamed")
+  }
+}
+
+object PlanSpec extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  /** Every node of a physical plan, through adaptive plans and their
+    * query stages. */
+  def nodes(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = collect(plan) { case n => n }
 }

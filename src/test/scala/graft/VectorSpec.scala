@@ -390,4 +390,27 @@ class VectorSpec extends SparkSpec {
       new GenericArrayData(Array[Any](2.0)), 0.1, isFloat = false)
     assert(one.toDoubleArray().toSeq == Seq(2.0 + 0.1 * 2.0))
   }
+
+  test("tensor columns built with no session fail naming their builder") {
+    import org.apache.spark.sql.SparkSession
+    import graft.functions.GraftFunctions
+    val live = spark // the suite's session, restored below
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    val books = Seq(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)))
+    val builders = Seq[(String, () => Any)](
+      "centroidScores" -> (() => GraftFunctions.centroidScores(col("v"), lit(1.0),
+        Seq(Seq(1.0, 0.0)))),
+      "pqEncode" -> (() => GraftFunctions.pqEncode(col("v"), books, 1)),
+      "pqLut" -> (() => GraftFunctions.pqLut(col("v"), books)))
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try builders.foreach { case (name, build) =>
+      val e = intercept[IllegalStateException](build())
+      assert(e.getMessage.startsWith(s"$name broadcasts its tensor"), e.getMessage)
+      assert(e.getMessage.contains("build the column inside a session"), e.getMessage)
+    } finally {
+      SparkSession.setDefaultSession(default.getOrElse(live))
+      SparkSession.setActiveSession(active.getOrElse(live))
+    }
+  }
 }
