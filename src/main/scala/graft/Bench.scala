@@ -54,80 +54,39 @@ object Bench {
     * sub-second noise floor. */
   val BenchTopK = 100
 
-  /** Session-health canary: trivial, stable queries whose quiet-machine
-    * min-of-2-runs time never approaches these bands (bands sit ~2.5x
-    * above the max observed across five independent quiet sf0.1
-    * sessions, bench_local_r09_run{J,K,L,M} + r10_runA: q03 <=0.28,
-    * q11 <=0.36, q22 <=0.27, q36 <=0.20, q42 <=0.21, q59 <=0.21,
-    * q119 <=0.60, q138 <=0.75, q200 <=0.13). A disturbed host
-    * (concurrent DuckDB oracle pass, other 32-thread load) inflates
-    * them 2-15x — the r09 driver board read q11 3.7 s / q119 3.8 s /
-    * q138 6.3 s with zero code change. The r10 board proved the old
-    * 3-4x bands too loose (its q36 read 0.622, 5x quiet, under the old
-    * 0.8 band) and the old five sentinels too front-loaded (the r10
-    * disturbance lived at string-sort positions 45-170 where only q36
-    * sat) — hence the 2.5x tightening and the four back-half adds
-    * (q200/q22/q42/q59: trivial stable projections). Sentinels span
-    * several source files so a genuine single-operator regression
-    * cannot trip >=2 of them; >=2 trips means the SESSION is suspect,
-    * not the code. */
-  val SentinelBands: Seq[(String, Double)] = Seq(
-    "q03_filter_project" -> 0.70,
-    "q11_set_ops" -> 0.90,
-    "q22_ann_brute_force" -> 0.65,
-    "q36_hash_split" -> 0.50,
-    "q42_stratified_mix" -> 0.52,
-    "q59_audio_chunks" -> 0.51,
-    "q119_transition_matrix" -> 1.50,
-    "q138_itemset_pairs" -> 1.90,
-    "q200_weighted_sample" -> 0.32)
+  // --- the board's one noise signal: the committed quiet-band table ---
+  //
+  // Three consecutive driver boards (r09/r10/r11) were disturbed, each
+  // with a different signature (r09: a dense execution-order block; r10:
+  // sustained inflation spanning BOTH runs of each pair; r11: roaming
+  // single-key spikes, q124 at 131.8/156.6 s vs its ~1.6 s band). One
+  // table catches all three: the committed bands pin every key's min-of-2
+  // from Bench's own verified-quiet full-surface sf0.1 sessions. Every
+  // recorded board (BenchLineSpec's table) gets its verdict, its retry
+  // set and its retry-window reading from this table alone.
 
-  def sentinelTrips(minTimes: Map[String, Double]): Seq[String] =
-    SentinelBands.collect {
-      case (k, band) if minTimes.get(k).exists(_ > band) => k }
-
-  /** Median of max/min across each query's two runs, over queries whose
-    * min run is >= 0.15 s (sub-noise-floor times carry no ratio
-    * signal). Quiet sessions sit ~1.45-1.55 (run 1 pays JIT/page-cache
-    * warmup); a mid-session disturbance that hits only ONE of the two
-    * runs pushes it past 2.2. A disturbance spanning both runs is the
-    * sentinels' job instead. */
-  def medianRunRatio(spread: Seq[(String, (Double, Double))]): Double = {
-    val rs = spread.collect {
-      case (_, (a, b)) if a > 0 && b > 0 && math.min(a, b) >= 0.15 =>
-        math.max(a, b) / math.min(a, b)
-    }.sorted
-    if (rs.isEmpty) 1.0 else rs(rs.size / 2)
-  }
-
-  /** Per-key quiet-band check — the canary arm the r10 board proved
-    * necessary: a sustained disturbance spanning BOTH runs of every
-    * pair is invisible to the run-ratio median (q38 read 5.36/5.07,
-    * ratio 1.06) and can slip between sentinels. The committed bands
-    * file pins every key's min-of-2 from a verified-quiet full-surface
-    * sf0.1 session (bench_local_r10_runA); >= [[QuietBandMinKeys]]
-    * non-stream keys past [[QuietBandMult]]x their band means the
-    * SESSION is disturbed (the r10 board trips 20 such keys; five
-    * quiet sessions trip 0-1). Stream-named keys are excluded: the
-    * per-trigger replay-floor class legitimately swings 2-5x across
-    * sessions (BASELINE.md), and they carry their own floors. */
+  /** >= [[QuietBandMinKeys]] non-stream keys past [[QuietBandMult]]x
+    * their band means the SESSION is disturbed, not the code: the r10
+    * board trips 20 such keys, quiet sessions trip 0-4. */
   val QuietBandsFile = "bench_quiet_bands.json"
   val QuietBandMult = 3.0
   val QuietBandMinKeys = 5
 
-  /** Stream-class membership for the canary/ledger split. Most
-    * per-trigger-floor queries are stream-NAMED, but the class is a
-    * property of the execution shape (foreachBatch/transformWithState
-    * trigger floors swing 2-5x across sessions), not the name — q126
-    * measured 3.9-8.5 s across the three quiet r12 runs, exactly the
-    * swing the band arm must not read as disturbance. Stream-class keys
-    * keep their band entries (they still cap [[bandTotal]]) but never
-    * TRIP, and each carries a measured per-trigger floor in
-    * stream_floor_ledger.json instead (BenchLineSpec asserts coverage
-    * of this exact set). */
+  /** Stream-class membership. Most per-trigger-floor queries are
+    * stream-NAMED, but the class is a property of the execution shape
+    * (foreachBatch/transformWithState trigger floors swing 2-5x across
+    * sessions), not the name — q126 measured 3.9-8.5 s across the three
+    * quiet r12 runs. Stream-class keys never count toward the verdict;
+    * they trip only past [[StreamRetryMult]]x their band, and then only
+    * to be re-timed. */
   val StreamExtraKeys: Set[String] = Set("q126_transform_state")
   def isStreamClass(k: String): Boolean =
     k.contains("stream") || StreamExtraKeys(k)
+
+  /** Trip multiple for stream-class keys: above their legitimate 2-5x
+    * per-trigger session swing, below the observed disturbance class
+    * (q116 read 31.0 s on the r13 board, 5.7x its 5.44 s band). */
+  val StreamRetryMult = 5.0
 
   def loadQuietBands(path: String = QuietBandsFile): Map[String, Double] =
     try {
@@ -137,115 +96,69 @@ object Bench {
         .asScala.map(k => k -> node.get(k).asDouble()).toMap
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
+  /** Observed time over the key's band; None for a failed (-1) key or a
+    * key without a band (nothing to compare against). */
+  def inflation(k: String, v: Double, bands: Map[String, Double]): Option[Double] =
+    bands.get(k).collect { case b if v > 0 && b > 0 => v / b }
+
+  /** The trip rule: past [[QuietBandMult]]x its band, or
+    * [[StreamRetryMult]]x for a stream-class key. */
+  def trips(k: String, v: Double, bands: Map[String, Double]): Boolean =
+    inflation(k, v, bands).exists(
+      _ > (if (isStreamClass(k)) StreamRetryMult else QuietBandMult))
+
+  /** Every tripped key, most inflated first. */
+  def trippedKeys(minTimes: Map[String, Double],
+      bands: Map[String, Double]): Seq[String] =
+    minTimes.toSeq.collect { case (k, v) if trips(k, v, bands) =>
+      (k, inflation(k, v, bands).get) }
+      .sortBy { case (k, x) => (-x, k) }.map(_._1)
+
+  /** The tripped non-stream keys — the ones the verdict counts. */
   def quietBandTrips(minTimes: Map[String, Double],
       bands: Map[String, Double]): Seq[String] =
-    minTimes.toSeq.collect {
-      case (k, v) if !isStreamClass(k) && v > 0 &&
-        bands.get(k).exists(b => v > QuietBandMult * b) => k
-    }.sorted
+    trippedKeys(minTimes, bands).filterNot(isStreamClass).sorted
 
-  /** The driver-line canary: red when >=2 sentinels sit above their
-    * pinned bands, OR the run-ratio median is past 2.2, OR >=
-    * [[QuietBandMinKeys]] keys sit past their committed quiet bands.
-    * Calibrated red on the r09 AND r10 driver boards' timing profiles
-    * and green on the five quiet local profiles (BenchLineSpec replays
-    * the recorded JSON). */
-  def noisy(minTimes: Map[String, Double], ratio: Double,
-      bandTrips: Seq[String] = Nil): Boolean =
-    sentinelTrips(minTimes).size >= 2 || ratio > 2.2 ||
-      bandTrips.size >= QuietBandMinKeys
+  /** The session verdict, shared by Bench's driver line and Doctor. */
+  def noisy(minTimes: Map[String, Double], bands: Map[String, Double]): Boolean =
+    quietBandTrips(minTimes, bands).size >= QuietBandMinKeys
 
-  // --- self-heal: retry the keys the canary names, publish the min ---
+  // --- self-heal: retry the tripped keys, publish the min ---
   //
-  // Three consecutive driver boards (r09/r10/r11) were disturbed; the
-  // r11 canary NAMED its 21 inflated keys from inside the session (q124
-  // at 131.8/156.6 s in BOTH runs vs its ~1.6 s band) but Bench stopped
-  // at min-of-2, so the board shipped 595.5 s where the true surface
-  // cost ~300 s and adjudication happened offline. The fix is mechanical
-  // and bounded: after the two timed runs, re-run ONLY the tripped
-  // non-stream keys as their own min-of-2 pair (most-inflated first,
-  // capped at [[BenchRetryMax]] — the worst board ever seen tripped 21),
-  // publish the min across all four executions, and recompute the
-  // canary from the healed times.
-  // A roaming/transient disturbance (the r11 class) heals to a green
-  // board with the retried keys named on the driver line; a SUSTAINED
-  // disturbance also inflates the retry run, the healed times still
-  // trip, and the board stays honestly red.
+  // The r11 canary NAMED its 21 inflated keys from inside the session
+  // but Bench stopped at min-of-2, so the board shipped 595.5 s where the
+  // true surface cost ~300 s. After the two timed runs Bench re-runs ONLY
+  // the tripped keys as their own min-of-2 pair (most-inflated first,
+  // capped), publishes the min across all four executions, and
+  // recomputes the verdict from the healed times. A transient
+  // disturbance heals to a green board with the retried keys named on
+  // the driver line; a SUSTAINED one also inflates the retry run, the
+  // healed times still trip, and the board stays honestly red.
 
-  /** Hard cap on retry executions per session — bounds the self-heal's
+  /** Hard cap on batch-key retries per session — bounds the self-heal's
     * cost on an arbitrarily disturbed host. Sized above the worst
     * observed board (21 trips, r11) with margin, and below what the
     * driver-line budget can annotate (BenchLineSpec proves the
     * worst-case `"retried"` list fits). */
   val BenchRetryMax = 24
-
-  // --- stream-class self-heal arm (VERDICT r13 item #2) ---
-  //
-  // The band arm above EXEMPTS stream-class keys by design (their
-  // per-trigger floors legitimately swing 2-5x across sessions), which
-  // also barred them from healing: the r13 board shipped q116 at 31 s —
-  // a 5.3x inflation over its committed floor, same-day 8-core re-read
-  // 3.9 s — as a fake 0.52x regression. Stream keys get their own retry
-  // arm keyed to stream_floor_ledger.json (quiet-machine min evidence,
-  // regenerated whenever the stream operators change): a key observed
-  // past [[StreamRetryMult]] x its ledger floor is above the legitimate
-  // swing band and below nothing but disturbance, so it is re-run as a
-  // min-of-2 pair and published as the min-of-4, exactly like the band
-  // arm. A genuine regression also inflates the retry pair and stays
-  // visible; a 2-5x session swing never trips the threshold.
-
-  val StreamFloorLedgerFile = "stream_floor_ledger.json"
-  /** Retry threshold multiple over the ledger floor: above the
-    * documented legitimate 2-5x per-trigger session swing, far below
-    * the observed disturbance class (q116 5.3x on the r13 board). */
-  val StreamRetryMult = 5.0
   /** Cap on stream-key retries per session (each retry pair replays the
     * query's full micro-batch harness — costlier than a batch key). */
   val StreamRetryMax = 8
 
-  def loadStreamFloors(path: String = StreamFloorLedgerFile): Map[String, Double] =
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = om.readTree(new java.io.File(path)).get("queries")
-      scala.jdk.CollectionConverters.IteratorHasAsScala(node.fieldNames())
-        .asScala.map(k => k -> node.get(k).get("seconds").asDouble()).toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-  /** Stream-class keys whose observed min sits past [[StreamRetryMult]]x
-    * their committed quiet floor — most inflated first, capped at
-    * [[StreamRetryMax]]. Keys without a ledger entry never retry (no
-    * quiet evidence to heal toward). Pure — BenchLineSpec replays
-    * recorded boards through it. */
-  def streamRetryKeys(minTimes: Map[String, Double],
-      floors: Map[String, Double]): Seq[String] =
-    minTimes.toSeq.collect {
-      case (k, v) if isStreamClass(k) && v > 0 &&
-          floors.get(k).exists(f => f > 0 && v > StreamRetryMult * f) =>
-        (k, v / floors(k))
-    }.sortBy { case (k, infl) => (-infl, k) }
-      .take(StreamRetryMax).map(_._1)
-
-  /** Keys the self-heal pass should re-run: every quiet-band trip plus
-    * every tripped sentinel (both non-stream by construction), most
-    * inflated relative to its band first, capped at [[BenchRetryMax]].
-    * Pure — BenchLineSpec replays recorded boards through it. */
+  /** Keys the retry pass re-runs: the tripped batch keys (capped at
+    * [[BenchRetryMax]]), then the tripped stream keys (capped at
+    * [[StreamRetryMax]]), each most inflated first. Pure — BenchLineSpec
+    * replays every recorded board through it. */
   def retryKeys(minTimes: Map[String, Double],
       bands: Map[String, Double]): Seq[String] = {
-    val allBands = bands ++ SentinelBands // sentinel bands are tighter
-    val tripped = (quietBandTrips(minTimes, bands) ++
-      sentinelTrips(minTimes)).distinct
-    tripped.sortBy { k =>
-      val inflation = (for {
-        t <- minTimes.get(k); b <- allBands.get(k)
-      } yield t / b).getOrElse(1.0)
-      (-inflation, k)
-    }.take(BenchRetryMax)
+    val (stream, batch) = trippedKeys(minTimes, bands).partition(isStreamClass)
+    batch.take(BenchRetryMax) ++ stream.take(StreamRetryMax)
   }
 
   /** Fold the retry measurement into the published times: min of the
-    * original pair and the retry (itself a min-of-2 pair since r13) for
-    * retried keys where both succeeded; a failed (-1) original stays -1
-    * and a failed retry changes nothing. Pure. */
+    * original pair and the retry (itself a min-of-2 pair) for retried
+    * keys where both succeeded; a failed (-1) original stays -1 and a
+    * failed retry changes nothing. Pure. */
   def heal(results: Seq[(String, Double)],
       retries: Map[String, Double]): Seq[(String, Double)] =
     results.map { case (n, v) =>
@@ -257,26 +170,21 @@ object Bench {
 
   /** Retry-window sentinels: cheap, stable keys re-run AFTER the retry
     * pass to tell whether the heal window itself was hot. The r12 board
-    * proved min-of-3 alone cannot handle a SUSTAINED disturbance — the
-    * disturbance moved INTO the retry window (q54's retry read 105.3 s
-    * vs its 1.14 s re-time) so the healed board stayed red and the line
-    * under-reported the engine ~2x. These three span different source
-    * files (a genuine single-operator regression cannot trip two) and
-    * cost <1 s total on a quiet host. */
+    * proved min-of-3 alone cannot handle a SUSTAINED disturbance — it
+    * moved INTO the retry window (q54's retry read 105.3 s vs its 1.14 s
+    * re-time). These three span different source files (a genuine
+    * single-operator regression cannot trip two) and cost <1 s total on
+    * a quiet host. */
   val RetrySentinels: Seq[String] =
     Seq("q03_filter_project", "q42_stratified_mix", "q200_weighted_sample")
 
   /** True when the retry window itself was disturbed: >=2 retry
-    * sentinels above their pinned session-health bands. A sentinel
-    * re-run that FAILED (-1) counts as hot — a disturbance severe
-    * enough to kill the measurement must not exonerate the window
-    * (the Doctor --retime rule from ADVICE r12, applied here). Pure. */
-  def retryWindowHot(times: Map[String, Double]): Boolean = {
-    val bands = SentinelBands.toMap
+    * sentinels tripped or FAILED (-1) — a disturbance severe enough to
+    * kill the measurement must not exonerate the window. Pure. */
+  def retryWindowHot(times: Map[String, Double],
+      bands: Map[String, Double]): Boolean =
     RetrySentinels.count(k =>
-      times.get(k).exists(t =>
-        t < 0 || bands.get(k).exists(t > _))) >= 2
-  }
+      times.get(k).exists(t => t < 0 || trips(k, t, bands))) >= 2
 
   /** Defensible engine number for a board that never went quiet:
     * per-key min(observed, quiet-band) summed over every succeeded key
@@ -409,10 +317,8 @@ object Bench {
       // Structured Streaming pipeline throughput.
       val tIngest = Replay.run(spark, "bench_events") { r =>
         import org.apache.spark.sql.functions._
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val table = s"$sfDir/events.parquet"
-        val agg = Tables.normalizeTs(
-            r.linked(table, spark.read.parquet(table).schema))
+        val agg = Tables.normalizeTs(r.linked(s"$sfDir/events.parquet",
+            Tables.rawEvents(spark, sfDir).schema))
           .withWatermark("ts", "1 second")
           .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("event_type"))
           .agg(sum("value").as("sum_value"), max("value").as("max_value"),
@@ -429,8 +335,8 @@ object Bench {
 
   /** One timed key: build SparkEntry.queries(key) and write it to the
     * noop sink (nothing is pruned away, unlike a count). Seconds, or -1
-    * when the key fails. Bench, Doctor --retime and the QProbe /
-    * AdmissionSweep tools all time keys through this. */
+    * when the key fails. Bench, Doctor --retime and QProbe all time keys
+    * through this. */
   def materialize(spark: SparkSession, sfDir: String, key: String): Double = {
     val t0 = System.nanoTime()
     try SparkEntry.queries(key)(spark, sfDir)
@@ -441,93 +347,76 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** JVM/codegen warm-up plus the one-time layout build for the
+    * bucketed-join query, neither measured: bucketed tables are written
+    * once and amortized over every subsequent join — the timed q35 is
+    * the exchange-free join itself. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    materialize(spark, sfDir, "q03_filter_project")
+    graft.operators.Bucketing.ensureBucketedTables(spark, sfDir)
+  }
+
+  /** Two back-to-back runs of one key, then drop its cached
+    * intermediates. The second run reuses JIT-compiled code, the OS page
+    * cache and the first run's cache() — the steady state a long-lived
+    * session sees. Clearing after the pair bounds session memory to ONE
+    * query's working set instead of pinning every corpus for the whole
+    * surface. */
+  def runPair(spark: SparkSession, sfDir: String, key: String): (Double, Double) = {
+    val t1 = materialize(spark, sfDir, key); val t2 = materialize(spark, sfDir, key)
+    spark.sharedState.cacheManager.clearCache()
+    (t1, t2)
+  }
+
+  /** Min of a pair, or -1 when either run failed: a half-failed query
+    * must be visible, not silently replaced by its surviving (possibly
+    * cold) run's time. */
+  def pairMin(p: (Double, Double)): Double =
+    if (p._1 < 0 || p._2 < 0) -1.0 else math.min(p._1, p._2)
+
+  /** The retry pass: each key re-run as its own warm min-of-2 pair. A
+    * single run would behave like a cold run-1 for cache-reliant
+    * operators (the cache was cleared after the timed pair) and
+    * under-heal them. Bench and Doctor --retime both heal through it. */
+  def retryPass(spark: SparkSession, sfDir: String,
+      keys: Seq[String]): Map[String, Double] =
+    keys.map(k => k -> pairMin(runPair(spark, sfDir, k))).toMap
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cores
     val spark = GraftSession.local(cpus)
-    def materialize(name: String): Double = Bench.materialize(spark, sfDir, name)
-
-    // JVM/codegen warmup (not measured)
-    materialize("q03_filter_project")
-    // One-time layout build for the bucketed-join query (not measured):
-    // bucketed tables are written once and amortized over every
-    // subsequent join — the timed q35 is the exchange-free join itself.
-    graft.operators.Bucketing.ensureBucketedTables(spark, sfDir)
+    warmUp(spark, sfDir)
 
     // q25 is the streaming path — measured separately as rows/s below.
-    // min of 2 runs per query: the second run reuses JIT-compiled code
-    // and OS page cache, which is the steady-state a long-lived cluster
-    // session sees; min also suppresses one-off GC/scheduler noise.
-    val names = SparkEntry.queries.keys
-      .filterNot(_ == "q25_stream_batch_parity").toSeq.sorted
-    // If either run fails, report -1: a half-failed query must be visible
-    // in the JSON, not silently replaced by its surviving (possibly cold)
-    // run's time.
-    //
-    // Cache hygiene: the dedup/ANN operators cache() their corpus-derived
-    // intermediates for intra-query reuse. Dropping them after each
-    // query's runs bounds session memory to ONE query's working set
-    // (instead of pinning every query's corpus for the whole 40-query
-    // batch) — the second timed run still sees the first run's cache, so
-    // per-query numbers keep their warm-run semantics.
     // Both runs' raw times are kept and reported (the "spread" JSON key):
     // driver-coordinated / foreachBatch / iterative queries swing 2-5x
     // across sessions (documented in BASELINE.md), and the spread is the
     // only way to tell a real regression from that noise in one report.
-    val runs = names.map { n =>
-      val t1 = materialize(n); val t2 = materialize(n)
-      spark.sharedState.cacheManager.clearCache()
-      n -> (t1, t2)
-    }
-    val results = runs.map { case (n, (t1, t2)) =>
-      n -> (if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2))
-    }
+    val names = SparkEntry.queries.keys
+      .filterNot(_ == "q25_stream_batch_parity").toSeq.sorted
+    val runs = names.map(n => n -> runPair(spark, sfDir, n))
+    val results = runs.map { case (n, p) => n -> pairMin(p) }
 
-    // Self-heal pass (see retryKeys/heal): re-run the canary-named keys
-    // with the same shuffle-partition config as the timed runs. Each
-    // retry is its own min-of-2 pair — the cache was just cleared, so a
-    // single run would behave like a cold run-1 for cache-reliant
-    // operators and under-heal them (ADVICE r12); the second run sees
-    // the first's cached intermediates, matching the published pairs'
-    // warm semantics (JIT/page cache are already hot from the timed
-    // runs). The band arm only exists at the bands' own SF — the
-    // committed file is sf0.1 evidence — but tripped sentinels heal at
-    // any SF.
+    // Self-heal: one retry pass over the tripped keys, with the same
+    // session config as the timed runs. The bands are sf0.1 evidence, so
+    // off that SF nothing trips and nothing retries.
     val bands =
       if (sfDir.endsWith("sf0.1")) loadQuietBands()
       else Map.empty[String, Double]
     val toRetry = retryKeys(results.toMap, bands)
-    def retryPass(keys: Seq[String]): Map[String, Double] = keys.map { n =>
-      val t1 = materialize(n); val t2 = materialize(n)
-      spark.sharedState.cacheManager.clearCache()
-      n -> (if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2))
-    }.toMap
-    val retryTimes = retryPass(toRetry)
-    val bandHealed = heal(results, retryTimes)
+    val retryTimes = retryPass(spark, sfDir, toRetry)
+    val healed = heal(results, retryTimes)
 
-    // Stream-class self-heal arm (see streamRetryKeys): the band arm
-    // never touches stream keys, so a disturbed one (q116 at 31 s on
-    // the r13 board) needs its own pass keyed to the committed floors.
-    // The ledger is sf0.1 evidence, like the quiet bands.
-    val streamFloors =
-      if (sfDir.endsWith("sf0.1")) loadStreamFloors()
-      else Map.empty[String, Double]
-    val streamToRetry = streamRetryKeys(bandHealed.toMap, streamFloors)
-    val streamRetryTimes = retryPass(streamToRetry)
-    val healed = heal(bandHealed, streamRetryTimes)
-    val allRetried = toRetry ++ streamToRetry
-    val allRetryTimes = retryTimes ++ streamRetryTimes
-
-    // Retry-window bracket: when a heal pass ran, re-run the cheap
+    // Retry-window bracket: when a retry pass ran, re-run the cheap
     // retry sentinels right after it. If they are hot too, the
     // disturbance is SUSTAINED — it followed the session into the heal
-    // window (the r12 board's failure mode: q54's retry read 105.3 s
-    // vs 1.14 s re-timed) — and even min-of-4 values are suspect.
+    // window — and even min-of-4 values are suspect.
     val retrySentinelTimes =
-      if (allRetried.isEmpty) Map.empty[String, Double]
-      else RetrySentinels.map(n => n -> materialize(n)).toMap
+      if (toRetry.isEmpty) Map.empty[String, Double]
+      else RetrySentinels.map(n => n -> materialize(spark, sfDir, n)).toMap
     val hostDisturbed = retrySentinelTimes.nonEmpty &&
-      retryWindowHot(retrySentinelTimes)
+      retryWindowHot(retrySentinelTimes, bands)
 
     val (tParity, tIngest, streamRowsPerSec) = streamPaths(spark, sfDir)
 
@@ -538,28 +427,25 @@ object Bench {
       .map { case (k, (t1, t2)) => "\"" + k + f"\":[$t1%.3f,$t2%.3f]" }
       .mkString("{", ",", "}")
 
-    // Session-health canary (see SentinelBands / medianRunRatio /
-    // quietBandTrips), computed on the HEALED times: a transient
+    // The verdict is computed on the HEALED times: a transient
     // disturbance whose keys re-measured quiet reads green (with the
     // retried list on the driver line); a sustained one also inflated
     // the retry runs and stays red. The spread line keeps BOTH views —
     // the pre-heal trips (what the two timed runs observed) and the
     // post-heal residue — plus the raw retry times.
-    val ratio = medianRunRatio(runs)
     val bandTripsObserved = quietBandTrips(results.toMap, bands)
     val bandTrips = quietBandTrips(healed.toMap, bands)
-    val isNoisy = noisy(healed.toMap, ratio, bandTrips)
+    val isNoisy = noisy(healed.toMap, bands)
 
-    val retryJson = allRetryTimes.toSeq.sorted
+    def timesJson(m: Map[String, Double]): String = m.toSeq.sorted
       .map { case (k, t) => "\"" + k + f"\":$t%.3f" }
       .mkString("{", ",", "}")
-    val retrySentinelJson = retrySentinelTimes.toSeq.sorted
-      .map { case (k, t) => "\"" + k + f"\":$t%.3f" }
-      .mkString("{", ",", "}")
+    def keysJson(ks: Seq[String]): String =
+      ks.map("\"" + _ + "\"").mkString("[", ",", "]")
     // session-level JVM counters (GC seconds, heap MB, metaspace MB)
     val (gcSec, heapMb, metaMb) = jvmCounters()
     val spreadLine =
-      f"""{"metric":"spread","cpus":$cpus,"sf":"${sfDir.split('/').last}","noisy":$isNoisy,"host_disturbed":$hostDisturbed,"ratio":$ratio%.3f,"gc_sec":$gcSec%.1f,"heap_mb":$heapMb%.0f,"meta_mb":$metaMb%.0f,"sentinel_trips":${sentinelTrips(healed.toMap).map("\"" + _ + "\"").mkString("[", ",", "]")},"band_trips":${bandTripsObserved.map("\"" + _ + "\"").mkString("[", ",", "]")},"band_trips_healed":${bandTrips.map("\"" + _ + "\"").mkString("[", ",", "]")},"retry":$retryJson,"retry_sentinels":$retrySentinelJson,"stream":{"q25_stream_parity":$tParity%.3f,"stream_ingest":$tIngest%.3f},"spread":$spread}"""
+      f"""{"metric":"spread","cpus":$cpus,"sf":"${sfDir.split('/').last}","noisy":$isNoisy,"host_disturbed":$hostDisturbed,"gc_sec":$gcSec%.1f,"heap_mb":$heapMb%.0f,"meta_mb":$metaMb%.0f,"band_trips":${keysJson(bandTripsObserved)},"band_trips_healed":${keysJson(bandTrips)},"retry":${timesJson(retryTimes)},"retry_sentinels":${timesJson(retrySentinelTimes)},"stream":{"q25_stream_parity":$tParity%.3f,"stream_ingest":$tIngest%.3f},"spread":$spread}"""
     println(spreadLine)
     // Persist the full spread to a stable repo path every run: the
     // driver captures only the last 2000 stdout chars, so without this
@@ -572,15 +458,12 @@ object Bench {
       (spreadLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
     val total = healed.map(_._2).filter(_ > 0).sum + tParity + tIngest
-    // A still-red board at the bands' own SF carries the defensible
+    // A flagged board (noisy OR host_disturbed) carries the defensible
     // engine number alongside its raw total (see [[bandTotal]]) — the
     // stream-path pair is capped by its own band entries so a disturbed
-    // streaming measurement cannot leak into the capped sum.
-    // Emitted whenever the line flags trouble (noisy OR host_disturbed):
-    // the contract is "when flagged, read band_total, not value", so the
-    // field must exist in every flagged line. Off the bands' own SF the
-    // map is empty and bandTotal degrades to the observed sum — no quiet
-    // evidence exists to cap with, but the field still rides.
+    // streaming measurement cannot leak into the capped sum. The
+    // contract is "when flagged, read band_total, not value", so the
+    // field rides every flagged line.
     val bandTotalSec =
       if (isNoisy || hostDisturbed)
         Some(bandTotal(healed.toMap ++ Map(
@@ -588,7 +471,7 @@ object Bench {
       else None
     println(driverLine(total,
       healed ++ Seq("q25_stream_parity" -> tParity, "stream_ingest" -> tIngest),
-      sfDir, streamRowsPerSec, isNoisy, retried = allRetried,
+      sfDir, streamRowsPerSec, isNoisy, retried = toRetry,
       bandTotalSec = bandTotalSec, hostDisturbed = hostDisturbed))
     spark.stop()
   }

@@ -53,10 +53,18 @@ object Tables {
     }
   }
 
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The events table with `ts` in its on-disk type — what the stream
+    * replays lay out, so replay files and the real table stay
+    * schema-identical. Sets the legacy `nanosAsLong` conf first: a
+    * nanos generation is rejected without it, so every raw reader must
+    * go through here or break when it runs first in a fresh session. */
+  def rawEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(load(spark, sfDir, "events"))
+    load(spark, sfDir, "events")
   }
+
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    normalizeTs(rawEvents(spark, sfDir))
   def documents(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
   def lineitem(spark: SparkSession, sfDir: String): DataFrame   = load(spark, sfDir, "lineitem")

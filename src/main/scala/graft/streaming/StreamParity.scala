@@ -46,8 +46,7 @@ object StreamParity {
   def q25StreamBatchParity(spark: SparkSession, sfDir: String): DataFrame = {
     // Raw schema: ts keeps its on-disk type so the sentinel file and the
     // real table are schema-identical for the file source.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sfDir)
     val sentinel = Map("ts" -> sentinelTsPlus1h(raw),
       "event_type" -> "zzz_sentinel", "value" -> 0.0)
 
@@ -296,8 +295,7 @@ object StreamParity {
     * once, on session close, exactly the reference's
     * trigger-on-watermark semantics. */
   def q71StreamSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sfDir)
     // Sentinel: one event 1 h past the last real one, for a user id that
     // cannot occur (-1) — closes all open sessions once its batch commits.
     val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
@@ -880,11 +878,7 @@ object StreamParity {
     * batch-to-batch. */
   def q81StreamAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Relational
-    // raw schema read: nanos generations reject without the legacy conf
-    // (see Tables.scala:26) — every events reader must set it itself or
-    // break when it runs FIRST in a fresh session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sfDir)
     val snapSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("ws",
         org.apache.spark.sql.types.LongType),
@@ -995,10 +989,7 @@ object StreamParity {
 
   private def q8xSideDirs(spark: SparkSession, sfDir: String): (String, String) =
     q8xDirs.computeIfAbsent(sfDir, { _ =>
-      // legacy conf before the raw read: this loader must survive running
-      // FIRST in a fresh session on a nanos testdata generation
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val raw = graft.Tables.rawEvents(spark, sfDir)
       val sentinelTs = sentinelTsPlus1h(raw)
       def sideDir(etype: String): String = {
         val d = java.nio.file.Files.createTempDirectory(s"q8x_$etype")
@@ -1045,7 +1036,7 @@ object StreamParity {
       .withWatermark(s"${prefix}_ts", "1 second")
 
   def q82StreamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sfDir)
     val (purchDir, clickDir) = q8xSideDirs(spark, sfDir)
 
     val joined = q8xSide(spark, raw.schema, purchDir, "p")
@@ -1093,7 +1084,7 @@ object StreamParity {
     * Held to a direct DuckDB LEFT JOIN oracle. Same state bounds as
     * q82; the null-extended tail costs one sentinel row of state. */
   def q83StreamLeftJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sfDir)
     // Shared q8x replay pair. BOTH sides carry the sentinel: the global
     // watermark is the MIN across sources, so without a purchase-side
     // sentinel the last real purchases sit below the global watermark
@@ -1250,8 +1241,7 @@ object StreamParity {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sfDir)
     val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
       "event_id" -> -1L, "event_type" -> "zzz_sentinel", "value" -> 0.0)
 
@@ -1400,8 +1390,7 @@ object StreamParity {
     * State cost: open-window distinct pairs, watermark-bounded.
     */
   def q116StreamSlidingDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sfDir)
     val realMaxSec = graft.Tables.events(spark, sfDir)
       .agg(max(unix_timestamp(col("ts")))).head().getLong(0)
     val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
@@ -1854,8 +1843,7 @@ object StreamParity {
   def q141StreamTimerSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sfDir)
     val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
       "value" -> 0.0)
 
@@ -1976,9 +1964,7 @@ object StreamParity {
     * in DIFFERENT triggers — the min/max merge is genuinely exercised,
     * not incidentally trivial. */
   def q245StreamKmSurvival(spark: SparkSession, sfDir: String): DataFrame = {
-    // legacy conf before the raw read (nanos-generation safety; see q81)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sfDir)
     Replay.run(spark, "q245_stream_km") { r =>
       val ledger = new StampedLedger(r.tempDir("ledger"))
       r.await(graft.Tables.normalizeTs(r.files(raw, ByRange("ts"), 4))

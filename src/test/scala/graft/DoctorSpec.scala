@@ -3,16 +3,30 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Doctor adjudication must reproduce, from the committed artifacts
-  * alone, the verdicts three rounds of judges reached by hand: the r10
-  * and r11 driver boards read DISTURBED with the known keys named, and
-  * the quiet closing runs read QUIET. */
+  * alone, the verdicts three rounds of judges reached by hand — the r10,
+  * r11 and r12 driver boards read DISTURBED with the known keys named,
+  * the quiet closing runs read QUIET — and must print Bench's own verdict
+  * and tripped keys for each of them. */
 class DoctorSpec extends AnyFunSuite {
 
   private val bands = Bench.loadQuietBands()
 
-  test("r11 board adjudicates DISTURBED with q124 as the worst key") {
-    val spread = Doctor.loadSpread("bench_board_r11.json")
+  /** Doctor's session verdict and TRIPPED rows equal Bench's verdict and
+    * tripped keys on the same file. */
+  private def agreesWithBench(path: String): (Seq[Doctor.Row], String) = {
+    val spread = Doctor.loadSpread(path)
     val rows = Doctor.adjudicate(spread, bands)
+    val mins = Doctor.minTimes(spread)
+    val verdict = Doctor.sessionVerdict(mins, bands)
+    assert(verdict.startsWith("DISTURBED") == Bench.noisy(mins, bands),
+      s"$path: $verdict")
+    assert(rows.filter(_.verdict == "TRIPPED").map(_.key) ==
+      Bench.trippedKeys(mins, bands), s"$path tripped keys")
+    (rows, verdict)
+  }
+
+  test("r11 board adjudicates DISTURBED with q124 as the worst key") {
+    val (rows, verdict) = agreesWithBench("bench_board_r11.json")
     val trips = rows.filter(_.verdict == "TRIPPED")
     assert(trips.size >= Bench.QuietBandMinKeys, s"got ${trips.size}")
     // the table is most-inflated-first and the r11 disturbance's two
@@ -22,17 +36,17 @@ class DoctorSpec extends AnyFunSuite {
       Set("q124_embedding_cov", "q201_poisson_boot"),
       rows.take(3).toString)
     assert(rows.take(2).forall(_.inflation.exists(_ > 20)))
-    val verdict = Doctor.sessionVerdict(rows, Bench.medianRunRatio(spread))
+    // stream keys past 5x their band are named, as Bench re-times them
+    for (k <- Seq("q80_stream_cdc_merge", "q81_stream_anomaly", "q212_stream_ams"))
+      assert(trips.exists(_.key == k), s"$k expected among the r11 trips")
     assert(verdict.startsWith("DISTURBED"), verdict)
     assert(verdict.contains("band trips"))
   }
 
   test("r10 board adjudicates DISTURBED via the band arm") {
-    val spread = Doctor.loadSpread("bench_board_r10.json")
-    val rows = Doctor.adjudicate(spread, bands)
+    val (rows, verdict) = agreesWithBench("bench_board_r10.json")
     assert(rows.count(_.verdict == "TRIPPED") >= Bench.QuietBandMinKeys)
-    assert(Doctor.sessionVerdict(rows,
-      Bench.medianRunRatio(spread)).startsWith("DISTURBED"))
+    assert(verdict.startsWith("DISTURBED"), verdict)
   }
 
   test("r12 board adjudicates DISTURBED (third consecutive driver-host hit)") {
@@ -40,37 +54,49 @@ class DoctorSpec extends AnyFunSuite {
     // host artifact — Doctor --retime healed 33/35 trips this session
     // (q147 61.4 s board -> 2.47 s; q54's own retry 105.3 s -> 1.14 s).
     // Pin the adjudication so no future judge re-derives it by hand.
-    val spread = Doctor.loadSpread("bench_board_r12.json")
-    val rows = Doctor.adjudicate(spread, bands)
+    val (rows, verdict) = agreesWithBench("bench_board_r12.json")
     val trips = rows.filter(_.verdict == "TRIPPED")
     assert(trips.size >= Bench.QuietBandMinKeys, s"got ${trips.size}")
     // the disturbance class: roaming spikes across unrelated files —
     // q147 (TextAnalysis), q190/q191 (Curation), q54 (Dedup) all inflated
-    for (k <- Seq("q147_vocab_growth", "q190_contam_spans", "q54_substring_runs"))
+    for (k <- Seq("q147_vocab_growth", "q190_contam_spans", "q54_substring_runs",
+        "q106_stream_observe", "q141_stream_timer_sessions"))
       assert(trips.exists(_.key == k), s"$k expected among the r12 trips")
     // and the worst key leads the most-inflated-first table
     assert(rows.head.key == "q147_vocab_growth", rows.head.toString)
-    assert(Doctor.sessionVerdict(rows,
-      Bench.medianRunRatio(spread)).startsWith("DISTURBED"))
+    assert(verdict.startsWith("DISTURBED"), verdict)
   }
 
   test("quiet closing runs adjudicate QUIET") {
     for (p <- Seq("bench_local_r10_runA.json", "bench_local_r11_runE.json")) {
-      val spread = Doctor.loadSpread(p)
-      val rows = Doctor.adjudicate(spread, bands)
-      val verdict = Doctor.sessionVerdict(rows, Bench.medianRunRatio(spread))
+      val (_, verdict) = agreesWithBench(p)
       assert(verdict.startsWith("QUIET"), s"$p: $verdict")
     }
   }
 
   test("stream keys and failures are never TRIPPED; band-less keys are named") {
+    // The batch rule (3x a band) never trips a stream key, and a failed
+    // key reads FAILED however small its band; a key with no band is named.
     val rows = Doctor.adjudicate(Seq(
-      "q99_stream_thing" -> (9.0, 9.0),   // would be 30x a 0.3 band
+      "q96_stream_swing" -> (4.0, 4.0),   // 4x a 1.0 band: legitimate swing
       "q98_fails" -> (-1.0, 2.0),
       "q97_new_query" -> (1.0, 1.0)),
-      Map("q99_stream_thing" -> 0.3))
-    assert(rows.find(_.key == "q99_stream_thing").get.verdict == "stream")
-    assert(rows.find(_.key == "q98_fails").get.verdict == "FAILED")
-    assert(rows.find(_.key == "q97_new_query").get.verdict == "no-band")
+      Map("q96_stream_swing" -> 1.0, "q98_fails" -> 0.1))
+      .map(r => r.key -> r.verdict).toMap
+    assert(rows("q96_stream_swing") == "stream")
+    assert(rows("q98_fails") == "FAILED")
+    assert(rows("q97_new_query") == "no-band")
+  }
+
+  test("stream keys trip only past 5x their band, batch keys past 3x") {
+    val rows = Doctor.adjudicate(Seq(
+      "q99_stream_thing" -> (9.0, 9.0),   // 30x a 0.3 band
+      "q96_stream_swing" -> (4.0, 4.0),   // 4x a 1.0 band
+      "q95_batch" -> (4.0, 4.0)),         // 4x a 1.0 band
+      Map("q99_stream_thing" -> 0.3, "q96_stream_swing" -> 1.0,
+        "q95_batch" -> 1.0)).map(r => r.key -> r.verdict).toMap
+    assert(rows("q99_stream_thing") == "TRIPPED")
+    assert(rows("q96_stream_swing") == "stream")
+    assert(rows("q95_batch") == "TRIPPED")
   }
 }

@@ -69,6 +69,17 @@ class EntrySpec extends SparkSpec {
         offenders.mkString(", "))
   }
 
+  test("Tables alone reads the raw events table and sets the nanos conf") {
+    // a nanos testdata generation is rejected unless the legacy conf is
+    // set before the read; Tables.rawEvents does both, so no reader can
+    // forget the conf when it runs first in a fresh session
+    val offenders = scalaFilesMatching(Seq("src/main"), Set("Tables.scala"),
+      raw"nanosAsLong|read\.parquet\([^)]*events\.parquet".r)
+    assert(offenders.isEmpty,
+      s"read events through Tables.rawEvents or Tables.events instead of in: " +
+        offenders.mkString(", "))
+  }
+
   test("only the fixed-point sum's file names the decimal(25,6) sum type") {
     // every DECIMAL(25,6) sum goes through graft.functions.FixedPointSum;
     // the oracle SQL strings spell the type in upper case and are exempt

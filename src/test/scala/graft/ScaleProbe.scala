@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBusDrain
 
 import graft.operators.{Clustering, Curation, Dedup, Relational, Similarity}
 
@@ -194,7 +195,7 @@ object ScaleProbe {
         fn(spark, big).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      Thread.sleep(500) // stage-completed events drain asynchronously
+      ListenerBusDrain(spark) // stage-completed events post asynchronously
       println(f"[codec] $codec $name%-22s min ${times.min}%7.2f s " +
         f"(runs ${times.map(t => f"$t%.2f").mkString("/")})  " +
         f"cum_shuffle_write_mb ${shuffleBytes.get() / 1e6}%.0f")

@@ -69,8 +69,7 @@ class ParitySpec extends SparkSpec {
   test("multi-batch time-ordered file replay equals batch q01") {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sf/events.parquet")
+    val raw = graft.Tables.rawEvents(spark, sf)
     val schema = raw.schema
     // Range-split on epoch micros so the split works for every ts
     // storage type the testdata has used (nanos Long / NTZ / TIMESTAMP).
