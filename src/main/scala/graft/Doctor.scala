@@ -29,7 +29,7 @@ object Doctor {
   def loadSpread(path: String): Seq[(String, (Double, Double))] = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(new java.io.File(path)).get("spread")
-    require(node != null, s"$path has no \"spread\" field — not a spread/board file")
+    require(node != null, s"$path has no \"spread\" field: not a spread/board file")
     scala.jdk.CollectionConverters.IteratorHasAsScala(node.fieldNames())
       .asScala.map { k =>
         val a = node.get(k)
@@ -59,28 +59,32 @@ object Doctor {
   /** Bench's session verdict, in words. */
   def sessionVerdict(minTimes: Map[String, Double],
       bands: Map[String, Double]): String =
-    if (!Bench.noisy(minTimes, bands)) "QUIET — treat per-key times as real"
+    if (!Bench.noisy(minTimes, bands)) "QUIET: treat per-key times as real"
     else s"DISTURBED (${Bench.quietBandTrips(minTimes, bands).size} band " +
-      "trips) — adjudicate tripped keys from a quiet re-timing before " +
+      "trips): adjudicate tripped keys from a quiet re-timing before " +
       "believing any >2x reading"
+
+  /** The printed table, a blank line, the counts and the session verdict. */
+  def report(spread: Seq[(String, (Double, Double))],
+      bands: Map[String, Double]): Seq[String] = {
+    val rows = adjudicate(spread, bands)
+    val table = rows.map { r =>
+      val bandS = r.band.map(b => f"$b%8.2f").getOrElse("       -")
+      val inflS = r.inflation.map(x => f"$x%7.1f").getOrElse("      -")
+      f"${r.key}%-34s ${r.min}%8.2f $bandS $inflS ${r.verdict}"
+    }
+    (f"${"key"}%-34s ${"min"}%8s ${"band"}%8s ${"x"}%7s verdict" +: table) ++
+      Seq("", s"keys=${rows.size} tripped=${rows.count(_.verdict == "TRIPPED")}",
+        s"session: ${sessionVerdict(minTimes(spread), bands)}")
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Doctor <spread.json> [--retime <sfDir>]")
     val spread = loadSpread(args(0))
     val bands = Bench.loadQuietBands()
-    require(bands.nonEmpty, "bench_quiet_bands.json missing — run from the repo root")
-    val rows = adjudicate(spread, bands)
+    require(bands.nonEmpty, "bench_quiet_bands.json missing: run from the repo root")
     val mins = minTimes(spread)
-
-    println(f"${"key"}%-34s ${"min"}%8s ${"band"}%8s ${"x"}%7s verdict")
-    rows.foreach { r =>
-      val bandS = r.band.map(b => f"$b%8.2f").getOrElse("       -")
-      val inflS = r.inflation.map(x => f"$x%7.1f").getOrElse("      -")
-      println(f"${r.key}%-34s ${r.min}%8.2f $bandS $inflS ${r.verdict}")
-    }
-    println()
-    println(s"keys=${rows.size} tripped=${rows.count(_.verdict == "TRIPPED")}")
-    println(s"session: ${sessionVerdict(mins, bands)}")
+    report(spread, bands).foreach(println)
 
     if (args.length >= 3 && args(1) == "--retime") {
       val sfDir = args(2)
@@ -94,9 +98,9 @@ object Doctor {
         val t = retimed(k)
         // a failed re-timing exonerates nothing — name it, don't let
         // -1 < band read as "quiet"
-        val v = if (t < 0) "FAILED re-time — inconclusive, re-run by hand"
+        val v = if (t < 0) "FAILED re-time: inconclusive, re-run by hand"
         else if (Bench.trips(k, t, bands))
-          "STILL TRIPPED — treat as a real regression" else "quiet — board reading was disturbance"
+          "STILL TRIPPED: treat as a real regression" else "quiet: board reading was disturbance"
         println(f"$k%-34s board ${mins(k)}%8.2f  retimed $t%8.2f  $v")
       }
       println(s"healed session: ${sessionVerdict(Bench.heal(mins.toSeq, retimed).toMap, bands)}")

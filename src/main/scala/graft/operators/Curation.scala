@@ -27,7 +27,7 @@ import graft.Tables
   */
 object Curation {
 
-  private val toks = split(trim(col("text")), " +")
+  private[graft] val toks = split(trim(col("text")), " +")
 
   /** First 8 md5 hex chars -> [0, 100) bucket (q36's split bucket). */
   private def splitBucket = (conv(substring(md5(col("text")), 1, 8), 16, 10)
@@ -1888,18 +1888,23 @@ object Curation {
   // the key is rounded to 9 dp BEFORE ordering so a last-ulp ln
   // divergence cannot flip the order, and ties break on doc_id.
   // ---------------------------------------------------------------------
-  private val AesSampleK = 100
+  private[graft] val AesSampleK = 100
 
   def q200WeightedSample(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .where("n_chars > 0") // guard BEFORE the projection: ANSI double
-      .selectExpr(          // division by zero throws, never returns inf
+    aesSample(aesKeys(Tables.documents(spark, sfDir)))
+
+  /** The A-ES keyed rows (doc_id, w, es_key) of the documents `docs`. */
+  private[graft] def aesKeys(docs: DataFrame): DataFrame =
+    docs.where("n_chars > 0") // guard BEFORE the projection: ANSI double
+      .selectExpr(            // division by zero throws, never returns inf
         "doc_id",
         "n_chars AS w",
         "ROUND(ln((CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 12), 16, 10) AS DOUBLE) + 1.0D)" +
           " / 281474976710657.0D) / n_chars, 9) AS es_key")
-      .orderBy(col("es_key").desc, col("doc_id"))
-      .limit(AesSampleK)
+
+  /** The sample: the K largest keys of `keyed`, ties by doc_id. */
+  private[graft] def aesSample(keyed: DataFrame): DataFrame =
+    keyed.orderBy(col("es_key").desc, col("doc_id")).limit(AesSampleK)
 
   val q200Sql: String =
     s"""SELECT doc_id, n_chars AS w,

@@ -974,21 +974,32 @@ object Dedup {
   // ---------------------------------------------------------------------
   private[graft] val BlockB = 8 // tokens per dedup block
 
-  def q68BlockDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    // One row per (doc, block): bidx, block text, 16-byte block hash.
-    val blocks = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), split(trim(col("text")), " +").as("toks"))
+  def q68BlockDedup(spark: SparkSession, sfDir: String): DataFrame =
+    firstWinsBlocks(docBlocks(Tables.documents(spark, sfDir)), None)
+      .orderBy("doc_id")
+
+  /** One row per (doc, block) of `docs`: bidx, block text, 16-byte block
+    * hash `bh`. */
+  private[graft] def docBlocks(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(trim(col("text")), " +").as("toks"))
       .select(col("doc_id"), posexplode(expr(
         s"""transform(sequence(0, cast(ceil(size(toks) / $BlockB.0) as int) - 1),
            |  b -> array_join(slice(toks, b * $BlockB + 1, $BlockB), ' '))"""
           .stripMargin)).as(Seq("bidx", "block")))
       .withColumn("bh", unhex(md5(col("block"))))
-    // First occurrence wins, corpus-wide.
+
+  /** q68's per-doc verdict (doc_id, n_blocks, n_kept, kept_fp) over
+    * `blocks`: a block is kept at its first occurrence among them, and
+    * not at all when its hash is in `seen` (q227's index of earlier
+    * batches). */
+  private[graft] def firstWinsBlocks(blocks: DataFrame,
+      seen: Option[DataFrame]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("bh"))
       .orderBy(col("doc_id"), col("bidx"))
-    val kept = blocks
+    val first = blocks
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
+    val kept = seen.fold(first)(first.join(_, Seq("bh"), "left_anti"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_kept"),
         md5(array_join(transform(
@@ -999,7 +1010,6 @@ object Dedup {
     nb.join(kept, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_blocks"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"), col("kept_fp"))
-      .orderBy("doc_id")
   }
 
   // ---------------------------------------------------------------------

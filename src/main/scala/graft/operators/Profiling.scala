@@ -679,22 +679,34 @@ object Profiling {
   // J-way explode runs over the KEY frame, not the row frame — sketch
   // build cost is J·|keys|, map-side-combinable into J longs.
   // ---------------------------------------------------------------------
-  private val AmsJ = 32
+  private[graft] val AmsJ = 32
 
   def q210AmsF2(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val f = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
+    val f = amsFreqs(spark.read.parquet(s"$sfDir/lineitem.parquet"))
       .cache() // feeds the exact F2 AND the J sketch lines
-    val exact = f.agg(count(lit(1)).as("n_keys"), sum(col("f")).as("n_rows"),
-      sum(expr("f * f")).as("exact_f2"))
-    val z = f.select(col("l_partkey"), col("f"),
+    amsResult(amsLines(f), f)
+  }
+
+  /** q210's key histogram (l_partkey, f) of the lineitem rows `rows`. */
+  private[graft] def amsFreqs(rows: DataFrame): DataFrame =
+    rows.groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
+
+  /** The J sketch lines (j, z) of the key histogram `f`: Z_j, linear in f. */
+  private[graft] def amsLines(f: DataFrame): DataFrame =
+    f.select(col("l_partkey"), col("f"),
         explode(expr(s"sequence(1, $AmsJ)")).as("j"))
       .select(col("j"), expr(
         "CASE WHEN CAST(conv(substring(md5(concat(CAST(j AS STRING), ':'," +
           " CAST(l_partkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2 = 0" +
           " THEN f ELSE -f END").as("sf"))
       .groupBy(col("j")).agg(sum(col("sf")).as("z"))
+
+  /** q210's output row: the median-of-means estimate over the sketch
+    * lines `z` (j, z) beside the exact F2 of the key histogram `f`. */
+  private[graft] def amsResult(z: DataFrame, f: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val exact = f.agg(count(lit(1)).as("n_keys"), sum(col("f")).as("n_rows"),
+      sum(expr("f * f")).as("exact_f2"))
     val means = z.selectExpr("(j - 1) div 8 AS grp", "z * z AS z2")
       .groupBy(col("grp")).agg(expr("sum(z2) div 8").as("m"))
     val med = means

@@ -420,28 +420,42 @@ object Relational {
   // don't hash well in a gate; the rollup pins every merged row's
   // final state).
   // ---------------------------------------------------------------------
-  def q63CdcMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = Tables.orders(spark, sfDir)
+  def q63CdcMerge(spark: SparkSession, sfDir: String): DataFrame =
+    cdcRollup(cdcLatest(cdcFeed(Tables.orders(spark, sfDir))))
+
+  /** q63's change feed over `orders`: the base at version 0, then the
+    * updates and deletes at version 1. */
+  private[graft] def cdcFeed(orders: DataFrame): DataFrame = {
+    val base = orders
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         lit(0).as("version"), lit(false).as("deleted"))
-    val updates = Tables.orders(spark, sfDir)
+    val updates = orders
       .filter(pmod(col("o_orderkey"), lit(7)) === 0)
       .select(col("o_orderkey"),
         lit("U").as("o_orderstatus"),
         (col("o_totalprice") + 10.0).as("o_totalprice"),
         lit(1).as("version"),
         (pmod(col("o_orderkey"), lit(11)) === 0).as("deleted"))
+    base.unionAll(updates)
+  }
+
+  /** Latest version per key wins. Tombstones stay (a delete is a
+    * versioned row), so a later re-insert at a higher version would win. */
+  private[graft] def cdcLatest(feed: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val merged = base.unionAll(updates)
-      .withColumn("rn", row_number().over(
+    feed.withColumn("rn", row_number().over(
         Window.partitionBy(col("o_orderkey"))
           .orderBy(col("version").desc)))
-      .filter(col("rn") === 1 && !col("deleted"))
-    merged.groupBy(col("o_orderstatus"))
+      .filter(col("rn") === 1).drop("rn")
+  }
+
+  /** The merged snapshot's live rows, rolled up per status. */
+  private[graft] def cdcRollup(latest: DataFrame): DataFrame =
+    latest.filter(!col("deleted"))
+      .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("total_price"))
       .orderBy("o_orderstatus")
-  }
 
   val q63Sql: String =
     """WITH feed AS (
@@ -506,24 +520,31 @@ object Relational {
   // aggregate then broadcasts as the right side of the zero-fill left
   // join. Hour arithmetic stays in epoch-second integers end to end.
   // ---------------------------------------------------------------------
-  private def gapFillGrid(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = Tables.events(spark, sfDir)
-      .select((floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("ws"),
-        col("event_type"), col("value"))
-      .groupBy(col("ws"), col("event_type").as("et"))
-      .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
-      .cache() // grid-sized; feeds bounds, types, and the zero-fill join
+  private def gapFillGrid(spark: SparkSession, sfDir: String): DataFrame =
+    denseGrid(hourlyCells(Tables.events(spark, sfDir),
+        count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))
+      .cache()) // grid-sized; feeds bounds, types, and the zero-fill join
+
+  /** The events `ev` aggregated by `aggs` per (hour `ws`, type `et`). */
+  private[graft] def hourlyCells(ev: DataFrame, aggs: Column*): DataFrame =
+    ev.groupBy((floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("ws"),
+        col("event_type").as("et"))
+      .agg(aggs.head, aggs.tail: _*)
+
+  /** The hourly cells `agg` over the full [min, max] hour x type grid
+    * (window_start, event_type, then each aggregate), empty cells zero. */
+  private[graft] def denseGrid(agg: DataFrame): DataFrame = {
     val bounds = agg.agg(min(col("ws")).as("lo"), max(col("ws")).as("hi"))
     val types = agg.select(col("et").as("event_type")).distinct()
     val grid = bounds
       .select(explode(sequence(col("lo"), col("hi"), lit(3600L))).as("window_start"))
       .crossJoin(broadcast(types))
+    val values = agg.schema.filterNot(f => f.name == "ws" || f.name == "et")
+      .map(f => coalesce(col(f.name), lit(0).cast(f.dataType)).as(f.name))
     grid.join(broadcast(agg),
         grid("window_start") === agg("ws") && grid("event_type") === agg("et"),
         "left")
-      .select(col("window_start"), col("event_type"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"),
-        coalesce(col("sum_value"), lit(0.0)).as("sum_value"))
+      .select(col("window_start") +: col("event_type") +: values: _*)
   }
 
   def q75GapFill(spark: SparkSession, sfDir: String): DataFrame =
@@ -571,11 +592,15 @@ object Relational {
   // ---------------------------------------------------------------------
   private[graft] val ZThresh = 2.5
 
-  def q78TimelineAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
+  def q78TimelineAnomaly(spark: SparkSession, sfDir: String): DataFrame =
+    zAnomalies(gapFillGrid(spark, sfDir)) // unsorted: the window brings its own order
+
+  /** q78's per-type z-score chain over the dense grid `cells`
+    * (window_start, event_type, cnt). */
+  private[graft] def zAnomalies(cells: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("event_type"))
-    gapFillGrid(spark, sfDir) // unsorted: the window brings its own order
-      .select(col("window_start"), col("event_type"), col("cnt"))
+    cells.select(col("window_start"), col("event_type"), col("cnt"))
       .withColumn("s1", sum(col("cnt")).over(w))
       .withColumn("s2", sum(col("cnt") * col("cnt")).over(w))
       .withColumn("n", count(lit(1)).over(w))
@@ -831,7 +856,7 @@ object Relational {
   // Gaps are integer epoch-microsecond differences (exact, so the
   // per-user sums are order-insensitive and oracle-hashable).
   // ---------------------------------------------------------------------
-  private val FunnelWindowUs = 24L * 3600 * 1000000
+  private[graft] val FunnelWindowUs = 24L * 3600 * 1000000
 
   def q92FunnelLag(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -2667,21 +2692,26 @@ object Relational {
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), expr("unix_micros(ts)").as("us"),
         col("event_type"))
-    val horizon = ev.agg(max(col("us")).as("h"))
-    val perUser = ev.groupBy(col("user_id"))
-      .agg(min(col("us")).as("first_us"),
-        min(when(col("event_type") === "purchase", col("us"))).as("conv_us"))
-    kmFromPerUser(perUser, horizon)
+    kmFromPerUser(kmPerUser(ev))
   }
 
+  /** Per user of the events `ev` (user_id, us, event_type): the first
+    * event, the first purchase (null if none) and the last event — order
+    * statistics, so they merge by min/min/max (the q245 stream fold). */
+  private[graft] def kmPerUser(ev: DataFrame): DataFrame =
+    ev.groupBy(col("user_id"))
+      .agg(min(col("us")).as("first_us"),
+        min(when(col("event_type") === "purchase", col("us"))).as("conv_us"),
+        max(col("us")).as("last_us"))
+
   /** The KM estimator tail shared by q236 (batch) and q245 (the
-    * streaming min-merge fold): `perUser` carries (user_id?, first_us,
-    * conv_us-nullable), `horizon` one row (h). Split out so the two
-    * paths are the SAME expressions — parity is structural, not
-    * re-derived. */
-  private[graft] def kmFromPerUser(perUser: DataFrame,
-      horizon: DataFrame): DataFrame = {
-    val durations = perUser.crossJoin(broadcast(horizon))
+    * streaming min-merge fold) over [[kmPerUser]]'s rows; the horizon is
+    * the last event of all. Split out so the two paths are the SAME
+    * expressions: parity is structural, not re-derived. */
+  private[graft] def kmFromPerUser(perUser: DataFrame): DataFrame = {
+    val horizon = perUser.agg(max(col("last_us")).as("h"))
+    val durations = perUser.select(col("first_us"), col("conv_us"))
+      .crossJoin(broadcast(horizon))
       .selectExpr(
         "CASE WHEN conv_us IS NOT NULL " +
           "THEN (conv_us - first_us) div 3600000000L " +

@@ -535,17 +535,26 @@ object TextAnalysis {
 
   def q61HeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val tokens = Tables.documents(spark, sfDir)
-      .select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
+    val tokens = hhTokens(Tables.documents(spark, sfDir))
     val n = tokens.count()
     val mg = udaf(new graft.functions.MisraGries(HhK), ExpressionEncoder[String]())
     val cands = tokens.agg(mg(col("tok")).as("cands"))
       .select(explode(col("cands")).as("tok"))
+    hhVerify(tokens, cands, n)
+  }
+
+  /** q61's token stream (`tok`) of the documents `docs`. */
+  private[graft] def hhTokens(docs: DataFrame): DataFrame =
+    docs.select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
+
+  /** q61's exact pass: the candidates `cands` (a superset of the heavy
+    * hitters) re-counted over `tokens`, kept past n/k. */
+  private[graft] def hhVerify(tokens: DataFrame, cands: DataFrame,
+      n: Long): DataFrame =
     tokens.join(broadcast(cands), "tok")
       .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
       .filter(col("freq") > lit(n.toDouble / HhK))
       .orderBy("tok")
-  }
 
   /** Oracle does the full exact group-by — tractable at oracle SFs;
     * equality with the sketch-then-verify path IS the superset-guarantee
@@ -2270,24 +2279,34 @@ object TextAnalysis {
   // Output pins the estimate against the exact distinct count with its
   // measured relative error — the in-query quality floor.
   // ---------------------------------------------------------------------
-  private val KmvK = 256
+  private[graft] val KmvK = 256
 
   def q203KmvDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = Tables.documents(spark, sfDir)
-      .select(split(trim(col("text")), " +").as("toks"))
+    val grams = kmvShingles(Tables.documents(spark, sfDir))
+      .cache() // one shingle dedup feeds the sketch AND the exact count
+    val kth = grams.select(kmvU).orderBy(col("u")).limit(KmvK)
+      .agg(max(col("u")).as("uk"), count(lit(1)).as("kk"))
+    kmvResult(kth, grams.agg(count(lit(1)).as("n_exact")))
+  }
+
+  /** q203's distinct word-3-gram shingles (`g`) of the documents `docs`. */
+  private[graft] def kmvShingles(docs: DataFrame): DataFrame =
+    docs.select(split(trim(col("text")), " +").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(explode(expr(
         """transform(sequence(0, size(toks) - 3),
           |  i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))""".stripMargin))
         .as("g"))
       .distinct()
-      .cache() // one shingle dedup feeds the sketch AND the exact count
-    val hashed = grams.selectExpr(
-      "(CAST(conv(substring(md5(g), 1, 12), 16, 10) AS DOUBLE) + 1.0D)" +
-        " / 281474976710657.0D AS u")
-    val kth = hashed.orderBy(col("u")).limit(KmvK)
-      .agg(max(col("u")).as("uk"), count(lit(1)).as("kk"))
-    val exact = grams.agg(count(lit(1)).as("n_exact"))
+
+  /** A shingle's normalized md5 hash `u` in (0, 1). */
+  private[graft] val kmvU: Column = expr(
+    "(CAST(conv(substring(md5(g), 1, 12), 16, 10) AS DOUBLE) + 1.0D)" +
+      " / 281474976710657.0D").as("u")
+
+  /** q203's output row from the bottom-k statistic `kth` (uk, kk) and the
+    * exact count `exact` (n_exact), one row each. */
+  private[graft] def kmvResult(kth: DataFrame, exact: DataFrame): DataFrame =
     kth.crossJoin(exact) // 1 row x 1 row
       .selectExpr(
         "kk AS k",
@@ -2296,7 +2315,6 @@ object TextAnalysis {
         "n_exact",
         "ROUND(ABS((kk - 1) / uk - CAST(n_exact AS DOUBLE)) / n_exact, 6)" +
           " AS rel_err")
-  }
 
   val q203Sql: String =
     s"""WITH toks AS (

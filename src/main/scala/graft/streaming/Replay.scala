@@ -33,7 +33,18 @@ import org.apache.spark.sql.types.StructType
   * the key's state configuration, drains it with `processAllAvailable`,
   * records the last micro-batch plan in [[StreamParity.lastStreamPlans]]
   * under the key's name, stops it, and deletes its dirs whether the
-  * query succeeds or throws. */
+  * query succeeds or throws.
+  *
+  * Mergeable folds: a stream key whose batch twin is a mergeable summary
+  * (Agarwal et al., PODS 2012: a per-batch summary plus a merge) folds
+  * its micro-batches through [[Run.foldDriver]] (a driver-side sketch)
+  * or [[Run.foldLedger]] (a keyed parquet ledger) and finishes with the
+  * twin's own code. `foreachBatch` is AT-LEAST-ONCE, so both folds run
+  * under [[StampedLedger]]'s exactly-once discipline: a re-delivered
+  * batchId is skipped, a step that throws leaves its batch unmarked for
+  * the retry, and a ledger's stamped dirs are overwrite-idempotent and
+  * GC'd. A driver fold assigns its accumulator only after `step`
+  * returns, so a throwing step leaves the value it was handed. */
 private[graft] object Replay {
 
   /** Data files per replay (one micro-batch each, plus the sentinel
@@ -141,6 +152,67 @@ private[graft] object Replay {
         state)
       drainMemorySink(spark, table)
     }
+
+    /** Fold every micro-batch of `input` into a driver-side accumulator,
+      * starting from `zero`, and return the final value (see the object
+      * doc for the exactly-once discipline). */
+    def foldDriver[A](input: DataFrame, zero: A)(step: (A, DataFrame) => A): A = {
+      val fold = new DriverFold(zero, step)
+      foldEach(input)(fold.apply)
+      fold.value
+    }
+
+    /** Fold every micro-batch of `input` into a keyed parquet ledger:
+      * `summary` reduces a batch to ledger rows, and `merge` re-aggregates
+      * the previous ledger unioned with them; the first batch's summary is
+      * the first ledger. Returns the final ledger, read from a dir the run
+      * deletes, so finish it (localCheckpoint) inside the run. */
+    def foldLedger(input: DataFrame)(summary: DataFrame => DataFrame)
+        (merge: DataFrame => DataFrame): DataFrame = {
+      val fold = new LedgerFold(name, tempDir("ledger"), summary, merge)
+      foldEach(input)(fold.apply)
+      fold.value(spark)
+    }
+
+    private def foldEach(input: DataFrame)(body: (DataFrame, Long) => Unit): Unit = {
+      await(input.writeStream.queryName(name).foreachBatch(body))
+      ()
+    }
+  }
+
+  /** [[Run.foldDriver]]'s per-batch body and state. */
+  private[streaming] final class DriverFold[A](zero: A, step: (A, DataFrame) => A) {
+    private val folded = new StampedLedger()
+    private var acc = zero
+
+    def value: A = acc
+
+    def apply(batch: DataFrame, batchId: Long): Unit = {
+      folded.guard(batchId) { acc = step(acc, batch) }
+      ()
+    }
+  }
+
+  /** [[Run.foldLedger]]'s per-batch body and state: the ledger under
+    * `root`, read back by [[value]], which names the key `name` when no
+    * batch has landed. */
+  private[streaming] final class LedgerFold(name: String, root: String,
+      summary: DataFrame => DataFrame, merge: DataFrame => DataFrame) {
+    private val ledger = new StampedLedger(root)
+
+    def apply(batch: DataFrame, batchId: Long): Unit = {
+      ledger.fold(batchId) { stamp =>
+        val rows = summary(batch)
+        ledger.previousPath
+          .fold(rows)(p => merge(batch.sparkSession.read.parquet(p).unionByName(rows)))
+          .write.mode("overwrite").parquet(stamp)
+      }
+      ()
+    }
+
+    def value(spark: SparkSession): DataFrame =
+      ledger.previousPath.map(spark.read.parquet(_))
+        .getOrElse(sys.error(s"$name: the stream folded no ledger"))
   }
 
   /** Write `df` into `dir` as up to `n` parquet files in `order`, with

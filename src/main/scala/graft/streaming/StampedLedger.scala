@@ -45,23 +45,23 @@ final class StampedLedger(root: String = "") {
   private var prevPath: Option[String] = None
 
   /** Stamp dir for a batch: overwrite-mode writes here are retry-safe.
-    * (A root-less ledger is guard-only — the q66/q212/q218/q221
-    * driver-accumulator folds keep no parquet state.) */
+    * (A root-less ledger is guard-only: [[Replay.Run.foldDriver]]'s
+    * driver-side folds keep no parquet state.) */
   def stampFor(batchId: Long): String = {
     require(root.nonEmpty, "guard-only ledger has no stamp root")
     s"$root/v$batchId"
   }
 
   /** Run `body` only if `batchId` has not been folded yet; returns
-    * whether it ran. Use alone for driver-accumulator folds (the
-    * q66/q212/q218/q221 mergeable sketches) that keep no parquet state.
+    * whether it ran. Use alone for driver-accumulator folds
+    * ([[Replay.Run.foldDriver]]) that keep no parquet state.
     *
     * The id is marked consumed only AFTER `body` succeeds: a fold that
     * THROWS leaves the batch un-folded, so an engine retry of the same
     * batchId re-runs it instead of silently dropping the batch forever
     * (the stamped-dir write is overwrite-idempotent and [[advanceTo]]
     * only moves on success, so the re-run is safe for ledger folds;
-    * driver-accumulator bodies should mutate their state last). */
+    * a driver fold assigns its state only after its step returns). */
   def guard(batchId: Long)(body: => Unit): Boolean =
     if (batchId <= lastFolded) false
     else {

@@ -22,7 +22,10 @@ import Replay.{ByRange, Pinned, ReplayFiles, RocksDB, RoundRobin, SessionPartiti
   *
   * Every stream key replays through [[Replay]]: file layout, the
   * end-of-stream sentinel file that stands in for the reference's
-  * `MAX_WATERMARK` flush, and the run/record/clean-up cycle.
+  * `MAX_WATERMARK` flush, and the run/record/clean-up cycle. The nine
+  * mergeable-fold keys (q66, q212, q218, q221, q80, q81, q233, q245,
+  * q251) also fold through its one exactly-once fold, with their batch
+  * twins' own summary and finish code.
   */
 object StreamParity {
 
@@ -479,49 +482,31 @@ object StreamParity {
     *
     * Scale shape: per trigger one codegen projection (two ~60-byte
     * header walks per doc — the planning pass that keeps codecs off
-    * rejected media) plus one rate-class-sized aggregate; the persistent
-    * ledger is CLASS-cardinality rows re-folded per batch via
-    * batchId-stamped overwrite dirs (exactly-once under foreachBatch's
-    * at-least-once contract, the q58/q148 discipline) — never a corpus
-    * re-scan. */
-  def q233StreamMediaAdmission(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"),
-        length(encode(col("text"), "utf-8")).cast("long").as("nb"))
+    * rejected media) plus one rate-class-sized aggregate; the ledger is
+    * CLASS-cardinality rows folded through [[Replay.Run.foldLedger]]
+    * (exactly-once: see [[Replay]]) — never a corpus re-scan. */
+  def q233StreamMediaAdmission(spark: SparkSession, sfDir: String): DataFrame =
     Replay.run(spark, "q233_stream_media_admission") { r =>
-      val ledger = new StampedLedger(r.tempDir("ledger"))
-      r.await(r.files(docs, ByRange("doc_id"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.fold(batchId) { stamp =>
-            val s = batch.sparkSession
-            val batchLedger = mediaAdmissionLedger(batch)
-            val folded = ledger.previousPath match {
-              case Some(p) => s.read.parquet(p).unionByName(batchLedger)
-                .groupBy(col("sample_rate"))
-                .agg(sum(col("n_docs")).as("n_docs"),
-                  sum(col("n_admitted")).as("n_admitted"),
-                  sum(col("adm_pcm_bytes")).as("adm_pcm_bytes"),
-                  sum(col("adm_px")).as("adm_px"))
-              case None => batchLedger
-            }
-            folded.write.mode("overwrite").parquet(stamp)
-          }
-          ()
-        })
-      ledger.previousPath.map(p => spark.read.parquet(p))
-        .getOrElse(sys.error("q233: no ledger written"))
+      r.foldLedger(r.files(mediaDocs(spark, sfDir), ByRange("doc_id")))(
+          mediaAdmissionLedger)(
+          _.groupBy(col("sample_rate"))
+            .agg(sum(col("n_docs")).as("n_docs"),
+              sum(col("n_admitted")).as("n_admitted"),
+              sum(col("adm_pcm_bytes")).as("adm_pcm_bytes"),
+              sum(col("adm_px")).as("adm_px")))
         .orderBy("sample_rate").localCheckpoint(true)
     }
-  }
 
   /** Batch one-shot equivalent of q233's folded ledger (ParitySpec pins
     * streamed == batch — the fold is exact because every stat merges). */
   def q233BatchEquivalent(spark: SparkSession, sfDir: String): DataFrame =
-    mediaAdmissionLedger(spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"),
-          length(encode(col("text"), "utf-8")).cast("long").as("nb")))
-      .orderBy("sample_rate")
+    mediaAdmissionLedger(mediaDocs(spark, sfDir)).orderBy("sample_rate")
+
+  /** q233's input: (doc_id, nb), nb the document's UTF-8 byte length. */
+  private def mediaDocs(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"),
+        length(encode(col("text"), "utf-8")).cast("long").as("nb"))
 
   /** Every stat recomputed from the construction arithmetic (the q229/
     * q226 oracle style): rate/channels from nb's residues, pcm bytes
@@ -562,17 +547,15 @@ object StreamParity {
     * scan), a batch-sized window, and a LEFT ANTI join against the index
     * keyed on the 16-byte block md5 — never text; the index is
     * hash-only (the NearDupIndex discipline — at 100 TB this is the
-    * keyed state store or a Bloom-fronted table, not a corpus re-scan);
-    * per-doc outputs land in batchId-stamped overwrite dirs (exactly-
-    * once under foreachBatch's at-least-once contract, the q58/q148
-    * discipline). Snapshot versions are GC'd batch-to-batch. */
+    * keyed state store or a Bloom-fronted table, not a corpus re-scan).
+    * Unlike the [[Replay.Run.foldLedger]] keys it writes per-doc outputs
+    * every batch too, so it keeps its own [[StampedLedger]] (the same
+    * discipline, see [[Replay]]): per-doc outputs land in batchId-stamped
+    * overwrite dirs, and index versions are GC'd batch-to-batch. */
   def q227StreamBlockAdmission(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Dedup.BlockB
+    import graft.operators.Dedup.{docBlocks, firstWinsBlocks}
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val idxSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bh",
-        org.apache.spark.sql.types.BinaryType)))
 
     Replay.run(spark, "q227_stream_block_admission") { r =>
       val ledger = new StampedLedger(r.tempDir("idx"))
@@ -581,37 +564,16 @@ object StreamParity {
         .writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           ledger.guard(batchId) {
-            val s = batch.sparkSession
-            val blocks = batch
-              .select(col("doc_id"), split(trim(col("text")), " +").as("toks"))
-              .select(col("doc_id"), posexplode(expr(
-                s"""transform(sequence(0, cast(ceil(size(toks) / $BlockB.0) as int) - 1),
-                   |  b -> array_join(slice(toks, b * $BlockB + 1, $BlockB), ' '))"""
-                  .stripMargin)).as(Seq("bidx", "block")))
-              .withColumn("bh", unhex(md5(col("block"))))
+            val blocks = docBlocks(batch)
               .persist() // feeds admission, per-doc counts, and index growth
             try {
-              val idx = ledger.previous(s, idxSchema)
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(col("bh")).orderBy(col("doc_id"), col("bidx"))
-              val kept = blocks
-                .withColumn("rk", row_number().over(w))
-                .filter(col("rk") === 1)
-                .join(idx, Seq("bh"), "left_anti")
-                .groupBy(col("doc_id"))
-                .agg(count(lit(1)).as("n_kept"),
-                  md5(array_join(transform(
-                    array_sort(collect_list(struct(col("bidx"), col("block")))),
-                    b => b.getField("block")), " ")).as("kept_fp"))
-              blocks.groupBy(col("doc_id"))
-                .agg(count(lit(1)).as("n_blocks"))
-                .join(kept, Seq("doc_id"), "left")
-                .select(col("doc_id"), col("n_blocks"),
-                  coalesce(col("n_kept"), lit(0L)).as("n_kept"), col("kept_fp"))
+              val idx = ledger.previousPath.map(batch.sparkSession.read.parquet(_))
+              firstWinsBlocks(blocks, idx)
                 .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
               // Index grows by THIS batch's distinct hashes (hash-only).
+              val hashes = blocks.select(col("bh")).distinct()
               val stamp = ledger.stampFor(batchId)
-              idx.union(blocks.select(col("bh")).distinct()).distinct()
+              idx.fold(hashes)(_.union(hashes).distinct())
                 .write.mode("overwrite").parquet(stamp)
               ledger.advanceTo(stamp)
               ()
@@ -630,10 +592,11 @@ object StreamParity {
     * (maxFilesPerTrigger=1). Per trigger (`foreachBatch`), ONE
     * distributed job computes the batch's k-counter MG sketch (partial
     * per partition, merged by the mergeable-summaries rule) plus the
-    * batch token count; the driver folds the k-sized batch sketch into a
-    * k-bounded running sketch with the SAME merge rule ([[
-    * graft.functions.MisraGries.merge]] — Agarwal et al., PODS 2012:
-    * add counters, subtract the k-th largest, drop non-positives). The
+    * batch token count; the driver folds ([[Replay.Run.foldDriver]]) the
+    * k-sized batch sketch into a k-bounded running sketch with the SAME
+    * merge rule ([[graft.functions.MisraGries.merge]] — Agarwal et al.,
+    * PODS 2012: add counters, subtract the k-th largest, drop
+    * non-positives). The
     * superset guarantee survives this because the per-partition merges
     * and the cross-batch folds form one merge tree over the whole
     * stream: any token with true frequency > n/k retains a positive
@@ -651,51 +614,28 @@ object StreamParity {
     * (`rlink/src/api/function.rs` ReduceFunction) with the mergeable-
     * summary shape that unbounded-vocabulary streams need. */
   def q66StreamHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
+    import scala.collection.mutable.HashMap
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    import graft.operators.TextAnalysis.HhK
+    import graft.operators.TextAnalysis.{HhK, hhTokens, hhVerify}
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val mgSketch = udaf(new graft.functions.MisraGriesSketch(HhK),
       ExpressionEncoder[String]())
     val merger = new graft.functions.MisraGries(HhK)
-    val running = scala.collection.mutable.HashMap.empty[String, Long]
-    var nTokens = 0L
-
-    // foreachBatch is AT-LEAST-ONCE: a retried/re-executed trigger
-    // re-delivers the same batchId, and a second fold of the same batch
-    // into the driver-local accumulator silently corrupts the summary.
-    // The shared ledger's guard makes the fold idempotent (guard-only
-    // use: the MG sketch lives on the driver, no parquet state).
-    val ledger = new StampedLedger()
-    Replay.run(spark, "q66_stream_heavy_hitters") { r =>
-      r.await(r.files(docs, RoundRobin)
-        .select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.guard(batchId) {
-            val row = batch.agg(mgSketch(col("tok")).as("sketch"),
-              count(lit(1)).as("n")).head()
-            val batchSketch = scala.collection.mutable.HashMap(
-              row.getMap[String, Long](0).toSeq: _*)
-            // state mutates LAST (StampedLedger.guard's contract): if
-            // merge threw after nTokens had advanced, the engine's retry
-            // of this un-marked batch would double-count the token total
-            merger.merge(running, batchSketch)
-            nTokens += row.getLong(1)
-          }
-          ()
-        })
+    val (sketch, nTokens) = Replay.run(spark, "q66_stream_heavy_hitters") { r =>
+      r.foldDriver(hhTokens(r.files(docs, RoundRobin)),
+          (HashMap.empty[String, Long], 0L)) { (acc, batch) =>
+        val row = batch.agg(mgSketch(col("tok")).as("sketch"),
+          count(lit(1)).as("n")).head()
+        val batchSketch = HashMap(row.getMap[String, Long](0).toSeq: _*)
+        // merge into a copy: the running sketch is the fold's state
+        (merger.merge(acc._1.clone(), batchSketch), acc._2 + row.getLong(1))
+      }
     }
 
     // exact verification of the k-bounded candidate set (q61's gate)
     import spark.implicits._
-    val cands = running.keys.toSeq.sorted.toDF("tok")
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
-      .join(broadcast(cands), "tok")
-      .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
-      .filter(col("freq") > lit(nTokens.toDouble / HhK))
-      .orderBy("tok")
+    hhVerify(hhTokens(docs), sketch.keys.toSeq.sorted.toDF("tok"), nTokens)
   }
 
   /** q212 — the AMS F2 / self-join-size sketch (q210) maintained over a
@@ -706,53 +646,27 @@ object StreamParity {
     * before choosing a join strategy. Per trigger, ONE distributed job
     * histograms the batch's keys and reduces them to J=32 signed longs
     * (map-side-combinable; shuffle is O(partitions × J)); driver state
-    * is the 32-long Z array. End-of-stream, the exact F2 computes in
+    * is the 32-long Z vector ([[Replay.Run.foldDriver]]). End-of-stream, the exact F2 computes in
     * q210's batch shape and the output row is IDENTICAL to q210's —
     * held to q210's own DuckDB oracle, q66's sketch-fold pattern.
     *
-    * The md5-derived signs are q210's, so linearity makes the folded
-    * Z bit-equal to the single-shot Z, estimate included — asserted by
-    * the streamed-equals-batch spec. */
+    * The sketch lines and the finish are q210's own code, so linearity
+    * makes the folded Z bit-equal to the single-shot Z, estimate
+    * included — asserted by the streamed-equals-batch spec. */
   def q212StreamAmsF2(spark: SparkSession, sfDir: String): DataFrame = {
-    val keys = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_partkey"))
-    val z = Array.fill(32)(0L)
-    // idempotent fold under foreachBatch's at-least-once contract
-    // (shared guard-only ledger — driver-side Z accumulator)
-    val ledger = new StampedLedger()
-    Replay.run(spark, "q212_stream_ams") { r =>
-      r.await(r.files(keys, RoundRobin).writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.guard(batchId) {
-          batch.groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
-            .select(explode(expr("sequence(1, 32)")).as("j"), col("l_partkey"),
-              col("f"))
-            .select(col("j"), expr(
-              "CASE WHEN CAST(conv(substring(md5(concat(CAST(j AS STRING)," +
-                " ':', CAST(l_partkey AS STRING))), 1, 8), 16, 10) AS BIGINT)" +
-                " % 2 = 0 THEN f ELSE -f END").as("sf"))
-            .groupBy(col("j")).agg(sum(col("sf")).as("zb"))
-            .collect()
-            .foreach(row => z(row.getInt(0) - 1) += row.getLong(1))
-          }
-          ()
-        })
+    import graft.operators.Profiling.{AmsJ, amsFreqs, amsLines, amsResult}
+    val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val z = Replay.run(spark, "q212_stream_ams") { r =>
+      r.foldDriver(r.files(lineitem.select(col("l_partkey")), RoundRobin),
+          Vector.fill(AmsJ)(0L)) { (z, batch) =>
+        val zb = amsLines(amsFreqs(batch)).collect()
+          .map(row => row.getInt(0) -> row.getLong(1)).toMap
+        Vector.tabulate(AmsJ)(i => z(i) + zb.getOrElse(i + 1, 0L))
+      }
     }
-
-    // q210's exact side + the identical integer median-of-means
-    val ex = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
-      .agg(count(lit(1)).as("n_keys"), sum(col("f")).as("n_rows"),
-        sum(expr("f * f")).as("exact_f2"))
-      .head()
-    val means = z.map(v => v * v).grouped(8).map(_.sum / 8).toSeq.sorted
-    val est = (means(1) + means(2)) / 2
-    val (nKeys, nRows, exactF2) =
-      (ex.getLong(0), ex.getLong(1), ex.getLong(2))
     import spark.implicits._
-    Seq((nKeys, nRows, exactF2, est,
-        1000000L * math.abs(est - exactF2) / exactF2))
-      .toDF("n_keys", "n_rows", "exact_f2", "est_f2", "err_ppm")
+    amsResult(z.zipWithIndex.map { case (v, i) => (i + 1, v) }.toDF("j", "z"),
+      amsFreqs(lineitem))
   }
 
   /** q218 — weighted sampling WITHOUT replacement over a CONTINUOUSLY
@@ -761,38 +675,25 @@ object StreamParity {
     * top-K by key of the parts' top-Ks — the same merge the batch
     * TakeOrderedAndProject performs across partitions, lifted across
     * TRIGGERS). Per micro-batch one distributed top-K job; driver state
-    * is ONE K-row buffer folded with the identical (key desc, doc_id)
+    * is ONE K-row buffer folded ([[Replay.Run.foldDriver]]) with the identical (key desc, doc_id)
     * order. End-of-stream the sample is bit-equal to the single-shot
     * q200 and held to its oracle — the third mergeable-summary fold
     * after q66 (MG) and q212 (AMS), covering SAMPLING: a live pipeline
     * maintains its eval sample while data streams in, no re-scan. */
   def q218StreamSample(spark: SparkSession, sfDir: String): DataFrame = {
+    import graft.operators.Curation.{AesSampleK, aesKeys, aesSample}
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("n_chars"))
-    val K = 100
-    var running = Vector.empty[(Long, Long, Double)] // (doc_id, w, es_key)
-    // idempotent fold under foreachBatch's at-least-once contract
-    // (shared guard-only ledger — driver-side top-K accumulator)
-    val ledger = new StampedLedger()
-    Replay.run(spark, "q218_stream_sample") { r =>
-      r.await(r.files(docs, RoundRobin).writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.guard(batchId) {
-          val top = batch.where("n_chars > 0").selectExpr(
-              "doc_id", "n_chars AS w",
-              "ROUND(ln((CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 12), 16, 10) AS DOUBLE) + 1.0D)" +
-                " / 281474976710657.0D) / n_chars, 9) AS es_key")
-            .orderBy(col("es_key").desc, col("doc_id")).limit(K)
-            .collect().map(row => (row.getLong(0), row.getLong(1), row.getDouble(2)))
-          running = (running ++ top)
-            .sortBy { case (id, _, k) => (-k, id) }.take(K)
-          }
-          ()
-        })
+    val sample = Replay.run(spark, "q218_stream_sample") { r =>
+      r.foldDriver(r.files(docs, RoundRobin),
+          Vector.empty[(Long, Long, Double)]) { (running, batch) =>
+        val top = aesSample(aesKeys(batch)).collect()
+          .map(row => (row.getLong(0), row.getLong(1), row.getDouble(2)))
+        (running ++ top).sortBy { case (id, _, k) => (-k, id) }.take(AesSampleK)
+      }
     }
     import spark.implicits._
-    running.toDF("doc_id", "w", "es_key").orderBy(col("es_key").desc,
-      col("doc_id"))
+    aesSample(sample.toDF("doc_id", "w", "es_key"))
   }
 
   /** q221 — the KMV bottom-k distinct sketch (q203) maintained over a
@@ -801,62 +702,35 @@ object StreamParity {
     * bottom-ks — Beyer et al.'s distributed-union property, lifted
     * across TRIGGERS). Per micro-batch one distributed job dedups the
     * batch's shingles and keeps its local bottom-k; driver state is ONE
-    * k-row sorted buffer. This closes the mergeable-fold family over
+    * k-row sorted buffer ([[Replay.Run.foldDriver]]). This closes the mergeable-fold family over
     * all four summary kinds — heavy hitters (q66 MG), moments (q212
     * AMS), samples (q218 A-ES), and DISTINCT COUNTS — the live
     * cardinality feed that sizes an LSH run while data streams in.
     * End-of-stream the sketch is bit-equal to the single-shot q203
     * (estimate, k-th statistic, and measured error included) and held
-    * to its oracle; the exact side computes in q203's batch shape. */
+    * to its oracle; the shingles, hash and finish are q203's own code. */
   def q221StreamKmv(spark: SparkSession, sfDir: String): DataFrame = {
+    import graft.operators.TextAnalysis.{KmvK, kmvResult, kmvShingles, kmvU}
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val K = 256
-    val uExpr = "(CAST(conv(substring(md5(g), 1, 12), 16, 10) AS DOUBLE)" +
-      " + 1.0D) / 281474976710657.0D"
-    def shingles(df: org.apache.spark.sql.DataFrame) = df
-      .select(split(trim(col("text")), " +").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(explode(expr(
-        """transform(sequence(0, size(toks) - 3),
-          |  i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))""".stripMargin))
-        .as("g"))
-      .distinct()
-
     // State is keyed by the GRAM, not its hash: the same gram seen in
     // two batches must merge to one entry (the batch DISTINCT), while
     // two different grams that collide on u must keep their
     // multiplicity — a value-keyed fold would collapse them and shift
     // the k-th order statistic.
-    var running = Map.empty[String, Double]
-    // idempotent fold under foreachBatch's at-least-once contract
-    // (shared guard-only ledger — driver-side KMV accumulator)
-    val ledger = new StampedLedger()
-    Replay.run(spark, "q221_stream_kmv") { r =>
-      r.await(r.files(docs, RoundRobin).writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.guard(batchId) {
-            val top = shingles(batch).selectExpr("g", s"$uExpr AS u")
-              .orderBy(col("u"), col("g")).limit(K)
-              .collect().map(row => row.getString(0) -> row.getDouble(1))
-            running = (running ++ top).toSeq
-              .sortBy { case (g, u) => (u, g) }.take(K).toMap
-          }
-          ()
-        })
+    val sketch = Replay.run(spark, "q221_stream_kmv") { r =>
+      r.foldDriver(r.files(docs, RoundRobin), Map.empty[String, Double]) {
+        (running, batch) =>
+          val top = kmvShingles(batch).select(col("g"), kmvU)
+            .orderBy(col("u"), col("g")).limit(KmvK)
+            .collect().map(row => row.getString(0) -> row.getDouble(1))
+          (running ++ top).toSeq.sortBy { case (g, u) => (u, g) }.take(KmvK).toMap
+      }
     }
-
-    val us = running.values.toSeq.sorted
-    val (uk, kk) = (us.last, us.size.toLong)
-    val nExact = shingles(spark.read.parquet(s"$sfDir/documents.parquet"))
-      .count()
     import spark.implicits._
-    Seq((kk, uk, nExact))
-      .toDF("kk", "uk", "n_exact")
-      .selectExpr("kk AS k", "ROUND(uk, 9) AS kth_u",
-        "CAST(FLOOR((kk - 1) / uk) AS BIGINT) AS est_distinct", "n_exact",
-        "ROUND(ABS((kk - 1) / uk - CAST(n_exact AS DOUBLE)) / n_exact, 6)" +
-          " AS rel_err")
+    val us = sketch.values
+    kmvResult(Seq((us.max, us.size.toLong)).toDF("uk", "kk"),
+      kmvShingles(docs).agg(count(lit(1)).as("n_exact")))
   }
 
   /** q81 — the timeline-anomaly monitor through the streaming engine:
@@ -873,80 +747,21 @@ object StreamParity {
     * shape — held to q78's own DuckDB oracle.
     *
     * This is the live-dashboard maintenance loop: per trigger it costs
-    * O(batch) aggregation + a grid-sized fold; the anomaly pass runs on
-    * demand over metadata-sized state. Snapshot versions are GC'd
-    * batch-to-batch. */
+    * O(batch) aggregation + a grid-sized fold through
+    * [[Replay.Run.foldLedger]]; the anomaly pass runs on demand over
+    * metadata-sized state. The cells, grid and z chain are q75's and
+    * q78's own code. */
   def q81StreamAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Relational
+    import graft.operators.Relational.{denseGrid, hourlyCells, zAnomalies}
     val raw = graft.Tables.rawEvents(spark, sfDir)
-    val snapSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("ws",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("et",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType)))
-
     Replay.run(spark, "q81_stream_anomaly") { r =>
-      // Shared fold discipline — this copy had drifted: it lacked the
-      // batchId idempotence guard, and the counts-add fold is NOT
-      // idempotent under foreachBatch's at-least-once retries (a retried
-      // trigger would double-count its batch into the already-advanced
-      // snapshot). The ledger's guard closes that hole.
-      val ledger = new StampedLedger(r.tempDir("snap"))
-      r.await(graft.Tables.normalizeTs(r.files(raw, ByRange("ts")))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.fold(batchId) { stamp =>
-            val s = batch.sparkSession
-            // The ONLY aggregation is over the batch's own rows.
-            val bAgg = batch.select(
-                (floor(col("ts").cast("long") / 3600) * 3600).cast("long").as("ws"),
-                col("event_type").as("et"))
-              .groupBy(col("ws"), col("et")).agg(count(lit(1)).as("cnt"))
-            val prev = ledger.previous(s, snapSchema)
-            // Mergeable fold: counts add. Full outer on the grid key, both
-            // sides grid-sized.
-            val next = prev.select(col("ws"), col("et"), col("cnt").as("pc"))
-              .join(bAgg.select(col("ws"), col("et"), col("cnt").as("bc")),
-                Seq("ws", "et"), "full")
-              .select(col("ws"), col("et"),
-                (coalesce(col("pc"), lit(0L)) + coalesce(col("bc"), lit(0L)))
-                  .as("cnt"))
-            next.write.mode("overwrite").parquet(stamp)
-          }
-          ()
-        })
-
-      // Dense grid + z from the final grid-sized snapshot (q75's shape,
-      // then q78's exact double sequence — same expression tokens).
-      val agg = spark.read.parquet(ledger.previousPath.get).cache()
-      val bounds = agg.agg(min(col("ws")).as("lo"), max(col("ws")).as("hi"))
-      val types = agg.select(col("et").as("event_type")).distinct()
-      val grid = bounds
-        .select(explode(sequence(col("lo"), col("hi"), lit(3600L))).as("window_start"))
-        .crossJoin(broadcast(types))
-      val cells = grid.join(broadcast(agg),
-          grid("window_start") === agg("ws") && grid("event_type") === agg("et"),
-          "left")
-        .select(col("window_start"), col("event_type"),
-          coalesce(col("cnt"), lit(0L)).as("cnt"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
-      val out = cells
-        .withColumn("s1", sum(col("cnt")).over(w))
-        .withColumn("s2", sum(col("cnt") * col("cnt")).over(w))
-        .withColumn("n", count(lit(1)).over(w))
-        .withColumn("mean", col("s1").cast("double") / col("n"))
-        .withColumn("sd", sqrt(
-          (col("s2").cast("double") - col("s1").cast("double")
-            * col("s1").cast("double") / col("n")) / (col("n") - 1)))
-        .withColumn("z", (col("cnt").cast("double") - col("mean")) / col("sd"))
-        .filter(abs(col("z")) >= Relational.ZThresh)
-        .select(col("window_start"), col("event_type"), col("cnt"),
-          col("mean"), col("z"))
-        .orderBy("window_start", "event_type")
-        .localCheckpoint(true) // sever lineage to the temp snapshot parquet
-      agg.unpersist()
+      val counts = r.foldLedger(graft.Tables.normalizeTs(r.files(raw, ByRange("ts"))))(
+          hourlyCells(_, count(lit(1)).as("cnt")))(
+          _.groupBy(col("ws"), col("et")).agg(sum(col("cnt")).as("cnt")))
+        .cache()
+      val out = zAnomalies(denseGrid(counts))
+        .localCheckpoint(true) // sever lineage to the temp ledger parquet
+      counts.unpersist()
       out
     }
   }
@@ -1145,51 +960,17 @@ object StreamParity {
     * production scale the union side is the snapshot scan and the batch
     * broadcasts into it — locally the snapshot rewrite is one sequential
     * pass, and a production deployment swaps the rewrite for a Delta
-    * MERGE / keyed state store exactly as q58 documents. Snapshot
-    * versions are GC'd batch-to-batch (O(base) temp, not O(batches)). */
+    * MERGE / keyed state store exactly as q58 documents. The feed,
+    * latest-wins and rollup are q63's own code. */
   def q80StreamCdcMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-    val base = orders
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        lit(0).as("version"), lit(false).as("deleted"))
-    val updates = orders
-      .filter(pmod(col("o_orderkey"), lit(7)) === 0)
-      .select(col("o_orderkey"),
-        lit("U").as("o_orderstatus"),
-        (col("o_totalprice") + 10.0).as("o_totalprice"),
-        lit(1).as("version"),
-        (pmod(col("o_orderkey"), lit(11)) === 0).as("deleted"))
-
+    import graft.operators.Relational.{cdcFeed, cdcLatest, cdcRollup}
     Replay.run(spark, "q80_stream_cdc_merge") { r =>
-      // Shared fold discipline (this copy had also drifted guard-less;
-      // the version-desc keep-first merge happens to be re-fold-idempotent,
-      // but the guard costs nothing and keeps every site uniform).
-      val ledger = new StampedLedger(r.tempDir("snap"))
       // Feed layout: one file per version, base (0) as trigger 0 and the
       // changes (1) as trigger 1.
-      r.await(r.files(base.unionByName(updates), ByRange("version"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.fold(batchId) { stamp =>
-            val s = batch.sparkSession
-            val prev = ledger.previous(s, base.schema)
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("o_orderkey")).orderBy(col("version").desc)
-            val next = prev.unionByName(batch)
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") === 1).drop("rn")
-            next.write.mode("overwrite").parquet(stamp)
-          }
-          ()
-        })
-
-      val merged = spark.read.parquet(ledger.previousPath.get)
-        .filter(!col("deleted"))
-      merged.groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("total_price"))
-        .orderBy("o_orderstatus")
-        .localCheckpoint(true) // sever lineage to the temp snapshot parquet
+      val feed = r.files(cdcFeed(graft.Tables.orders(spark, sfDir)),
+        ByRange("version"))
+      cdcRollup(r.foldLedger(feed)(cdcLatest)(cdcLatest))
+        .localCheckpoint(true) // sever lineage to the temp ledger parquet
     }
   }
 
@@ -1245,7 +1026,7 @@ object StreamParity {
     val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
       "event_id" -> -1L, "event_type" -> "zzz_sentinel", "value" -> 0.0)
 
-    val windowUs = 24L * 3600 * 1000000
+    val windowUs = graft.operators.Relational.FunnelWindowUs
 
     // flatMapGroupsWithState user-defined state (case-class encoder +
     // event-time timeouts) on the RocksDB provider — the arbitrary-state
@@ -1952,11 +1733,10 @@ object StreamParity {
     * accumulated ledger after any prefix of triggers is exactly the
     * batch aggregate over the events seen. Unlike the four driver-state
     * folds, the state here is USER-cardinality, so it lives as a keyed
-    * parquet LEDGER merged per trigger (q227/q233's batchId-stamped
-    * overwrite-dir discipline — exactly-once under at-least-once
-    * retries, versions GC'd per batch); the driver never holds a row.
-    * End of stream, the ledger feeds the SAME KM expressions as q236
-    * ([[graft.operators.Relational.kmFromPerUser]]) — parity is
+    * parquet ledger ([[Replay.Run.foldLedger]]); the driver never holds
+    * a row. The per-user summary and the KM expressions are q236's own
+    * ([[graft.operators.Relational.kmPerUser]],
+    * [[graft.operators.Relational.kmFromPerUser]]) — parity is
     * structural, and the oracle is q236's SQL verbatim.
     *
     * Four time-range files (not the ReplayFiles=2 minimum) so a user's
@@ -1964,38 +1744,16 @@ object StreamParity {
     * in DIFFERENT triggers — the min/max merge is genuinely exercised,
     * not incidentally trivial. */
   def q245StreamKmSurvival(spark: SparkSession, sfDir: String): DataFrame = {
+    import graft.operators.Relational.{kmFromPerUser, kmPerUser}
     val raw = graft.Tables.rawEvents(spark, sfDir)
     Replay.run(spark, "q245_stream_km") { r =>
-      val ledger = new StampedLedger(r.tempDir("ledger"))
-      r.await(graft.Tables.normalizeTs(r.files(raw, ByRange("ts"), 4))
+      val ev = graft.Tables.normalizeTs(r.files(raw, ByRange("ts"), 4))
         .selectExpr("user_id", "unix_micros(ts) AS us", "event_type")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.fold(batchId) { stamp =>
-            val s = batch.sparkSession
-            val batchLedger = batch.groupBy(col("user_id"))
-              .agg(min(col("us")).as("first_us"),
-                min(when(col("event_type") === "purchase", col("us")))
-                  .as("conv_us"),
-                max(col("us")).as("last_us"))
-            val folded = ledger.previousPath match {
-              case Some(p) => s.read.parquet(p).unionByName(batchLedger)
-                .groupBy(col("user_id"))
-                .agg(min(col("first_us")).as("first_us"),
-                  min(col("conv_us")).as("conv_us"),
-                  max(col("last_us")).as("last_us"))
-              case None => batchLedger
-            }
-            folded.write.mode("overwrite").parquet(stamp)
-          }
-          ()
-        })
-      val perUser = ledger.previousPath.map(p => spark.read.parquet(p))
-        .getOrElse(sys.error("q245: no ledger written"))
-      val horizon = perUser.agg(max(col("last_us")).as("h"))
-      graft.operators.Relational.kmFromPerUser(
-          perUser.select(col("user_id"), col("first_us"), col("conv_us")),
-          horizon)
+      kmFromPerUser(r.foldLedger(ev)(kmPerUser)(
+          _.groupBy(col("user_id"))
+            .agg(min(col("first_us")).as("first_us"),
+              min(col("conv_us")).as("conv_us"),
+              max(col("last_us")).as("last_us"))))
         .localCheckpoint(true)
     }
   }
@@ -2012,10 +1770,9 @@ object StreamParity {
     * output column, and a bucket boundary that splits a tie splits it
     * between interchangeable rows. A count table is the simplest
     * mergeable summary there is (counts add), so the stream folds ONE
-    * key-cardinality frame per trigger through the [[StampedLedger]]
-    * discipline (batchId-idempotent, stamped overwrite dirs — the q245
-    * pattern), and the end-of-stream bucketing is pure closed-form
-    * integer arithmetic over that aggregate:
+    * key-cardinality frame per trigger through [[Replay.Run.foldLedger]]
+    * (tokenized by q88's own `toks`), and the end-of-stream bucketing is
+    * pure closed-form integer arithmetic over that aggregate:
     *
     *   with n rows, k buckets, q = n div k, r = n mod k, bucket b spans
     *   ranks (s_b, e_b] = ((b-1)q + min(b-1, r), bq + min(b, r)];
@@ -2031,46 +1788,19 @@ object StreamParity {
     * keys × k ≈ 10^4 rows. No doc-scale sort, window, or collect
     * anywhere. */
   def q251StreamNtile(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Curation.LenBuckets
+    import graft.operators.Curation.{LenBuckets, toks}
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val countSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("tok_cnt",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType)))
+    val addCounts = (df: DataFrame) =>
+      df.groupBy(col("tok_cnt")).agg(sum(col("cnt")).as("cnt"))
 
     Replay.run(spark, "q251_stream_ntile") { r =>
-      val ledger = new StampedLedger(r.tempDir("counts"))
-      r.await(r.files(docs, ByRange("doc_id"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.fold(batchId) { stamp =>
-            val s = batch.sparkSession
-            // the ONLY aggregation is over the batch's own rows; the
-            // tokenization is q88's expression verbatim
-            val bCounts = batch
-              .select(size(split(trim(col("text")), " +")).cast("long")
-                .as("tok_cnt"))
-              .groupBy(col("tok_cnt")).agg(count(lit(1)).as("cnt"))
-            val folded = ledger.previous(s, countSchema)
-              .select(col("tok_cnt"), col("cnt").as("pc"))
-              .join(bCounts.select(col("tok_cnt"), col("cnt").as("bc")),
-                Seq("tok_cnt"), "full")
-              .select(col("tok_cnt"),
-                (coalesce(col("pc"), lit(0L)) + coalesce(col("bc"), lit(0L)))
-                  .as("cnt"))
-            folded.write.mode("overwrite").parquet(stamp)
-          }
-          ()
-        })
-
       // End-of-stream bucketing over the folded key-cardinality table.
       // The re-aggregation makes the prefix window's child an Aggregate —
       // the bounded-frame shape the global-window plan gate admits.
-      val counts = ledger.previousPath.map(p => spark.read.parquet(p))
-        .getOrElse(sys.error("q251: no count table written"))
-        .groupBy(col("tok_cnt")).agg(sum(col("cnt")).as("cnt"))
+      val counts = addCounts(r.foldLedger(r.files(docs, ByRange("doc_id")))(
+        _.groupBy(size(toks).cast("long").as("tok_cnt"))
+          .agg(count(lit(1)).as("cnt")))(addCounts))
       val offs = counts.withColumn("off",
         sum(col("cnt")).over(org.apache.spark.sql.expressions.Window
           .orderBy(col("tok_cnt"))) - col("cnt"))

@@ -43,6 +43,16 @@ class DoctorSpec extends AnyFunSuite {
     assert(verdict.contains("band trips"))
   }
 
+  test("the r11 board's table and verdict lines are 7-bit ASCII") {
+    // under a POSIX locale the forked JVM prints any other char as '?'
+    val spread = Doctor.loadSpread("bench_board_r11.json")
+    val lines = Doctor.report(spread, bands)
+    assert(lines.exists(_.startsWith("session: DISTURBED")), lines.last)
+    assert(lines.exists(_.startsWith("q124_embedding_cov")))
+    val bad = lines.filterNot(_.forall(_ < 128))
+    assert(bad.isEmpty, s"non-ASCII Doctor lines: $bad")
+  }
+
   test("r10 board adjudicates DISTURBED via the band arm") {
     val (rows, verdict) = agreesWithBench("bench_board_r10.json")
     assert(rows.count(_.verdict == "TRIPPED") >= Bench.QuietBandMinKeys)

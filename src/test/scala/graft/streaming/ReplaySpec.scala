@@ -13,7 +13,8 @@ import graft.SparkSpec
 import Replay.{ByRange, RocksDB, RoundRobin}
 
 /** The replay harness's contract: file order, sentinel placement, one
-  * trigger per file, and clean-up when a run fails. */
+  * trigger per file, clean-up when a run fails, and the mergeable folds'
+  * exactly-once discipline. */
 class ReplaySpec extends SparkSpec {
 
   private def list(dir: Path): Seq[Path] = {
@@ -130,5 +131,95 @@ class ReplaySpec extends SparkSpec {
         .filter(_.getFileName.toString.startsWith("replayspec_failure"))
       assert(left.isEmpty, s"replay dirs left behind: $left")
     } finally spark.conf.set(partsKey, prevParts)
+  }
+
+  private def causedBy(err: Throwable, msg: String): Boolean =
+    Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains(msg)))
+
+  private def leftDirs(prefix: String): Seq[Path] =
+    list(Paths.get(System.getProperty("java.io.tmpdir")))
+      .filter(_.getFileName.toString.startsWith(prefix))
+
+  /** A ledger summary: row counts per event type. */
+  private def typeCounts(df: DataFrame): DataFrame =
+    df.groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
+
+  private def addCounts(df: DataFrame): DataFrame =
+    df.groupBy(col("event_type")).agg(sum(col("cnt")).as("cnt"))
+
+  private def countMap(df: DataFrame): Map[String, Long] =
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("a two-file fold counts every row once, on the driver and in a ledger") {
+    val ev = graft.Tables.events(spark, sf)
+    val (n, ledger) = Replay.run(spark, "replayspec_fold") { r =>
+      val n = r.foldDriver(r.files(ev, RoundRobin), 0L)((acc, b) => acc + b.count())
+      (n, countMap(r.foldLedger(r.files(ev, RoundRobin))(typeCounts)(addCounts)))
+    }
+    assert(n === ev.count())
+    assert(ledger === countMap(typeCounts(ev)))
+    assert(leftDirs("replayspec_fold").isEmpty)
+  }
+
+  test("a batchId delivered twice is folded once") {
+    val ev = graft.Tables.events(spark, sf).limit(5).cache()
+    try {
+      val driver = new Replay.DriverFold[Long](0L, (acc, b) => acc + b.count())
+      Seq(0L, 0L, 1L, 1L, 0L).foreach(driver(ev, _))
+      assert(driver.value === 10L)
+      val root = Files.createTempDirectory("replayspec_twice")
+      try {
+        val ledger = new Replay.LedgerFold("replayspec_twice", root.toString,
+          typeCounts, addCounts)
+        Seq(0L, 0L, 1L, 1L, 0L).foreach(ledger(ev, _))
+        assert(countMap(ledger.value(spark)) ===
+          countMap(typeCounts(ev)).map { case (k, c) => k -> 2 * c })
+      } finally Replay.deleteTree(root)
+    } finally { ev.unpersist(); () }
+  }
+
+  test("a fold step that throws on batch 1 fails the run and keeps the batch-0 state") {
+    val ev = graft.Tables.events(spark, sf)
+    val boom = "replayspec fold boom"
+    // the state: neither fold assigns what a throwing step would have made
+    val b0 = ev.limit(3).cache()
+    try {
+      val driver = new Replay.DriverFold[Long](0L, (acc, b) =>
+        if (acc > 0) throw new IllegalStateException(boom) else acc + b.count())
+      driver(b0, 0)
+      assert(causedBy(intercept[IllegalStateException](driver(b0, 1)), boom))
+      assert(driver.value === 3L)
+      val root = Files.createTempDirectory("replayspec_foldstate")
+      try {
+        val ledger = new Replay.LedgerFold("replayspec_foldstate", root.toString,
+          typeCounts, _ => throw new IllegalStateException(boom))
+        ledger(b0, 0)
+        assert(causedBy(intercept[IllegalStateException](ledger(b0, 1)), boom))
+        assert(countMap(ledger.value(spark)) === countMap(typeCounts(b0)))
+        assert(list(root).map(_.getFileName.toString) === Seq("v0"))
+      } finally Replay.deleteTree(root)
+    } finally { b0.unpersist(); () }
+    // the run: the streams fail loudly, the step saw the batch-0 value,
+    // and no dir of the run is left behind
+    val handed = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val driverErr = intercept[Exception] {
+      Replay.run(spark, "replayspec_foldfail") { r =>
+        r.foldDriver(r.files(ev, ByRange("ts")), 0L) { (acc, b) =>
+          handed += acc
+          if (acc > 0) throw new IllegalStateException(boom) else acc + b.count()
+        }
+      }
+    }
+    assert(causedBy(driverErr, boom))
+    assert(handed.size === 2 && handed(0) === 0L && handed(1) > 0L, s"$handed")
+    val ledgerErr = intercept[Exception] {
+      Replay.run(spark, "replayspec_foldfail") { r =>
+        r.foldLedger(r.files(ev, ByRange("ts")))(typeCounts)(
+          _ => throw new IllegalStateException(boom))
+      }
+    }
+    assert(causedBy(ledgerErr, boom))
+    assert(leftDirs("replayspec_foldfail").isEmpty)
   }
 }
