@@ -1376,8 +1376,8 @@ object Relational {
       .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
     val b = b0.unionAll(inserts)
 
-    val al = a.select(a.columns.map(c => col(c).as(s"a_$c")): _*)
-    val bl = b.select(b.columns.map(c => col(c).as(s"b_$c")): _*)
+    val al = a.select(a.columns.toSeq.map(c => col(c).as(s"a_$c")): _*)
+    val bl = b.select(b.columns.toSeq.map(c => col(c).as(s"b_$c")): _*)
     val j = al.join(bl, col("a_o_orderkey") === col("b_o_orderkey"), "full_outer")
     val changed = col("a_o_totalprice") =!= col("b_o_totalprice") ||
       col("a_o_orderstatus") =!= col("b_o_orderstatus")

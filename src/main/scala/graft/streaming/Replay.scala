@@ -3,10 +3,13 @@ package graft.streaming
 import java.nio.file.{Files, LinkOption, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** The replay harness every stream key runs through: a bounded table
   * replayed as a parquet file stream in a fixed order, one file (or a
@@ -35,16 +38,21 @@ import org.apache.spark.sql.types.StructType
   * under the key's name, stops it, and deletes its dirs whether the
   * query succeeds or throws.
   *
-  * Mergeable folds: a stream key whose batch twin is a mergeable summary
-  * (Agarwal et al., PODS 2012: a per-batch summary plus a merge) folds
-  * its micro-batches through [[Run.foldDriver]] (a driver-side sketch)
-  * or [[Run.foldLedger]] (a keyed parquet ledger) and finishes with the
-  * twin's own code. `foreachBatch` is AT-LEAST-ONCE, so both folds run
-  * under [[StampedLedger]]'s exactly-once discipline: a re-delivered
-  * batchId is skipped, a step that throws leaves its batch unmarked for
-  * the retry, and a ledger's stamped dirs are overwrite-idempotent and
-  * GC'd. A driver fold assigns its accumulator only after `step`
-  * returns, so a throwing step leaves the value it was handed. */
+  * Per-trigger folds: a stream key's per-batch logic goes through one of
+  * the run's folds, which own the `foreachBatch` wiring and its
+  * exactly-once rules. `foreachBatch` is AT-LEAST-ONCE (a retried trigger
+  * re-delivers its batchId), so every fold runs under a [[StampedLedger]]
+  * guard: a re-delivered batchId is skipped, and a step that throws leaves
+  * its batch unmarked for the retry. [[Run.foldEmit]] turns the current
+  * ledger and a batch into named outputs and the next ledger, and writes
+  * them all in ONE overwrite write per trigger into the batch's stamp dir,
+  * so a retried write lands in the same dir; the ledger advances only to a
+  * dir that exists, and the superseded one is deleted. [[Run.foldLedger]]
+  * is that fold with a ledger and no outputs, for a stream key whose batch
+  * twin is a mergeable summary (Agarwal et al., PODS 2012: a per-batch
+  * summary plus a merge), finished with the twin's own code;
+  * [[Run.foldDriver]] keeps a driver-side sketch and assigns it only after
+  * `step` returns, so a throwing step leaves the value it was handed. */
 private[graft] object Replay {
 
   /** Data files per replay (one micro-batch each, plus the sentinel
@@ -87,7 +95,7 @@ private[graft] object Replay {
   }
 
   final class Run private[Replay] (spark: SparkSession, name: String) {
-    private val dirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+    private val dirs = ArrayBuffer.empty[Path]
 
     private def newDir(tag: String): Path = {
       val d = Files.createTempDirectory(s"${name}_$tag")
@@ -97,14 +105,8 @@ private[graft] object Replay {
 
     private[Replay] def close(): Unit = dirs.foreach(deleteTree)
 
-    /** A scratch dir deleted with the run (foreachBatch outputs, ledgers). */
+    /** A scratch dir deleted with the run. */
     def tempDir(tag: String): String = newDir(tag).toString
-
-    /** The batch dirs a foreachBatch wrote under `root` (a [[tempDir]]),
-      * read back by name: a `b*` glob read first probes the literal glob
-      * path for a sink log and logs a FileNotFoundException each time. */
-    def batches(root: String): DataFrame =
-      spark.read.parquet(listDir(Paths.get(root)).map(_.toString).sorted: _*)
 
     /** `df` laid out as `n` replay files (see [[layout]]), streamed one
       * file per micro-batch. */
@@ -174,6 +176,19 @@ private[graft] object Replay {
       fold.value(spark)
     }
 
+    /** Fold every micro-batch of `input` through `step`, which gets the
+      * current ledger (None until one has landed) and the batch and
+      * returns the batch's named outputs and next ledger (see
+      * [[EmitFold]]). Returns every output read back over all batches
+      * (an empty frame of its schema when no batch gave it a row) and the
+      * last ledger, read from a dir the run deletes, so finish them
+      * (localCheckpoint) inside the run. */
+    def foldEmit(input: DataFrame)(step: (Option[DataFrame], DataFrame) => Emit): Emit = {
+      val fold = new EmitFold(tempDir("emit"), step)
+      foldEach(input)(fold.apply)
+      fold.result(spark)
+    }
+
     private def foldEach(input: DataFrame)(body: (DataFrame, Long) => Unit): Unit = {
       await(input.writeStream.queryName(name).foreachBatch(body))
       ()
@@ -193,26 +208,84 @@ private[graft] object Replay {
     }
   }
 
-  /** [[Run.foldLedger]]'s per-batch body and state: the ledger under
-    * `root`, read back by [[value]], which names the key `name` when no
-    * batch has landed. */
-  private[streaming] final class LedgerFold(name: String, root: String,
-      summary: DataFrame => DataFrame, merge: DataFrame => DataFrame) {
-    private val ledger = new StampedLedger(root)
+  /** What a [[Run.foldEmit]] step makes of one batch, and what the fold
+    * returns after the stream: frames by output name, and the ledger. */
+  final case class Emit(outputs: Map[String, DataFrame] = Map.empty,
+      ledger: Option[DataFrame] = None)
+
+  /** The partition column of a stamp dir, and its value for the ledger. */
+  private val Kind = "kind"
+  private val LedgerKind = "ledger"
+
+  /** [[Run.foldEmit]]'s per-batch body and state. Per new batchId: the
+    * batch cached for one scan, the step, and ONE overwrite write of every
+    * frame it returned into the stamp dir `root/v<batchId>`, partitioned
+    * by [[Kind]] (the output's name, or [[LedgerKind]]). A zero-row frame
+    * writes no subdir, so an empty next ledger keeps the current one.
+    * Nothing is recorded until the write has succeeded. */
+  private[streaming] final class EmitFold(root: String,
+      step: (Option[DataFrame], DataFrame) => Emit) {
+    private val stamps = new StampedLedger(root)
+    private val written = ArrayBuffer.empty[String]
+    private val schemas = LinkedHashMap.empty[String, StructType]
+    private var ledgerSchema = Option.empty[StructType]
 
     def apply(batch: DataFrame, batchId: Long): Unit = {
-      ledger.fold(batchId) { stamp =>
-        val rows = summary(batch)
-        ledger.previousPath
-          .fold(rows)(p => merge(batch.sparkSession.read.parquet(p).unionByName(rows)))
-          .write.mode("overwrite").parquet(stamp)
+      stamps.guard(batchId) {
+        // a batch the caller cached stays cached
+        val own = batch.storageLevel == StorageLevel.NONE
+        val b = if (own) batch.persist() else batch
+        try {
+          val e = step(ledger(batch.sparkSession), b)
+          val frames = e.outputs.toSeq ++ e.ledger.map(LedgerKind -> _)
+          require(!e.outputs.contains(LedgerKind) &&
+            frames.forall(!_._2.columns.contains(Kind)),
+            s"output names must not be '$LedgerKind' nor columns '$Kind'")
+          val stamp = stamps.stampFor(batchId)
+          frames.map { case (k, f) => f.withColumn(Kind, lit(k)) }
+            .reduceOption(_.unionByName(_, allowMissingColumns = true))
+            .foreach(_.write.mode("overwrite").partitionBy(Kind).parquet(stamp))
+          written += stamp
+          e.outputs.foreach { case (k, f) => schemas(k) = f.schema }
+          e.ledger.foreach { l =>
+            ledgerSchema = Some(l.schema)
+            stamps.advanceTo(s"$stamp/$Kind=$LedgerKind")
+          }
+        } finally if (own) { b.unpersist(); () }
       }
       ()
     }
 
-    def value(spark: SparkSession): DataFrame =
-      ledger.previousPath.map(spark.read.parquet(_))
-        .getOrElse(sys.error(s"$name: the stream folded no ledger"))
+    private def ledger(spark: SparkSession): Option[DataFrame] =
+      for (p <- stamps.previousPath; s <- ledgerSchema)
+        yield spark.read.schema(s).parquet(p)
+
+    def result(spark: SparkSession): Emit = {
+      def read(dirs: Seq[String], s: StructType): DataFrame =
+        if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+        else spark.read.schema(s).parquet(dirs: _*)
+      Emit(
+        schemas.map { case (k, s) =>
+          k -> read(written.toSeq.map(st => s"$st/$Kind=$k").filter(isDir), s)
+        }.toMap,
+        ledgerSchema.map(read(stamps.previousPath.toSeq, _)))
+    }
+  }
+
+  /** [[Run.foldLedger]]'s per-batch body and state: an [[EmitFold]] with a
+    * ledger and no outputs; [[value]] names the key `name` when no batch
+    * has given it a ledger. */
+  private[streaming] final class LedgerFold(name: String, root: String,
+      summary: DataFrame => DataFrame, merge: DataFrame => DataFrame) {
+    private val fold = new EmitFold(root, { (prev, batch) =>
+      val rows = summary(batch)
+      Emit(ledger = Some(prev.fold(rows)(p => merge(p.unionByName(rows)))))
+    })
+
+    def apply(batch: DataFrame, batchId: Long): Unit = fold(batch, batchId)
+
+    def value(spark: SparkSession): DataFrame = fold.result(spark).ledger
+      .getOrElse(sys.error(s"$name: the stream folded no ledger"))
   }
 
   /** Write `df` into `dir` as up to `n` parquet files in `order`, with
@@ -343,6 +416,10 @@ private[graft] object Replay {
     ()
   }
 
+  /** Whether `p` names a directory: the stamp dirs a fold reads and
+    * advances to live under the run's own temp dirs. */
+  private[streaming] def isDir(p: String): Boolean = Files.isDirectory(Paths.get(p))
+
   private def parquetFiles(dir: Path): Seq[Path] =
     listDir(dir).filter(_.getFileName.toString.endsWith(".parquet"))
       .sortBy(_.getFileName.toString)
@@ -356,4 +433,45 @@ private[graft] object Replay {
       .asScala.toList
     finally s.close()
   }
+}
+
+/** The batchId guard and stamp pointer under [[Replay]]'s folds (the
+  * object doc states the exactly-once rules). [[guard]] runs a batch's
+  * body once per batchId and marks the id only after the body returns.
+  * [[stampFor]] names the batch's overwrite dir under `root`; a root-less
+  * ledger is guard-only. [[advanceTo]] moves the pointer only to a dir
+  * that exists (a zero-row partitioned write emits none) and deletes the
+  * superseded one, so temp usage stays O(ledger), not O(batches x
+  * ledger). Bodies run serially on the stream's query thread, so plain
+  * vars suffice. */
+private[streaming] final class StampedLedger(root: String = "") {
+  private var lastFolded = -1L
+  private var prevPath: Option[String] = None
+
+  def stampFor(batchId: Long): String = {
+    require(root.nonEmpty, "guard-only ledger has no stamp root")
+    s"$root/v$batchId"
+  }
+
+  /** Run `body` unless `batchId` has been folded; returns whether it ran. */
+  def guard(batchId: Long)(body: => Unit): Boolean =
+    if (batchId <= lastFolded) false
+    else {
+      body
+      lastFolded = batchId
+      true
+    }
+
+  /** The current ledger dir, once one has landed. */
+  def previousPath: Option[String] = prevPath
+
+  /** Point at `path` if it is a dir, deleting the superseded one; returns
+    * whether the pointer moved. */
+  def advanceTo(path: String): Boolean =
+    if (!Replay.isDir(path)) false
+    else {
+      prevPath.filter(_ != path).foreach(p => Replay.deleteTree(Paths.get(p)))
+      prevPath = Some(path)
+      true
+    }
 }

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Relational.dsum
-import Replay.{ByRange, Pinned, ReplayFiles, RocksDB, RoundRobin, SessionPartitions}
+import Replay.{ByRange, Emit, Pinned, ReplayFiles, RocksDB, RoundRobin, SessionPartitions}
 
 /** Streaming/batch parity: the flagship sliding-window aggregation run
   * through the REAL Structured Streaming engine (file source, watermark,
@@ -82,8 +82,8 @@ object StreamParity {
     * streamed with maxFilesPerTrigger=1, so micro-batches replay ingest
     * in id order;
     * the existing corpus is the static index side. Per micro-batch
-    * (`foreachBatch` — the production pattern for join-shaped per-batch
-    * logic that streaming aggregation modes cannot express):
+    * (the Replay fold's step — the production pattern for join-shaped
+    * per-batch logic that streaming aggregation modes cannot express):
     *
     *   exact_corpus    — content-hash equi-join vs the static index
     *   exact_batch     — min-id-first-wins vs a COMPACTED SEEN-HASH
@@ -150,119 +150,75 @@ object StreamParity {
     val index = new Dedup.NearDupIndex(existing, stateParts)
 
     try Replay.run(spark, "q58_stream_admission") { r =>
-      val ioRoot = r.tempDir("io")
-      val seenSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("ch",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("first_id",
-          org.apache.spark.sql.types.LongType)))
-      // Snapshot pointer + idempotence guard + stamp GC live in the shared
-      // StampedLedger (the snapshot pointer tracks the kind=s SUBDIR of
-      // each stamp — the kind=v verdict dirs are tracked separately and
-      // read back after the stream stops).
-      val ledger = new StampedLedger(ioRoot)
-      val verdictDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
       // Ingest layout: ReplayFiles id-range files, so the file source
-      // replays batches in id order.
-      r.await(r.files(incoming, ByRange("doc_id"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.guard(batchId) {
-          val s = batch.sparkSession
-          // AQE off for the per-batch jobs (cloned-session conf, set once
-          // per trigger): every AQE query stage runs as its own Spark job,
-          // and this body plans ~20 exchanges/broadcasts over KB-scale
-          // frames — the measured q58 floor was ~30 jobs/trigger of pure
-          // scheduling (BASELINE_HISTORY.md). Static planning emits ONE job per
-          // action here; the joins that must broadcast carry explicit
-          // hints (NearDupIndex.probe), so nothing depends on AQE's
-          // runtime sizing. Batch volume is micro-batch-scale by
-          // construction, exactly the case static planning handles.
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-          val b = batch.cache()
-          val hashed = b.select(col("doc_id"), md5(col("text")).as("ch"))
-          // The ONLY aggregation this batch runs is over its own rows.
-          val batchMins = hashed.groupBy(col("ch"))
-            .agg(min(col("doc_id")).as("bmin"))
-          val prev = ledger.previous(s, seenSchema)
-            .select(col("ch"), col("first_id").as("pmin"))
-          val firstIds = batchMins.join(prev, Seq("ch"), "left")
-            .select(col("ch"),
-              least(col("bmin"), coalesce(col("pmin"), col("bmin")))
-                .as("first_id"))
-          // explicit build-side hints: with AQE off, the batch-derived
-          // frames have no stats and would otherwise plan sort-merge
-          val exactFlags = hashed
-            .join(existingH, Seq("ch"), "left")
-            .join(broadcast(firstIds), "ch")
-            .select(col("doc_id"),
-              coalesce(col("hit_corpus"), lit(false)).as("exact_corpus"),
-              (col("doc_id") > col("first_id")).as("exact_batch"))
-          val near = index.probe(b)
-            .withColumn("near_corpus", lit(true))
-          val verdicts = exactFlags.join(broadcast(near), Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              when(col("exact_corpus"), "exact_corpus")
-                .when(col("exact_batch"), "exact_batch")
-                .when(coalesce(col("near_corpus"), lit(false)), "near_dup_corpus")
-                .otherwise("admitted").as("verdict"))
-          // Incremental state update: fold the batch minima into the
-          // snapshot (full outer on ch — USING-join coalesces the key),
-          // rewritten compacted. One sequential pass over the snapshot;
-          // the tiny batch side broadcasts.
-          val nextRows = prev.join(batchMins, Seq("ch"), "full")
-            .select(col("ch"),
-              least(coalesce(col("pmin"), col("bmin")),
-                coalesce(col("bmin"), col("pmin"))).as("first_id"))
-          // ONE output job per trigger: verdicts and the rewritten snapshot
-          // union into a single kind-partitioned write (the per-trigger job
-          // count — not task width — is the measured cost floor of this
-          // operator locally; two separate writes paid two job+commit
-          // rounds for two tiny frames). coalesce(1): one file per kind —
-          // these frames are batch/seen-sized, and default-parallelism
-          // writes cost 8+ tasks/files per micro-batch for ~25 rows.
-          val stamp = ledger.stampFor(batchId)
-          val out = verdicts
-            .select(lit("v").as("kind"), col("doc_id"), col("verdict"),
-              lit(null).cast("string").as("ch"),
-              lit(null).cast("long").as("first_id"))
-            .unionByName(nextRows
-              .select(lit("s").as("kind"), lit(null).cast("long").as("doc_id"),
-                lit(null).cast("string").as("verdict"),
-                col("ch"), col("first_id")))
-            .coalesce(1)
-          // per-batch plan evidence (the foreachBatch body is where q58's
-          // joins live; the streaming plan is just the source scan) —
-          // recorded on every batch from 1 on, where prior state is
-          // non-empty, so it holds the last processed batch's plan
-          if (batchId >= 1)
-            lastStreamPlans.put("q58_stream_admission", out.queryExecution
+      // replays batches in id order. The ledger is the seen-hash snapshot.
+      r.foldEmit(r.files(incoming, ByRange("doc_id"))) { (seen, b) =>
+        // AQE off for the per-batch jobs (cloned-session conf, set once
+        // per trigger): every AQE query stage runs as its own Spark job,
+        // and this step plans ~20 exchanges/broadcasts over KB-scale
+        // frames — the measured q58 floor was ~30 jobs/trigger of pure
+        // scheduling (BASELINE_HISTORY.md). Static planning emits ONE job per
+        // action here; the joins that must broadcast carry explicit
+        // hints (NearDupIndex.probe), so nothing depends on AQE's
+        // runtime sizing. Batch volume is micro-batch-scale by
+        // construction, exactly the case static planning handles.
+        b.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
+        val hashed = b.select(col("doc_id"), md5(col("text")).as("ch"))
+        // The ONLY aggregation this batch runs is over its own rows.
+        val batchMins = hashed.groupBy(col("ch"))
+          .agg(min(col("doc_id")).as("bmin"))
+        // before the first snapshot lands, an empty one
+        val prev = seen.getOrElse(batchMins.select(col("ch"),
+            col("bmin").as("first_id")).limit(0))
+          .select(col("ch"), col("first_id").as("pmin"))
+        val firstIds = batchMins.join(prev, Seq("ch"), "left")
+          .select(col("ch"),
+            least(col("bmin"), coalesce(col("pmin"), col("bmin")))
+              .as("first_id"))
+        // explicit build-side hints: with AQE off, the batch-derived
+        // frames have no stats and would otherwise plan sort-merge
+        val exactFlags = hashed
+          .join(existingH, Seq("ch"), "left")
+          .join(broadcast(firstIds), "ch")
+          .select(col("doc_id"),
+            coalesce(col("hit_corpus"), lit(false)).as("exact_corpus"),
+            (col("doc_id") > col("first_id")).as("exact_batch"))
+        val near = index.probe(b)
+          .withColumn("near_corpus", lit(true))
+        // coalesce(1): one file per output — these frames are
+        // batch/seen-sized, and default-parallelism writes cost 8+
+        // tasks/files per micro-batch for ~25 rows
+        val verdicts = exactFlags.join(broadcast(near), Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            when(col("exact_corpus"), "exact_corpus")
+              .when(col("exact_batch"), "exact_batch")
+              .when(coalesce(col("near_corpus"), lit(false)), "near_dup_corpus")
+              .otherwise("admitted").as("verdict"))
+          .coalesce(1)
+        // Incremental state update: fold the batch minima into the
+        // snapshot (full outer on ch — USING-join coalesces the key),
+        // rewritten compacted. One sequential pass over the snapshot;
+        // the tiny batch side broadcasts. The fold writes it and the
+        // verdicts in ONE job per trigger (the per-trigger job count —
+        // not task width — is the measured cost floor of this operator
+        // locally).
+        val nextRows = prev.join(batchMins, Seq("ch"), "full")
+          .select(col("ch"),
+            least(coalesce(col("pmin"), col("bmin")),
+              coalesce(col("bmin"), col("pmin"))).as("first_id"))
+          .coalesce(1)
+        // per-batch plan evidence (this step is where q58's joins live;
+        // the streaming plan is just the source scan) — recorded on
+        // every batch with a snapshot, so it holds the last processed
+        // batch's plan
+        if (seen.isDefined)
+          lastStreamPlans.put("q58_stream_admission",
+            verdicts.unionByName(nextRows, allowMissingColumns = true)
+              .queryExecution
               .explainString(org.apache.spark.sql.execution.FormattedMode))
-          out.write.mode("overwrite").partitionBy("kind").parquet(stamp)
-          verdictDirs += s"$stamp/kind=v"
-          // Advance the snapshot pointer to this stamp's kind=s subdir and
-          // GC the superseded one. An all-empty batch over empty prior
-          // state writes no kind=s subdir (dynamic partitioning emits
-          // nothing for zero rows) — advanceTo leaves the pointer alone,
-          // which is safe: when the new dir is missing, prev state was
-          // necessarily empty too (the full join preserves every prior
-          // row), so retaining it is a no-op defensive choice, not a
-          // state fork.
-          ledger.advanceTo(s"$stamp/kind=s")
-          b.unpersist()
-          ()
-          }
-          ()
-        })
-
-      // A batch with no admissible rows writes no kind=v subdir — read
-      // only the ones that exist (never the case with this layout, but an
-      // empty trailing trigger must not fail the read).
-      val existingDirs = verdictDirs.filter(d => new java.io.File(d).isDirectory)
-      // materialize eagerly so the verdict/incoming temp trees can go
-      spark.read.parquet(existingDirs.toSeq: _*)
-        .select(col("doc_id"), col("verdict"))
+        Emit(Map("verdicts" -> verdicts), Some(nextRows))
+      }.outputs("verdicts")
+        // materialize eagerly so the verdict/incoming temp trees can go
         .orderBy("doc_id")
         .localCheckpoint(true)
     } finally {
@@ -367,9 +323,10 @@ object StreamParity {
     * Scale shape: per trigger ONE fused codegen pass scores all K cells
     * per vector ([[graft.functions.CentroidScores]] — no K-column
     * Janino blowup, no shuffle: argmax is array_max over the score
-    * array with an index tiebreak); index writes are batchId-stamped
-    * overwrite dirs (exactly-once under at-least-once retries). Driver
-    * state: the K-row codebook only. */
+    * array with an index tiebreak); the Replay fold writes each
+    * trigger's cells once, into its batchId-stamped overwrite dir
+    * (exactly-once under at-least-once retries). Driver state: the K-row
+    * codebook only. */
   def q231StreamIvfIngest(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.GraftFunctions.{centroidScores, dot}
     val K = 8
@@ -385,25 +342,19 @@ object StreamParity {
     val scores = centroidScores(col("embedding"), col("norm"), cents)
 
     Replay.run(spark, "q231_stream_ivf_ingest") { r =>
-      val outRoot = r.tempDir("idx")
-      r.await(r.files(e, ByRange("vec_id"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch
-            .withColumn("norm",
-              sqrt(dot(col("embedding"), col("embedding"))))
-            .withColumn("sc", scores)
-            // argmax with the LOWEST cell winning ties: struct compare is
-            // (s, nc) lexicographic, so negating the index flips the tie
-            .withColumn("pick",
-              expr("array_max(transform(sc, x -> struct(x.s AS s, -x.c AS nc)))"))
-            .select(col("vec_id"),
-              (-col("pick.nc")).cast("long").as("cell"),
-              col("pick.s").as("score"))
-            .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
-          ()
-        })
-      r.batches(outRoot).orderBy("vec_id")
+      r.foldEmit(r.files(e, ByRange("vec_id"))) { (_, batch) =>
+        Emit(Map("cells" -> batch
+          .withColumn("norm",
+            sqrt(dot(col("embedding"), col("embedding"))))
+          .withColumn("sc", scores)
+          // argmax with the LOWEST cell winning ties: struct compare is
+          // (s, nc) lexicographic, so negating the index flips the tie
+          .withColumn("pick",
+            expr("array_max(transform(sc, x -> struct(x.s AS s, -x.c AS nc)))"))
+          .select(col("vec_id"),
+            (-col("pick.nc")).cast("long").as("cell"),
+            col("pick.s").as("score"))))
+      }.outputs("cells").orderBy("vec_id")
         .localCheckpoint(true)
     }
   }
@@ -548,40 +499,23 @@ object StreamParity {
     * keyed on the 16-byte block md5 — never text; the index is
     * hash-only (the NearDupIndex discipline — at 100 TB this is the
     * keyed state store or a Bloom-fronted table, not a corpus re-scan).
-    * Unlike the [[Replay.Run.foldLedger]] keys it writes per-doc outputs
-    * every batch too, so it keeps its own [[StampedLedger]] (the same
-    * discipline, see [[Replay]]): per-doc outputs land in batchId-stamped
-    * overwrite dirs, and index versions are GC'd batch-to-batch. */
+    * The index is the ledger of a [[Replay.Run.foldEmit]]: each trigger
+    * writes its per-doc verdicts and the next index in one job, into a
+    * batchId-stamped overwrite dir, and index versions are GC'd
+    * batch-to-batch. */
   def q227StreamBlockAdmission(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Dedup.{docBlocks, firstWinsBlocks}
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
 
     Replay.run(spark, "q227_stream_block_admission") { r =>
-      val ledger = new StampedLedger(r.tempDir("idx"))
-      val outRoot = r.tempDir("out")
-      r.await(r.files(docs, ByRange("doc_id"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ledger.guard(batchId) {
-            val blocks = docBlocks(batch)
-              .persist() // feeds admission, per-doc counts, and index growth
-            try {
-              val idx = ledger.previousPath.map(batch.sparkSession.read.parquet(_))
-              firstWinsBlocks(blocks, idx)
-                .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
-              // Index grows by THIS batch's distinct hashes (hash-only).
-              val hashes = blocks.select(col("bh")).distinct()
-              val stamp = ledger.stampFor(batchId)
-              idx.fold(hashes)(_.union(hashes).distinct())
-                .write.mode("overwrite").parquet(stamp)
-              ledger.advanceTo(stamp)
-              ()
-            } finally { blocks.unpersist(); () }
-          }
-          ()
-        })
-      r.batches(outRoot).orderBy("doc_id")
+      r.foldEmit(r.files(docs, ByRange("doc_id"))) { (idx, batch) =>
+        val blocks = docBlocks(batch)
+        // the index grows by THIS batch's distinct hashes (hash-only)
+        val hashes = blocks.select(col("bh")).distinct()
+        Emit(Map("docs" -> firstWinsBlocks(blocks, idx)),
+          Some(idx.fold(hashes)(_.union(hashes).distinct())))
+      }.outputs("docs").orderBy("doc_id")
         .localCheckpoint(true)
     }
   }
@@ -589,7 +523,7 @@ object StreamParity {
   /** q66 — heavy hitters over a CONTINUOUSLY INGESTING corpus: q61's
     * Misra-Gries sketch-then-verify gate through the streaming engine.
     * The documents table is replayed as ReplayFiles micro-batches
-    * (maxFilesPerTrigger=1). Per trigger (`foreachBatch`), ONE
+    * (maxFilesPerTrigger=1). Per trigger, ONE
     * distributed job computes the batch's k-counter MG sketch (partial
     * per partition, merged by the mergeable-summaries rule) plus the
     * batch token count; the driver folds ([[Replay.Run.foldDriver]]) the
@@ -736,7 +670,7 @@ object StreamParity {
   /** q81 — the timeline-anomaly monitor through the streaming engine:
     * q78's per-type z-score over the dense hour grid, maintained
     * INCREMENTALLY. Events replay as ReplayFiles contiguous time-range
-    * micro-batches; foreachBatch aggregates ONLY its own rows to
+    * micro-batches; each trigger aggregates ONLY its own rows to
     * (hour, type) counts and folds them into a running grid-sized
     * snapshot by addition — counts are the simplest mergeable summary,
     * so this is q66's fold pattern with exact state instead of a
@@ -941,7 +875,7 @@ object StreamParity {
   /** q80 — CDC MERGE through the streaming engine: q63's latest-wins
     * upsert compaction driven by a change STREAM. The base snapshot
     * arrives as micro-batch 0 and the update/delete feed as micro-batch
-    * 1 (two files, mod-time ordered, one per trigger); foreachBatch
+    * 1 (two files, mod-time ordered, one per trigger); each trigger
     * folds each batch into a compacted keyed snapshot — union the
     * previous snapshot with the batch, keep the max version per key —
     * which is exactly the copy-on-write loop a Delta/Iceberg MERGE
@@ -1155,7 +1089,7 @@ object StreamParity {
   /** q116 — q110's sliding-window exact distinct through ONE stateful
     * streaming aggregation: windowed state dedups (window, user) pairs
     * (watermark-bounded, append mode), and the per-window counts are
-    * finished per MICRO-BATCH in foreachBatch — a plain batch
+    * finished per MICRO-BATCH in the Replay fold — a plain batch
     * aggregation over each trigger's flushed rows, NO second state
     * store. This is exact because append-mode eviction is atomic per
     * window: a window's pair-rows all flush in the single trigger whose
@@ -1166,7 +1100,7 @@ object StreamParity {
     * stateful aggregation for the counts — 2 state operators x the
     * session's shuffle-partition count of store commits per trigger
     * where 1 x 8 suffices (VERDICT r13 item #1; the per-batch
-    * collection is output-sized, exactly what the memory sink already
+    * counts are output-sized, exactly what the memory sink already
     * held). The q25 sentinel closes all real windows at end of stream.
     * State cost: open-window distinct pairs, watermark-bounded.
     */
@@ -1177,14 +1111,6 @@ object StreamParity {
     val sentinel = Map("ts" -> sentinelTsPlus1h(raw), "user_id" -> -1L,
       "value" -> 0.0)
 
-    // Per-batch finish: count each closing window's flushed pairs with a
-    // BATCH aggregation (see the operator doc above for why this is
-    // exact). Keyed by batchId so a replayed/retried batch overwrites
-    // its own rows instead of double-counting; the collected frames are
-    // output-sized (one row per closed window), the same rows the
-    // memory sink used to buffer.
-    val batches =
-      new java.util.concurrent.ConcurrentHashMap[Long, Array[Row]]()
     Replay.run(spark, "q116_stream_distinct") { r =>
       val pairs = graft.Tables.normalizeTs(
           r.linked(s"$sfDir/events.parquet", raw.schema, sentinel))
@@ -1192,37 +1118,26 @@ object StreamParity {
         .withWatermark("ts", "1 second")
         .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("user_id"))
         .agg(count(lit(1)).as("n"))
-      r.await(pairs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val rows = batch.groupBy(col("window"))
-            .agg(count(lit(1)).as("n_users"), sum(col("n")).as("n_events"))
-            .select(col("window.start").cast("long").as("window_start"),
-              col("n_users"), col("n_events"))
-            .collect()
-          batches.put(batchId, rows)
-          ()
-        })
+      // Per-batch finish: count each closing window's flushed pairs with a
+      // BATCH aggregation (see the operator doc above for why this is
+      // exact); the rows are output-sized, one per closed window.
+      r.foldEmit(pairs) { (_, batch) =>
+        Emit(Map("windows" -> batch.groupBy(col("window"))
+          .agg(count(lit(1)).as("n_users"), sum(col("n")).as("n_events"))
+          .select(col("window.start").cast("long").as("window_start"),
+            col("n_users"), col("n_events"))))
+      }.outputs("windows")
+        .filter(col("window_start") <= realMaxSec) // drop sentinel windows
+        .orderBy("window_start")
+        .localCheckpoint(true)
     }
-
-    import scala.jdk.CollectionConverters._
-    val outSchema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("window_start",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_users",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_events",
-        org.apache.spark.sql.types.LongType)))
-    spark.createDataFrame(
-        batches.values.asScala.flatten.toSeq.asJava, outSchema)
-      .filter(col("window_start") <= realMaxSec) // drop sentinel windows
-      .orderBy("window_start")
   }
 
   /** q123 — streaming exact dedup via `dropDuplicatesWithinWatermark`:
     * the STATE-BOUNDED streaming dedup primitive (Spark's answer to an
     * unbounded seen-set) deduping (user_id, minute) activity pairs as
     * they stream. Unlike q49 (aggregation-shaped dedup, complete mode)
-    * and q58 (foreachBatch + snapshot), this is the single-operator
+    * and q58 (per-trigger fold + snapshot), this is the single-operator
     * form: a stateful FILTER that emits a key's first row immediately
     * (append mode, no window to close — no sentinel needed) and
     * suppresses later duplicates while the key stays within the
@@ -1645,7 +1560,7 @@ object StreamParity {
   /** q148 — dead-letter routing rule: suspicious telemetry values. */
   private val DlqRule = "value > 95"
 
-  /** q148 — streaming dead-letter-queue split: one foreachBatch pass
+  /** q148 — streaming dead-letter-queue split: one pass per trigger
     * routes each micro-batch to TWO sinks — valid rows to the main
     * table, rule-violating rows to a quarantine table — the ingest
     * pattern that keeps bad data out of the pipeline WITHOUT dropping
@@ -1653,11 +1568,11 @@ object StreamParity {
     * output shape (`rlink/src/api/output_format.rs` sink fan-out) on
     * Spark's transactional micro-batch boundary.
     *
-    * Scale notes: the batch is persisted ONCE and filtered twice (no
-    * double source scan); both writes happen inside the same trigger,
-    * and a production deployment makes them idempotent by writing
-    * batchId-named files (exactly-once across restarts — the q58
-    * admission gate documents the full discipline). Output here is the
+    * Scale notes: the Replay fold caches the batch ONCE and the step
+    * filters it twice (no double source scan); both sinks are written in
+    * one job per trigger, into the batch's batchId-stamped overwrite dir
+    * (exactly-once under at-least-once retries, see [[Replay]]). Output
+    * here is the
     * routing verdict table read back from BOTH sinks, so the oracle
     * checks completeness (no row lost), disjointness, and rule
     * fidelity in one comparison. */
@@ -1665,34 +1580,19 @@ object StreamParity {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("value"),
         unix_micros(col("ts")).as("ts_us"))
+    // coalesce the rule under NULL: a NULL value must route to main
+    // (the oracle's CASE does), never vanish from both sinks
+    val dlq = coalesce(expr(DlqRule), lit(false))
     Replay.run(spark, "q148_stream_dlq") { r =>
-      val mainDir = r.tempDir("main")
-      val dlqDir  = r.tempDir("dlq")
-      r.await(r.files(ev, ByRange("ts_us"))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.persist() // ONE source scan feeds both routes
-          // coalesce the rule under NULL: a NULL value must route to main
-          // (the oracle's CASE does), never vanish from both sinks
-          val dlq = coalesce(expr(DlqRule), lit(false))
-          // batchId-stamped OVERWRITE subdirs, not append: foreachBatch is
-          // at-least-once, and a retried trigger appending a second copy
-          // of its rows would break the sink's exactly-once contract (the
-          // q58 discipline this harness's scaladoc cites).
-          try {
-            b.filter(!dlq).select(col("event_id"), col("user_id"))
-              .write.mode("overwrite").parquet(s"$mainDir/b$batchId")
-            b.filter(dlq).select(col("event_id"), col("user_id"))
-              .write.mode("overwrite").parquet(s"$dlqDir/b$batchId")
-          } finally { b.unpersist(); () }
-        })
-
+      val sinks = r.foldEmit(r.files(ev, ByRange("ts_us"))) { (_, b) =>
+        Emit(Map(
+          "main" -> b.filter(!dlq).select(col("event_id"), col("user_id")),
+          "dlq" -> b.filter(dlq).select(col("event_id"), col("user_id"))))
+      }.outputs
       // Materialize eagerly (localCheckpoint severs the lineage to the sink
       // parquet) so BOTH temp sinks can be deleted before returning.
-      r.batches(mainDir)
-        .withColumn("sink", lit("main"))
-        .unionByName(
-          r.batches(dlqDir).withColumn("sink", lit("dlq")))
+      sinks("main").withColumn("sink", lit("main"))
+        .unionByName(sinks("dlq").withColumn("sink", lit("dlq")))
         .orderBy("event_id")
         .localCheckpoint(true)
     }

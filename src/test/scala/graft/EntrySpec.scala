@@ -59,17 +59,17 @@ class EntrySpec extends SparkSpec {
   }
 
   test("stream folds go through the Replay fold; batch constants stay in the batch twins") {
-    // the mergeable stream keys fold through Replay.Run.foldDriver /
-    // foldLedger; only the two admission keys, which also write per-batch
-    // outputs, keep a ledger of their own (q58 and q227 in StreamParity)
+    // every per-trigger body in StreamParity goes through a Replay.Run
+    // fold (foldEmit, foldLedger, foldDriver), and only the folds build a
+    // StampedLedger
     val ledgers = scalaFilesMatching(Seq("src/main"), Set("Replay.scala"),
       raw"new StampedLedger\b".r)
-    assert(ledgers.map(_.getFileName.toString) == Seq("StreamParity.scala"),
+    assert(ledgers.isEmpty,
       s"fold through graft.streaming.Replay instead of in: ${ledgers.mkString(", ")}")
     val parity = java.nio.file.Files.readString(
       java.nio.file.Paths.get("src/main/scala/graft/streaming/StreamParity.scala"))
-    assert(raw"new StampedLedger\b".r.findAllIn(parity).size == 2,
-      "only q58 and q227 may build their own StampedLedger")
+    assert(!parity.contains("foreachBatch"),
+      "fold through Replay.Run instead of a foreachBatch in StreamParity")
     // the md5-to-unit-interval constant (2^48 + 1) belongs to the batch
     // twins (q200, q203), which the stream twins call
     assert(!parity.contains("281474976710657"),

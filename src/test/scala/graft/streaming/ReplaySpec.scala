@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ListenerBusDrain
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 import Replay.{ByRange, RocksDB, RoundRobin}
@@ -175,6 +176,16 @@ class ReplaySpec extends SparkSpec {
         Seq(0L, 0L, 1L, 1L, 0L).foreach(ledger(ev, _))
         assert(countMap(ledger.value(spark)) ===
           countMap(typeCounts(ev)).map { case (k, c) => k -> 2 * c })
+        val emit = new Replay.EmitFold(root.resolve("emit").toString, { (prev, b) =>
+          val rows = typeCounts(b)
+          Replay.Emit(Map("rows" -> b.select(col("event_id"))),
+            Some(prev.fold(rows)(p => addCounts(p.unionByName(rows)))))
+        })
+        Seq(0L, 0L, 1L, 1L, 0L).foreach(emit(ev, _))
+        val out = emit.result(spark)
+        assert(out.outputs("rows").count() === 2 * ev.count())
+        assert(countMap(out.ledger.get) ===
+          countMap(typeCounts(ev)).map { case (k, c) => k -> 2 * c })
       } finally Replay.deleteTree(root)
     } finally { ev.unpersist(); () }
   }
@@ -199,6 +210,18 @@ class ReplaySpec extends SparkSpec {
         assert(countMap(ledger.value(spark)) === countMap(typeCounts(b0)))
         assert(list(root).map(_.getFileName.toString) === Seq("v0"))
       } finally Replay.deleteTree(root)
+      val emitRoot = Files.createTempDirectory("replayspec_foldstate")
+      try {
+        val emit = new Replay.EmitFold(emitRoot.toString, (prev, b) =>
+          if (prev.isDefined) throw new IllegalStateException(boom)
+          else Replay.Emit(Map("rows" -> b.select(col("event_id"))), Some(typeCounts(b))))
+        emit(b0, 0)
+        assert(causedBy(intercept[IllegalStateException](emit(b0, 1)), boom))
+        val out = emit.result(spark)
+        assert(countMap(out.ledger.get) === countMap(typeCounts(b0)))
+        assert(out.outputs("rows").count() === 3L, "no batch-1 output")
+        assert(list(emitRoot).map(_.getFileName.toString) === Seq("v0"))
+      } finally Replay.deleteTree(emitRoot)
     } finally { b0.unpersist(); () }
     // the run: the streams fail loudly, the step saw the batch-0 value,
     // and no dir of the run is left behind
@@ -220,6 +243,39 @@ class ReplaySpec extends SparkSpec {
       }
     }
     assert(causedBy(ledgerErr, boom))
+    val emitErr = intercept[Exception] {
+      Replay.run(spark, "replayspec_foldfail") { r =>
+        r.foldEmit(r.files(ev, ByRange("ts"))) { (prev, b) =>
+          if (prev.isDefined) throw new IllegalStateException(boom)
+          Replay.Emit(Map("rows" -> b.select(col("event_id"))), Some(typeCounts(b)))
+        }
+      }
+    }
+    assert(causedBy(emitErr, boom))
     assert(leftDirs("replayspec_foldfail").isEmpty)
+  }
+
+  test("two outputs and a ledger: an output no batch filled reads back empty in its schema") {
+    val ev = graft.Tables.events(spark, sf)
+    var noneSchema = Option.empty[StructType]
+    val (kept, none, ledger) = Replay.run(spark, "replayspec_emit") { r =>
+      val out = r.foldEmit(r.files(ev, RoundRobin)) { (prev, b) =>
+        val rows = typeCounts(b)
+        val none = b.filter(lit(false)).select(col("event_id"), col("value"))
+        noneSchema = Some(none.schema)
+        Replay.Emit(
+          Map("kept" -> b.select(col("event_id"), col("event_type")), "none" -> none),
+          Some(prev.fold(rows)(p => addCounts(p.unionByName(rows)))))
+      }
+      val kept = out.outputs("kept")
+      assert(kept.columns.toSeq === Seq("event_id", "event_type"))
+      (kept.select(col("event_id")).distinct().count(), out.outputs("none"),
+        countMap(out.ledger.get))
+    }
+    assert(kept === ev.count())
+    assert(none.schema === noneSchema.get)
+    assert(none.isEmpty)
+    assert(ledger === countMap(typeCounts(ev)))
+    assert(leftDirs("replayspec_emit").isEmpty)
   }
 }

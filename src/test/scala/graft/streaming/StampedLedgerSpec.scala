@@ -1,6 +1,9 @@
 package graft.streaming
 
+import java.nio.file.Paths
+
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -14,15 +17,19 @@ class StampedLedgerSpec extends SparkSpec {
     StructField("k", LongType), StructField("cnt", LongType)))
 
   private def foldCounts(ledger: StampedLedger, batchId: Long, ks: Seq[Long]): Boolean =
-    ledger.fold(batchId) { stamp =>
+    ledger.guard(batchId) {
       import spark.implicits._
+      val stamp = ledger.stampFor(batchId)
       val batch = ks.toDF("k").groupBy("k").agg(count(lit(1)).as("cnt"))
-      val prev = ledger.previous(spark, schema)
+      val prev = ledger.previousPath.map(spark.read.parquet(_)).getOrElse(
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
       prev.select(col("k"), col("cnt").as("pc"))
         .join(batch.select(col("k"), col("cnt").as("bc")), Seq("k"), "full")
         .select(col("k"),
           (coalesce(col("pc"), lit(0L)) + coalesce(col("bc"), lit(0L))).as("cnt"))
         .write.mode("overwrite").parquet(stamp)
+      ledger.advanceTo(stamp)
+      ()
     }
 
   private def readLedger(ledger: StampedLedger): Map[Long, Long] =
@@ -43,9 +50,7 @@ class StampedLedgerSpec extends SparkSpec {
     // and a stale/earlier batchId is equally inert
     assert(!foldCounts(ledger, 0, Seq(9L)))
     assert(readLedger(ledger) == after)
-    ledger.close()
-    assert(ledger.previousPath.isEmpty)
-    StampedLedger.deleteTree(root)
+    Replay.deleteTree(Paths.get(root))
   }
 
   test("superseded stamps are GC'd: temp usage stays O(ledger), not O(batches)") {
@@ -56,8 +61,7 @@ class StampedLedgerSpec extends SparkSpec {
     assert(dirs.map(_.getName).toSeq == Seq("v4"),
       s"only the live stamp survives, got ${dirs.map(_.getName).toSeq}")
     assert(readLedger(ledger).keySet == Set(0L, 1L, 2L, 3L, 4L))
-    ledger.close()
-    StampedLedger.deleteTree(root)
+    Replay.deleteTree(Paths.get(root))
   }
 
   test("advanceTo refuses a missing dir (the zero-row dynamic-partition hazard)") {
@@ -67,11 +71,11 @@ class StampedLedgerSpec extends SparkSpec {
     val live = ledger.previousPath.get
     // a fold whose write emitted nothing (e.g. partitionBy over zero
     // rows) must not move the pointer off the prior live state
-    assert(ledger.fold(1) { _ => () }, "guard still consumes the batchId")
+    assert(ledger.guard(1) { ledger.advanceTo(ledger.stampFor(1)); () },
+      "guard still consumes the batchId")
     assert(ledger.previousPath.contains(live), "pointer stays on prior state")
     assert(readLedger(ledger) == Map(7L -> 1L))
-    ledger.close()
-    StampedLedger.deleteTree(root)
+    Replay.deleteTree(Paths.get(root))
   }
 
   test("guard-only ledger protects a driver accumulator and refuses stamps") {
@@ -93,13 +97,5 @@ class StampedLedgerSpec extends SparkSpec {
       "the failed batch must fold on retry, not be dropped forever")
     assert(!ledger.guard(0) { acc += 10 }, "...and only once")
     assert(acc == 10)
-  }
-
-  test("previous() is an empty frame of the given schema before the first fold") {
-    val ledger = new StampedLedger(
-      java.nio.file.Files.createTempDirectory("ledger_empty").toString)
-    val prev = ledger.previous(spark, schema)
-    assert(prev.schema == schema)
-    assert(prev.count() == 0)
   }
 }
